@@ -35,13 +35,18 @@ import graft.model._
  *
  * Built on the JDK's HttpServer: zero added dependencies, and the
  * engine underneath is the same Spark catalog — the server is a codec,
- * not a second implementation.
+ * not a second implementation. `stop()` also shuts the request pool
+ * down, so a JVM that served HTTP can exit.
  */
 final class HttpApi(db: VectorDb, port: Int = 0) {
   import HttpApi._
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  private val server = createServer(port)
+  private val executor = java.util.concurrent.Executors.newFixedThreadPool(8, {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    (r: Runnable) => new Thread(r, s"graft-http-${server.getAddress.getPort}-${n.incrementAndGet()}")
+  })
+  server.setExecutor(executor)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -60,7 +65,14 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+  }
+
+  /** True once `stop()` ran and every request thread has exited. */
+  private[graft] def awaitStopped(timeoutMs: Long): Boolean =
+    executor.awaitTermination(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
 
   // ---- route handlers: (method, path segments under the context, body)
 
@@ -143,6 +155,8 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
     (method, path) match {
       case ("POST", "libraries" :: libId :: Nil) =>
         val node = parse(body)
+        if (node != null && node.hasNonNull("metadata_filters") && !node.get("metadata_filters").isObject)
+          throw new BadRequest("metadata_filters must be an object")
         val q = SearchQuery(
           queryText = optText(node, "query_text"),
           queryEmbedding = optFloats(node, "query_embedding"),
@@ -287,6 +301,17 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
 object HttpApi {
   private val mapper = new ObjectMapper()
 
+  /** The JDK server writes the headers and the body of a reply as two
+    * packets; without TCP_NODELAY the body waits out the peer's delayed
+    * ACK (~40 ms on Linux loopback) on every response. The property is
+    * read once, when the first server is created, so it is set here
+    * unless the user chose a value. */
+  private def createServer(port: Int): HttpServer = {
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
+
   final case class Response(status: Int, body: String)
   final class BadRequest(msg: String) extends RuntimeException(msg)
 
@@ -326,10 +351,14 @@ object HttpApi {
   private def optMeta(node: JsonNode): Option[Map[String, String]] =
     if (node != null && node.hasNonNull("metadata")) Some(metaOf(node)) else None
 
+  /** A JSON array of numbers; any other shape or element is a 400
+    * (Jackson's `floatValue` would read a string element as 0). */
   private def optFloats(node: JsonNode, field: String): Option[Array[Float]] =
-    if (node == null || !node.hasNonNull(field) || !node.get(field).isArray) None
+    if (node == null || !node.hasNonNull(field)) None
     else {
       val a = node.get(field)
+      if (!a.isArray || (0 until a.size()).exists(i => !a.get(i).isNumber))
+        throw new BadRequest(s"$field must be an array of numbers")
       Some((0 until a.size()).map(i => a.get(i).floatValue()).toArray)
     }
 

@@ -165,12 +165,7 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
     val slim =
       if (includeEmbeddings) paged
       else paged.withColumn("embedding", lit(null).cast("array<float>"))
-    slim.collect().map { r =>
-      ChunkRow(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-        Option(r.getAs[scala.collection.Seq[Float]]("embedding")).map(_.toArray),
-        Option(r.getAs[scala.collection.Map[String, String]]("metadata")).map(_.toMap).getOrElse(Map.empty),
-        r.getTimestamp(6), r.getTimestamp(7))
-    }.toSeq
+    slim.collect().map(ChunkRow.fromRow).toSeq
   }
 }
 

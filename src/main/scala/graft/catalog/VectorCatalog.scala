@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
 
 import graft.filter.MetadataFilter
 import graft.functions.Embedder
-import graft.index.{IvfModel, LshModel}
+import graft.index.{IvfModel, IvfPqModel, LshModel}
 import graft.model._
+import graft.search.LocalSearch
 
 /** Index type selector (reference: config.py:25 allows lsh|ivf; exact
   * brute-force is the always-available fallback, SURVEY.md §2.11). */
@@ -70,6 +71,27 @@ final case class IvfPqState(
   def candidatesWith(query: Array[Float], nprobe: Int, n: Int): DataFrame =
     coded.fold(_.candidates(encoded, query, nprobe, n),
       _.candidates(encoded, query, nprobe, n))
+  /** Driver twin of [[candidatesWith]] over the collected `encoded`. */
+  def candidatesLocal(codes: IvfPqModel.LocalCodes, query: Array[Float],
+      nprobe: Int, n: Int): Array[String] =
+    coded.fold(_.candidatesLocal(codes, query, nprobe, n),
+      _.candidatesLocal(codes, query, nprobe, n))
+}
+
+/** A tier's derived table collected to the driver (built with the
+  * table when the library is under `LocalSearch.maxLibraryFloats`), so
+  * the resident read path probes it without a Spark job. */
+sealed trait ResidentIndex
+object ResidentIndex {
+  /** LSH: bucket key -> chunk ids. */
+  final case class Buckets(ids: Map[Long, Array[String]]) extends ResidentIndex
+  /** IVF: cell -> chunk ids. */
+  final case class Cells(ids: Map[Int, Array[String]]) extends ResidentIndex
+  /** IVF-PQ / OPQ: (id, cell, codes) rows. */
+  final case class Codes(codes: IvfPqModel.LocalCodes) extends ResidentIndex
+  /** Binary: (id, packed signature) rows. */
+  final case class Sigs(ids: Array[String],
+      sigs: Array[org.apache.spark.sql.catalyst.util.ArrayData]) extends ResidentIndex
 }
 
 /** Versioned per-library index state: the Spark-native replacement for
@@ -88,7 +110,9 @@ final case class IndexState(
     // Binary: signature row count, captured from the count() that
     // materializes the cache at build/refresh/restore — sizes the
     // n-proportional candidate budget WITHOUT a per-search Spark job
-    sigCount: Option[Long] = None)
+    sigCount: Option[Long] = None,
+    // driver copy of the derived table for the resident read path
+    resident: Option[ResidentIndex] = None)
 
 /**
  * Driver-side catalog + chunk store for the Library -> Document -> Chunk
@@ -138,6 +162,18 @@ final class VectorCatalog(val spark: SparkSession,
   private var streamedAppends = Vector.empty[(DataFrame, Long)] // (batch, seq at append)
   private var mutationSeq = 0L
   private var mutationsSinceCompact = 0
+
+  // ---- driver-resident read path (graft.search.LocalSearch): the
+  // folded-base rows of each small library, collected on its first
+  // search after a fold (one job) and dropped whenever `base` is
+  // replaced. Reads overlay the buffered log on them under stateLock,
+  // exactly as assembleView does, so writes never force a re-collect.
+  // None marks a library that does not fit this epoch. All guarded by
+  // stateLock.
+  private var baseEpoch = 0L
+  private val residentRows = scala.collection.mutable.HashMap.empty[String, Option[Array[ChunkRow]]]
+  private val residentById = scala.collection.mutable.HashMap.empty[String, ChunkRow]
+  private var residentFloats = 0L
 
   private def emptyChunks: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.chunks)
@@ -266,12 +302,17 @@ final class VectorCatalog(val spark: SparkSession,
   def getChunk(id: String): Either[ApiError, ChunkRow] = {
     // O(1) fast path: a recently-written row lives in the driver buffer
     // (already consistent with later deletes); a tombstoned id that is
-    // NOT buffered was deleted. Only base-resident rows need a scan.
+    // NOT buffered was deleted; a folded row of a resident library is
+    // read through the same cascade overlay. Only base rows of
+    // non-resident libraries need a scan.
+    val notFound = Left(ApiError.NotFound(s"Chunk $id not found"))
     val buffered = stateLock.synchronized {
       if (upserts.contains(id)) Some(Right(upserts(id)))
-      else if (chunkTombstones.contains(id))
-        Some(Left(ApiError.NotFound(s"Chunk $id not found")))
-      else None
+      else if (chunkTombstones.contains(id)) Some(notFound)
+      else if (streamedAppends.nonEmpty) None
+      else residentById.get(id).map(r =>
+        if (docTombstones.contains(r.document_id) || libTombstones.contains(r.library_id)) notFound
+        else Right(r))
     }
     buffered.getOrElse {
       val hits = chunks.filter($"id" === id).as[ChunkRow].collect()
@@ -318,6 +359,109 @@ final class VectorCatalog(val spark: SparkSession,
   def chunksFiltered(libraryId: String, filters: Map[String, String]): DataFrame =
     chunksByLibrary(libraryId)
       .filter(MetadataFilter.compile(filters, $"metadata", $"created_at"))
+
+  /** The library's chunk rows at one catalog version, served from the
+    * driver: the resident base rows minus chunk/cascade tombstones plus
+    * the library's buffered upserts — the rows `chunksByLibrary` would
+    * scan. The first call after a fold collects the library's base rows
+    * (one job). None when the library must take the Spark path: it
+    * exceeds the resident cap or budget, or streamed batches are
+    * pending. */
+  private[graft] def residentView(libraryId: String): Option[Array[ChunkRow]] =
+    stateLock.synchronized(overlay(libraryId)) match {
+      case Right(view) => view
+      case Left((b, epoch)) =>
+        // collect outside the lock (writers keep going); admit only if
+        // no fold replaced the base meanwhile
+        val rows = collectBounded(b.filter($"library_id" === libraryId),
+          LocalSearch.maxRows(embeddingDim)).map(_.map(ChunkRow.fromRow))
+        stateLock.synchronized {
+          if (baseEpoch == epoch && !residentRows.contains(libraryId)) {
+            val floats = rows.fold(0L)(_.length.toLong * embeddingDim)
+            val admitted = rows.filter(_ => residentFloats + floats <= LocalSearch.maxResidentFloats)
+            residentRows(libraryId) = admitted
+            admitted.foreach { rs => residentFloats += floats; rs.foreach(r => residentById(r.id) = r) }
+          }
+          overlay(libraryId).toOption.flatten
+        }
+    }
+
+  /** Under stateLock: Right(the visible rows, or None for the Spark
+    * path), or Left(the base to collect and its epoch) when the library
+    * has not been collected since the last fold. */
+  private def overlay(libraryId: String): Either[(DataFrame, Long), Option[Array[ChunkRow]]] =
+    if (streamedAppends.nonEmpty) Right(None)
+    else residentRows.get(libraryId) match {
+      case None => Left((base, baseEpoch))
+      case Some(None) => Right(None)
+      case Some(Some(rows)) =>
+        val kept =
+          if (chunkTombstones.isEmpty && docTombstones.isEmpty && !libTombstones.contains(libraryId)) rows
+          else rows.filter(r => !chunkTombstones.contains(r.id) &&
+            !docTombstones.contains(r.document_id) && !libTombstones.contains(r.library_id))
+        val fresh = upserts.valuesIterator.filter(_.library_id == libraryId).toArray
+        val view = if (fresh.isEmpty) kept else kept ++ fresh
+        Right(Some(view).filter(v => LocalSearch.fits(v.length, embeddingDim)))
+    }
+
+  private def dropResident(): Unit = {
+    baseEpoch += 1
+    residentRows.clear()
+    residentById.clear()
+    residentFloats = 0L
+  }
+
+  /** At most `maxRows` rows of `df` in ONE job (a per-partition take,
+    * not CollectLimit's incremental partition scan), or None when it
+    * holds more. */
+  private def collectBounded(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
+    val rows = df.rdd.mapPartitions(_.take(cap + 1)).collect()
+    if (rows.length > cap) None else Some(rows)
+  }
+
+  /** `s` with its driver copy: reused from `prior` when the derived
+    * table is the same object, else collected when under the cap. */
+  private def withResident(s: IndexState, prior: Option[IndexState] = None): IndexState = {
+    def same(a: Option[AnyRef], b: Option[AnyRef]) = (a, b) match {
+      case (Some(x), Some(y)) => x eq y
+      case (None, None) => true
+      case _ => false
+    }
+    prior.filter(p => p.indexType == s.indexType && same(p.signatures, s.signatures) &&
+        same(p.assigned, s.assigned) && same(p.ivfpq.map(_.encoded), s.ivfpq.map(_.encoded)))
+      .map(p => s.copy(resident = p.resident))
+      .getOrElse(s.copy(resident = residentIndexOf(s)))
+  }
+
+  private def residentIndexOf(s: IndexState): Option[ResidentIndex] = {
+    val maxRows = LocalSearch.maxRows(embeddingDim).toLong
+    def cell(r: Row, i: Int): Int = r.getAs[Number](i).intValue
+    s.indexType match {
+      case IndexType.Lsh => for {
+        m <- s.lsh; sigs <- s.signatures
+        rows <- collectBounded(sigs.select("id", "bucket"), maxRows * m.numTables)
+      } yield ResidentIndex.Buckets(
+        rows.groupMap(_.getLong(1))(_.getString(0)).map { case (b, ids) => b -> ids.toArray })
+      case IndexType.Ivf => for {
+        _ <- s.ivf; assigned <- s.assigned
+        rows <- collectBounded(assigned.select("id", "cluster_id"), maxRows)
+      } yield ResidentIndex.Cells(
+        rows.groupMap(cell(_, 1))(_.getString(0)).map { case (c, ids) => c -> ids.toArray })
+      case IndexType.IvfPq => for {
+        p <- s.ivfpq
+        rows <- collectBounded(p.encoded.select("id", "cluster_id", "codes"), maxRows)
+      } yield ResidentIndex.Codes(IvfPqModel.LocalCodes(rows.map(_.getString(0)),
+        rows.map(cell(_, 1)), rows.map(_.getSeq[Int](2).toArray)))
+      case IndexType.Binary => for {
+        sigs <- s.signatures
+        rows <- collectBounded(sigs.select("id", "sig"), maxRows)
+      } yield ResidentIndex.Sigs(rows.map(_.getString(0)), rows.map(r =>
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(r.getSeq[Long](1).toArray)))
+      case _ => None
+    }
+  }
 
   // ------------------------------------------------------------------ index
   /** Build/rebuild a library's index (libraries POST /{id}/index;
@@ -378,10 +522,11 @@ final class VectorCatalog(val spark: SparkSession,
         }
       }
     } yield {
-      indexes.put(libraryId, state)
+      val built = withResident(state)
+      indexes.put(libraryId, built)
       libraries.get(libraryId).foreach(l =>
         libraries.put(libraryId, l.copy(is_indexed = true, updated_at = now())))
-      state
+      built
     }
 
   def indexState(libraryId: String): Option[IndexState] = indexes.get(libraryId)
@@ -542,8 +687,9 @@ final class VectorCatalog(val spark: SparkSession,
         case _ => // exact or never-built LSH index: nothing derived to refresh
           state.copy(builtAtVersion = version.get())
       }
-      indexes.put(libraryId, refreshed)
-      refreshed
+      val withCopy = withResident(refreshed, Some(state))
+      indexes.put(libraryId, withCopy)
+      withCopy
     }
 
   /** The binary tier's signature table: (id, sig, emb_hash) — sig is
@@ -725,6 +871,7 @@ final class VectorCatalog(val spark: SparkSession,
 
   private def compactLocked(): Unit = {
     base = assembleView().localCheckpoint(true)
+    dropResident()
     upserts.clear()
     chunkTombstones.clear()
     docTombstones.clear()
@@ -835,13 +982,11 @@ final class VectorCatalog(val spark: SparkSession,
         val m = graft.index.IndexStore.readLshModel(spark, s"$base/lsh_model")
         val sigs = spark.read.parquet(s"$base/lsh_sigs").select("id", "bucket")
         val state = IndexState(IndexType.Lsh, Some(sigs), None, Some(m), None, version.get())
-        indexes.put(libraryId, state)
         Right(state)
       } else if (exists(s"$base/ivf_model")) {
         val m = graft.index.IndexStore.readIvfModel(spark, s"$base/ivf_model")
         val assigned = spark.read.parquet(s"$base/ivf_assigned")
         val state = IndexState(IndexType.Ivf, None, Some(assigned), None, Some(m), version.get())
-        indexes.put(libraryId, state)
         Right(state)
       } else if (exists(s"$base/ivfpq_centroids")) {
         val ivf = graft.index.IndexStore.readIvfModel(spark, s"$base/ivfpq_centroids")
@@ -864,7 +1009,6 @@ final class VectorCatalog(val spark: SparkSession,
         encoded.count()
         val state = IndexState(IndexType.IvfPq, None, None, None, None,
           version.get(), ivfpq = Some(IvfPqState(coded, encoded)))
-        indexes.put(libraryId, state)
         Right(state)
       } else if (exists(s"$base/hnsw_graph")) {
         val g = graft.index.HnswModel.read(spark, s"$base/hnsw_graph")
@@ -881,7 +1025,6 @@ final class VectorCatalog(val spark: SparkSession,
         val hashes = if (hasHashes) rows.map(_.getLong(2)) else Array.empty[Long]
         val state = IndexState(IndexType.Hnsw, None, None, None, None,
           version.get(), hnsw = Some(HnswState(g, ids, hashes)))
-        indexes.put(libraryId, state)
         Right(state)
       } else if (exists(s"$base/binary_sigs")) {
         // cache + materialize like the build path: every search scans
@@ -892,17 +1035,19 @@ final class VectorCatalog(val spark: SparkSession,
         val nSigs = sigs.count()
         val state = IndexState(IndexType.Binary, Some(sigs), None, None,
           None, version.get(), sigCount = Some(nSigs))
-        indexes.put(libraryId, state)
         Right(state)
       } else if (exists(base)) {
         // saveIndexes writes nothing for an Exact library — an existing
         // base dir with no model is still a valid (exact) restore.
         val state = IndexState(IndexType.Exact, None, None, None, None, version.get())
-        indexes.put(libraryId, state)
         Right(state)
       } else {
         Left(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
       }
+    }.map { state =>
+      val restored = withResident(state)
+      indexes.put(libraryId, restored)
+      restored
     }
 
   /** Persist the full catalog: chunks partitioned by library (partition
@@ -930,6 +1075,7 @@ final class VectorCatalog(val spark: SparkSession,
       docTombstones.clear(); libTombstones.clear()
       streamedAppends = Vector.empty
       mutationsSinceCompact = 0
+      dropResident()
     }
     libraries.clear()
     spark.read.schema(Schemas.libraries).parquet(s"$path/libraries").collect().foreach { r =>

@@ -1,7 +1,16 @@
 package graft.filter
 
+import java.time.ZoneId
+
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Contains => ContainsExpr, Literal, Lower}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.model.{ApiError, ChunkRow}
 
 /**
  * The reference's metadata-filter predicate language, compiled to Catalyst
@@ -19,7 +28,10 @@ import org.apache.spark.sql.functions._
  *
  * Compiling to plain `Column`s keeps the whole thing inside Catalyst:
  * the `created_*` forms push down to the Parquet scan, and the map
- * predicates stay in whole-stage codegen.
+ * predicates stay in whole-stage codegen. [[MetadataFilter.local]] is
+ * the driver-side twin the resident search path evaluates per chunk; it
+ * uses Spark's own string and timestamp primitives so both paths select
+ * the same chunks.
  */
 sealed trait MetaPredicate {
   def toColumn(metadataCol: Column, createdAtCol: Column): Column
@@ -55,6 +67,38 @@ object MetadataFilter {
       else if (key.endsWith("_contains")) Contains(key.stripSuffix("_contains"), value)
       else Eq(key, value)
     }
+
+  /** Parse and validate a filter for the search boundary, returning the
+    * driver-side twin of [[compile]]: a `created_*` value must parse as
+    * a timestamp (`to_timestamp`'s own parser in the session time zone),
+    * else the filter is a Validation error instead of a silent no-match.
+    * String predicates compare UTF-8 bytes and lower-case through
+    * Catalyst's `Lower`/`Contains`, exactly as the compiled column does. */
+  def local(filters: Map[String, String], zone: ZoneId): Either[ApiError, ChunkRow => Boolean] = {
+    val tests: Seq[Either[ApiError, ChunkRow => Boolean]] = parse(filters).map {
+      case Eq(key, value) =>
+        val v = UTF8String.fromString(value)
+        Right((c: ChunkRow) => c.metadata.get(key).exists(x => x != null && UTF8String.fromString(x) == v))
+      case Contains(key, value) =>
+        val pattern = Lower(Literal(value)).eval()
+        val expr = ContainsExpr(Lower(BoundReference(0, StringType, nullable = true)),
+          Literal(pattern, StringType))
+        Right((c: ChunkRow) => c.metadata.get(key).exists(x => x != null &&
+          expr.eval(InternalRow(UTF8String.fromString(x))).asInstanceOf[Boolean]))
+      case CreatedAfter(value) =>
+        micros(value, zone).map(t => (c: ChunkRow) => DateTimeUtils.fromJavaTimestamp(c.created_at) > t)
+      case CreatedBefore(value) =>
+        micros(value, zone).map(t => (c: ChunkRow) => DateTimeUtils.fromJavaTimestamp(c.created_at) < t)
+    }
+    tests.collectFirst { case Left(e) => e }.toLeft {
+      val ps = tests.collect { case Right(p) => p }
+      (c: ChunkRow) => ps.forall(_(c))
+    }
+  }
+
+  private def micros(value: String, zone: ZoneId): Either[ApiError, Long] =
+    DateTimeUtils.stringToTimestamp(UTF8String.fromString(value), zone)
+      .toRight(ApiError.Validation(s"Invalid timestamp in metadata filter: $value"))
 
   /** Conjunction over all predicates; empty filter matches everything. */
   def compile(filters: Map[String, String],

@@ -47,8 +47,17 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel) {
     * the encode pipeline once per probed cell. */
   def candidates(encoded: DataFrame, query: Array[Float],
       nprobe: Int = graft.model.GraftConfig.ivfNprobe, n: Int = 100): DataFrame =
-    IvfPqModel.adcCandidates(encoded, ivf, pq.m, ivf.probe(query, nprobe),
-      c => pq.adcTable(IvfPqModel.residualQuery(query, ivf.centroids(c))), n)
+    IvfPqModel.adcCandidates(encoded, ivf, pq.m, ivf.probe(query, nprobe), cellTable(query), n)
+
+  /** Driver twin of [[candidates]] over a collected encoded table. */
+  def candidatesLocal(codes: IvfPqModel.LocalCodes, query: Array[Float],
+      nprobe: Int, n: Int): Array[String] =
+    IvfPqModel.adcCandidatesLocal(codes, pq.m, ivf.probe(query, nprobe), cellTable(query), n)
+
+  /** The ADC table of one probed cell: PQ distances from the query's
+    * residual against that cell's centroid. */
+  private def cellTable(query: Array[Float]): Int => Array[Array[Float]] =
+    c => pq.adcTable(IvfPqModel.residualQuery(query, ivf.centroids(c)))
 }
 
 object IvfPqModel {
@@ -91,6 +100,31 @@ object IvfPqModel {
       .orderBy(col("adc_dist").asc, col("id").asc)
       .limit(n)
       .select("id", "cluster_id", "adc_dist")
+  }
+
+  /** An encoded table collected to the driver: row i is chunk `ids(i)`
+    * in cell `cells(i)` with PQ codes `codes(i)`. */
+  final case class LocalCodes(ids: Array[String], cells: Array[Int], codes: Array[Array[Int]])
+
+  /**
+   * Driver twin of [[adcCandidates]], candidate for candidate: the same
+   * per-cell tables, the same left-to-right double sum over the m
+   * lookups (float entries widened to double, first term unchanged, as
+   * `reduce(_ + _)` over the cast columns evaluates), and the same
+   * `(adc_dist asc, id asc)` cutoff with Spark's double and string
+   * orderings.
+   */
+  private[index] def adcCandidatesLocal(rows: LocalCodes, m: Int, probed: Seq[Int],
+      cellTable: Int => Array[Array[Float]], n: Int): Array[String] = {
+    val tables = probed.distinct.map(c => c -> cellTable(c)).toMap
+    val scored = rows.cells.indices.iterator.filter(i => tables.contains(rows.cells(i))).map { i =>
+      val t = tables(rows.cells(i)); val code = rows.codes(i)
+      var acc = t(0)(code(0)).toDouble
+      var s = 1
+      while (s < m) { acc += t(s)(code(s)).toDouble; s += 1 }
+      (acc, rows.ids(i))
+    }
+    graft.search.LocalSearch.firstN(scored, n, graft.search.LocalSearch.ascending).map(_._2)
   }
 
   /** Element-wise emb - centroid[cluster_id] via broadcast literal. */

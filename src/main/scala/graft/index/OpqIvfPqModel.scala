@@ -48,8 +48,15 @@ final case class OpqIvfPqModel(ivf: IvfModel, opq: OpqModel) {
     * [[IvfPqModel.candidates]]). */
   def candidates(encoded: DataFrame, query: Array[Float],
       nprobe: Int = graft.model.GraftConfig.ivfNprobe, n: Int = 100): DataFrame =
-    IvfPqModel.adcCandidates(encoded, ivf, pq.m, ivf.probe(query, nprobe),
-      c => pq.adcTable(opq.rotate(IvfPqModel.residualQuery(query, ivf.centroids(c)))), n)
+    IvfPqModel.adcCandidates(encoded, ivf, pq.m, ivf.probe(query, nprobe), cellTable(query), n)
+
+  /** Driver twin of [[candidates]] over a collected encoded table. */
+  def candidatesLocal(codes: IvfPqModel.LocalCodes, query: Array[Float],
+      nprobe: Int, n: Int): Array[String] =
+    IvfPqModel.adcCandidatesLocal(codes, pq.m, ivf.probe(query, nprobe), cellTable(query), n)
+
+  private def cellTable(query: Array[Float]): Int => Array[Array[Float]] =
+    c => pq.adcTable(opq.rotate(IvfPqModel.residualQuery(query, ivf.centroids(c))))
 }
 
 object OpqIvfPqModel {

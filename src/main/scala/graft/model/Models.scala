@@ -20,6 +20,15 @@ final case class ChunkRow(
     created_at: Timestamp,
     updated_at: Timestamp)
 
+object ChunkRow {
+  /** Decode a row whose first eight columns follow [[Schemas.chunks]]. */
+  def fromRow(r: org.apache.spark.sql.Row): ChunkRow =
+    ChunkRow(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+      Option(r.getAs[scala.collection.Seq[Float]](4)).map(_.toArray),
+      Option(r.getAs[scala.collection.Map[String, String]](5)).map(_.toMap).getOrElse(Map.empty),
+      r.getTimestamp(6), r.getTimestamp(7))
+}
+
 final case class DocumentRow(
     id: String,
     library_id: String,
@@ -47,6 +56,8 @@ final case class SearchQuery(
   def validated: Either[ApiError, SearchQuery] =
     if (queryText.isEmpty && queryEmbedding.isEmpty)
       Left(ApiError.Validation("Either query_text or query_embedding must be provided"))
+    else if (queryEmbedding.exists(_.exists(f => !java.lang.Float.isFinite(f))))
+      Left(ApiError.Validation("query_embedding must contain only finite numbers"))
     else Right(this)
 }
 

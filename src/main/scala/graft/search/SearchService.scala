@@ -1,9 +1,11 @@
 package graft.search
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{IndexType, VectorCatalog}
+import graft.catalog.{HnswState, IndexState, IndexType, VectorCatalog}
+import graft.filter.MetadataFilter
 import graft.functions.GraftFunctions._
 import graft.model._
 
@@ -26,39 +28,78 @@ import graft.model._
  * the reference's observable behavior (SURVEY.md §7 risk register).
  * Edge semantics preserved: IVF untrained => empty (indexes.py:343);
  * LSH zero candidates => full-scan fallback (indexes.py:151-153).
+ *
+ * Two read paths with one answer: a library under the resident cap is
+ * served from the catalog's driver snapshot with zero Spark jobs
+ * ([[LocalSearch]]); a larger one (or one with pending streamed
+ * batches, or a tier without a driver copy) runs the Spark plans
+ * below. Bad input — a query vector of the wrong dimension or with a
+ * non-finite element, an unparseable `created_*` filter — is a
+ * Validation error on both, raised before any job or scan.
  */
-final class SearchService(catalog: VectorCatalog) {
+final class SearchService(catalog: VectorCatalog,
+    residentReads: Boolean = true) { // false pins the Spark path (differential tests)
+  import SearchService._
 
   def search(libraryId: String, query: SearchQuery): Either[ApiError, SearchResponse] =
     for {
       q <- query.validated
       _ <- catalog.getLibrary(libraryId)
+      _ <- q.queryEmbedding.filter(_.length != catalog.embeddingDim)
+        .map(e => ApiError.Validation(s"query_embedding has dimension ${e.length}; " +
+          s"the catalog's embedding dimension is ${catalog.embeddingDim}")).toLeft(())
+      matches <- MetadataFilter.local(q.metadataFilters,
+        DateTimeUtils.getZoneId(catalog.spark.sessionState.conf.sessionLocalTimeZone))
     } yield {
       val t0 = System.nanoTime()
       val k = GraftConfig.clampK(q.k)
       val queryVec = q.queryEmbedding.getOrElse(catalog.embedder.embedOne(q.queryText.get))
-
-      // (5) metadata pre-filter defines the chunk universe
-      val universe = catalog.chunksFiltered(libraryId, q.metadataFilters)
-        .filter(col("embedding").isNotNull)
-
-      val results = catalog.indexState(libraryId).map(_.indexType) match {
-        case Some(IndexType.Lsh) if catalog.indexState(libraryId).exists(_.signatures.isDefined) =>
-          lshSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Ivf) =>
-          ivfSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Hnsw) if catalog.indexState(libraryId).exists(_.hnsw.isDefined) =>
-          hnswSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.IvfPq) =>
-          ivfPqSearch(libraryId, universe, queryVec, k)
-        case Some(IndexType.Binary) if catalog.indexState(libraryId).exists(_.signatures.isDefined) =>
-          binarySearch(libraryId, universe, queryVec, k)
-        case _ => // exact index type, or index never built => brute force
-          exactTopK(universe, queryVec, k)
-      }
+      // one read of the index state: both paths probe the same version
+      val state = catalog.indexState(libraryId)
+      val results = localSearch(libraryId, state, matches, queryVec, k)
+        .getOrElse(sparkSearch(libraryId, state, q.metadataFilters, queryVec, k))
       val ms = (System.nanoTime() - t0) / 1e6
       SearchResponse(results, results.size, ms)
     }
+
+  /** The zero-job path: the tier's driver probe, then the filtered
+    * resident view, then the exact rerank. None when the tier has no
+    * driver copy or the library is not resident (Spark path). */
+  private def localSearch(libraryId: String, state: Option[IndexState],
+      matches: ChunkRow => Boolean, queryVec: Array[Float], k: Int): Option[Seq[SearchResult]] =
+    for {
+      cands <- if (residentReads) LocalSearch.candidates(state, queryVec, k) else None
+      view <- if (cands == LocalSearch.Candidates.Empty) Some(Array.empty[ChunkRow])
+        else catalog.residentView(libraryId)
+    } yield {
+      val admitted: ChunkRow => Boolean = cands match {
+        case LocalSearch.Candidates.Only(ids) => r => ids.contains(r.id)
+        case _ => _ => true
+      }
+      LocalSearch.topK(view.iterator.filter(r => admitted(r) && matches(r)), queryVec, k)
+    }
+
+  private def sparkSearch(libraryId: String, state: Option[IndexState],
+      filters: Map[String, String], queryVec: Array[Float], k: Int): Seq[SearchResult] = {
+    // (5) metadata pre-filter defines the chunk universe
+    val universe = catalog.chunksFiltered(libraryId, filters)
+      .filter(col("embedding").isNotNull)
+    state match {
+      case Some(s) if s.indexType == IndexType.Lsh && s.signatures.isDefined =>
+        lshSearch(s, universe, queryVec, k)
+      case Some(s) if s.indexType == IndexType.Ivf =>
+        ivfSearch(s, universe, queryVec, k)
+      case Some(s) if s.indexType == IndexType.Hnsw && s.hnsw.isDefined =>
+        exactTopK(universe.filter(col("id").isin(hnswCandidates(s.hnsw.get, queryVec, k): _*)),
+          queryVec, k)
+      case Some(s) if s.indexType == IndexType.IvfPq =>
+        ivfPqSearch(s, universe, queryVec, k)
+      case Some(s) if s.indexType == IndexType.Binary && s.signatures.isDefined =>
+        binarySearch(s, universe, queryVec, k)
+      case _ => // exact index type, or index never built => brute force
+        exactTopK(universe, queryVec, k)
+    }
+  }
 
   /** Q1 exact: cosine + euclid, deterministic tiebreak (desc score, asc id). */
   private def exactTopK(universe: DataFrame, queryVec: Array[Float], k: Int): Seq[SearchResult] =
@@ -73,24 +114,17 @@ final class SearchService(catalog: VectorCatalog) {
     * universe membership check, so a non-empty candidate set that the
     * metadata post-filter eliminates correctly returns < k rows, it
     * does NOT fall back). */
-  private def lshSearch(libraryId: String, universe: DataFrame,
+  private def lshSearch(state: IndexState, universe: DataFrame,
       queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
-    // flips=0 is exactly the reference's single-probe candidates;
-    // >0 adds Lv-et-al multi-probe buckets (opt-in, GraftConfig —
-    // either the explicit flips knob or the active recall preset)
-    val flips = GraftConfig.lshActivePreset.map(_.flips)
-      .getOrElse(GraftConfig.lshMultiProbeFlips)
     val candidates = state.lsh.get.multiProbeCandidates(
-      state.signatures.get, queryVec, flips)
+      state.signatures.get, queryVec, lshFlips)
     if (candidates.isEmpty) exactTopK(universe, queryVec, k)
     else exactTopK(universe.join(candidates, Seq("id"), "left_semi"), queryVec, k)
   }
 
   /** Q3: probe nprobe clusters; untrained => empty (indexes.py:343). */
-  private def ivfSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
+  private def ivfSearch(state: IndexState, universe: DataFrame,
+      queryVec: Array[Float], k: Int): Seq[SearchResult] =
     state.ivf match {
       case None => Seq.empty // untrained IVF returns no results
       case Some(model) =>
@@ -98,38 +132,20 @@ final class SearchService(catalog: VectorCatalog) {
         val candidateChunks = universe.join(probed, Seq("id"), "left_semi")
         exactTopK(candidateChunks, queryVec, k)
     }
-  }
-
-  /** HNSW tier: graph navigation proposes a candidate set (fetch factor
-    * 4k, floor 50 — the two-tier contract: graph error is removed by
-    * the exact rerank below), then the same post-filter + exact-cosine
-    * top-k as every other index path. The graph covers all indexed
-    * chunks, so like IVF a selective metadata filter may return < k —
-    * the reference's observable post-filter semantics. */
-  private def hnswSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val hs = catalog.indexState(libraryId).get.hnsw.get
-    val fetch = math.max(4 * k, 50)
-    val candIds = hs.graph.search(queryVec, fetch, ef = math.max(100, fetch))
-      .map { case (node, _) => hs.chunkIds(node.toInt) }
-    exactTopK(universe.filter(col("id").isin(candIds: _*)), queryVec, k)
-  }
 
   /** IVF-PQ tier: residual-ADC candidate generation over the encoded
     * codes (probe nprobe cells, fetch 4k floor 50), exact cosine
     * rerank over the survivors. Untrained (below the nlist threshold
     * at build) => empty, exactly like plain IVF. */
-  private def ivfPqSearch(libraryId: String, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    catalog.indexState(libraryId).get.ivfpq match {
+  private def ivfPqSearch(state: IndexState, universe: DataFrame,
+      queryVec: Array[Float], k: Int): Seq[SearchResult] =
+    state.ivfpq match {
       case None => Seq.empty // untrained: reference IVF semantics
       case Some(s) =>
-        val fetch = math.max(4 * k, 50)
         val cands = s.candidatesWith(queryVec,
-          nprobe = GraftConfig.ivfNprobe, n = fetch).select("id")
+          nprobe = GraftConfig.ivfNprobe, n = ivfPqFetch(k)).select("id")
         exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
     }
-  }
 
   /** Binary sign-quantization tier: Hamming top-C over the packed
     * signature table (integer distance, id tiebreak — a per-partition
@@ -137,38 +153,56 @@ final class SearchService(catalog: VectorCatalog) {
     * any tier), then the shared post-filter + exact-cosine top-k. The
     * candidate set is never empty for a non-empty index (every indexed
     * chunk has a signature), so there is no LSH-style fallback. */
-  private def binarySearch(libraryId: String, universe: DataFrame,
+  private def binarySearch(state: IndexState, universe: DataFrame,
       queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val state = catalog.indexState(libraryId).get
-    // n-proportional candidate budget: 1-bit/dim signatures lose
-    // recall at FIXED C as the corpus grows (measured curve in
-    // GraftConfig.binaryCandidateFraction's doc). The count was
-    // captured when the cached table was materialized at
+    // The count was captured when the cached table was materialized at
     // build/refresh/restore — no Spark job on the search hot path.
     val n = state.sigCount.getOrElse(state.signatures.get.count())
-    val fetch = math.max(math.max(4 * k, 64),
-      math.ceil(n * GraftConfig.binaryCandidateFraction).toInt)
     val qSig = graft.index.BinaryQuant.pack(queryVec)
     val cands = state.signatures.get
       .withColumn("ham", hamming_dist(col("sig"), typedLit(qSig.toSeq)))
       .orderBy(col("ham").asc, col("id").asc)
-      .limit(fetch)
+      .limit(binaryFetch(n, k))
       .select("id")
     exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
   }
 
-  private def collectResults(df: DataFrame): Seq[SearchResult] = {
-    import df.sparkSession.implicits._
+  private def collectResults(df: DataFrame): Seq[SearchResult] =
     df.select(col("id"), col("document_id"), col("library_id"), col("text"),
         col("embedding"), col("metadata"), col("created_at"), col("updated_at"),
         col("similarity_score"), col("distance"))
       .collect()
-      .map { r =>
-        val chunk = ChunkRow(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-          Option(r.getAs[scala.collection.Seq[Float]]("embedding")).map(_.toArray),
-          Option(r.getAs[scala.collection.Map[String, String]]("metadata")).map(_.toMap).getOrElse(Map.empty),
-          r.getTimestamp(6), r.getTimestamp(7))
-        SearchResult(chunk, r.getDouble(8), r.getDouble(9))
-      }.toSeq
+      .map(r => SearchResult(ChunkRow.fromRow(r), r.getDouble(8), r.getDouble(9)))
+      .toSeq
+}
+
+/** Tier parameters shared by the Spark plans and their driver twins. */
+object SearchService {
+
+  /** LSH multi-probe flips: 0 is exactly the reference's single-probe
+    * candidates; >0 adds Lv-et-al multi-probe buckets (opt-in,
+    * GraftConfig — either the explicit flips knob or the active recall
+    * preset). */
+  def lshFlips: Int =
+    GraftConfig.lshActivePreset.map(_.flips).getOrElse(GraftConfig.lshMultiProbeFlips)
+
+  /** HNSW tier: graph navigation proposes a candidate set (fetch factor
+    * 4k, floor 50 — the two-tier contract: graph error is removed by
+    * the exact rerank). The graph covers all indexed chunks, so like
+    * IVF a selective metadata filter may return < k — the reference's
+    * observable post-filter semantics. */
+  def hnswCandidates(hs: HnswState, queryVec: Array[Float], k: Int): Seq[String] = {
+    val fetch = math.max(4 * k, 50)
+    hs.graph.search(queryVec, fetch, ef = math.max(100, fetch))
+      .map { case (node, _) => hs.chunkIds(node.toInt) }
   }
+
+  /** IVF-PQ candidate budget: 4k, floor 50. */
+  def ivfPqFetch(k: Int): Int = math.max(4 * k, 50)
+
+  /** Binary candidate budget over `n` signatures: n-proportional, since
+    * 1-bit/dim signatures lose recall at FIXED C as the corpus grows
+    * (measured curve in GraftConfig.binaryCandidateFraction's doc). */
+  def binaryFetch(n: Long, k: Int): Int =
+    math.max(math.max(4 * k, 64), math.ceil(n * GraftConfig.binaryCandidateFraction).toInt)
 }

@@ -35,15 +35,22 @@ abstract class VectorBinaryExpression extends BinaryExpression with ExpectsInput
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   @inline protected final def get(a: ArrayData, i: Int, isFloat: Boolean): Double =
-    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+    VectorBinaryExpression.get(a, i, isFloat)
 
-  protected def checkDims(n1: Int, n2: Int): Unit =
-    if (n1 != n2) throw new IllegalArgumentException(
-      s"Vectors must have the same dimension: $n1 != $n2")
+  protected def checkDims(n1: Int, n2: Int): Unit = VectorBinaryExpression.checkDims(n1, n2)
 
   /** java source fragment reading element i of `v` as double. */
   protected def cget(v: String, i: String, isFloat: Boolean): String =
     if (isFloat) s"(double) $v.getFloat($i)" else s"$v.getDouble($i)"
+}
+
+object VectorBinaryExpression {
+  @inline def get(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  def checkDims(n1: Int, n2: Int): Unit =
+    if (n1 != n2) throw new IllegalArgumentException(
+      s"Vectors must have the same dimension: $n1 != $n2")
 }
 
 /** `cosine_sim(a, b)` — cosine similarity, zero-vector => 0.0. */
@@ -51,17 +58,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     extends VectorBinaryExpression {
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements(); checkDims(n, b.numElements())
-    val af = elemIsFloat(left); val bf = elemIsFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = get(a, i, af); val y = get(b, i, bf)
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.eval(l.asInstanceOf[ArrayData], elemIsFloat(left),
+      r.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
@@ -89,21 +88,29 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The interpreted scalar loop of [[CosineSimilarity]], callable on
+  * its own (the driver-resident search path scores with it, so both
+  * paths share one accumulation order; `doGenCode` mirrors it). */
+object CosineSimilarity {
+  def eval(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean): Double = {
+    val n = a.numElements(); VectorBinaryExpression.checkDims(n, b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = VectorBinaryExpression.get(a, i, af); val y = VectorBinaryExpression.get(b, i, bf)
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+}
+
 /** `euclidean_dist(a, b)` — L2 distance. */
 case class EuclideanDistance(left: Expression, right: Expression)
     extends VectorBinaryExpression {
   override def prettyName: String = "euclidean_dist"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements(); checkDims(n, b.numElements())
-    val af = elemIsFloat(left); val bf = elemIsFloat(right)
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      val d = get(a, i, af) - get(b, i, bf); acc += d * d; i += 1
-    }
-    math.sqrt(acc)
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    EuclideanDistance.eval(l.asInstanceOf[ArrayData], elemIsFloat(left),
+      r.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
@@ -126,6 +133,20 @@ case class EuclideanDistance(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The interpreted scalar loop of [[EuclideanDistance]] (see
+  * [[CosineSimilarity.eval]]). */
+object EuclideanDistance {
+  def eval(a: ArrayData, af: Boolean, b: ArrayData, bf: Boolean): Double = {
+    val n = a.numElements(); VectorBinaryExpression.checkDims(n, b.numElements())
+    var acc = 0.0; var i = 0
+    while (i < n) {
+      val d = VectorBinaryExpression.get(a, i, af) - VectorBinaryExpression.get(b, i, bf)
+      acc += d * d; i += 1
+    }
+    math.sqrt(acc)
+  }
 }
 
 /** `dot_product(a, b)`. */

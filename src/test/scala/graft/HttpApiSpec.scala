@@ -223,4 +223,77 @@ class HttpApiSpec extends SparkSpec {
     assert(f.size == 3 && f.get(0).get("embedding").isNull)
     request("DELETE", s"/api/v1/libraries/$libId")
   }
+
+  /** A library with a few embedded chunks for the malformed-search cases. */
+  private def searchable(name: String): String = {
+    val libId = json(request("POST", "/api/v1/libraries", s"""{"name":"$name","index_type":"exact"}"""))
+      .get("id").asText
+    val docId = json(request("POST", s"/api/v1/documents?library_id=$libId", """{"name":"d"}"""))
+      .get("id").asText
+    Seq("stars and orbits", "rivers and oceans").foreach(t =>
+      request("POST", s"/api/v1/chunks?document_id=$docId", s"""{"text":"$t"}"""))
+    libId
+  }
+
+  private def searchStatus(libId: String, body: String): (Int, String) = {
+    val r = request("POST", s"/api/v1/search/libraries/$libId", body)
+    (r.statusCode, json(r).path("detail").asText)
+  }
+
+  private val dim64 = Seq.fill(64)("0.1")
+
+  test("malformed search: query_embedding of the wrong dimension is 400, not 500") {
+    val libId = searchable("wrong-dim")
+    val (status, detail) = searchStatus(libId, """{"query_embedding":[0.1,0.2,0.3],"k":3}""")
+    assert(status == 400 && detail.contains("dimension"), detail)
+    // the right dimension still answers
+    assert(searchStatus(libId, s"""{"query_embedding":[${dim64.mkString(",")}],"k":3}""")._1 == 200)
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("malformed search: a non-numeric or non-finite query_embedding element is 400") {
+    val libId = searchable("bad-element")
+    val nonNumeric = dim64.updated(5, "\"x\"").mkString(",")
+    assert(searchStatus(libId, s"""{"query_embedding":[$nonNumeric]}""")._1 == 400)
+    // 1e39 overflows float: +Infinity after parsing
+    val nonFinite = dim64.updated(0, "1e39").mkString(",")
+    val (status, detail) = searchStatus(libId, s"""{"query_embedding":[$nonFinite]}""")
+    assert(status == 400 && detail.contains("finite"), detail)
+    assert(searchStatus(libId, """{"query_embedding":"0.1,0.2"}""")._1 == 400)
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("malformed search: metadata_filters that is not an object is 400") {
+    val libId = searchable("filter-shape")
+    assert(searchStatus(libId, """{"query_text":"stars","metadata_filters":"lang=en"}""")._1 == 400)
+    assert(searchStatus(libId, """{"query_text":"stars","metadata_filters":["lang"]}""")._1 == 400)
+    assert(searchStatus(libId, """{"query_text":"stars","metadata_filters":{}}""")._1 == 200)
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("malformed search: an unparseable created_after / created_before is 400") {
+    val libId = searchable("bad-date")
+    assert(searchStatus(libId,
+      """{"query_text":"stars","metadata_filters":{"created_after":"yesterday"}}""")._1 == 400)
+    assert(searchStatus(libId,
+      """{"query_text":"stars","metadata_filters":{"created_before":"2024-13-45"}}""")._1 == 400)
+    val ok = request("POST", s"/api/v1/search/libraries/$libId",
+      """{"query_text":"stars","metadata_filters":{"created_after":"2020-01-01"}}""")
+    assert(ok.statusCode == 200 && json(ok).get("total_results").asInt == 2)
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("stop() shuts the request pool down, so the JVM can exit") {
+    val own = new HttpApi(new VectorDb(spark))
+    own.start()
+    val r = client.send(HttpRequest.newBuilder()
+      .uri(URI.create(s"http://127.0.0.1:${own.boundPort}/health")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode == 200)
+    val prefix = s"graft-http-${own.boundPort}-"
+    own.stop()
+    assert(own.awaitStopped(10000), "request pool still running after stop()")
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t => t.isAlive && t.getName.startsWith(prefix)))
+  }
 }
