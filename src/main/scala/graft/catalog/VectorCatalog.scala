@@ -94,6 +94,22 @@ object ResidentIndex {
       sigs: Array[org.apache.spark.sql.catalyst.util.ArrayData]) extends ResidentIndex
 }
 
+/** One resident library at one catalog version: its folded-base rows
+  * and copies of the log entries that can touch them (chunk ids, doc
+  * ids and the library's own cascade, its buffered upserts). Base rows
+  * predate every tombstone, so each one applies. */
+private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
+    deadChunks: Set[String], deadDocs: Set[String], libraryDeleted: Boolean,
+    fresh: Array[ChunkRow]) {
+  def visible: Array[ChunkRow] = {
+    val kept =
+      if (libraryDeleted) Array.empty[ChunkRow]
+      else if (deadChunks.isEmpty && deadDocs.isEmpty) rows
+      else rows.filter(r => !deadChunks.contains(r.id) && !deadDocs.contains(r.document_id))
+    if (fresh.isEmpty) kept else kept ++ fresh
+  }
+}
+
 /** Versioned per-library index state: the Spark-native replacement for
   * the reference's mutable `IndexManager` registry + locks
   * (library_service.py:18, concurrency.py). DataFrames are immutable, so
@@ -165,14 +181,17 @@ final class VectorCatalog(val spark: SparkSession,
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
   // folded-base rows of each small library, collected on its first
-  // search after a fold (one job) and dropped whenever `base` is
-  // replaced. Reads overlay the buffered log on them under stateLock,
-  // exactly as assembleView does, so writes never force a re-collect.
-  // None marks a library that does not fit this epoch. All guarded by
-  // stateLock.
+  // search after a fold and dropped whenever `base` is replaced. Reads
+  // copy the log entries that touch a library under stateLock, as
+  // assembleView does, and overlay them outside it, so writes never
+  // force a re-collect. None marks a library that does not fit this
+  // epoch. `foldedRows` is the base's row count per library where the
+  // driver knows it: a collect runs only after the count says the rows
+  // fit. All guarded by stateLock.
   private var baseEpoch = 0L
   private val residentRows = scala.collection.mutable.HashMap.empty[String, Option[Array[ChunkRow]]]
   private val residentById = scala.collection.mutable.HashMap.empty[String, ChunkRow]
+  private val foldedRows = scala.collection.mutable.HashMap.empty[String, Long]
   private var residentFloats = 0L
 
   private def emptyChunks: DataFrame =
@@ -363,62 +382,76 @@ final class VectorCatalog(val spark: SparkSession,
   /** The library's chunk rows at one catalog version, served from the
     * driver: the resident base rows minus chunk/cascade tombstones plus
     * the library's buffered upserts — the rows `chunksByLibrary` would
-    * scan. The first call after a fold collects the library's base rows
-    * (one job). None when the library must take the Spark path: it
-    * exceeds the resident cap or budget, or streamed batches are
-    * pending. */
-  private[graft] def residentView(libraryId: String): Option[Array[ChunkRow]] =
-    stateLock.synchronized(overlay(libraryId)) match {
-      case Right(view) => view
-      case Left((b, epoch)) =>
-        // collect outside the lock (writers keep going); admit only if
-        // no fold replaced the base meanwhile
-        val rows = collectBounded(b.filter($"library_id" === libraryId),
-          LocalSearch.maxRows(embeddingDim)).map(_.map(ChunkRow.fromRow))
-        stateLock.synchronized {
-          if (baseEpoch == epoch && !residentRows.contains(libraryId)) {
-            val floats = rows.fold(0L)(_.length.toLong * embeddingDim)
-            val admitted = rows.filter(_ => residentFloats + floats <= LocalSearch.maxResidentFloats)
-            residentRows(libraryId) = admitted
-            admitted.foreach { rs => residentFloats += floats; rs.foreach(r => residentById(r.id) = r) }
-          }
-          overlay(libraryId).toOption.flatten
-        }
+    * scan. The first call after a fold counts the library's base rows
+    * (unless a fold carried the count) and collects them only when they
+    * fit: a library over the cap costs the driver one number, never its
+    * rows. None when the library must take the Spark path: it exceeds
+    * the resident cap or budget, or streamed batches are pending. */
+  private[graft] def residentView(libraryId: String): Option[Array[ChunkRow]] = {
+    val snap = stateLock.synchronized(snapshot(libraryId)) match {
+      case Right(s) => s
+      case Left((b, epoch, known)) => admit(libraryId, b, epoch, known)
     }
+    snap.map(_.visible).filter(v => LocalSearch.fits(v.length, embeddingDim))
+  }
 
-  /** Under stateLock: Right(the visible rows, or None for the Spark
-    * path), or Left(the base to collect and its epoch) when the library
-    * has not been collected since the last fold. */
-  private def overlay(libraryId: String): Either[(DataFrame, Long), Option[Array[ChunkRow]]] =
+  /** Count (when not known) and collect one library's base rows outside
+    * the lock (writers keep going), then admit them unless a fold
+    * replaced the base meanwhile. */
+  private def admit(libraryId: String, b: DataFrame, epoch: Long,
+      known: Option[Long]): Option[ResidentSnapshot] = {
+    val libRows = b.filter($"library_id" === libraryId)
+    val n = known.getOrElse(rowCount(libRows))
+    val floats = n * embeddingDim
+    def inBudget = residentFloats + floats <= LocalSearch.maxResidentFloats
+    val rows =
+      if (LocalSearch.fits(n, embeddingDim) && stateLock.synchronized(inBudget))
+        Some(libRows.collect().map(ChunkRow.fromRow))
+      else None
+    stateLock.synchronized {
+      if (baseEpoch == epoch && !residentRows.contains(libraryId)) {
+        foldedRows(libraryId) = n
+        val admitted = rows.filter(_ => inBudget)
+        residentRows(libraryId) = admitted
+        admitted.foreach { rs => residentFloats += floats; rs.foreach(r => residentById(r.id) = r) }
+      }
+      snapshot(libraryId).toOption.flatten
+    }
+  }
+
+  /** Under stateLock: Right(the library's resident snapshot, or None
+    * for the Spark path), or Left(the base to collect, its epoch and
+    * the library's known row count) when the library has not been
+    * collected since the last fold. Copies only the log entries: the
+    * per-row filtering runs outside the lock. */
+  private def snapshot(libraryId: String)
+      : Either[(DataFrame, Long, Option[Long]), Option[ResidentSnapshot]] =
     if (streamedAppends.nonEmpty) Right(None)
     else residentRows.get(libraryId) match {
-      case None => Left((base, baseEpoch))
+      case None => Left((base, baseEpoch, foldedRows.get(libraryId)))
       case Some(None) => Right(None)
-      case Some(Some(rows)) =>
-        val kept =
-          if (chunkTombstones.isEmpty && docTombstones.isEmpty && !libTombstones.contains(libraryId)) rows
-          else rows.filter(r => !chunkTombstones.contains(r.id) &&
-            !docTombstones.contains(r.document_id) && !libTombstones.contains(r.library_id))
-        val fresh = upserts.valuesIterator.filter(_.library_id == libraryId).toArray
-        val view = if (fresh.isEmpty) kept else kept ++ fresh
-        Right(Some(view).filter(v => LocalSearch.fits(v.length, embeddingDim)))
+      case Some(Some(rows)) => Right(Some(ResidentSnapshot(rows,
+        chunkTombstones.toSet, docTombstones.keySet.toSet, libTombstones.contains(libraryId),
+        upserts.valuesIterator.filter(_.library_id == libraryId).toArray)))
     }
 
   private def dropResident(): Unit = {
     baseEpoch += 1
     residentRows.clear()
     residentById.clear()
+    foldedRows.clear()
     residentFloats = 0L
   }
 
-  /** At most `maxRows` rows of `df` in ONE job (a per-partition take,
-    * not CollectLimit's incremental partition scan), or None when it
-    * holds more. */
-  private def collectBounded(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
-    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
-    val rows = df.rdd.mapPartitions(_.take(cap + 1)).collect()
-    if (rows.length > cap) None else Some(rows)
-  }
+  /** `df`'s rows when it holds at most `maxRows`, else None. The count
+    * job comes first, so an over-cap table never reaches the driver. */
+  private def collectBounded(df: DataFrame, maxRows: Long): Option[Array[Row]] =
+    if (rowCount(df) > maxRows) None else Some(df.collect())
+
+  /** `df.count()` in ONE job: no aggregation exchange (which adaptive
+    * execution runs as a job of its own), no row conversion. */
+  private def rowCount(df: DataFrame): Long =
+    df.select(lit(1)).queryExecution.toRdd.count()
 
   /** `s` with its driver copy: reused from `prior` when the derived
     * table is the same object, else collected when under the cap. */
@@ -441,8 +474,15 @@ final class VectorCatalog(val spark: SparkSession,
       case IndexType.Lsh => for {
         m <- s.lsh; sigs <- s.signatures
         rows <- collectBounded(sigs.select("id", "bucket"), maxRows * m.numTables)
-      } yield ResidentIndex.Buckets(
-        rows.groupMap(_.getLong(1))(_.getString(0)).map { case (b, ids) => b -> ids.toArray })
+      } yield {
+        // one String per chunk, not one per (chunk, table): the ids
+        // dominate this table's heap
+        val canon = scala.collection.mutable.HashMap.empty[String, String]
+        ResidentIndex.Buckets(rows.groupMap(_.getLong(1)) { r =>
+          val id = r.getString(0)
+          canon.getOrElseUpdate(id, id)
+        }.map { case (b, ids) => b -> ids.toArray })
+      }
       case IndexType.Ivf => for {
         _ <- s.ivf; assigned <- s.assigned
         rows <- collectBounded(assigned.select("id", "cluster_id"), maxRows)
@@ -870,8 +910,14 @@ final class VectorCatalog(val spark: SparkSession,
   def compact(): Unit = stateLock.synchronized(compactLocked())
 
   private def compactLocked(): Unit = {
+    // a resident library's visible rows are exactly what the fold
+    // writes for it: carry their count, so its next collect skips the
+    // count job
+    val carried = residentRows.keys.toSeq.flatMap(lib =>
+      snapshot(lib).toOption.flatten.map(s => lib -> s.visible.length.toLong))
     base = assembleView().localCheckpoint(true)
     dropResident()
+    foldedRows ++= carried
     upserts.clear()
     chunkTombstones.clear()
     docTombstones.clear()

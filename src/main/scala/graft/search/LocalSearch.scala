@@ -23,18 +23,19 @@ import graft.model._
 object LocalSearch {
 
   /** Per-library cap in FLOATS (rows x dimension) — the same unit as
-    * `IvfModel.localTrainMaxElements`. Measured crossover (NOTES.md,
-    * 64-dim, 4 cores): the driver scan wins at 1k, 10k and 100k rows
-    * (6.4M floats), so the cap sits at the largest measured win;
-    * beyond it the driver copy's heap cost grows with no measured
-    * latency evidence, and Spark's parallel scan is the right tier. */
+    * `IvfModel.localTrainMaxElements`. A heap bound, not a latency
+    * crossover: the driver path won at every measured size up to 100k
+    * rows (NOTES.md, `ResidentCapProbe`). 6.4M floats is 100k rows at
+    * 64 dims, measured at 105 MB of retained driver heap for the rows
+    * plus 8-16 MB for the tier's driver copy: about 6% of a 2 GB
+    * driver heap per library. */
   val maxLibraryFloats: Long = 6400000L
 
-  /** Catalog-wide budget for resident chunk rows, in floats: 16M
-    * floats is 64 MB of embedding payload (the `localTrainMaxElements`
-    * bound), two full-cap libraries and change; a library that would
-    * overflow it takes the Spark path until the next fold. */
-  val maxResidentFloats: Long = 16000000L
+  /** Catalog-wide budget for resident chunk rows: two full-cap
+    * libraries, about 240 MB measured at 64 dims (an eighth of a 2 GB
+    * driver heap). A library that would overflow it takes the Spark
+    * path until the next fold. */
+  val maxResidentFloats: Long = 2 * maxLibraryFloats
 
   /** Rows of `dim`-dimensional vectors that fit under the per-library cap. */
   def maxRows(dim: Int): Int = (maxLibraryFloats / math.max(1, dim)).toInt

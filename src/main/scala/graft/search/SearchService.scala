@@ -37,11 +37,23 @@ import graft.model._
  * non-finite element, an unparseable `created_*` filter — is a
  * Validation error on both, raised before any job or scan.
  */
-final class SearchService(catalog: VectorCatalog,
-    residentReads: Boolean = true) { // false pins the Spark path (differential tests)
+final class SearchService(catalog: VectorCatalog) {
   import SearchService._
 
   def search(libraryId: String, query: SearchQuery): Either[ApiError, SearchResponse] =
+    prepared(libraryId, query).map(p =>
+      respond(p, localSearch(libraryId, p).getOrElse(sparkPlans(libraryId, p))))
+
+  /** The Spark plans alone, after the same validation — the reference
+    * the resident path is tested against. */
+  private[graft] def sparkSearch(libraryId: String, query: SearchQuery): Either[ApiError, SearchResponse] =
+    prepared(libraryId, query).map(p => respond(p, sparkPlans(libraryId, p)))
+
+  /** A validated query, ready for either path; `t0` starts its clock. */
+  private final case class Prepared(q: SearchQuery, matches: ChunkRow => Boolean, t0: Long,
+      k: Int, queryVec: Array[Float], state: Option[IndexState])
+
+  private def prepared(libraryId: String, query: SearchQuery): Either[ApiError, Prepared] =
     for {
       q <- query.validated
       _ <- catalog.getLibrary(libraryId)
@@ -52,23 +64,21 @@ final class SearchService(catalog: VectorCatalog,
         DateTimeUtils.getZoneId(catalog.spark.sessionState.conf.sessionLocalTimeZone))
     } yield {
       val t0 = System.nanoTime()
-      val k = GraftConfig.clampK(q.k)
-      val queryVec = q.queryEmbedding.getOrElse(catalog.embedder.embedOne(q.queryText.get))
       // one read of the index state: both paths probe the same version
-      val state = catalog.indexState(libraryId)
-      val results = localSearch(libraryId, state, matches, queryVec, k)
-        .getOrElse(sparkSearch(libraryId, state, q.metadataFilters, queryVec, k))
-      val ms = (System.nanoTime() - t0) / 1e6
-      SearchResponse(results, results.size, ms)
+      Prepared(q, matches, t0, GraftConfig.clampK(q.k),
+        q.queryEmbedding.getOrElse(catalog.embedder.embedOne(q.queryText.get)),
+        catalog.indexState(libraryId))
     }
+
+  private def respond(p: Prepared, results: Seq[SearchResult]): SearchResponse =
+    SearchResponse(results, results.size, (System.nanoTime() - p.t0) / 1e6)
 
   /** The zero-job path: the tier's driver probe, then the filtered
     * resident view, then the exact rerank. None when the tier has no
     * driver copy or the library is not resident (Spark path). */
-  private def localSearch(libraryId: String, state: Option[IndexState],
-      matches: ChunkRow => Boolean, queryVec: Array[Float], k: Int): Option[Seq[SearchResult]] =
+  private def localSearch(libraryId: String, p: Prepared): Option[Seq[SearchResult]] =
     for {
-      cands <- if (residentReads) LocalSearch.candidates(state, queryVec, k) else None
+      cands <- LocalSearch.candidates(p.state, p.queryVec, p.k)
       view <- if (cands == LocalSearch.Candidates.Empty) Some(Array.empty[ChunkRow])
         else catalog.residentView(libraryId)
     } yield {
@@ -76,15 +86,15 @@ final class SearchService(catalog: VectorCatalog,
         case LocalSearch.Candidates.Only(ids) => r => ids.contains(r.id)
         case _ => _ => true
       }
-      LocalSearch.topK(view.iterator.filter(r => admitted(r) && matches(r)), queryVec, k)
+      LocalSearch.topK(view.iterator.filter(r => admitted(r) && p.matches(r)), p.queryVec, p.k)
     }
 
-  private def sparkSearch(libraryId: String, state: Option[IndexState],
-      filters: Map[String, String], queryVec: Array[Float], k: Int): Seq[SearchResult] = {
+  private def sparkPlans(libraryId: String, p: Prepared): Seq[SearchResult] = {
+    val (queryVec, k) = (p.queryVec, p.k)
     // (5) metadata pre-filter defines the chunk universe
-    val universe = catalog.chunksFiltered(libraryId, filters)
+    val universe = catalog.chunksFiltered(libraryId, p.q.metadataFilters)
       .filter(col("embedding").isNotNull)
-    state match {
+    p.state match {
       case Some(s) if s.indexType == IndexType.Lsh && s.signatures.isDefined =>
         lshSearch(s, universe, queryVec, k)
       case Some(s) if s.indexType == IndexType.Ivf =>

@@ -1,11 +1,11 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.graft.expressions.CosineSimilarity
@@ -42,10 +42,9 @@ class LocalSearchSpec extends SparkSpec {
     Map("source" -> sources(r.nextInt(sources.size)), "lang" -> langs(r.nextInt(langs.size)))
 
   /** Six libraries (one per index type) on one catalog, each searched
-    * through the resident path and through a service pinned to Spark. */
+    * through the resident path and through the Spark plans alone. */
   private final class Fixture(val cat: VectorCatalog) {
     val local = new SearchService(cat)
-    val sparkOnly = new SearchService(cat, residentReads = false)
     val libs = mutable.LinkedHashMap.empty[String, String] // type -> library id
     val docs = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
     val chunks = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
@@ -160,7 +159,7 @@ class LocalSearchSpec extends SparkSpec {
   private def compare(f: Fixture, t: String, q: SearchQuery): Option[String] = {
     val lib = f.libs(t)
     val got = f.local.search(lib, q)
-    val want = f.sparkOnly.search(lib, q)
+    val want = f.local.sparkSearch(lib, q)
     (got, want) match {
       case (Right(a), Right(b)) =>
         Some(diff(a, b)).filter(_.nonEmpty).map(d => s"$t k=${q.k} filters=${q.metadataFilters}: $d")
@@ -179,21 +178,31 @@ class LocalSearchSpec extends SparkSpec {
     assert(r.passed, s"$r\n$detail")
   }
 
-  /** Spark jobs submitted by `body` on this thread. */
-  private def countJobs(body: => Unit): Int = {
+  /** Spark jobs submitted by `body` on this thread, and the bytes of
+    * task results their tasks sent back to the driver. */
+  private def jobStats(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val group = s"local-search-${java.util.UUID.randomUUID()}"
     val n = new AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
           n.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "local search probe")
-    try { body; Bridge.waitListenerBus(sc); n.get }
+    try { body; Bridge.waitListenerBus(sc); (n.get, bytes.get) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
+
+  private def countJobs(body: => Unit): Int = jobStats(body)._1
 
   test("local path equals the Spark path for every index type, before and after folds") {
     val f = fixture(120, seed = 11L)
@@ -277,7 +286,7 @@ class LocalSearchSpec extends SparkSpec {
     val f = fixture(120, seed = 16L)
     val r = new Random(17L)
     val warm = countJobs(f.libs.values.foreach(lib => f.local.search(lib, query(f, r))))
-    assert(warm == types.size, s"first search after a fold: one collect per library, got $warm")
+    assert(warm == 2 * types.size, s"first search: one count and one collect per library, got $warm")
     val n = 60
     val hot = countJobs((0 until n).foreach { i =>
       assert(f.local.search(f.libs(types(i % types.size)), query(f, r)).isRight)
@@ -289,9 +298,10 @@ class LocalSearchSpec extends SparkSpec {
       f.local.search(f.libs(types(i % types.size)), query(f, r))
     })
     assert(afterWrites == 0, s"$afterWrites Spark jobs after buffered writes")
+    // the fold carries each resident library's row count: no count job
     f.cat.compact()
     val refold = countJobs(f.libs.values.foreach(lib => f.local.search(lib, query(f, r))))
-    assert(refold == types.size)
+    assert(refold == types.size, s"after a fold: one collect per library, got $refold")
   }
 
   test("getChunk reads a folded chunk of a resident library without a job, through the overlay") {
@@ -325,9 +335,11 @@ class LocalSearchSpec extends SparkSpec {
       SearchQuery(queryEmbedding = Some(Array.fill(64)(0.5f).updated(0, Float.PositiveInfinity))),
       SearchQuery(queryText = Some("stars"), metadataFilters = Map("created_after" -> "not a date")),
       SearchQuery(queryText = Some("stars"), metadataFilters = Map("created_before_x" -> "2024-13-45")))
-    for (svc <- Seq(f.local, f.sparkOnly); t <- types; q <- bad) {
+    val paths = Seq[(String, SearchQuery) => Either[ApiError, SearchResponse]](
+      f.local.search, f.local.sparkSearch)
+    for (search <- paths; t <- types; q <- bad) {
       var res: Either[ApiError, SearchResponse] = null
-      val jobs = countJobs { res = svc.search(f.libs(t), q) }
+      val jobs = countJobs { res = search(f.libs(t), q) }
       assert(res.left.exists(_.isInstanceOf[ApiError.Validation]), s"$t $q: $res")
       assert(jobs == 0, s"$t: validation ran $jobs jobs")
     }
@@ -339,7 +351,6 @@ class LocalSearchSpec extends SparkSpec {
     val dim = 8192
     val cat = new VectorCatalog(spark, HashingEmbedder(dim), dim)
     val local = new SearchService(cat)
-    val sparkOnly = new SearchService(cat, residentReads = false)
     val capRows = LocalSearch.maxRows(dim)
     val r = new Random(19L)
     def library(name: String, n: Int): String = {
@@ -365,9 +376,38 @@ class LocalSearchSpec extends SparkSpec {
     for (lib <- Seq(under, over, second, third); _ <- 1 to 2) {
       val q = SearchQuery(queryText = Some(text(r)), k = 1 + r.nextInt(20),
         metadataFilters = if (r.nextBoolean()) Map("source" -> "web") else Map.empty)
-      val (a, b) = (local.search(lib, q).toOption.get, sparkOnly.search(lib, q).toOption.get)
+      val (a, b) = (local.search(lib, q).toOption.get, local.sparkSearch(lib, q).toOption.get)
       assert(diff(a, b).isEmpty, diff(a, b))
     }
+  }
+
+  test("an over-cap library's rows never reach the driver, however many partitions its base has") {
+    val dim = 8192
+    val cat = new VectorCatalog(spark, HashingEmbedder(dim), dim)
+    val capRows = LocalSearch.maxRows(dim)
+    val r = new Random(24L)
+    val lib = cat.createLibrary("wide", indexType = "exact").toOption.get.id
+    val doc = cat.createDocument(lib, "d").toOption.get.id
+    val small = cat.createLibrary("small", indexType = "exact").toOption.get.id
+    val smallDoc = cat.createDocument(small, "d").toOption.get.id
+    cat.createChunks(smallDoc, Seq.fill(40)(text(r) -> meta(r)))
+    // each fold unions the old base with the buffer, so the base gains
+    // partitions; every partition alone holds fewer rows than the cap
+    (0 until 3).foreach { _ =>
+      cat.createChunks(doc, Seq.fill(capRows / 2 + 1)(text(r) -> meta(r)))
+      cat.compact()
+    }
+    assert(cat.chunks.rdd.getNumPartitions > 2)
+    val rowBytes = dim * 4L
+    val (jobs, bytes) = jobStats(assert(cat.residentView(lib).isEmpty))
+    assert(jobs == 1, s"one count job, got $jobs")
+    assert(bytes < rowBytes, s"$bytes result bytes reached the driver: rows were shipped")
+    // known over the cap for this epoch: no further job
+    assert(countJobs(assert(cat.residentView(lib).isEmpty)) == 0)
+    // a library that fits on the same base comes back whole
+    val got = cat.residentView(small).get
+    assert(got.length == 40 && got.map(_.id).toSet ==
+      cat.chunksByLibrary(small).collect().map(_.getString(0)).toSet)
   }
 
   test("searches racing writes and compact() each match one catalog version") {
@@ -393,9 +433,11 @@ class LocalSearchSpec extends SparkSpec {
     versions.add(topK(live()))
     @volatile var writing = true
     val answers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
-    val readers = Seq(new SearchService(cat), new SearchService(cat, residentReads = false)).map { svc =>
+    val svc = new SearchService(cat)
+    val paths = Seq[(String, SearchQuery) => Either[ApiError, SearchResponse]](svc.search, svc.sparkSearch)
+    val readers = paths.map { search =>
       val t = new Thread(() => while (writing) {
-        val res = svc.search(lib, SearchQuery(queryEmbedding = Some(q), k = k)).toOption.get
+        val res = search(lib, SearchQuery(queryEmbedding = Some(q), k = k)).toOption.get
         answers.add(res.results.map(h => (h.chunk.id, bits(h.similarityScore))))
       })
       t.start(); t
