@@ -283,12 +283,14 @@ final class CatalogWal(spark: SparkSession, root: String) {
     // crashed compaction the merged segment (named by its FIRST seq)
     // can hold the true maximum while higher-named originals are
     // partially deleted — a name-only bootstrap would under-read and
-    // re-issue live sequence numbers
+    // re-issue live sequence numbers. The manifest fence counts too: a
+    // checkpoint truncates every record at or below it, and a number
+    // re-issued there would be skipped by the next recovery.
     val f = fs(walDir)
     val all = listWal(f).flatMap { case (_, p) =>
       readRecords(f, p).map(_.get("seq").asLong())
     }
-    if (all.isEmpty) -1L else all.max
+    (all ++ readManifest().map(_._1)).maxOption.getOrElse(-1L)
   }
 
   def lastSeq: Long = seq

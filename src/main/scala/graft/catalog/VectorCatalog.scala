@@ -99,8 +99,8 @@ object ResidentIndex {
   * ids and the library's own cascade, its buffered upserts). Base rows
   * predate every tombstone, so each one applies. */
 private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
-    deadChunks: Set[String], deadDocs: Set[String], libraryDeleted: Boolean,
-    fresh: Array[ChunkRow]) {
+    deadChunks: collection.Set[String], deadDocs: collection.Set[String],
+    libraryDeleted: Boolean, fresh: Array[ChunkRow]) {
   def visible: Array[ChunkRow] = {
     val kept =
       if (libraryDeleted) Array.empty[ChunkRow]
@@ -181,17 +181,18 @@ final class VectorCatalog(val spark: SparkSession,
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
   // folded-base rows of each small library, collected on its first
-  // search after a fold and dropped whenever `base` is replaced. Reads
-  // copy the log entries that touch a library under stateLock, as
-  // assembleView does, and overlay them outside it, so writes never
-  // force a re-collect. None marks a library that does not fit this
-  // epoch. `foldedRows` is the base's row count per library where the
-  // driver knows it: a collect runs only after the count says the rows
-  // fit. All guarded by stateLock.
+  // search (after a count says they fit) and carried through folds, so
+  // only `load` drops them. Reads copy the log entries that touch a
+  // library under stateLock, as assembleView does, and overlay them
+  // outside it, so writes never force a re-collect. None marks a
+  // library that does not fit this epoch. `admitting` maps a library
+  // to the epoch its count and collect are running for: concurrent
+  // first searches wait for that admission instead of issuing their
+  // own jobs. All guarded by stateLock.
   private var baseEpoch = 0L
-  private val residentRows = scala.collection.mutable.HashMap.empty[String, Option[Array[ChunkRow]]]
+  private val residentRows = scala.collection.mutable.LinkedHashMap.empty[String, Option[Array[ChunkRow]]]
   private val residentById = scala.collection.mutable.HashMap.empty[String, ChunkRow]
-  private val foldedRows = scala.collection.mutable.HashMap.empty[String, Long]
+  private val admitting = scala.collection.mutable.HashMap.empty[String, Long]
   private var residentFloats = 0L
 
   private def emptyChunks: DataFrame =
@@ -382,64 +383,87 @@ final class VectorCatalog(val spark: SparkSession,
   /** The library's chunk rows at one catalog version, served from the
     * driver: the resident base rows minus chunk/cascade tombstones plus
     * the library's buffered upserts — the rows `chunksByLibrary` would
-    * scan. The first call after a fold counts the library's base rows
-    * (unless a fold carried the count) and collects them only when they
-    * fit: a library over the cap costs the driver one number, never its
-    * rows. None when the library must take the Spark path: it exceeds
-    * the resident cap or budget, or streamed batches are pending. */
+    * scan. The first call after `load`, or for a library no fold
+    * carried, counts the library's base rows and collects them only
+    * when they fit: a library over the cap costs the driver one number,
+    * never its rows. One caller per library and epoch runs those jobs;
+    * the others wait for it. None when the library must take the Spark
+    * path: it exceeds the resident cap or budget, or streamed batches
+    * are pending. */
   private[graft] def residentView(libraryId: String): Option[Array[ChunkRow]] = {
-    val snap = stateLock.synchronized(snapshot(libraryId)) match {
+    val found = stateLock.synchronized {
+      var s = snapshot(libraryId)
+      while (s.isLeft && admitting.get(libraryId).contains(baseEpoch)) {
+        stateLock.wait()
+        s = snapshot(libraryId)
+      }
+      s.swap.foreach { case (_, epoch) => admitting(libraryId) = epoch }
+      s
+    }
+    val snap = found match {
       case Right(s) => s
-      case Left((b, epoch, known)) => admit(libraryId, b, epoch, known)
+      case Left((b, epoch)) => admit(libraryId, b, epoch)
     }
     snap.map(_.visible).filter(v => LocalSearch.fits(v.length, embeddingDim))
   }
 
-  /** Count (when not known) and collect one library's base rows outside
-    * the lock (writers keep going), then admit them unless a fold
-    * replaced the base meanwhile. */
-  private def admit(libraryId: String, b: DataFrame, epoch: Long,
-      known: Option[Long]): Option[ResidentSnapshot] = {
-    val libRows = b.filter($"library_id" === libraryId)
-    val n = known.getOrElse(rowCount(libRows))
-    val floats = n * embeddingDim
-    def inBudget = residentFloats + floats <= LocalSearch.maxResidentFloats
-    val rows =
-      if (LocalSearch.fits(n, embeddingDim) && stateLock.synchronized(inBudget))
-        Some(libRows.collect().map(ChunkRow.fromRow))
-      else None
-    stateLock.synchronized {
-      if (baseEpoch == epoch && !residentRows.contains(libraryId)) {
-        foldedRows(libraryId) = n
-        val admitted = rows.filter(_ => inBudget)
-        residentRows(libraryId) = admitted
-        admitted.foreach { rs => residentFloats += floats; rs.foreach(r => residentById(r.id) = r) }
+  /** Count and collect one library's base rows outside the lock
+    * (writers keep going), then admit them unless a fold replaced the
+    * base meanwhile; wakes the callers waiting for this admission. */
+  private def admit(libraryId: String, b: DataFrame, epoch: Long): Option[ResidentSnapshot] =
+    try {
+      val libRows = b.filter($"library_id" === libraryId)
+      val n = rowCount(libRows)
+      val rows =
+        if (stateLock.synchronized(admissible(n))) Some(libRows.collect().map(ChunkRow.fromRow))
+        else None
+      stateLock.synchronized {
+        if (baseEpoch == epoch && !residentRows.contains(libraryId))
+          install(libraryId, rows.filter(_ => admissible(n)))
+        snapshot(libraryId).toOption.flatten
       }
-      snapshot(libraryId).toOption.flatten
+    } finally stateLock.synchronized {
+      if (admitting.get(libraryId).contains(epoch)) admitting.remove(libraryId)
+      stateLock.notifyAll()
+    }
+
+  /** Under stateLock: `n` more rows fit the per-library cap and the
+    * catalog-wide budget. */
+  private def admissible(n: Long): Boolean = LocalSearch.fits(n, embeddingDim) &&
+    residentFloats + n * embeddingDim <= LocalSearch.maxResidentFloats
+
+  /** Under stateLock: `rows` (None: the Spark path) become the
+    * library's resident snapshot for this epoch. */
+  private def install(libraryId: String, rows: Option[Array[ChunkRow]]): Unit = {
+    residentRows(libraryId) = rows
+    rows.foreach { rs =>
+      residentFloats += rs.length.toLong * embeddingDim
+      rs.foreach(r => residentById(r.id) = r)
     }
   }
 
   /** Under stateLock: Right(the library's resident snapshot, or None
-    * for the Spark path), or Left(the base to collect, its epoch and
-    * the library's known row count) when the library has not been
-    * collected since the last fold. Copies only the log entries: the
-    * per-row filtering runs outside the lock. */
-  private def snapshot(libraryId: String)
-      : Either[(DataFrame, Long, Option[Long]), Option[ResidentSnapshot]] =
+    * for the Spark path), or Left(the base to collect and its epoch)
+    * when the library has not been collected this epoch. Copies only
+    * the log entries: the per-row filtering runs outside the lock. */
+  private def snapshot(libraryId: String): Either[(DataFrame, Long), Option[ResidentSnapshot]] =
     if (streamedAppends.nonEmpty) Right(None)
     else residentRows.get(libraryId) match {
-      case None => Left((base, baseEpoch, foldedRows.get(libraryId)))
-      case Some(None) => Right(None)
-      case Some(Some(rows)) => Right(Some(ResidentSnapshot(rows,
-        chunkTombstones.toSet, docTombstones.keySet.toSet, libTombstones.contains(libraryId),
-        upserts.valuesIterator.filter(_.library_id == libraryId).toArray)))
+      case None => Left((base, baseEpoch))
+      case Some(rows) => Right(rows.map(overlay(libraryId, _, chunkTombstones.toSet,
+        docTombstones.keySet.toSet)))
     }
+
+  /** Under stateLock: `rows` with the library's own log entries. */
+  private def overlay(libraryId: String, rows: Array[ChunkRow],
+      deadChunks: collection.Set[String], deadDocs: collection.Set[String]): ResidentSnapshot =
+    ResidentSnapshot(rows, deadChunks, deadDocs, libTombstones.contains(libraryId),
+      upserts.valuesIterator.filter(_.library_id == libraryId).toArray)
 
   private def dropResident(): Unit = {
     baseEpoch += 1
     residentRows.clear()
     residentById.clear()
-    foldedRows.clear()
     residentFloats = 0L
   }
 
@@ -911,13 +935,21 @@ final class VectorCatalog(val spark: SparkSession,
 
   private def compactLocked(): Unit = {
     // a resident library's visible rows are exactly what the fold
-    // writes for it: carry their count, so its next collect skips the
-    // count job
-    val carried = residentRows.keys.toSeq.flatMap(lib =>
-      snapshot(lib).toOption.flatten.map(s => lib -> s.visible.length.toLong))
-    base = assembleView().localCheckpoint(true)
+    // writes for it, so they become its snapshot in the new epoch;
+    // streamed batches fold rows no snapshot holds, so nothing carries
+    // past them. A library deleted and not re-created has nothing left.
+    val carried =
+      if (streamedAppends.nonEmpty) Nil
+      else residentRows.toList.flatMap { case (lib, rows) =>
+        rows.map(rs => lib -> overlay(lib, rs, chunkTombstones, docTombstones.keySet).visible)
+      }.filter { case (lib, rows) => rows.nonEmpty || !libTombstones.contains(lib) }
+    // fold the buffer into the existing partitions: the base must not
+    // gain partitions with every fold
+    val parts = math.max(spark.sparkContext.defaultParallelism,
+      (base +: streamedAppends.map(_._1)).map(_.rdd.getNumPartitions).sum)
+    base = assembleView().coalesce(parts).localCheckpoint(true)
     dropResident()
-    foldedRows ++= carried
+    carried.foreach { case (lib, rows) => if (admissible(rows.length)) install(lib, Some(rows)) }
     upserts.clear()
     chunkTombstones.clear()
     docTombstones.clear()

@@ -203,4 +203,21 @@ class CatalogSpec extends SparkSpec {
     assert(st2.ivf.get.centroids.map(_.toSeq).toSeq == centroidsBefore.toSeq) // unchanged
     assert(st2.assigned.get.count() == 111)
   }
+
+  test("log folds do not grow the base's partition count") {
+    val cat = freshCatalog
+    val lib = cat.createLibrary("folds", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    def fold(i: Int): Int = {
+      cat.createChunks(doc.id, Seq.fill(8)(s"fold $i chunk" -> Map.empty[String, String]))
+      cat.compact()
+      cat.chunks.rdd.getNumPartitions
+    }
+    val bound = math.max(spark.sparkContext.defaultParallelism, fold(0))
+    (1 until 50).foreach { i =>
+      val n = fold(i)
+      assert(n <= bound, s"fold $i left $n partitions, more than $bound")
+    }
+    assert(cat.chunks.count() == 50 * 8)
+  }
 }

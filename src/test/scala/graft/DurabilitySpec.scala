@@ -106,6 +106,22 @@ class DurabilitySpec extends SparkSpec {
     assert(!chunkRows(rec).exists(_.id == c6.id))
   }
 
+  test("a root reopened after a checkpoint numbers its writes past the fence") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("fence").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    for (i <- 1 to 3) cat.createChunk(doc.id, s"chunk $i").toOption.get
+    cat.checkpoint()
+    // the checkpoint truncated every WAL record: the reopened log must
+    // still number its writes above the manifest's sequence fence
+    val reopened = DurableCatalog.recover(spark, root)
+    val late = reopened.createChunk(doc.id, "written after the reopen").toOption.get
+    val rec = DurableCatalog.recover(spark, root)
+    assert(chunkRows(rec).exists(_.id == late.id), "an acknowledged write was lost")
+    assertSameState(reopened, rec)
+  }
+
   test("recover on an empty root yields an empty catalog") {
     val rec = DurableCatalog.recover(spark, freshRoot())
     assert(rec.inner.listLibraries().isEmpty)

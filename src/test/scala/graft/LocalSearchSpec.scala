@@ -282,7 +282,7 @@ class LocalSearchSpec extends SparkSpec {
     allAgree()
   }
 
-  test("resident searches run zero Spark jobs; a fold costs one collect per library") {
+  test("resident searches run zero Spark jobs, through buffered writes and folds") {
     val f = fixture(120, seed = 16L)
     val r = new Random(17L)
     val warm = countJobs(f.libs.values.foreach(lib => f.local.search(lib, query(f, r))))
@@ -298,10 +298,10 @@ class LocalSearchSpec extends SparkSpec {
       f.local.search(f.libs(types(i % types.size)), query(f, r))
     })
     assert(afterWrites == 0, s"$afterWrites Spark jobs after buffered writes")
-    // the fold carries each resident library's row count: no count job
+    // the fold carries each resident library's rows into the new epoch
     f.cat.compact()
     val refold = countJobs(f.libs.values.foreach(lib => f.local.search(lib, query(f, r))))
-    assert(refold == types.size, s"after a fold: one collect per library, got $refold")
+    assert(refold == 0, s"$refold Spark jobs after a fold")
   }
 
   test("getChunk reads a folded chunk of a resident library without a job, through the overlay") {
@@ -325,6 +325,113 @@ class LocalSearchSpec extends SparkSpec {
     // a folded chunk of a library no search made resident is scanned
     assert(countJobs { got = f.cat.getChunk(f.chunks(other).head) } > 0)
     assert(got.isRight)
+    // right after a second fold the carried rows serve reads, updates
+    // and deletes of folded chunks, still without a job
+    val doc = f.addDoc(lib)
+    val Seq(kept, gone) = f.cat.createChunks(doc, Seq.fill(2)(text(r) -> meta(r))).toOption.get
+    f.cat.compact()
+    assert(countJobs { got = f.cat.getChunk(kept.id) } == 0)
+    assert(got.toOption.get.text == kept.text)
+    assert(countJobs { got = f.cat.updateChunk(kept.id, text = Some("stars orbit")) } == 0)
+    assert(got.toOption.get.text == "stars orbit")
+    assert(countJobs(assert(f.cat.deleteChunk(gone.id).isRight)) == 0)
+    assert(countJobs { got = f.cat.getChunk(gone.id) } == 0)
+    assert(got.isLeft)
+  }
+
+  /** A row's fields, comparable by value (the embedding is an array). */
+  private def fields(c: ChunkRow) =
+    (c.id, c.document_id, c.library_id, c.text, c.embedding.map(_.toSeq), c.metadata,
+      c.created_at, c.updated_at)
+
+  /** The library's resident view against the rows a scan of the chunk table finds. */
+  private def assertScanned(cat: VectorCatalog, lib: String): Unit = {
+    val want = cat.chunksByLibrary(lib).collect().map(ChunkRow.fromRow).map(fields).sortBy(_._1)
+    assert(cat.residentView(lib).get.map(fields).sortBy(_._1).toSeq == want.toSeq, lib)
+  }
+
+  test("a fold carries resident rows through cascades, library deletes and same-id re-creates") {
+    val f = new Fixture(new VectorCatalog(spark))
+    val r = new Random(25L)
+    val cascaded = f.addLibrary("exact", r, 40)
+    val cut = f.docOf(f.chunks(cascaded).head)
+    val kept = f.docs(cascaded).find(_ != cut).get
+    f.cat.createChunks(kept, Seq.fill(20)(text(r) -> meta(r)))
+    val deleted = f.addLibrary("lsh", r, 30)
+    val recreated = f.addLibrary("ivf", r, 30)
+    f.cat.compact()
+    Seq(cascaded, deleted, recreated).foreach(lib => assert(f.cat.residentView(lib).isDefined))
+    // a document cascade, then more rows on the library's other document
+    assert(f.cat.deleteDocument(cut).isRight)
+    f.cat.createChunks(kept, Seq.fill(5)(text(r) -> meta(r)))
+    // a library deleted before the fold
+    assert(f.cat.deleteLibrary(deleted).isRight)
+    // a library deleted and re-created under the same ids, some chunk
+    // ids coming back with new content
+    val doc = f.docs(recreated).head
+    val reused = f.chunks(recreated).take(3)
+    assert(f.cat.deleteLibrary(recreated).isRight)
+    assert(f.cat.createLibrary("again", indexType = "ivf", id = Some(recreated)).isRight)
+    assert(f.cat.createDocument(recreated, "again", id = Some(doc)).isRight)
+    reused.foreach(id => f.cat.createChunk(doc, text(r), meta(r), id = Some(id)))
+    f.cat.createChunks(doc, Seq.fill(10)(text(r) -> meta(r)))
+    f.cat.compact()
+    assert(countJobs(Seq(cascaded, recreated).foreach(lib =>
+      assert(f.cat.residentView(lib).isDefined))) == 0, "the fold carried both libraries")
+    Seq(cascaded, deleted, recreated).foreach(assertScanned(f.cat, _))
+    assert(f.cat.residentView(cascaded).get.length == 25)
+    assert(f.cat.residentView(recreated).get.length == 13)
+  }
+
+  test("a library pushed past the cap by buffered upserts is not carried and takes the Spark path") {
+    val dim = 8192
+    val cat = new VectorCatalog(spark, HashingEmbedder(dim), dim)
+    val local = new SearchService(cat)
+    val r = new Random(27L)
+    def library(name: String, n: Int): (String, String) = {
+      val lib = cat.createLibrary(name, indexType = "exact").toOption.get.id
+      val doc = cat.createDocument(lib, "d").toOption.get.id
+      cat.createChunks(doc, Seq.fill(n)(text(r) -> meta(r)))
+      (lib, doc)
+    }
+    val (full, fullDoc) = library("full", LocalSearch.maxRows(dim))
+    val (small, _) = library("small", 20)
+    cat.compact()
+    Seq(full, small).foreach(lib => assert(cat.residentView(lib).isDefined))
+    cat.createChunk(fullDoc, text(r), meta(r)) // one row past the cap
+    assert(cat.residentView(full).isEmpty)
+    cat.compact()
+    assert(countJobs(assert(cat.residentView(small).isDefined)) == 0, "the small library is carried")
+    assertScanned(cat, small)
+    assert(countJobs(assert(cat.residentView(full).isEmpty)) > 0, "the grown library is counted again")
+    val q = SearchQuery(queryText = Some("stars orbit"), k = 7)
+    assert(countJobs(local.search(full, q)) > 0)
+    val (a, b) = (local.search(full, q).toOption.get, local.sparkSearch(full, q).toOption.get)
+    assert(a.results.nonEmpty && diff(a, b).isEmpty, diff(a, b))
+  }
+
+  test("concurrent first searches of a library after load run one count and one collect") {
+    val f = new Fixture(new VectorCatalog(spark))
+    val r = new Random(26L)
+    val lib = f.addLibrary("exact", r, 50)
+    val dir = java.nio.file.Files.createTempDirectory("local-search-load").toString
+    f.cat.save(dir)
+    f.cat.load(dir)
+    val q = query(f, r)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val answers = new java.util.concurrent.ConcurrentLinkedQueue[Either[ApiError, SearchResponse]]()
+    val jobs = countJobs {
+      val threads = (0 until 4).map { _ =>
+        val t = new Thread(() => { start.await(); answers.add(f.local.search(lib, q)) })
+        t.start(); t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+    }
+    assert(jobs == 2, s"one count and one collect, got $jobs jobs")
+    val want = f.local.sparkSearch(lib, q).toOption.get
+    assert(answers.size == 4)
+    answers.forEach(a => assert(diff(a.toOption.get, want).isEmpty, diff(a.toOption.get, want)))
   }
 
   test("malformed queries fail validation before any job, on both paths") {
@@ -391,8 +498,9 @@ class LocalSearchSpec extends SparkSpec {
     val small = cat.createLibrary("small", indexType = "exact").toOption.get.id
     val smallDoc = cat.createDocument(small, "d").toOption.get.id
     cat.createChunks(smallDoc, Seq.fill(40)(text(r) -> meta(r)))
-    // each fold unions the old base with the buffer, so the base gains
-    // partitions; every partition alone holds fewer rows than the cap
+    // each fold spreads the buffer over the base's partitions (at least
+    // defaultParallelism): every partition alone holds fewer rows than
+    // the cap
     (0 until 3).foreach { _ =>
       cat.createChunks(doc, Seq.fill(capRows / 2 + 1)(text(r) -> meta(r)))
       cat.compact()
