@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
  * (default sf0.1) and prints ONE JSON line
@@ -13,22 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // floor experiments: "k=v;k=v" extra session confs, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.sql.constraintPropagation.enabled=false"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet-footer paths so the first measured
     // query is not charged ~5s of one-time session cost.

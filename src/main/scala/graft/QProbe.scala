@@ -1,7 +1,6 @@
-package graft.tools_scratch
+package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Per-query runtime profile (round 17, guide §1): runs named queries
@@ -13,30 +12,17 @@ import org.apache.spark.sql.SparkSession
  * session mirrors Bench exactly (same confs, same warm-up) so the
  * wall numbers are comparable to BENCH_LOCAL.json entries.
  *
- * Usage: tools/run.sh graft.tools_scratch.QProbe <name...>
+ * Usage: tools/run.sh graft.QProbe <name...>
  *   env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
  *        QPROBE_RUNS (default 3), QPROBE_STAGES=1 for per-stage lines.
  */
 object QProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("QPROBE_RUNS", "3").toInt
     val perStage = sys.env.contains("QPROBE_STAGES")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -67,7 +53,7 @@ object QProbe {
     }
 
     val names = args.toSeq
-    val qs = graft.SparkEntry.allQueries.filter(q => names.exists(q.name.startsWith))
+    val qs = SparkEntry.allQueries.filter(q => names.exists(q.name.startsWith))
     for (q <- qs; i <- 1 to runs) {
       org.apache.spark.sql.graft.Bridge.waitListenerBus(spark.sparkContext)
       jobs = 0; stages = 0; tasks = 0; input = 0; shufW = 0; runMs = 0; cpuNs = 0

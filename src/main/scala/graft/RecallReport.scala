@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.index.{IvfModel, LshModel}
@@ -17,11 +16,7 @@ object RecallReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nQueries = 30
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(16).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()

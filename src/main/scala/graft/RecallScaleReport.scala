@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.index.{IvfModel, LshModel}
@@ -26,10 +25,8 @@ object RecallScaleReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/data/sf1")
     val nQueries = 30
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.builder(GraftSession.cpus(32))
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,6 @@
-package graft.tools_scratch
+package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -39,13 +39,9 @@ object ScaleGen {
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
     val stride = 100000000L
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    // a fixed 32-wide shuffle, independent of cpus
+    val spark = GraftSession.builder(GraftSession.cpus(32))
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

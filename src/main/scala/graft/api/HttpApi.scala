@@ -435,11 +435,7 @@ object HttpApi {
   /** Run the server against a local session (manual drive / demo). */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.flatMap(_.toIntOption).getOrElse(8080)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val api = new HttpApi(new VectorDb(spark), port)
     api.start()

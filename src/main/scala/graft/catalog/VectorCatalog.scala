@@ -299,13 +299,29 @@ final class VectorCatalog(val spark: SparkSession,
       metadata: Map[String, String] = Map.empty,
       embedding: Option[Array[Float]] = None,
       id: Option[String] = None): Either[ApiError, ChunkRow] =
-    getDocument(documentId).map { doc =>
+    for {
+      doc <- getDocument(documentId)
+      _ <- embedding.flatMap(embeddingError).toLeft(())
+    } yield {
       val t = now()
       val emb = embedding.orElse(Some(embedder.embedOne(text)))
       val row = ChunkRow(id.getOrElse(newId()), documentId, doc.library_id, text, emb, metadata, t, t)
       appendChunks(Seq(row))
       row
     }
+
+  /** The chunk-write boundary for a caller-supplied embedding, checked
+    * before anything is buffered (or, in `DurableCatalog`, logged): a
+    * wrong dimension would make every later search of the library
+    * throw, and a non-finite element would top every descending top-k.
+    * WAL replay (`restoreChunks`) replays acknowledged rows unchecked. */
+  private def embeddingError(v: Array[Float]): Option[ApiError] =
+    if (v.length != embeddingDim)
+      Some(ApiError.Validation(s"embedding has dimension ${v.length}; " +
+        s"the catalog's embedding dimension is $embeddingDim"))
+    else if (!SearchQuery.finite(v))
+      Some(ApiError.Validation("embedding must contain only finite numbers"))
+    else None
 
   /** Bulk create for batch ingest — single union, one embed pass. */
   def createChunks(documentId: String, items: Seq[(String, Map[String, String])]): Either[ApiError, Seq[ChunkRow]] =

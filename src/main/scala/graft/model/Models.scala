@@ -56,9 +56,15 @@ final case class SearchQuery(
   def validated: Either[ApiError, SearchQuery] =
     if (queryText.isEmpty && queryEmbedding.isEmpty)
       Left(ApiError.Validation("Either query_text or query_embedding must be provided"))
-    else if (queryEmbedding.exists(_.exists(f => !java.lang.Float.isFinite(f))))
+    else if (queryEmbedding.exists(v => !SearchQuery.finite(v)))
       Left(ApiError.Validation("query_embedding must contain only finite numbers"))
     else Right(this)
+}
+
+object SearchQuery {
+  /** The finiteness rule for a caller-supplied vector: a NaN element
+    * scores NaN, which sorts above every number in a descending top-k. */
+  def finite(v: Array[Float]): Boolean = v.forall(java.lang.Float.isFinite)
 }
 
 /** One search hit (reference: app/models.py:123-127). */
@@ -246,11 +252,8 @@ object GraftConfig {
     * the REAL break-even near k ≈ 4.5·ef·(log2 k + 4) ≈ 6000. 8192
     * adds margin and sits above the SemDedup maxAutoNlist clamp
     * (4096), so auto-sized trains stay on the codegen path and only
-    * explicitly-huge k routes through the graph. Overridable without
-    * recompiling via GRAFT_APPROX_ASSIGN_MIN_K (cluster tuning / A-B
-    * probes). */
-  @volatile var approxAssignMinK: Int =
-    sys.env.get("GRAFT_APPROX_ASSIGN_MIN_K").flatMap(_.toIntOption).getOrElse(8192)
+    * explicitly-huge k routes through the graph. */
+  @volatile var approxAssignMinK: Int = 8192
   /** ef for the HNSW-routed approximate assignment above. */
   @volatile var approxAssignEf: Int = 64
 
@@ -268,11 +271,8 @@ object GraftConfig {
     * same parity band the sampled A-B established as acceptable).
     * Overhead roughly halves the flop advantage, so ratio 2 ≈ wall
     * break-even, and 3 adds margin. Double.MaxValue disables the
-    * route (always exact); overridable via
-    * GRAFT_MINIBATCH_TRAIN_MARGIN. */
-  @volatile var miniBatchTrainMargin: Double =
-    sys.env.get("GRAFT_MINIBATCH_TRAIN_MARGIN")
-      .flatMap(_.toDoubleOption).getOrElse(3.0)
+    * route (always exact). */
+  @volatile var miniBatchTrainMargin: Double = 3.0
 
   /** An LSH sizing + probe preset (tables x bits, multi-probe flips). */
   final case class LshPreset(numTables: Int, bitsPerTable: Int, flips: Int)

@@ -21,8 +21,7 @@ import org.apache.spark.sql.DataFrame
  * being a local[32]-only trick. Deliberately NOT applied to every
  * table read: the round-17 A/B showed exchange-dominated plans (exact
  * percentiles, ANN joins, streaming folds) lose more to the extra
- * exchange than their map stages gain. SPARK_GRAFT_NO_SPREAD=1
- * disables it for A/B runs.
+ * exchange than their map stages gain.
  */
 object Parallelism {
   /** Split-count cache: scan parallelism depends only on the file
@@ -54,7 +53,6 @@ object Parallelism {
     * joined/aggregated intermediate (ADVICE r17; all current call
     * sites are scan+project). */
   def spreadForMapWork(df: DataFrame, idCol: String): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val key = spark.hashCode() + "|" +

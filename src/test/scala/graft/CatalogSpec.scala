@@ -220,4 +220,37 @@ class CatalogSpec extends SparkSpec {
     }
     assert(cat.chunks.count() == 50 * 8)
   }
+
+  test("createChunk rejects a wrong-dimension or non-finite embedding before buffering it") {
+    val cat = freshCatalog
+    val svc = new SearchService(cat)
+    val lib = cat.createLibrary("boundary", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunks(doc.id, Seq(
+      ("python programming language", Map.empty[String, String]),
+      ("cooking pasta recipes", Map.empty[String, String])))
+    val good = Array.tabulate(cat.embeddingDim)(i => if (i == 0) 1f else 0f)
+    assert(cat.createChunk(doc.id, "explicit", embedding = Some(good), id = Some("ok")).isRight)
+
+    val bad = Seq(
+      "short" -> Array.fill(7)(0.5f),
+      "nan" -> good.updated(3, Float.NaN),
+      "inf" -> good.updated(5, Float.PositiveInfinity))
+    for ((id, v) <- bad) {
+      val r = cat.createChunk(doc.id, s"bad $id", embedding = Some(v), id = Some(id))
+      assert(r.left.toOption.exists(_.isInstanceOf[ApiError.Validation]), s"$id: $r")
+      assert(cat.getChunk(id).isLeft, s"$id was buffered")
+    }
+    assert(cat.chunksByLibrary(lib.id).count() == 3)
+
+    // both search paths still answer the library, with finite scores
+    for (search <- Seq(svc.search _, svc.sparkSearch _)) {
+      val byText = search(lib.id, SearchQuery(queryText = Some("python"), k = 5)).toOption.get
+      assert(byText.results.map(_.chunk.id).toSet.intersect(bad.map(_._1).toSet).isEmpty)
+      assert(byText.results.size == 3)
+      val byVec = search(lib.id, SearchQuery(queryEmbedding = Some(good), k = 1)).toOption.get
+      assert(byVec.results.map(_.chunk.id) == Seq("ok"))
+      assert((byText.results ++ byVec.results).forall(r => !r.similarityScore.isNaN))
+    }
+  }
 }

@@ -341,4 +341,24 @@ class DurabilitySpec extends SparkSpec {
     cat.createChunk(doc.id, "after checkpoint").toOption.get
     assertSameState(cat, DurableCatalog.recover(spark, root))
   }
+
+  test("a rejected chunk create writes no WAL record and is absent after recover") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("boundary", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunk(doc.id, "a valid chunk").toOption.get
+    def walFiles(): Int =
+      new java.io.File(s"$root/wal").listFiles().count(_.getName.endsWith(".json"))
+    val before = walFiles()
+
+    val nan = Array.fill(cat.inner.embeddingDim)(0.1f).updated(0, Float.NaN)
+    assert(cat.createChunk(doc.id, "nan", embedding = Some(nan), id = Some("nan")).isLeft)
+    assert(cat.createChunk(doc.id, "short", embedding = Some(Array(1f, 2f)), id = Some("short")).isLeft)
+    assert(walFiles() == before, "a rejected create was logged")
+
+    val rec = DurableCatalog.recover(spark, root)
+    assertSameState(cat, rec)
+    assert(chunkRows(rec).map(_.text) == Seq("a valid chunk"))
+  }
 }

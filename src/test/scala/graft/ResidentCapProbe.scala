@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.VectorCatalog
 import graft.model._
 import graft.search.SearchService
@@ -36,9 +34,7 @@ object ResidentCapProbe {
     val sizes = args(0).split(",").map(_.toInt)
     val tiers = args(1).split(",")
     val reps = args(2).toInt
-    val spark = SparkSession.builder().master("local[4]").appName("resident-cap-probe")
-      .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = GraftSession.builder(4).appName("resident-cap-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val vocab = (0 until 4000).map(i => s"w$i")
     def text(r: Random): String =

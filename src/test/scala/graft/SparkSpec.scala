@@ -7,15 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup is ~5s; per-suite sessions would dominate test time). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       // bucketed-table tests (LayoutSpec) write through the session
       // catalog; keep the warehouse out of the repo tree
       .config("spark.sql.warehouse.dir",

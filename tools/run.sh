@@ -2,7 +2,10 @@
 # Run a graft main class directly against the compiled classes + Spark jars
 # (bypasses sbt fork; mirrors build.sbt's JDK17 add-opens flags).
 # Usage: tools/run.sh <MainClass> [args...]
+# Classes and resources come from this script's own checkout, so a copy
+# of the repo runs its own build, not another checkout's.
 cls="$1"; shift
+root="$(cd "$(dirname "$0")/.." && pwd)"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -21,5 +24,5 @@ exec java \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/root/repo/src/main/resources:/opt/spark/jars/*" \
+  -cp "$root/target/scala-2.13/classes:$root/src/main/resources:/opt/spark/jars/*" \
   "$cls" "$@"
