@@ -45,34 +45,21 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  */
 final class DurableCatalog private (
     val inner: VectorCatalog,
-    private val wal: CatalogWal,
-    groupCommit: Boolean) {
+    private val wal: CatalogWal) {
 
-  // WAL order must equal application order: apply + STAGE happen under
-  // one lock. In the default mode the file write also happens under it
-  // (one commit file per mutation — simple, gapless). With
-  // `groupCommit` the write moves OUTSIDE the lock behind a
-  // leader-flush (LevelDB-style): concurrent callers pile up behind
-  // the flush, the first one in drains the whole queue into ONE
-  // segment file and completes everyone — mutations-per-file rises
-  // with contention, each caller still returns only after its record
-  // is durable, and a segment holds a CONTIGUOUS seq range written by
-  // a single leader, so a crash can only lose a clean tail (no gaps).
+  // WAL order must equal application order: apply + log write happen
+  // under one lock, one commit file per mutation — simple and gapless.
   private val logLock = new Object
-  private val appender: WalAppender =
-    if (groupCommit) new GroupCommitAppender(wal) else new ImmediateAppender(wal)
 
-  private def logged[A](op: => Either[ApiError, A])(record: A => ObjectNode): Either[ApiError, A] = {
-    val staged = logLock.synchronized { op.map { a => (a, appender.stage(record(a))) } }
-    staged.map { case (a, ticket) => appender.await(ticket); a }
-  }
+  private def logged[A](op: => Either[ApiError, A])(record: A => ObjectNode): Either[ApiError, A] =
+    logLock.synchronized { op.map { a => wal.append(record(a)); a } }
 
   def createLibrary(name: String, description: Option[String] = None,
       metadata: Map[String, String] = Map.empty,
       indexType: String = "lsh", id: Option[String] = None): Either[ApiError, LibraryRow] =
     logged(inner.createLibrary(name, description, metadata, indexType, id)) { row =>
       WalCodec.libRecord("lib_create", row,
-        indexTypeName = inner.indexTypeOf(row.id).map(WalCodec.indexTypeName))
+        indexTypeName = inner.indexTypeOf(row.id).map(_.name))
     }
 
   def updateLibrary(id: String, name: Option[String] = None,
@@ -107,7 +94,7 @@ final class DurableCatalog private (
     logged(inner.createChunk(documentId, text, metadata, embedding, id))(
       row => WalCodec.chunkRecord(Seq(row)))
 
-  /** Bulk create is ONE commit record — group commit for free. */
+  /** Bulk create is ONE commit record for the whole batch. */
   def createChunks(documentId: String,
       items: Seq[(String, Map[String, String])]): Either[ApiError, Seq[ChunkRow]] =
     logged(inner.createChunks(documentId, items))(WalCodec.chunkRecord)
@@ -126,7 +113,6 @@ final class DurableCatalog private (
     * point recovers to a consistent state (at worst replaying a tail
     * the snapshot already contains is prevented by the seq fence). */
   def checkpoint(): Unit = logLock.synchronized {
-    appender.drainAll() // group mode: staged-but-unflushed records first
     val seq = wal.lastSeq
     val snap = wal.snapshotPath(seq)
     inner.save(snap)
@@ -138,77 +124,7 @@ final class DurableCatalog private (
     * cost of a snapshot — the maintenance move for long-lived roots
     * between checkpoints (see [[CatalogWal.compact]]). Replay after
     * compaction is record-identical. */
-  def compactWal(): Unit = logLock.synchronized {
-    appender.drainAll()
-    wal.compact()
-  }
-}
-
-/** How acknowledged mutation records reach the log. `stage` runs under
-  * the catalog's apply lock (so WAL order = application order);
-  * `await` runs outside it and returns once the ticket is durable. */
-private[catalog] sealed trait WalAppender {
-  def stage(record: ObjectNode): scala.concurrent.Promise[Unit]
-  def await(ticket: scala.concurrent.Promise[Unit]): Unit
-  def drainAll(): Unit
-}
-
-/** Default: one commit file per mutation, written under the apply lock
-  * — the simple gapless layout. */
-private[catalog] final class ImmediateAppender(wal: CatalogWal) extends WalAppender {
-  def stage(record: ObjectNode): scala.concurrent.Promise[Unit] = {
-    wal.append(record)
-    scala.concurrent.Promise.successful(())
-  }
-  def await(ticket: scala.concurrent.Promise[Unit]): Unit = ()
-  def drainAll(): Unit = ()
-}
-
-/**
- * Leader-based group commit: staged records queue in application
- * order; the first caller to reach the flush lock drains the WHOLE
- * queue into one segment file and completes every queued ticket, so
- * followers that arrive later find their ticket already done. Under
- * contention the mutations-per-file ratio rises automatically; with a
- * single caller it degenerates to one record per file. Every segment
- * is written by exactly one leader and covers a contiguous seq range —
- * a crash loses at most a clean tail, never a gap.
- */
-private[catalog] final class GroupCommitAppender(wal: CatalogWal) extends WalAppender {
-  private val queue = scala.collection.mutable.ArrayBuffer
-    .empty[(ObjectNode, scala.concurrent.Promise[Unit])]
-  private val flushLock = new Object
-
-  def stage(record: ObjectNode): scala.concurrent.Promise[Unit] =
-    queue.synchronized {
-      val p = scala.concurrent.Promise[Unit]()
-      queue += ((record, p))
-      p
-    }
-
-  def await(ticket: scala.concurrent.Promise[Unit]): Unit = {
-    if (ticket.isCompleted) return
-    flushLock.synchronized {
-      if (!ticket.isCompleted) flushQueue()
-    }
-    // our record was in the queue, so either an earlier leader or our
-    // own flush above completed it
-    assert(ticket.isCompleted, "group-commit flush did not cover a staged record")
-  }
-
-  def drainAll(): Unit = flushLock.synchronized { flushQueue() }
-
-  private def flushQueue(): Unit = {
-    val batch = queue.synchronized {
-      val b = queue.toVector
-      queue.clear()
-      b
-    }
-    if (batch.nonEmpty) {
-      wal.appendBatch(batch.map(_._1))
-      batch.foreach(_._2.success(()))
-    }
-  }
+  def compactWal(): Unit = logLock.synchronized(wal.compact())
 }
 
 object DurableCatalog {
@@ -218,7 +134,7 @@ object DurableCatalog {
     * sequence fence, in sequence order. */
   def recover(spark: SparkSession, root: String,
       embedder: graft.functions.Embedder = graft.functions.Embedder.default,
-      embeddingDim: Int = 64, groupCommit: Boolean = false): DurableCatalog = {
+      embeddingDim: Int = 64): DurableCatalog = {
     val inner = new VectorCatalog(spark, embedder, embeddingDim)
     val wal = new CatalogWal(spark, root)
     wal.readManifest().foreach { case (_, snapshot) =>
@@ -239,7 +155,7 @@ object DurableCatalog {
         case other => throw new IllegalStateException(s"Unknown WAL op: $other")
       }
     }
-    new DurableCatalog(inner, wal, groupCommit)
+    new DurableCatalog(inner, wal)
   }
 }
 
@@ -305,19 +221,6 @@ final class CatalogWal(spark: SparkSession, root: String) {
     seq = next
   }
 
-  /** Group-commit segment: the whole batch in ONE file (named by its
-    * first seq), records carrying their own dense seq numbers. */
-  def appendBatch(records: Seq[ObjectNode]): Unit = synchronized {
-    if (records.isEmpty) return
-    val first = seq + 1
-    records.zipWithIndex.foreach { case (r, i) => r.put("seq", first + i) }
-    val node = mapper.createObjectNode()
-    val arr = node.putArray("batch")
-    records.foreach(arr.add)
-    writeFile(first, node)
-    seq = first + records.length - 1
-  }
-
   private def writeFile(atSeq: Long, node: ObjectNode): Unit = {
     val p = new Path(walDir, f"$atSeq%020d.json")
     val f = fs(p)
@@ -356,7 +259,7 @@ final class CatalogWal(spark: SparkSession, root: String) {
       throw new IllegalStateException(s"Manifest rename failed at $manifestPath")
   }
 
-  /** Records inside one WAL file: singles hold one record, group-commit
+  /** Records inside one WAL file: singles hold one record, compacted
     * segments hold a `batch` array. */
   private def recordsOf(node: JsonNode): Seq[JsonNode] =
     Option(node.get("batch")) match {
@@ -370,7 +273,7 @@ final class CatalogWal(spark: SparkSession, root: String) {
       .filter(_._1 <= atSeq)
       .filter { case (_, p) =>
         // a segment is deletable only if its LAST record is fenced
-        // (checkpoint drains staged records first, so a straddling
+        // (checkpoint and compaction share the log lock, so a straddling
         // segment cannot normally exist — this keeps truncation safe
         // even if one does)
         readRecords(f, p).forall(_.get("seq").asLong() <= atSeq)
@@ -380,11 +283,10 @@ final class CatalogWal(spark: SparkSession, root: String) {
 
   /**
    * Merge every commit file into ONE compacted segment — the
-   * between-checkpoints file-count lever: a long-lived root in
-   * single-mutation mode holds one file per acknowledged mutation, and
-   * both recovery opens and object-store LIST costs grow with file
-   * count. Compaction is pure log rewriting (no snapshot write, no
-   * catalog involvement).
+   * between-checkpoints file-count lever: a long-lived root holds one
+   * file per acknowledged mutation, and both recovery opens and
+   * object-store LIST costs grow with file count. Compaction is pure
+   * log rewriting (no snapshot write, no catalog involvement).
    *
    * Crash safety by ordering + idempotent replay: the merged segment
    * (named `firstSeq c lastSeq`) is fully written FIRST, originals are
@@ -457,14 +359,6 @@ final class CatalogWal(spark: SparkSession, root: String) {
 private[catalog] object WalCodec {
   private val mapper = new ObjectMapper()
 
-  def indexTypeName(it: IndexType): String = it match {
-    case IndexType.Exact => "exact"
-    case IndexType.Lsh => "lsh"
-    case IndexType.Ivf => "ivf"
-    case IndexType.Hnsw => "hnsw"
-    case IndexType.IvfPq => "ivfpq"
-    case IndexType.Binary => "binary"
-  }
   def parseIndexType(s: String): IndexType =
     IndexType.parse(s).getOrElse(throw new IllegalStateException(s"Bad index type in WAL: $s"))
 

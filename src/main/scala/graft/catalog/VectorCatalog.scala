@@ -16,37 +16,35 @@ import graft.search.LocalSearch
 
 /** Index type selector (reference: config.py:25 allows lsh|ivf; exact
   * brute-force is the always-available fallback, SURVEY.md §2.11). */
-sealed trait IndexType
+sealed abstract class IndexType(val name: String)
 object IndexType {
-  case object Exact extends IndexType
-  case object Lsh extends IndexType
-  case object Ivf extends IndexType
+  case object Exact extends IndexType("exact")
+  case object Lsh extends IndexType("lsh")
+  case object Ivf extends IndexType("ivf")
   /** Beyond reference parity (config.py:25 knows only lsh|ivf): the
     * graph tier as a first-class selectable index. Additive — a
     * reference client never sends "hnsw", so parity is untouched. */
-  case object Hnsw extends IndexType
+  case object Hnsw extends IndexType("hnsw")
   /** The composed residual-coded index (IvfPqModel) as a selectable
     * type — 32x-compressed candidate tier behind the same facade.
     * Additive like Hnsw. */
-  case object IvfPq extends IndexType
+  case object IvfPq extends IndexType("ivfpq")
   /** Binary sign-quantization tier (graft.index.BinaryQuant): 1
     * bit/dim packed signatures, Hamming top-C prefilter, exact rerank.
     * Untrained by construction (a stored float's sign is the code), so
     * unlike LSH/IVF there is no model state at all — the index IS the
     * (id, sig) table. Additive like Hnsw. */
-  case object Binary extends IndexType
-  /** The canonical selectable names (HTTP error messages and docs
-    * derive from this — one list, no drift; "flat" stays an accepted
-    * alias of exact). */
-  val names: Seq[String] = Seq("lsh", "ivf", "exact", "hnsw", "ivfpq", "binary")
+  case object Binary extends IndexType("binary")
+  /** Every type, in the order HTTP error messages list their names. */
+  val all: Seq[IndexType] = Seq(Lsh, Ivf, Exact, Hnsw, IvfPq, Binary)
+  /** The canonical selectable names (HTTP error messages, WAL records
+    * and docs derive from this — one list, no drift; "flat" stays an
+    * accepted alias of exact). */
+  val names: Seq[String] = all.map(_.name)
   def parse(s: String): Either[ApiError, IndexType] = s.toLowerCase match {
-    case "flat" | "exact" => Right(Exact)
-    case "lsh" => Right(Lsh)
-    case "ivf" => Right(Ivf)
-    case "hnsw" => Right(Hnsw)
-    case "ivfpq" => Right(IvfPq)
-    case "binary" => Right(Binary)
-    case other => Left(ApiError.Validation(s"Invalid index type: $other"))
+    case "flat" => Right(Exact)
+    case other => all.find(_.name == other)
+      .toRight(ApiError.Validation(s"Invalid index type: $other"))
   }
 }
 
@@ -57,25 +55,12 @@ object IndexType {
 final case class HnswState(graph: graft.index.HnswModel, chunkIds: Array[String],
     embHashes: Array[Long] = Array.empty)
 
-/** Built IVF-PQ state for one library: the trained composed model —
-  * plain residual coding (Left) or the OPQ-rotated variant (Right,
-  * GraftConfig.ivfpqUseOpq at build time) — and the encoded
-  * (id, cluster_id, codes) table: 8 bytes of codes per chunk vs the
-  * full float vector. Both variants share the encode/candidates
-  * contract; the helpers below dispatch. */
-final case class IvfPqState(
-    coded: Either[graft.index.IvfPqModel, graft.index.OpqIvfPqModel],
-    encoded: DataFrame) {
-  def encodeWith(chunks: DataFrame, idCol: String, embCol: String): DataFrame =
-    coded.fold(_.encode(chunks, idCol, embCol), _.encode(chunks, idCol, embCol))
+/** Built IVF-PQ state for one library: the trained residual-coded
+  * model and the encoded (id, cluster_id, codes) table: 8 bytes of
+  * codes per chunk vs the full float vector. */
+final case class IvfPqState(coded: IvfPqModel, encoded: DataFrame) {
   def candidatesWith(query: Array[Float], nprobe: Int, n: Int): DataFrame =
-    coded.fold(_.candidates(encoded, query, nprobe, n),
-      _.candidates(encoded, query, nprobe, n))
-  /** Driver twin of [[candidatesWith]] over the collected `encoded`. */
-  def candidatesLocal(codes: IvfPqModel.LocalCodes, query: Array[Float],
-      nprobe: Int, n: Int): Array[String] =
-    coded.fold(_.candidatesLocal(codes, query, nprobe, n),
-      _.candidatesLocal(codes, query, nprobe, n))
+    coded.candidates(encoded, query, nprobe, n)
 }
 
 /** A tier's derived table collected to the driver (built with the
@@ -87,7 +72,7 @@ object ResidentIndex {
   final case class Buckets(ids: Map[Long, Array[String]]) extends ResidentIndex
   /** IVF: cell -> chunk ids. */
   final case class Cells(ids: Map[Int, Array[String]]) extends ResidentIndex
-  /** IVF-PQ / OPQ: (id, cell, codes) rows. */
+  /** IVF-PQ: (id, cell, codes) rows. */
   final case class Codes(codes: IvfPqModel.LocalCodes) extends ResidentIndex
   /** Binary: (id, packed signature) rows. */
   final case class Sigs(ids: Array[String],
@@ -203,7 +188,6 @@ final class VectorCatalog(val spark: SparkSession,
 
   /** Immutable snapshot of the chunk table (base + buffered log). */
   def chunks: DataFrame = stateLock.synchronized(assembleView())
-  def currentVersion: Long = version.get()
 
   // ---------------------------------------------------------------- library
   def createLibrary(name: String, description: Option[String] = None,
@@ -238,15 +222,7 @@ final class VectorCatalog(val spark: SparkSession,
 
   /** Cascade: documents and chunks of the library go too (storage.py:67-90). */
   def deleteLibrary(id: String): Either[ApiError, Unit] =
-    getLibrary(id).map { _ =>
-      libraries.remove(id)
-      indexes.remove(id)
-      documents.filterInPlace { case (_, d) => d.library_id != id }
-      mutate {
-        upserts.filterInPlace((_, c) => c.library_id != id)
-        libTombstones(id) = mutationSeq
-      }
-    }
+    getLibrary(id).map(_ => restoreDeleteLibrary(id))
 
   // --------------------------------------------------------------- document
   def createDocument(libraryId: String, name: String,
@@ -281,13 +257,7 @@ final class VectorCatalog(val spark: SparkSession,
 
   /** Cascade: the document's chunks go too (storage.py:137-161). */
   def deleteDocument(id: String): Either[ApiError, Unit] =
-    getDocument(id).map { _ =>
-      documents.remove(id)
-      mutate {
-        upserts.filterInPlace((_, c) => c.document_id != id)
-        docTombstones(id) = mutationSeq
-      }
-    }
+    getDocument(id).map(_ => restoreDeleteDocument(id))
 
   /** Equality-only metadata filter over documents (document_service.py:117-143). */
   def documentsByMetadata(libraryId: String, filters: Map[String, String]): Seq[DocumentRow] =
@@ -372,12 +342,7 @@ final class VectorCatalog(val spark: SparkSession,
     }
 
   def deleteChunk(id: String): Either[ApiError, Unit] =
-    getChunk(id).map { _ =>
-      mutate {
-        upserts.remove(id)
-        chunkTombstones += id
-      }
-    }
+    getChunk(id).map(_ => restoreDeleteChunk(id))
 
   def chunksByDocument(documentId: String): DataFrame =
     chunks.filter($"document_id" === documentId)
@@ -737,7 +702,7 @@ final class VectorCatalog(val spark: SparkSession,
           val s = state.ivfpq.get
           val kept = s.encoded.join(liveKeys, keysOf(s.encoded), "left_semi")
           val enc = kept.unionByName(
-            s.encodeWith(changedOrNew(s.encoded), "id", "embedding"),
+            s.coded.encode(changedOrNew(s.encoded), "id", "embedding"),
             allowMissingColumns = true).cache()
           enc.count()
           s.encoded.unpersist()
@@ -792,15 +757,10 @@ final class VectorCatalog(val spark: SparkSession,
     if (n < GraftConfig.ivfNlist) None
     else {
       val m = Seq(8, 4, 2, 1).find(embeddingDim % _ == 0).get
-      val coded: Either[graft.index.IvfPqModel, graft.index.OpqIvfPqModel] =
-        if (GraftConfig.ivfpqUseOpq)
-          Right(graft.index.OpqIvfPqModel.train(libChunks, "embedding", m = m))
-        else
-          Left(graft.index.IvfPqModel.train(libChunks, "embedding", m = m))
-      val state = IvfPqState(coded, spark.emptyDataFrame)
-      val encoded = state.encodeWith(libChunks, "id", "embedding").cache()
+      val coded = IvfPqModel.train(libChunks, "embedding", m = m)
+      val encoded = coded.encode(libChunks, "id", "embedding").cache()
       encoded.count()
-      Some(state.copy(encoded = encoded))
+      Some(IvfPqState(coded, encoded))
     }
   }
 
@@ -872,7 +832,8 @@ final class VectorCatalog(val spark: SparkSession,
   // EXACT post-op state, so these restore logged results verbatim —
   // no id/timestamp generation, no existence-check Spark jobs — while
   // still flowing through `mutate` so staleness versions and
-  // compaction behave as in the original run.
+  // compaction behave as in the original run. The public deletes run
+  // their existence check, then the same restore body.
   private[graft] def restoreLibrary(row: LibraryRow, indexType: Option[IndexType]): Unit = {
     libraries.put(row.id, row)
     indexType.foreach { it =>
@@ -1043,17 +1004,10 @@ final class VectorCatalog(val spark: SparkSession,
           .parquet(s"$path/indexes/$libId/hnsw_ids")
       }
       state.ivfpq.foreach { s =>
-        val (ivf, pq) = s.coded.fold(m => (m.ivf, m.pq), m => (m.ivf, m.pq))
-        graft.index.IndexStore.writeIvfModel(spark, ivf,
+        graft.index.IndexStore.writeIvfModel(spark, s.coded.ivf,
           s"$path/indexes/$libId/ivfpq_centroids")
-        graft.index.IndexStore.writePqModel(spark, pq,
+        graft.index.IndexStore.writePqModel(spark, s.coded.pq,
           s"$path/indexes/$libId/ivfpq_codebooks")
-        // the OPQ variant additionally persists its rotation — its
-        // presence is also the variant marker at load time
-        s.coded.foreach { m =>
-          graft.index.IndexStore.writeRotation(spark, m.opq.rotation,
-            s"$path/indexes/$libId/ivfpq_rotation")
-        }
         graft.index.IndexStore.writeIvfPqEncoded(s.encoded,
           s"$path/indexes/$libId/ivfpq_encoded")
       }
@@ -1085,14 +1039,6 @@ final class VectorCatalog(val spark: SparkSession,
       } else if (exists(s"$base/ivfpq_centroids")) {
         val ivf = graft.index.IndexStore.readIvfModel(spark, s"$base/ivfpq_centroids")
         val pq = graft.index.IndexStore.readPqModel(spark, s"$base/ivfpq_codebooks")
-        // a persisted rotation marks the OPQ variant
-        val coded: Either[graft.index.IvfPqModel, graft.index.OpqIvfPqModel] =
-          if (exists(s"$base/ivfpq_rotation"))
-            Right(graft.index.OpqIvfPqModel(ivf,
-              graft.index.OpqModel(
-                graft.index.IndexStore.readRotation(spark, s"$base/ivfpq_rotation"),
-                pq)))
-          else Left(graft.index.IvfPqModel(ivf, pq))
         // cache + materialize like the build path: every search probes
         // this table, and an uncached restore would re-read parquet
         // per query until the first refresh
@@ -1102,7 +1048,7 @@ final class VectorCatalog(val spark: SparkSession,
           .cache()
         encoded.count()
         val state = IndexState(IndexType.IvfPq, None, None, None, None,
-          version.get(), ivfpq = Some(IvfPqState(coded, encoded)))
+          version.get(), ivfpq = Some(IvfPqState(IvfPqModel(ivf, pq), encoded)))
         Right(state)
       } else if (exists(s"$base/hnsw_graph")) {
         val g = graft.index.HnswModel.read(spark, s"$base/hnsw_graph")

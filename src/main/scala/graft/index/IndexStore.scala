@@ -132,19 +132,6 @@ object IndexStore {
     PqModel(books)
   }
 
-  /** Persist an orthogonal rotation matrix (OPQ) as (row, values). */
-  def writeRotation(spark: SparkSession, rotation: Array[Array[Float]],
-      path: String): Unit = {
-    import spark.implicits._
-    rotation.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-      .toDF("row", "vals")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def readRotation(spark: SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(path).select("row", "vals").orderBy("row")
-      .collect().map(_.getSeq[Float](1).toArray)
-
   /** Persist / restore a built HNSW graph (nodes + adjacency + meta) —
     * restart without the O(n log n) rebuild. */
   def writeHnswModel(spark: SparkSession, model: HnswModel, path: String): Unit =

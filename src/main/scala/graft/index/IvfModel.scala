@@ -1,6 +1,5 @@
 package graft.index
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -11,8 +10,9 @@ import graft.model.GraftConfig
 /**
  * IVF (inverted-file) index: k-means cluster centroids + a
  * cluster-assigned chunk table (the Spark-native form of the reference's
- * inverted lists, app/database/indexes.py:181-379). Training is MLlib
- * `KMeans` (replacing the hand-rolled Lloyd loop, indexes.py:228-265);
+ * inverted lists, app/database/indexes.py:181-379). Training is the
+ * reference's Lloyd loop (indexes.py:228-265) on the driver for small
+ * inputs and sampled k-means with distributed refinement above that;
  * assignment is a codegen'd nearest-centroid expression; search probes
  * the top-`nprobe` centroids on the driver (they are KB-scale) and
  * partition-prunes the assigned table with `isin` — the Spark analog of
@@ -90,7 +90,7 @@ object IvfModel {
     * the driver and runs a local Lloyd loop (the reference's own
     * algorithm, indexes.py:228-265) — centroids are KB-scale state
     * either way, and a driver loop skips MLlib's per-iteration job
-    * scheduling. Above it, MLlib KMeans owns the distributed loop.
+    * scheduling. Above it, `trainSampled` owns the distributed loop.
     * 16M floats = 64 MB of Float — bounded regardless of dimension
     * (200k rows at dim 64, ~15k rows at the reference's dim 1024). */
   val localTrainMaxElements: Long = 16000000L
@@ -395,19 +395,6 @@ object IvfModel {
       }
       IvfModel(centroids)
     } finally batches.unpersist(blocking = false)
-  }
-
-  /** MLlib's full distributed loop, kept for differential testing and
-    * for deployments that prefer it (it caches the input and runs
-    * `maxIter` full passes). */
-  def trainMllib(chunks: DataFrame, embCol: String,
-      nlist: Int = GraftConfig.ivfNlist, maxIter: Int = 10,
-      seed: Long = 42L): IvfModel = {
-    val model = new KMeans()
-      .setK(nlist).setMaxIter(maxIter).setTol(1e-4).setSeed(seed)
-      .fit(chunks.filter(col(embCol).isNotNull)
-        .select(array_to_vector(col(embCol).cast("array<double>")).as("features")))
-    IvfModel(model.clusterCenters.map(_.toArray.map(_.toFloat)))
   }
 
   /** Reference-shaped Lloyd loop (indexes.py:228-265): seeded sample

@@ -128,7 +128,7 @@ object GraftConfig {
   val ivfNprobe: Int = 5                    // config.py:32
   /** Multi-probe LSH bit flips per table (beyond parity; 0 = the
     * reference's fixed single-probe behavior). */
-  @volatile var lshMultiProbeFlips: Int = 0
+  val lshMultiProbeFlips: Int = 0
   /** Once a trained IVF model's nlist reaches this, its centroid probe
     * runs over a seeded HNSW graph instead of the linear scan
     * (IvfModel.coarseGraph). 1024 keeps every reference-scale index
@@ -141,12 +141,6 @@ object GraftConfig {
     * (build at cap; loud refusal past it) is testable without a
     * 200k-vector build; production leaves the default. */
   @volatile var hnswMaxGraphVectors: Int = 200000
-  /** When true, the facade's `ivfpq` index type trains the OPQ-rotated
-    * residual stack (OpqIvfPqModel — lower residual MSE / higher
-    * candidate recall at the same code budget, at the cost of the
-    * rotation training) instead of plain IVF-PQ. Read at index build;
-    * a library keeps the variant it was built with. */
-  @volatile var ivfpqUseOpq: Boolean = false
   /** k<=0 => default, k>max => max (config.py:62-68). */
   def clampK(k: Int): Int = if (k <= 0) defaultK else math.min(k, maxK)
 
@@ -160,7 +154,7 @@ object GraftConfig {
     * 8-byte sigs to rerank 12.5% of rows — still ~4x less float math
     * than brute force plus the 32x cheaper scan) keeps the recall curve
     * flat instead of silently decaying with corpus growth. */
-  @volatile var binaryCandidateFraction: Double = 0.125
+  val binaryCandidateFraction: Double = 0.125
 
   /** Target candidate mass (Hamming verifies) a single hot BAND group
     * may emit into the one task that owns its (band, value) key in the

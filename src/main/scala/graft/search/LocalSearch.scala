@@ -74,7 +74,7 @@ object LocalSearch {
       case Some(s) if s.indexType == IndexType.IvfPq =>
         if (s.ivfpq.isEmpty) Some(Empty)
         else s.resident.collect { case ResidentIndex.Codes(codes) =>
-          Only(s.ivfpq.get.candidatesLocal(codes, query, GraftConfig.ivfNprobe,
+          Only(s.ivfpq.get.coded.candidatesLocal(codes, query, GraftConfig.ivfNprobe,
             SearchService.ivfPqFetch(k)).toSet)
         }
       case Some(s) if s.indexType == IndexType.Binary && s.signatures.isDefined =>

@@ -123,35 +123,6 @@ class ApiSpec extends SparkSpec {
     assert(before == after)
   }
 
-  test("ivfpq OPQ variant: builds, searches, and persists with the rotation marker") {
-    import graft.model.GraftConfig
-    val saved = GraftConfig.ivfpqUseOpq
-    try {
-      GraftConfig.ivfpqUseOpq = true
-      val db = new VectorDb(spark)
-      val lib = db.createLibrary("OpqLib", indexType = "ivfpq").toOption.get
-      val doc = db.createDocument(lib.id, "D").toOption.get
-      (0 until GraftConfig.ivfNlist + 10).foreach(i =>
-        assert(db.createChunk(doc.id, s"rotated body $i topic ${i % 6}").isRight))
-      assert(db.indexLibrary(lib.id, "ivfpq").isRight)
-      val st = db.catalog.indexState(lib.id).get.ivfpq.get
-      assert(st.coded.isRight, "OPQ variant expected under the flag")
-      val before = db.simpleSearch(lib.id, "rotated body 42", k = 5)
-        .toOption.get.results.map(_.chunk.id)
-      assert(before.nonEmpty)
-
-      // persistence roundtrip keeps the variant (rotation marker)
-      val path = java.nio.file.Files.createTempDirectory("graft-opq-idx").toString
-      db.catalog.saveIndexes(path)
-      db.catalog.indexLibrary(lib.id, "exact")
-      val restored = db.catalog.loadIndex(path, lib.id)
-      assert(restored.isRight && restored.toOption.get.ivfpq.exists(_.coded.isRight))
-      val after = db.simpleSearch(lib.id, "rotated body 42", k = 5)
-        .toOption.get.results.map(_.chunk.id)
-      assert(before == after)
-    } finally GraftConfig.ivfpqUseOpq = saved
-  }
-
   test("hnsw index survives saveIndexes/loadIndex with identical search results") {
     val db = new VectorDb(spark)
     val lib = db.createLibrary("HnswPersist", indexType = "hnsw").toOption.get

@@ -111,7 +111,10 @@ class HttpApiSpec extends SparkSpec {
     // invalid index type -> 400 (libraries.py:88-93)
     val lib = json(request("POST", "/api/v1/libraries", """{"name":"x"}"""))
     val libId = lib.get("id").asText
-    assert(request("POST", s"/api/v1/libraries/$libId/index?index_type=bogus").statusCode == 400)
+    val bogus = request("POST", s"/api/v1/libraries/$libId/index?index_type=bogus")
+    assert(bogus.statusCode == 400)
+    assert(json(bogus).get("detail").asText ==
+      "Invalid index type. Must be one of: lsh, ivf, exact, hnsw, ivfpq, binary")
 
     // bad filter JSON -> 400 (chunks.py:106)
     assert(request("GET",

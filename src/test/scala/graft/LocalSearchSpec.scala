@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -23,7 +24,9 @@ import graft.search.{LocalSearch, SearchService}
  * index type, under buffered writes, folds, refreshes, cascades and
  * every filter form; zero Spark jobs once resident; the Spark path
  * above the cap; one catalog version per answer under racing writes.
- * Seeded: failures reproduce.
+ * Every reply of either path is also checked on its own: a top-k of
+ * the filtered universe with exact cosine scores, also while index
+ * builds and refreshes race the searches. Seeded: failures reproduce.
  */
 class LocalSearchSpec extends SparkSpec {
 
@@ -242,20 +245,114 @@ class LocalSearchSpec extends SparkSpec {
     }
   }
 
-  test("the OPQ-rotated IVF-PQ variant agrees too") {
-    val prior = GraftConfig.ivfpqUseOpq
-    GraftConfig.ivfpqUseOpq = true
-    try {
-      val f = new Fixture(new VectorCatalog(spark))
-      val r = new Random(22L)
-      val lib = f.addLibrary("ivfpq", r, 150)
-      f.cat.compact()
-      assert(f.cat.indexLibrary(lib, "ivfpq").toOption.get.ivfpq.get.coded.isRight)
-      (1 to 12).foreach { _ =>
-        val q = query(f, r)
-        agree(f, "ivfpq", q)
+  /** Both read paths, by name. */
+  private def paths(f: Fixture): Seq[(String, (String, SearchQuery) => Either[ApiError, SearchResponse])] =
+    Seq("search" -> f.local.search, "sparkSearch" -> f.local.sparkSearch)
+
+  private def queryVec(cat: VectorCatalog, q: SearchQuery): Array[Float] =
+    q.queryEmbedding.getOrElse(cat.embedder.embedOne(q.queryText.get))
+
+  /** The library's filtered universe: id -> stored embedding. */
+  private def universe(cat: VectorCatalog, lib: String, q: SearchQuery): Map[String, Array[Float]] =
+    cat.chunksFiltered(lib, q.metadataFilters).collect().map(ChunkRow.fromRow)
+      .flatMap(c => c.embedding.map(c.id -> _)).toMap
+
+  /** What every reply must satisfy, whatever the tier and path: at most
+    * k rows of the filtered universe, ordered by (score desc, id asc),
+    * each score the exact cosine of the row's stored embedding and never
+    * NaN. None when it holds, else what breaks it. */
+  private def breaks(universe: Map[String, Array[Float]], queryVec: Array[Float], k: Int,
+      reply: SearchResponse): Option[String] = {
+    val hits = reply.results
+    val qa = UnsafeArrayData.fromPrimitiveArray(queryVec)
+    def exact(id: String): Double =
+      CosineSimilarity.eval(UnsafeArrayData.fromPrimitiveArray(universe(id)), true, qa, true)
+    val ordered = hits.zip(hits.drop(1)).forall { case (a, b) =>
+      a.similarityScore > b.similarityScore || a.similarityScore == b.similarityScore &&
+        LocalSearch.compareIds(a.chunk.id, b.chunk.id) < 0
+    }
+    if (hits.size > k) Some(s"${hits.size} hits for k=$k")
+    else hits.find(h => !universe.contains(h.chunk.id)).map(h => s"${h.chunk.id} is outside the filtered universe")
+      .orElse(hits.find(_.similarityScore.isNaN).map(h => s"NaN score for ${h.chunk.id}"))
+      .orElse(hits.find(h => bits(h.similarityScore) != bits(exact(h.chunk.id))).map(h =>
+        s"${h.chunk.id} scored ${h.similarityScore}, its exact cosine is ${exact(h.chunk.id)}"))
+      .orElse(Option.when(!ordered)(
+        s"not ordered by (score desc, id asc): ${hits.map(h => (h.chunk.id, h.similarityScore))}"))
+  }
+
+  test("every tier replies with an ordered, exactly scored top-k of the filtered universe, on both paths") {
+    val f = fixture(120, seed = 28L)
+    val problems = mutable.ArrayBuffer.empty[String]
+    val prop = Prop.forAllNoShrink(Gen.long, Gen.choose(0, 2)) { (seed, step) =>
+      val r = new Random(seed)
+      writes(f, r, 1 + r.nextInt(3))
+      step match {
+        case 1 => f.cat.compact()
+        case 2 => f.libs.values.foreach(lib => assert(f.cat.refreshIndex(lib).isRight))
+        case _ => // buffered writes only
       }
-    } finally GraftConfig.ivfpqUseOpq = prior
+      val bad = for {
+        t <- types
+        q <- Seq.fill(2)(query(f, r))
+        u = universe(f.cat, f.libs(t), q)
+        (name, search) <- paths(f)
+        m <- search(f.libs(t), q) match {
+          case Right(reply) => breaks(u, queryVec(f.cat, q), q.k, reply)
+          case Left(e) => Some(e.message)
+        }
+      } yield s"$t $name k=${q.k} filters=${q.metadataFilters}: $m"
+      problems ++= bad
+      bad.isEmpty
+    }
+    check(prop, minSuccessful = 6, seed = 20261018L, problems.take(5).mkString("\n"))
+  }
+
+  test("searches racing indexLibrary and refreshIndex on every tier stay well-formed and never throw") {
+    val f = fixture(120, seed = 29L)
+    val r = new Random(30L)
+    writes(f, r, 3) // stale indexes: the first refreshes have work to do
+    val probes = f.libs.toSeq.flatMap { case (t, lib) =>
+      Seq.fill(3)(query(f, r)).map(q =>
+        (t, lib, q, queryVec(f.cat, q), universe(f.cat, lib, q)))
+    }
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val served = new AtomicInteger
+    @volatile var swapping = true
+    val readers = paths(f).map { case (name, search) =>
+      val thread = new Thread(() => {
+        var i = 0
+        while (swapping) {
+          val (t, lib, q, qv, u) = probes(i % probes.size)
+          i += 1
+          try search(lib, q) match {
+            case Right(reply) =>
+              breaks(u, qv, q.k, reply).foreach(m => problems.add(s"$t $name: $m"))
+            case Left(e) => problems.add(s"$t $name: ${e.message}")
+          } catch { case scala.util.control.NonFatal(e) => problems.add(s"$t $name threw $e") }
+          served.incrementAndGet()
+        }
+      })
+      thread.start(); thread
+    }
+    try {
+      (0 until 2).foreach { round =>
+        f.libs.foreach { case (t, lib) =>
+          // a metadata-only rewrite of a chunk: a new catalog version
+          // with the same rows, embeddings and filter columns
+          val c = f.cat.getChunk(f.chunks(lib)(r.nextInt(f.chunks(lib).size))).toOption.get
+          assert(f.cat.updateChunk(c.id, metadata = Some(c.metadata)).isRight)
+          assert(f.cat.refreshIndex(lib).isRight)
+          assert(f.cat.indexLibrary(lib, types((types.indexOf(t) + round + 1) % types.size)).isRight)
+          assert(f.cat.indexLibrary(lib, t).isRight)
+        }
+        f.cat.compact()
+      }
+    } finally {
+      swapping = false
+      readers.foreach(_.join())
+    }
+    assert(served.get > probes.size, s"only ${served.get} searches raced the index swaps")
+    assert(problems.isEmpty, problems.asScala.take(5).mkString("\n"))
   }
 
   test("library cascade delete and same-id re-create agree before and after a fold") {
