@@ -101,8 +101,8 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
   * "locking" reduces to an atomic swap of this state. */
 final case class IndexState(
     indexType: IndexType,
-    signatures: Option[DataFrame],   // LSH: (id, bucket); Binary: (id, sig, emb_hash)
-    assigned: Option[DataFrame],     // IVF: chunks + cluster_id
+    signatures: Option[DataFrame],   // LSH: (id, bucket, emb_hash); Binary: (id, sig, emb_hash)
+    assigned: Option[DataFrame],     // IVF: chunks + emb_hash + cluster_id
     lsh: Option[LshModel],
     ivf: Option[IvfModel],
     builtAtVersion: Long,
@@ -114,6 +114,12 @@ final case class IndexState(
     sigCount: Option[Long] = None,
     // driver copy of the derived table for the resident read path
     resident: Option[ResidentIndex] = None)
+
+object IndexState {
+  /** A tier with nothing derived and no build yet. */
+  def empty(indexType: IndexType): IndexState =
+    IndexState(indexType, None, None, None, None, -1L)
+}
 
 /**
  * Driver-side catalog + chunk store for the Library -> Document -> Chunk
@@ -198,7 +204,7 @@ final class VectorCatalog(val spark: SparkSession,
       val row = LibraryRow(id.getOrElse(newId()), name, description, metadata,
         is_indexed = false, created_at = t, updated_at = t)
       libraries.put(row.id, row)
-      indexes.put(row.id, IndexState(it, None, None, None, None, -1L))
+      indexes.put(row.id, IndexState.empty(it))
       row
     }
 
@@ -510,64 +516,23 @@ final class VectorCatalog(val spark: SparkSession,
 
   // ------------------------------------------------------------------ index
   /** Build/rebuild a library's index (libraries POST /{id}/index;
-    * library_service.py:120-158 / M5-M7). */
+    * library_service.py:120-158 / M5-M7): a refresh from the tier's
+    * empty state, as the reference's rebuild re-adds every chunk
+    * through its incremental add hook (indexes.py:437-452). */
   def indexLibrary(libraryId: String, indexType: String): Either[ApiError, IndexState] =
     for {
       _ <- getLibrary(libraryId)
       it <- IndexType.parse(indexType)
-      state <- {
-        val libChunks = chunksByLibrary(libraryId).filter($"embedding".isNotNull)
-        it match {
-          case IndexType.Exact =>
-            Right(IndexState(it, None, None, None, None, version.get()))
-          case IndexType.Lsh =>
-            // Reference-parity sizing by default (8x12, config.py:29-30);
-            // an active recall preset (GraftConfig.lshActivePreset,
-            // measured in RECALL.md) overrides tables x bits opt-in.
-            val model = GraftConfig.lshActivePreset match {
-              case Some(p) => LshModel(numTables = p.numTables,
-                bitsPerTable = p.bitsPerTable, dim = embeddingDim)
-              case None => LshModel(dim = embeddingDim)
-            }
-            val sigs = model.build(libChunks, "id", "embedding").cache()
-            sigs.count() // materialize now: the build is the batch job
-            Right(IndexState(it, Some(sigs), None, Some(model), None, version.get()))
-          case IndexType.Ivf =>
-            Right(IvfModel.trainIfReady(libChunks, "embedding") match {
-              case Some(model) =>
-                val assigned = model.assign(libChunks, "embedding").cache()
-                assigned.count()
-                IndexState(it, None, Some(assigned), None, Some(model), version.get())
-              case None => // below training threshold: index exists, untrained
-                IndexState(it, None, None, None, None, version.get())
-            })
-          case IndexType.Hnsw =>
-            // the graph is bounded driver/broadcast state BY DESIGN —
-            // refuse loudly past the cap instead of silently indexing
-            // a truncated subset (LSH/IVF/IVF-PQ cover every chunk and
-            // are the right tiers at that scale)
-            val n = libChunks.count()
-            if (n > graft.index.HnswModel.maxGraphVectors)
-              Left(ApiError.Validation(
-                s"hnsw index holds bounded graph state: $n chunks > " +
-                  s"${graft.index.HnswModel.maxGraphVectors}; use ivf or ivfpq"))
-            else Right(IndexState(it, None, None, None, None, version.get(),
-              hnsw = buildHnswState(libChunks)))
-          case IndexType.IvfPq =>
-            Right(IndexState(it, None, None, None, None, version.get(),
-              ivfpq = buildIvfPqState(libChunks)))
-          case IndexType.Binary =>
-            // no training, no model: the signature table IS the index —
-            // 8 bytes/64-dims/row, the Hamming prefilter's whole scan.
-            // emb_hash rides along for the (id, emb_hash) reconcile.
-            val sigs = buildBinarySignatures(libChunks).cache()
-            val n = sigs.count()
-            Right(IndexState(it, Some(sigs), None, None, None, version.get(),
-              sigCount = Some(n)))
-        }
-      }
+      // Reference-parity LSH sizing by default (8x12, config.py:29-30);
+      // an active recall preset (GraftConfig.lshActivePreset, measured
+      // in RECALL.md) overrides tables x bits opt-in.
+      lsh = if (it != IndexType.Lsh) None else Some(GraftConfig.lshActivePreset match {
+        case Some(p) => LshModel(numTables = p.numTables,
+          bitsPerTable = p.bitsPerTable, dim = embeddingDim)
+        case None => LshModel(dim = embeddingDim)
+      })
+      built <- derive(libraryId, IndexState.empty(it).copy(lsh = lsh))
     } yield {
-      val built = withResident(state)
       indexes.put(libraryId, built)
       libraries.get(libraryId).foreach(l =>
         libraries.put(libraryId, l.copy(is_indexed = true, updated_at = now())))
@@ -580,217 +545,134 @@ final class VectorCatalog(val spark: SparkSession,
    * Incremental index maintenance (reference M1-M4/M8: per-chunk
    * add/remove without retraining — indexes.py:103-135, 310-338;
    * k-means is trained once and never retrained after, indexes.py:280).
-   * Spark-native shape: the delta between the current chunk table and
-   * the built index is reconciled with one anti-join (deletes) and one
-   * append of newly-embedded rows (inserts). IVF assigns new rows with
-   * the EXISTING centroids, faithfully preserving the never-retrain
-   * semantics; LSH hyperplanes are stateless so appends are exact.
+   * A past-cap HNSW library is refused with the same Validation as
+   * `indexLibrary`, and its state is left as it was.
    */
   def refreshIndex(libraryId: String): Either[ApiError, IndexState] =
-    getLibrary(libraryId).map { _ =>
-      val state = indexes(libraryId)
-      val libChunks = chunksByLibrary(libraryId).filter($"embedding".isNotNull)
-      // Reconcile on (id, emb_hash), not id alone: a chunk updated with
-      // new text is re-embedded under the SAME id, and an id-only
-      // semi-join would keep its stale index rows (old bucket / cell /
-      // codes) — silent recall loss for updated chunks. The hash pair
-      // turns an embedding change into delete+insert. Tables persisted
-      // before emb_hash existed fall back to id-only reconcile.
-      val liveKeys = libChunks.select($"id", xxhash64($"embedding").as("emb_hash"))
-      def keysOf(current: DataFrame): Seq[String] =
-        if (current.columns.contains("emb_hash")) Seq("id", "emb_hash") else Seq("id")
-      def changedOrNew(current: DataFrame): DataFrame =
-        libChunks.withColumn("emb_hash", xxhash64($"embedding"))
-          .join(current.select(keysOf(current).map(col): _*).distinct(),
-            keysOf(current), "left_anti")
-          .drop("emb_hash")
-      val refreshed = state.indexType match {
-        case IndexType.Lsh if state.lsh.isDefined =>
-          val model = state.lsh.get
-          val current = state.signatures.get
-          // re-select in the original column order: a using-columns
-          // semi-join moves the join keys first, and letting the
-          // signature schema drift across refreshes would make
-          // refreshed and freshly-built indexes structurally unequal
-          val kept = current.join(liveKeys, keysOf(current), "left_semi")
-            .select(current.columns.map(col).toIndexedSeq: _*)
-          val sigs = kept.unionByName(
-            model.build(changedOrNew(current), "id", "embedding"),
-            allowMissingColumns = true).cache()
-          sigs.count()
-          state.signatures.foreach(_.unpersist())
-          state.copy(signatures = Some(sigs), builtAtVersion = version.get())
-        case IndexType.Ivf if state.ivf.isDefined =>
-          val model = state.ivf.get
-          // assigned carries the embedding itself, so its hash is
-          // computed on the fly rather than stored
-          val current = state.assigned.get
-            .withColumn("emb_hash", xxhash64($"embedding"))
-          val kept = current.join(liveKeys, Seq("id", "emb_hash"), "left_semi")
-            .drop("emb_hash")
-            .select(state.assigned.get.columns.map(col).toIndexedSeq: _*)
-          val assigned = kept.unionByName(
-            model.assign(changedOrNew(current), "embedding")).cache()
-          assigned.count()
-          state.assigned.foreach(_.unpersist())
-          state.copy(assigned = Some(assigned), builtAtVersion = version.get())
-        case IndexType.Ivf => // built below nlist: train now if the chunk
-          // count has crossed the threshold (reference trains
-          // automatically once size reaches nlist, indexes.py:280)
-          IvfModel.trainIfReady(libChunks, "embedding") match {
-            case Some(model) =>
-              val assigned = model.assign(libChunks, "embedding").cache()
-              assigned.count()
-              state.copy(assigned = Some(assigned), ivf = Some(model),
-                builtAtVersion = version.get())
-            case None => state.copy(builtAtVersion = version.get())
-          }
-        case IndexType.Hnsw =>
-          // Additions-only refresh INSERTS into the existing graph
-          // (HnswModel.insertAll — the paper's insert IS the build
-          // step, and continuing the seeded level sequence keeps the
-          // result deterministic: O(new·log n) instead of the full
-          // O(n log n) driver rebuild, 417 s at the 200k cap). Any
-          // delete or update (detected via the same (id, emb_hash)
-          // key the other tiers reconcile on) still REBUILDS — graph
-          // unlinking is outside the paper's contract and tombstones
-          // decay recall silently. A library grown past the cap keeps
-          // its last complete graph rather than silently truncating
-          // (indexLibrary refuses outright). NOTE: inserted chunk ids
-          // need not sort after existing ones, so an insert-refreshed
-          // graph can differ from a from-scratch rebuild of the same
-          // corpus (insertion order is build state); it is still a
-          // deterministic function of the refresh history, which is
-          // the contract searches rely on.
-          val n = libChunks.count()
-          if (n > graft.index.HnswModel.maxGraphVectors) {
-            log.warn(s"library $libraryId grew past the hnsw graph cap " +
-              s"($n > ${graft.index.HnswModel.maxGraphVectors}); keeping the " +
-              "previous graph — reindex as ivf/ivfpq")
-            state.copy(builtAtVersion = version.get())
-          } else {
-            val prior = state.hnsw
-            val live = collectHnswRows(libChunks)
-            val liveByKey = live.map(r => (r._1, r._3)).toMap
-            val additionsOnly = prior.exists(s =>
-              s.embHashes.length == s.chunkIds.length &&
-                s.chunkIds.indices.forall(i =>
-                  liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i))))
-            if (additionsOnly) {
-              val s = prior.get
-              val known = s.chunkIds.toSet
-              val fresh = live.filterNot(r => known(r._1))
-              if (fresh.isEmpty) state.copy(builtAtVersion = version.get())
-              else {
-                val base = s.graph.size
-                val g = s.graph.insertAll(
-                  Array.tabulate(fresh.length)(j => (base + j).toLong),
-                  fresh.map(_._2))
-                state.copy(hnsw = Some(HnswState(g,
-                    s.chunkIds ++ fresh.map(_._1),
-                    s.embHashes ++ fresh.map(_._3))),
-                  builtAtVersion = version.get())
-              }
-            } else state.copy(hnsw = buildHnswState(libChunks),
-              builtAtVersion = version.get())
-          }
-        case IndexType.IvfPq if state.ivfpq.isDefined =>
-          // never-retrain semantics, like IVF: new OR re-embedded chunks
-          // encode with the EXISTING centroids + codebooks; deletes and
-          // stale (id, old-embedding) rows drop via the (id, emb_hash)
-          // semi-join against live keys
-          val s = state.ivfpq.get
-          val kept = s.encoded.join(liveKeys, keysOf(s.encoded), "left_semi")
-          val enc = kept.unionByName(
-            s.coded.encode(changedOrNew(s.encoded), "id", "embedding"),
-            allowMissingColumns = true).cache()
-          enc.count()
-          s.encoded.unpersist()
-          state.copy(ivfpq = Some(s.copy(encoded = enc)),
-            builtAtVersion = version.get())
-        case IndexType.IvfPq => // below threshold at build: train if ready
-          state.copy(ivfpq = buildIvfPqState(libChunks),
-            builtAtVersion = version.get())
-        case IndexType.Binary if state.signatures.isDefined =>
-          // stateless codes, like LSH hyperplanes: appends are exact;
-          // deletes and re-embedded chunks drop via (id, emb_hash)
-          val current = state.signatures.get
-          val kept = current.join(liveKeys, keysOf(current), "left_semi")
-            .select(current.columns.map(col).toIndexedSeq: _*)
-          val sigs = kept.unionByName(
-            buildBinarySignatures(changedOrNew(current)),
-            allowMissingColumns = true).cache()
-          val nSigs = sigs.count()
-          state.signatures.foreach(_.unpersist())
-          state.copy(signatures = Some(sigs), builtAtVersion = version.get(),
-            sigCount = Some(nSigs))
-        case IndexType.Binary => // restored from WAL without state: full build
-          val sigs = buildBinarySignatures(libChunks).cache()
-          val nSigs = sigs.count()
-          state.copy(signatures = Some(sigs), builtAtVersion = version.get(),
-            sigCount = Some(nSigs))
-        case _ => // exact or never-built LSH index: nothing derived to refresh
-          state.copy(builtAtVersion = version.get())
-      }
-      val withCopy = withResident(refreshed, Some(state))
-      indexes.put(libraryId, withCopy)
-      withCopy
+    getLibrary(libraryId).flatMap(_ => derive(libraryId, indexes(libraryId))).map { s =>
+      indexes.put(libraryId, s)
+      s
     }
 
+  /** The only derivation of a tier's structures: `state` (a tier's empty
+    * state, or its current one) carried to the library's embedded
+    * chunks at the current version. A trained model is kept; an
+    * untrained IVF or IVF-PQ tier trains once the library holds nlist
+    * chunks (reference trigger semantics, indexes.py:280).
+    *
+    * Every derived table (LSH and binary signatures, IVF `assigned`,
+    * IVF-PQ `encoded`) reconciles on (id, emb_hash), not id alone: a
+    * chunk updated with new text is re-embedded under the SAME id, and
+    * its hash turns the change into delete + insert. Rows whose key is
+    * live are kept, changed or new chunks are derived with the existing
+    * model; a table with no emb_hash (none yet, or persisted before the
+    * column existed) is derived in full. */
+  private def derive(libraryId: String, state: IndexState): Either[ApiError, IndexState] = {
+    val at = version.get()
+    val libChunks = chunksByLibrary(libraryId).filter($"embedding".isNotNull)
+      .withColumn("emb_hash", xxhash64($"embedding"))
+    def reconcile(current: Option[DataFrame], deriveRows: DataFrame => DataFrame): (DataFrame, Long) = {
+      val table = current.filter(_.columns.contains("emb_hash")) match {
+        case None => deriveRows(libChunks)
+        case Some(cur) =>
+          val key = Seq("id", "emb_hash")
+          // re-select in the table's column order: a using-columns
+          // semi-join moves the join keys first
+          cur.join(libChunks.select(key.map(col): _*), key, "left_semi")
+            .select(cur.columns.map(col).toIndexedSeq: _*)
+            .unionByName(deriveRows(libChunks.join(cur.select(key.map(col): _*).distinct(), key, "left_anti")))
+      }
+      val cached = table.cache()
+      val n = cached.count() // materialize now: the derivation is the batch job
+      current.foreach(_.unpersist())
+      (cached, n)
+    }
+    val derived = state.indexType match {
+      case IndexType.Lsh => Right(state.lsh.fold(state) { m =>
+        state.copy(signatures = Some(reconcile(state.signatures, m.build(_, "id", "embedding"))._1))
+      })
+      case IndexType.Binary =>
+        val (sigs, n) = reconcile(state.signatures, buildBinarySignatures)
+        Right(state.copy(signatures = Some(sigs), sigCount = Some(n)))
+      case IndexType.Ivf =>
+        // the assigned rows keep the input's emb_hash column
+        Right(state.ivf.orElse(IvfModel.trainIfReady(libChunks, "embedding")).fold(state) { m =>
+          state.copy(assigned = Some(reconcile(state.assigned, m.assign(_, "embedding"))._1),
+            ivf = Some(m))
+        })
+      case IndexType.IvfPq =>
+        Right(state.ivfpq.map(_.coded).orElse(trainIvfPq(libChunks)).fold(state) { coded =>
+          state.copy(ivfpq = Some(IvfPqState(coded,
+            reconcile(state.ivfpq.map(_.encoded), coded.encode(_, "id", "embedding"))._1)))
+        })
+      case IndexType.Hnsw => deriveHnsw(state, libChunks)
+      case IndexType.Exact => Right(state)
+    }
+    derived.map(s => withResident(s.copy(builtAtVersion = at), Some(state)))
+  }
+
   /** The binary tier's signature table: (id, sig, emb_hash) — sig is
-    * the packed sign bits (ceil(dim/64) longs), emb_hash the reconcile
-    * key shared with the other tiers. */
+    * the packed sign bits (ceil(dim/64) longs). No training, no model:
+    * this table is the index, the Hamming prefilter's whole scan. */
   private def buildBinarySignatures(libChunks: DataFrame): DataFrame =
     libChunks.select($"id",
       graft.functions.GraftFunctions.sign_bits($"embedding").as("sig"),
       xxhash64($"embedding").as("emb_hash"))
 
-  /** Train the composed IVF-PQ index over the library's embedded
-    * chunks: coarse centroids + residual codebooks (trained once,
-    * reference trigger semantics — n >= nlist, indexes.py:280), then
-    * encode every chunk to (cluster_id, codes). None below the
-    * training threshold (searches return empty, matching untrained
-    * IVF). `m` adapts to the embedding dimension (largest power of two
-    * <= 8 dividing it). */
-  private def buildIvfPqState(libChunks: DataFrame): Option[IvfPqState] = {
-    val n = libChunks.count()
-    if (n < GraftConfig.ivfNlist) None
-    else {
-      val m = Seq(8, 4, 2, 1).find(embeddingDim % _ == 0).get
-      val coded = IvfPqModel.train(libChunks, "embedding", m = m)
-      val encoded = coded.encode(libChunks, "id", "embedding").cache()
-      encoded.count()
-      Some(IvfPqState(coded, encoded))
-    }
-  }
+  /** Train the composed IVF-PQ model over the library's embedded
+    * chunks: coarse centroids + residual codebooks, trained once like
+    * IVF (n >= nlist, indexes.py:280). None below the training
+    * threshold (searches return empty, matching untrained IVF). `m`
+    * adapts to the embedding dimension (largest power of two <= 8
+    * dividing it). */
+  private def trainIvfPq(libChunks: DataFrame): Option[IvfPqModel] =
+    if (libChunks.count() < GraftConfig.ivfNlist) None
+    else Some(IvfPqModel.train(libChunks, "embedding",
+      m = Seq(8, 4, 2, 1).find(embeddingDim % _ == 0).get))
 
-  /** Collect the library's embedded chunks (id order => deterministic
-    * graph) and build the HNSW graph over dense node indexes, keeping
-    * the node->chunk-id map alongside. None when nothing is embedded. */
-  private def buildHnswState(libChunks: DataFrame): Option[HnswState] = {
-    val rows = collectHnswRows(libChunks)
-    if (rows.isEmpty) None
-    else {
-      val ids = rows.map(_._1)
-      val vecs = rows.map(_._2)
-      Some(HnswState(graft.index.HnswModel.fromVectors(
-        Array.tabulate(ids.length)(_.toLong), vecs), ids, rows.map(_._3)))
-    }
-  }
-
-  /** (chunkId, embedding, embHash) sorted by chunk id — the graph's
-    * deterministic insertion order; the hash is the same
-    * xxhash64(embedding) the (id, emb_hash) reconcile key uses, kept
-    * in HnswState so a refresh can tell pure additions apart from
-    * updates/deletes without storing raw embeddings twice. */
-  private def collectHnswRows(libChunks: DataFrame): Array[(String, Array[Float], Long)] =
-    libChunks
-      .select($"id", $"embedding".cast("array<float>"),
-        xxhash64($"embedding".cast("array<float>")).as("emb_hash"))
+  /** The HNSW graph over the library's embedded chunks, in chunk-id
+    * order (a deterministic build). The graph is bounded driver state
+    * BY DESIGN: past the cap the library is refused loudly instead of
+    * silently indexing a truncated subset (LSH/IVF/IVF-PQ cover every
+    * chunk and are the right tiers at that scale).
+    *
+    * Additions only INSERT into the existing graph (HnswModel.insertAll
+    * — the paper's insert IS the build step, and continuing the seeded
+    * level sequence keeps the result deterministic: O(new·log n)
+    * instead of the full O(n log n) driver rebuild, 417 s at the 200k
+    * cap). Any delete or update, detected with the (id, emb_hash) key
+    * of the other tiers, rebuilds: graph unlinking is outside the
+    * paper's contract and tombstones decay recall silently. Inserted
+    * ids need not sort after existing ones, so an insert-refreshed
+    * graph can differ from a from-scratch build of the same corpus; it
+    * is still a deterministic function of the refresh history. */
+  private def deriveHnsw(state: IndexState, libChunks: DataFrame): Either[ApiError, IndexState] = {
+    val cap = graft.index.HnswModel.maxGraphVectors
+    val live = libChunks.select("id", "embedding", "emb_hash")
       .orderBy($"id")
-      .limit(graft.index.HnswModel.maxGraphVectors)
+      .limit(cap + 1)
       .collect()
       .map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2)))
+    if (live.length > cap)
+      Left(ApiError.Validation(s"hnsw index holds bounded graph state: " +
+        s"${libChunks.count()} chunks > $cap; use ivf or ivfpq"))
+    else {
+      val liveByKey = live.map(r => (r._1, r._3)).toMap
+      val hnsw = state.hnsw.filter(s => s.embHashes.length == s.chunkIds.length &&
+          s.chunkIds.indices.forall(i => liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i)))) match {
+        case Some(s) =>
+          val known = s.chunkIds.toSet
+          val fresh = live.filterNot(r => known(r._1))
+          Some(if (fresh.isEmpty) s
+            else HnswState(s.graph.insertAll(
+                Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2)),
+              s.chunkIds ++ fresh.map(_._1), s.embHashes ++ fresh.map(_._3)))
+        case None => Option.when(live.nonEmpty)(HnswState(graft.index.HnswModel.fromVectors(
+          Array.tabulate(live.length)(_.toLong), live.map(_._2)), live.map(_._1), live.map(_._3)))
+      }
+      Right(state.copy(hnsw = hnsw))
+    }
+  }
 
   /** True when chunk mutations occurred after the index build. */
   def indexStale(libraryId: String): Boolean =
@@ -838,7 +720,7 @@ final class VectorCatalog(val spark: SparkSession,
     libraries.put(row.id, row)
     indexType.foreach { it =>
       if (!indexes.contains(row.id))
-        indexes.put(row.id, IndexState(it, None, None, None, None, -1L))
+        indexes.put(row.id, IndexState.empty(it))
     }
   }
   private[graft] def restoreDocument(row: DocumentRow): Unit =
@@ -973,7 +855,7 @@ final class VectorCatalog(val spark: SparkSession,
   }
 
   /** Persist built index state alongside `save`: models (KB-scale) and
-    * the derived tables in their probe-pruned layouts (IndexStore).
+    * the derived tables in their partitioned layouts (IndexStore).
     * A loaded catalog then probes WITHOUT rebuilding. */
   def saveIndexes(path: String): Unit =
     indexes.snapshot().foreach { case (libId, state) =>
@@ -1014,43 +896,38 @@ final class VectorCatalog(val spark: SparkSession,
     }
 
   /** Restore index state written by `saveIndexes` for one library.
-    * Existence checks go through the Hadoop FileSystem of the path
-    * (saveIndexes writes via Spark's Hadoop-capable writers, so the
-    * index may live on HDFS/S3 where `java.io.File` always says no);
-    * a missing save surfaces as a NotFound Left, never an exception. */
+    * Every derived table comes back whole, with its emb_hash, cached and
+    * counted like a derived one: every search probes it, and the next
+    * refresh reconciles on it. Existence checks go through the Hadoop
+    * FileSystem of the path (saveIndexes writes via Spark's
+    * Hadoop-capable writers, so the index may live on HDFS/S3 where
+    * `java.io.File` always says no); a missing save surfaces as a
+    * NotFound Left, never an exception. */
   def loadIndex(path: String, libraryId: String): Either[ApiError, IndexState] =
     getLibrary(libraryId).flatMap { _ =>
+      import graft.index.IndexStore
       val base = s"$path/indexes/$libraryId"
       val hconf = spark.sparkContext.hadoopConfiguration
       def exists(p: String): Boolean = {
         val hp = new org.apache.hadoop.fs.Path(p)
         hp.getFileSystem(hconf).exists(hp)
       }
-      if (exists(s"$base/lsh_model")) {
-        val m = graft.index.IndexStore.readLshModel(spark, s"$base/lsh_model")
-        val sigs = spark.read.parquet(s"$base/lsh_sigs").select("id", "bucket")
-        val state = IndexState(IndexType.Lsh, Some(sigs), None, Some(m), None, version.get())
-        Right(state)
-      } else if (exists(s"$base/ivf_model")) {
-        val m = graft.index.IndexStore.readIvfModel(spark, s"$base/ivf_model")
-        val assigned = spark.read.parquet(s"$base/ivf_assigned")
-        val state = IndexState(IndexType.Ivf, None, Some(assigned), None, Some(m), version.get())
-        Right(state)
-      } else if (exists(s"$base/ivfpq_centroids")) {
-        val ivf = graft.index.IndexStore.readIvfModel(spark, s"$base/ivfpq_centroids")
-        val pq = graft.index.IndexStore.readPqModel(spark, s"$base/ivfpq_codebooks")
-        // cache + materialize like the build path: every search probes
-        // this table, and an uncached restore would re-read parquet
-        // per query until the first refresh
-        val encoded = graft.index.IndexStore
-          .readIvfPqEncoded(spark, s"$base/ivfpq_encoded")
-          .select("id", "cluster_id", "codes")
-          .cache()
-        encoded.count()
-        val state = IndexState(IndexType.IvfPq, None, None, None, None,
-          version.get(), ivfpq = Some(IvfPqState(IvfPqModel(ivf, pq), encoded)))
-        Right(state)
-      } else if (exists(s"$base/hnsw_graph")) {
+      def table(name: String): (DataFrame, Long) = {
+        val t = IndexStore.readTable(spark, s"$base/$name").cache()
+        (t, t.count())
+      }
+      if (exists(s"$base/lsh_model"))
+        Right(IndexState.empty(IndexType.Lsh).copy(signatures = Some(table("lsh_sigs")._1),
+          lsh = Some(IndexStore.readLshModel(spark, s"$base/lsh_model"))))
+      else if (exists(s"$base/ivf_model"))
+        Right(IndexState.empty(IndexType.Ivf).copy(assigned = Some(table("ivf_assigned")._1),
+          ivf = Some(IndexStore.readIvfModel(spark, s"$base/ivf_model"))))
+      else if (exists(s"$base/ivfpq_centroids"))
+        Right(IndexState.empty(IndexType.IvfPq).copy(ivfpq = Some(IvfPqState(
+          IvfPqModel(IndexStore.readIvfModel(spark, s"$base/ivfpq_centroids"),
+            IndexStore.readPqModel(spark, s"$base/ivfpq_codebooks")),
+          table("ivfpq_encoded")._1))))
+      else if (exists(s"$base/hnsw_graph")) {
         val g = graft.index.HnswModel.read(spark, s"$base/hnsw_graph")
         val idsDf = spark.read.parquet(s"$base/hnsw_ids")
         // layouts persisted before emb_hash was stored load without
@@ -1063,29 +940,17 @@ final class VectorCatalog(val spark: SparkSession,
           .orderBy("idx").collect()
         val ids = rows.map(_.getString(1))
         val hashes = if (hasHashes) rows.map(_.getLong(2)) else Array.empty[Long]
-        val state = IndexState(IndexType.Hnsw, None, None, None, None,
-          version.get(), hnsw = Some(HnswState(g, ids, hashes)))
-        Right(state)
+        Right(IndexState.empty(IndexType.Hnsw).copy(hnsw = Some(HnswState(g, ids, hashes))))
       } else if (exists(s"$base/binary_sigs")) {
-        // cache + materialize like the build path: every search scans
-        // this table (it IS the prefilter), and an uncached restore
-        // would re-read parquet per query until the first refresh
-        val sigs = spark.read.parquet(s"$base/binary_sigs")
-          .select("id", "sig", "emb_hash").cache()
-        val nSigs = sigs.count()
-        val state = IndexState(IndexType.Binary, Some(sigs), None, None,
-          None, version.get(), sigCount = Some(nSigs))
-        Right(state)
-      } else if (exists(base)) {
+        val (sigs, n) = table("binary_sigs")
+        Right(IndexState.empty(IndexType.Binary).copy(signatures = Some(sigs), sigCount = Some(n)))
+      } else if (exists(base))
         // saveIndexes writes nothing for an Exact library — an existing
         // base dir with no model is still a valid (exact) restore.
-        val state = IndexState(IndexType.Exact, None, None, None, None, version.get())
-        Right(state)
-      } else {
-        Left(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
-      }
+        Right(IndexState.empty(IndexType.Exact))
+      else Left(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
     }.map { state =>
-      val restored = withResident(state)
+      val restored = withResident(state.copy(builtAtVersion = version.get()))
       indexes.put(libraryId, restored)
       restored
     }

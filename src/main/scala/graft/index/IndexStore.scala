@@ -4,25 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * On-disk layout for the derived index tables — the piece that turns
- * probes into I/O skipping at 100 TB (SURVEY.md §4 "physical-execution
- * decisions"):
+ * On-disk layout for the derived index tables and the models:
  *
  *  - LSH signatures persist partitioned by `bucket_part =
- *    pmod(bucket, numPartitions)`: a search's <= numTables bucket keys
- *    map to <= numTables partition directories; Catalyst's
- *    PruneFileSourcePartitions drops the rest before any file is
- *    opened.
- *  - IVF assignments persist partitioned by `cluster_id`: an
- *    nprobe-of-nlist probe reads nprobe directories — scanning 5% of
- *    the corpus is a directory listing, not a filter.
+ *    pmod(bucket, numPartitions)`, so a search's <= numTables bucket
+ *    keys would map to <= numTables partition directories.
+ *  - IVF assignments and IVF-PQ codes persist partitioned by
+ *    `cluster_id`, so an nprobe-of-nlist probe would read nprobe
+ *    directories.
  *
- * Writes go through a deterministic repartition so file counts stay
- * bounded regardless of upstream parallelism.
+ * No product read prunes on these partitions:
+ * `VectorCatalog.loadIndex` reads each table whole ([[readTable]]) and
+ * caches it. Writes go through a deterministic repartition so file
+ * counts stay bounded regardless of upstream parallelism.
  */
 object IndexStore {
 
-  /** Persist an LSH signatures table (id, bucket). */
+  /** Persist an LSH signatures table (id, bucket, emb_hash). */
   def writeLshSignatures(signatures: DataFrame, path: String,
       numPartitions: Int = 256): Unit =
     signatures
@@ -31,16 +29,6 @@ object IndexStore {
       .write.mode("overwrite")
       .partitionBy("bucket_part")
       .parquet(path)
-
-  /** Read back with a bucket probe — prunes to the probed partitions. */
-  def readLshCandidates(spark: SparkSession, path: String,
-      queryBuckets: Seq[Long], numPartitions: Int = 256): DataFrame = {
-    val parts = queryBuckets.map(b => math.floorMod(b, numPartitions.toLong)).distinct
-    spark.read.parquet(path)
-      .filter(col("bucket_part").isin(parts.map(Long.box): _*)) // partition pruning
-      .filter(col("bucket").isin(queryBuckets.map(Long.box): _*))
-      .select("id").dropDuplicates("id")
-  }
 
   /** Persist a binary signature table (id, sig, emb_hash). There is no
     * partition-pruning dimension here BY DESIGN — the Hamming prefilter
@@ -60,15 +48,8 @@ object IndexStore {
       .partitionBy("cluster_id")
       .parquet(path)
 
-  /** Read only the probed clusters' partitions. */
-  def readIvfClusters(spark: SparkSession, path: String, clusters: Seq[Int]): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("cluster_id").isin(clusters.map(Int.box): _*))
-
-  /** Persist an IVF-PQ encoded table (id, cluster_id, codes) in the
-    * same cluster-partitioned layout: an ADC probe over nprobe cells
-    * reads nprobe directories of 8-byte codes — the I/O floor of the
-    * composed index. */
+  /** Persist an IVF-PQ encoded table (id, cluster_id, codes, emb_hash)
+    * in the same cluster-partitioned layout. */
   def writeIvfPqEncoded(encoded: DataFrame, path: String): Unit =
     encoded
       .repartition(col("cluster_id"))
@@ -76,8 +57,10 @@ object IndexStore {
       .partitionBy("cluster_id")
       .parquet(path)
 
-  def readIvfPqEncoded(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Read back a whole derived table written above, with every column
+    * it was written with and without the layout's helper column. */
+  def readTable(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).drop("bucket_part")
 
   // ---- model state (KB-scale; parquet keeps the dependency surface zero)
 
@@ -131,12 +114,4 @@ object IndexStore {
     rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
     PqModel(books)
   }
-
-  /** Persist / restore a built HNSW graph (nodes + adjacency + meta) —
-    * restart without the O(n log n) rebuild. */
-  def writeHnswModel(spark: SparkSession, model: HnswModel, path: String): Unit =
-    HnswModel.write(spark, model, path)
-
-  def readHnswModel(spark: SparkSession, path: String): HnswModel =
-    HnswModel.read(spark, path)
 }

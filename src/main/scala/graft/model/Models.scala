@@ -165,7 +165,7 @@ object GraftConfig {
     * its task; the width cap below is therefore √(2·target). Same
     * budget rationale as lshTargetBucketCandidates: 2^18 integer
     * Hamming verifies is well under a second on a core. */
-  @volatile var binaryTargetBandCandidates: Int = 1 << 18
+  val binaryTargetBandCandidates: Int = 1 << 18
   /** Optional FIXED hot-band width cap (tests / cluster tuning);
     * <= 0 means derive from the candidate-mass model above. */
   @volatile var binaryMaxBandWidthOverride: Int = 0
@@ -194,7 +194,7 @@ object GraftConfig {
     * ~64·2^16 ≈ 4.2M rows/table, past which buckets grew linearly with
     * n). 64 keeps per-query work ~512 exact-cosine evaluations at the
     * default 8 tables. */
-  @volatile var lshTargetIdsPerBucket: Int = 64
+  val lshTargetIdsPerBucket: Int = 64
   /** Hard ceiling on auto-sized bits: bucket keys pack `table << bits |
     * sig` into a signed long, so bits ≤ 63 - 1(sign headroom) -
     * 5(table-id bits, ≤32 tables) = 57. At 64 ids/bucket that is
@@ -206,7 +206,7 @@ object GraftConfig {
     * budget the width cap below is derived from. 2^18 ≈ 262k cosines
     * ≈ 17 MFLOP at dim 64: tens of milliseconds on a core, so even an
     * all-hot-bucket adversarial partition stays a sub-second task. */
-  @volatile var lshTargetBucketCandidates: Int = 1 << 18
+  val lshTargetBucketCandidates: Int = 1 << 18
   /** Optional FIXED hot-bucket width cap (tests / cluster tuning);
     * <= 0 means derive from the candidate-mass model below. */
   @volatile var lshMaxBucketWidthOverride: Int = 0
@@ -249,7 +249,7 @@ object GraftConfig {
     * explicitly-huge k routes through the graph. */
   @volatile var approxAssignMinK: Int = 8192
   /** ef for the HNSW-routed approximate assignment above. */
-  @volatile var approxAssignEf: Int = 64
+  val approxAssignEf: Int = 64
 
   /** Trainer routing for the large-n·k regime (SemDedup.trainModel):
     * route to mini-batch k-means once the exact path's assignment

@@ -646,7 +646,11 @@ class AnnRecallSpec extends SparkSpec {
       assert(cat2.indexLibrary(lib2.id, "hnsw").isRight)
       val graphBefore = cat2.indexState(lib2.id).get.hnsw.get
       cat2.createChunk(doc2.id, "one past the cap")
-      cat2.refreshIndex(lib2.id)
+      // refresh refuses like indexLibrary and leaves the state as it
+      // was, so the index still reads stale
+      val refusedRefresh = cat2.refreshIndex(lib2.id)
+      assert(refusedRefresh.left.toOption.exists(_.message.contains("use ivf or ivfpq")))
+      assert(cat2.indexStale(lib2.id))
       val after = cat2.indexState(lib2.id).get.hnsw.get
       assert(after.graph eq graphBefore.graph, "past-cap refresh must keep the old graph")
       assert(after.chunkIds.toSet == seedIds.toSet)

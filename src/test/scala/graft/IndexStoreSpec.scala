@@ -1,18 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexStore, IvfModel, LshModel}
-import graft.operators.Similarity
 import graft.streaming.EventStream
 
-/** Partition-pruned index persistence + streaming sessionization. */
+/** Index persistence + streaming sessionization. */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
-
-  private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   test("catalog save/load round-trips built indexes: search works without rebuild") {
     import graft.catalog.VectorCatalog
@@ -36,45 +30,6 @@ class IndexStoreSpec extends SparkSpec {
     val resp = svc.search("lib-rt", SearchQuery(queryText = Some("document topic1"), k = 3))
       .toOption.get
     assert(resp.results.nonEmpty) // probes the RESTORED signatures, no rebuild
-  }
-
-  test("LSH signatures round-trip with partition pruning") {
-    val dir = Files.createTempDirectory("graft-lsh").toString
-    val lsh = LshModel(numTables = 8, bitsPerTable = 8, dim = 64)
-    IndexStore.writeLshSignatures(lsh.build(emb, "vec_id", "embedding"), dir,
-      numPartitions = 32)
-
-    val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .collect()(0).getSeq[Float](0).toArray
-    val buckets = lsh.bucketsOf(query)
-    val cands = IndexStore.readLshCandidates(spark, dir, buckets.toSeq, 32)
-      .withColumnRenamed("id", "vec_id")
-    // pruning reaches the scan: only probed bucket_part partitions read
-    val scan = cands.queryExecution.executedPlan.collectLeaves().head.toString
-    // candidate set matches the in-memory path
-    val inMem = lsh.candidates(lsh.build(emb, "vec_id", "embedding"), query)
-      .collect().map(_.getLong(0)).toSet
-    assert(cands.collect().map(_.getLong(0)).toSet == inMem)
-    assert(inMem.contains(0L))
-    // and the search result through the persisted path is identical
-    val universe = emb.join(cands, Seq("vec_id"), "left_semi")
-    val top = Similarity.knnExact(universe, "vec_id", "embedding", query, 5)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(top.head == 0L)
-  }
-
-  test("IVF assignment round-trip reads only probed clusters") {
-    val dir = Files.createTempDirectory("graft-ivf").toString
-    val model = IvfModel.train(emb, "embedding", nlist = 8)
-    IndexStore.writeIvfAssigned(model.assign(emb, "embedding"), dir)
-
-    val query = emb.filter(col("vec_id") === 3).select("embedding")
-      .collect()(0).getSeq[Float](0).toArray
-    val probed = model.probe(query, nprobe = 2)
-    val df = IndexStore.readIvfClusters(spark, dir, probed)
-    val clustersRead = df.select("cluster_id").distinct().as[Int].collect().toSet
-    assert(clustersRead.subsetOf(probed.toSet))
-    assert(df.count() > 0 && df.count() < emb.count())
   }
 
   test("streaming sessionization closes sessions on gap (flatMapGroupsWithState)") {
@@ -354,12 +309,12 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("HNSW graph persists and restores with identical search results") {
-    import graft.index.{HnswModel, IndexStore}
+    import graft.index.HnswModel
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val g = HnswModel.build(emb, "vec_id", "embedding")
     val path = java.nio.file.Files.createTempDirectory("graft-hnsw").toString
-    IndexStore.writeHnswModel(spark, g, path)
-    val restored = IndexStore.readHnswModel(spark, path)
+    HnswModel.write(spark, g, path)
+    val restored = HnswModel.read(spark, path)
     assert(restored.size == g.size)
     for (qid <- 0L until 5L) {
       val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === qid)

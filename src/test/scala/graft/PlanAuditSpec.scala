@@ -184,7 +184,7 @@ class PlanAuditSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-prune").toString
     graft.index.IndexStore.writeIvfPqEncoded(
       model.encode(emb, "vec_id", "embedding"), dir)
-    val restored = graft.index.IndexStore.readIvfPqEncoded(spark, dir)
+    val restored = graft.index.IndexStore.readTable(spark, dir)
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
       .select("embedding").collect()(0).getSeq[Float](0).toArray
     val probed = model.candidates(restored, q, nprobe = 4, n = 20)
@@ -223,12 +223,13 @@ class PlanAuditSpec extends SparkSpec {
       s"expected partial+final WindowGroupLimit around the exchange:\n$plan")
   }
 
-  test("restored IVF probe plans partition pruning on cluster_id") {
+  test("restored IVF index is cached; its saved layout still prunes") {
     // The persisted assigned table is partitionBy("cluster_id")
-    // (IndexStore.writeIvfAssigned); after a catalog restore, an
-    // nprobe-of-nlist probe must become PARTITION pruning — reading
-    // nprobe directories, the Spark analog of the reference scanning
-    // only the probed inverted lists (indexes.py:346-356).
+    // (IndexStore.writeIvfAssigned): read back from disk, an
+    // nprobe-of-nlist probe becomes PARTITION pruning — reading nprobe
+    // directories, the Spark analog of the reference scanning only the
+    // probed inverted lists (indexes.py:346-356). loadIndex caches the
+    // whole table, so a restored catalog's probes scan memory.
     val cat = new graft.catalog.VectorCatalog(spark)
     val lib = cat.createLibrary("L", indexType = "ivf").toOption.get
     val doc = cat.createDocument(lib.id, "D").toOption.get
@@ -243,7 +244,12 @@ class PlanAuditSpec extends SparkSpec {
     val state = restored.loadIndex(dir, lib.id).toOption.get
     assert(state.ivf.isDefined && state.assigned.isDefined)
     val qv = restored.embedder.embedOne("probe text 7")
-    val probed = state.ivf.get.candidates(state.assigned.get, qv)
+    val cached = state.ivf.get.candidates(state.assigned.get, qv).queryExecution.executedPlan.toString
+    assert(cached.contains("InMemoryTableScan"), s"restored probe must scan the cache:\n$cached")
+    // a read of the same path would be served from that cache
+    state.assigned.get.unpersist(blocking = true)
+    val onDisk = graft.index.IndexStore.readTable(spark, s"$dir/indexes/${lib.id}/ivf_assigned")
+    val probed = state.ivf.get.candidates(onDisk, qv)
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: ["), s"probe must partition-prune:\n$plan")
     val pf = plan.split("PartitionFilters: ", 2).last.take(300)
