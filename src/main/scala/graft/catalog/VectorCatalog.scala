@@ -648,29 +648,27 @@ final class VectorCatalog(val spark: SparkSession,
     * is still a deterministic function of the refresh history. */
   private def deriveHnsw(state: IndexState, libChunks: DataFrame): Either[ApiError, IndexState] = {
     val cap = graft.index.HnswModel.maxGraphVectors
-    val live = libChunks.select("id", "embedding", "emb_hash")
-      .orderBy($"id")
-      .limit(cap + 1)
-      .collect()
-      .map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2)))
-    if (live.length > cap)
-      Left(ApiError.Validation(s"hnsw index holds bounded graph state: " +
-        s"${libChunks.count()} chunks > $cap; use ivf or ivfpq"))
-    else {
-      val liveByKey = live.map(r => (r._1, r._3)).toMap
-      val hnsw = state.hnsw.filter(s => s.embHashes.length == s.chunkIds.length &&
-          s.chunkIds.indices.forall(i => liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i)))) match {
-        case Some(s) =>
-          val known = s.chunkIds.toSet
-          val fresh = live.filterNot(r => known(r._1))
-          Some(if (fresh.isEmpty) s
-            else HnswState(s.graph.insertAll(
-                Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2)),
-              s.chunkIds ++ fresh.map(_._1), s.embHashes ++ fresh.map(_._3)))
-        case None => Option.when(live.nonEmpty)(HnswState(graft.index.HnswModel.fromVectors(
-          Array.tabulate(live.length)(_.toLong), live.map(_._2)), live.map(_._1), live.map(_._3)))
-      }
-      Right(state.copy(hnsw = hnsw))
+    // counted first, so a past-cap library is refused before any
+    // embedding reaches the driver; id order is sorted here
+    collectBounded(libChunks.select("id", "embedding", "emb_hash"), cap) match {
+      case None => Left(ApiError.Validation(
+        s"hnsw index holds bounded graph state: more than $cap chunks; use ivf or ivfpq"))
+      case Some(rows) =>
+        val live = rows.map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2))).sortBy(_._1)
+        val liveByKey = live.map(r => (r._1, r._3)).toMap
+        val hnsw = state.hnsw.filter(s => s.embHashes.length == s.chunkIds.length &&
+            s.chunkIds.indices.forall(i => liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i)))) match {
+          case Some(s) =>
+            val known = s.chunkIds.toSet
+            val fresh = live.filterNot(r => known(r._1))
+            Some(if (fresh.isEmpty) s
+              else HnswState(s.graph.insertAll(
+                  Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2)),
+                s.chunkIds ++ fresh.map(_._1), s.embHashes ++ fresh.map(_._3)))
+          case None => Option.when(live.nonEmpty)(HnswState(graft.index.HnswModel.fromVectors(
+            Array.tabulate(live.length)(_.toLong), live.map(_._2)), live.map(_._1), live.map(_._3)))
+        }
+        Right(state.copy(hnsw = hnsw))
     }
   }
 

@@ -3,10 +3,10 @@
 
 Usage:
     python3 tools/serve_ab.py --parent DIR --change DIR --workload search_mixed \
-        --seeds 80-84 [--seconds 20] [--json out.json]
+        --seeds 80-84
 
 For each seed it runs `python3 <checkout>/perfbench/run.py --workload W
---seed S --seconds N` once in each checkout, alternating which side goes
+--seed S --seconds 20` once in each checkout, alternating which side goes
 first (the parent on even pair indexes, the change on odd ones). It then
 prints, for every end-to-end metric that BENCHMARK.json declares: both
 medians, the parent's interquartile range, how many pairs the change won
@@ -23,6 +23,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+SECONDS = 20  # the measured run length of every pair
+
 
 def seeds_of(spec):
     out = []
@@ -32,9 +34,9 @@ def seeds_of(spec):
     return out
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed):
     cmd = [sys.executable, str(checkout / "perfbench" / "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds)]
+           "--seed", str(seed), "--seconds", str(SECONDS)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -64,8 +66,6 @@ def main():
     ap.add_argument("--change", required=True, type=Path)
     ap.add_argument("--workload", required=True, choices=["search_read", "search_mixed"])
     ap.add_argument("--seeds", required=True, help="e.g. 80-84 or 80,82,90-91")
-    ap.add_argument("--seconds", type=int, default=20)
-    ap.add_argument("--json", type=Path, help="also write every run's numbers here")
     args = ap.parse_args()
     parent, change = args.parent.resolve(), args.change.resolve()
     spec = json.loads((change / "BENCHMARK.json").read_text())["end_to_end"]
@@ -77,12 +77,12 @@ def main():
             order.reverse()
         pair = {}
         for side, checkout in order:
-            pair[side] = run_once(checkout, args.workload, seed, args.seconds)
+            pair[side] = run_once(checkout, args.workload, seed)
             print(f"seed {seed} {side}: " + " ".join(
                 f"{k}={v}" for k, v in pair[side]["metrics"].items()), flush=True)
         pairs.append(pair)
 
-    print(f"\n{args.workload}: {len(pairs)} pairs, seeds {args.seeds}, {args.seconds} s")
+    print(f"\n{args.workload}: {len(pairs)} pairs, seeds {args.seeds}, {SECONDS} s")
     print(f"{'metric':<18}{'parent':>10}{'change':>10}{'ratio':>8}{'parent IQR':>12}"
           f"{'wins':>7}{'bound':>7}  inside")
     for m in spec:
@@ -102,8 +102,6 @@ def main():
         med = " ".join(f"{k}={statistics.median(pr[side]['phases'].get(k, 0.0) for pr in pairs):.2f}"
                        for k in phases)
         print(f"{side}: failed/attempted {failed}/{attempted}; setup phase medians (s): {med}")
-    if args.json:
-        args.json.write_text(json.dumps(pairs, indent=1))
 
 
 if __name__ == "__main__":
