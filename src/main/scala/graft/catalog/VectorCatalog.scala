@@ -10,74 +10,8 @@ import org.apache.spark.sql.functions._
 
 import graft.filter.MetadataFilter
 import graft.functions.Embedder
-import graft.index.{IvfModel, IvfPqModel, LshModel}
 import graft.model._
 import graft.search.LocalSearch
-
-/** Index type selector (reference: config.py:25 allows lsh|ivf; exact
-  * brute-force is the always-available fallback, SURVEY.md §2.11). */
-sealed abstract class IndexType(val name: String)
-object IndexType {
-  case object Exact extends IndexType("exact")
-  case object Lsh extends IndexType("lsh")
-  case object Ivf extends IndexType("ivf")
-  /** Beyond reference parity (config.py:25 knows only lsh|ivf): the
-    * graph tier as a first-class selectable index. Additive — a
-    * reference client never sends "hnsw", so parity is untouched. */
-  case object Hnsw extends IndexType("hnsw")
-  /** The composed residual-coded index (IvfPqModel) as a selectable
-    * type — 32x-compressed candidate tier behind the same facade.
-    * Additive like Hnsw. */
-  case object IvfPq extends IndexType("ivfpq")
-  /** Binary sign-quantization tier (graft.index.BinaryQuant): 1
-    * bit/dim packed signatures, Hamming top-C prefilter, exact rerank.
-    * Untrained by construction (a stored float's sign is the code), so
-    * unlike LSH/IVF there is no model state at all — the index IS the
-    * (id, sig) table. Additive like Hnsw. */
-  case object Binary extends IndexType("binary")
-  /** Every type, in the order HTTP error messages list their names. */
-  val all: Seq[IndexType] = Seq(Lsh, Ivf, Exact, Hnsw, IvfPq, Binary)
-  /** The canonical selectable names (HTTP error messages, WAL records
-    * and docs derive from this — one list, no drift; "flat" stays an
-    * accepted alias of exact). */
-  val names: Seq[String] = all.map(_.name)
-  def parse(s: String): Either[ApiError, IndexType] = s.toLowerCase match {
-    case "flat" => Right(Exact)
-    case other => all.find(_.name == other)
-      .toRight(ApiError.Validation(s"Invalid index type: $other"))
-  }
-}
-
-/** Built HNSW graph for one library: graph node i holds the vector of
-  * chunk `chunkIds(i)` (chunk ids are uuids; the graph keys by dense
-  * node index internally). Bounded driver/broadcast state like the
-  * LSH/IVF models (HnswModel.maxGraphVectors). */
-final case class HnswState(graph: graft.index.HnswModel, chunkIds: Array[String],
-    embHashes: Array[Long] = Array.empty)
-
-/** Built IVF-PQ state for one library: the trained residual-coded
-  * model and the encoded (id, cluster_id, codes) table: 8 bytes of
-  * codes per chunk vs the full float vector. */
-final case class IvfPqState(coded: IvfPqModel, encoded: DataFrame) {
-  def candidatesWith(query: Array[Float], nprobe: Int, n: Int): DataFrame =
-    coded.candidates(encoded, query, nprobe, n)
-}
-
-/** A tier's derived table collected to the driver (built with the
-  * table when the library is under `LocalSearch.maxLibraryFloats`), so
-  * the resident read path probes it without a Spark job. */
-sealed trait ResidentIndex
-object ResidentIndex {
-  /** LSH: bucket key -> chunk ids. */
-  final case class Buckets(ids: Map[Long, Array[String]]) extends ResidentIndex
-  /** IVF: cell -> chunk ids. */
-  final case class Cells(ids: Map[Int, Array[String]]) extends ResidentIndex
-  /** IVF-PQ: (id, cell, codes) rows. */
-  final case class Codes(codes: IvfPqModel.LocalCodes) extends ResidentIndex
-  /** Binary: (id, packed signature) rows. */
-  final case class Sigs(ids: Array[String],
-      sigs: Array[org.apache.spark.sql.catalyst.util.ArrayData]) extends ResidentIndex
-}
 
 /** One resident library at one catalog version: its folded-base rows
   * and copies of the log entries that can touch them (chunk ids, doc
@@ -93,32 +27,6 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
       else rows.filter(r => !deadChunks.contains(r.id) && !deadDocs.contains(r.document_id))
     if (fresh.isEmpty) kept else kept ++ fresh
   }
-}
-
-/** Versioned per-library index state: the Spark-native replacement for
-  * the reference's mutable `IndexManager` registry + locks
-  * (library_service.py:18, concurrency.py). DataFrames are immutable, so
-  * "locking" reduces to an atomic swap of this state. */
-final case class IndexState(
-    indexType: IndexType,
-    signatures: Option[DataFrame],   // LSH: (id, bucket, emb_hash); Binary: (id, sig, emb_hash)
-    assigned: Option[DataFrame],     // IVF: chunks + emb_hash + cluster_id
-    lsh: Option[LshModel],
-    ivf: Option[IvfModel],
-    builtAtVersion: Long,
-    hnsw: Option[HnswState] = None,  // HNSW: graph + node->chunk-id map
-    ivfpq: Option[IvfPqState] = None, // IVF-PQ: model + encoded codes
-    // Binary: signature row count, captured from the count() that
-    // materializes the cache at build/refresh/restore — sizes the
-    // n-proportional candidate budget WITHOUT a per-search Spark job
-    sigCount: Option[Long] = None,
-    // driver copy of the derived table for the resident read path
-    resident: Option[ResidentIndex] = None)
-
-object IndexState {
-  /** A tier with nothing derived and no build yet. */
-  def empty(indexType: IndexType): IndexState =
-    IndexState(indexType, None, None, None, None, -1L)
 }
 
 /**
@@ -204,7 +112,7 @@ final class VectorCatalog(val spark: SparkSession,
       val row = LibraryRow(id.getOrElse(newId()), name, description, metadata,
         is_indexed = false, created_at = t, updated_at = t)
       libraries.put(row.id, row)
-      indexes.put(row.id, IndexState.empty(it))
+      setIndex(row.id, Some(IndexState.empty(it)))
       row
     }
 
@@ -400,7 +308,7 @@ final class VectorCatalog(val spark: SparkSession,
   private def admit(libraryId: String, b: DataFrame, epoch: Long): Option[ResidentSnapshot] =
     try {
       val libRows = b.filter($"library_id" === libraryId)
-      val n = rowCount(libRows)
+      val n = IndexType.rowCount(libRows)
       val rows =
         if (stateLock.synchronized(admissible(n))) Some(libRows.collect().map(ChunkRow.fromRow))
         else None
@@ -454,86 +362,33 @@ final class VectorCatalog(val spark: SparkSession,
     residentFloats = 0L
   }
 
-  /** `df`'s rows when it holds at most `maxRows`, else None. The count
-    * job comes first, so an over-cap table never reaches the driver. */
-  private def collectBounded(df: DataFrame, maxRows: Long): Option[Array[Row]] =
-    if (rowCount(df) > maxRows) None else Some(df.collect())
-
-  /** `df.count()` in ONE job: no aggregation exchange (which adaptive
-    * execution runs as a job of its own), no row conversion. */
-  private def rowCount(df: DataFrame): Long =
-    df.select(lit(1)).queryExecution.toRdd.count()
-
-  /** `s` with its driver copy: reused from `prior` when the derived
+  /** `s` with its driver copy: reused from `prior` when the tier's
     * table is the same object, else collected when under the cap. */
   private def withResident(s: IndexState, prior: Option[IndexState] = None): IndexState = {
-    def same(a: Option[AnyRef], b: Option[AnyRef]) = (a, b) match {
-      case (Some(x), Some(y)) => x eq y
-      case (None, None) => true
-      case _ => false
-    }
-    prior.filter(p => p.indexType == s.indexType && same(p.signatures, s.signatures) &&
-        same(p.assigned, s.assigned) && same(p.ivfpq.map(_.encoded), s.ivfpq.map(_.encoded)))
+    val table = s.indexType.table(s).toList
+    prior.filter(p => p.indexType.table(p).toList.corresponds(table)(_ eq _))
       .map(p => s.copy(resident = p.resident))
-      .getOrElse(s.copy(resident = residentIndexOf(s)))
+      .getOrElse(s.copy(resident = s.indexType.driverCopy(s, LocalSearch.maxRows(embeddingDim).toLong)))
   }
 
-  private def residentIndexOf(s: IndexState): Option[ResidentIndex] = {
-    val maxRows = LocalSearch.maxRows(embeddingDim).toLong
-    def cell(r: Row, i: Int): Int = r.getAs[Number](i).intValue
-    s.indexType match {
-      case IndexType.Lsh => for {
-        m <- s.lsh; sigs <- s.signatures
-        rows <- collectBounded(sigs.select("id", "bucket"), maxRows * m.numTables)
-      } yield {
-        // one String per chunk, not one per (chunk, table): the ids
-        // dominate this table's heap
-        val canon = scala.collection.mutable.HashMap.empty[String, String]
-        ResidentIndex.Buckets(rows.groupMap(_.getLong(1)) { r =>
-          val id = r.getString(0)
-          canon.getOrElseUpdate(id, id)
-        }.map { case (b, ids) => b -> ids.toArray })
-      }
-      case IndexType.Ivf => for {
-        _ <- s.ivf; assigned <- s.assigned
-        rows <- collectBounded(assigned.select("id", "cluster_id"), maxRows)
-      } yield ResidentIndex.Cells(
-        rows.groupMap(cell(_, 1))(_.getString(0)).map { case (c, ids) => c -> ids.toArray })
-      case IndexType.IvfPq => for {
-        p <- s.ivfpq
-        rows <- collectBounded(p.encoded.select("id", "cluster_id", "codes"), maxRows)
-      } yield ResidentIndex.Codes(IvfPqModel.LocalCodes(rows.map(_.getString(0)),
-        rows.map(cell(_, 1)), rows.map(_.getSeq[Int](2).toArray)))
-      case IndexType.Binary => for {
-        sigs <- s.signatures
-        rows <- collectBounded(sigs.select("id", "sig"), maxRows)
-      } yield ResidentIndex.Sigs(rows.map(_.getString(0)), rows.map(r =>
-        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(r.getSeq[Long](1).toArray)))
-      case _ => None
-    }
-  }
+  /** `s` becomes the library's index state (None: it has none), and the
+    * cached table of the state it replaces is released. */
+  private def setIndex(libraryId: String, s: Option[IndexState]): Unit =
+    s.fold(indexes.remove(libraryId))(indexes.put(libraryId, _))
+      .foreach(old => old.indexType.release(old))
 
   // ------------------------------------------------------------------ index
   /** Build/rebuild a library's index (libraries POST /{id}/index;
     * library_service.py:120-158 / M5-M7): a refresh from the tier's
-    * empty state, as the reference's rebuild re-adds every chunk
+    * initial state, as the reference's rebuild re-adds every chunk
     * through its incremental add hook (indexes.py:437-452). */
   def indexLibrary(libraryId: String, indexType: String): Either[ApiError, IndexState] =
     for {
       _ <- getLibrary(libraryId)
       it <- IndexType.parse(indexType)
-      // Reference-parity LSH sizing by default (8x12, config.py:29-30);
-      // an active recall preset (GraftConfig.lshActivePreset, measured
-      // in RECALL.md) overrides tables x bits opt-in.
-      lsh = if (it != IndexType.Lsh) None else Some(GraftConfig.lshActivePreset match {
-        case Some(p) => LshModel(numTables = p.numTables,
-          bitsPerTable = p.bitsPerTable, dim = embeddingDim)
-        case None => LshModel(dim = embeddingDim)
-      })
-      built <- derive(libraryId, IndexState.empty(it).copy(lsh = lsh))
+      built <- derive(libraryId, it.initial(embeddingDim))
     } yield {
-      indexes.put(libraryId, built)
+      setIndex(libraryId, Some(built))
       libraries.get(libraryId).foreach(l =>
         libraries.put(libraryId, l.copy(is_indexed = true, updated_at = now())))
       built
@@ -546,7 +401,8 @@ final class VectorCatalog(val spark: SparkSession,
    * add/remove without retraining — indexes.py:103-135, 310-338;
    * k-means is trained once and never retrained after, indexes.py:280).
    * A past-cap HNSW library is refused with the same Validation as
-   * `indexLibrary`, and its state is left as it was.
+   * `indexLibrary`, and its state is left as it was. The reconcile
+   * releases the table it replaces.
    */
   def refreshIndex(libraryId: String): Either[ApiError, IndexState] =
     getLibrary(libraryId).flatMap(_ => derive(libraryId, indexes(libraryId))).map { s =>
@@ -554,122 +410,15 @@ final class VectorCatalog(val spark: SparkSession,
       s
     }
 
-  /** The only derivation of a tier's structures: `state` (a tier's empty
-    * state, or its current one) carried to the library's embedded
-    * chunks at the current version. A trained model is kept; an
-    * untrained IVF or IVF-PQ tier trains once the library holds nlist
-    * chunks (reference trigger semantics, indexes.py:280).
-    *
-    * Every derived table (LSH and binary signatures, IVF `assigned`,
-    * IVF-PQ `encoded`) reconciles on (id, emb_hash), not id alone: a
-    * chunk updated with new text is re-embedded under the SAME id, and
-    * its hash turns the change into delete + insert. Rows whose key is
-    * live are kept, changed or new chunks are derived with the existing
-    * model; a table with no emb_hash (none yet, or persisted before the
-    * column existed) is derived in full. */
+  /** The only derivation of a tier's structures: `state` (a tier's
+    * initial state, or its current one) carried by its tier to the
+    * library's embedded chunks at the current version. */
   private def derive(libraryId: String, state: IndexState): Either[ApiError, IndexState] = {
     val at = version.get()
     val libChunks = chunksByLibrary(libraryId).filter($"embedding".isNotNull)
       .withColumn("emb_hash", xxhash64($"embedding"))
-    def reconcile(current: Option[DataFrame], deriveRows: DataFrame => DataFrame): (DataFrame, Long) = {
-      val table = current.filter(_.columns.contains("emb_hash")) match {
-        case None => deriveRows(libChunks)
-        case Some(cur) =>
-          val key = Seq("id", "emb_hash")
-          // re-select in the table's column order: a using-columns
-          // semi-join moves the join keys first
-          cur.join(libChunks.select(key.map(col): _*), key, "left_semi")
-            .select(cur.columns.map(col).toIndexedSeq: _*)
-            .unionByName(deriveRows(libChunks.join(cur.select(key.map(col): _*).distinct(), key, "left_anti")))
-      }
-      val cached = table.cache()
-      val n = cached.count() // materialize now: the derivation is the batch job
-      current.foreach(_.unpersist())
-      (cached, n)
-    }
-    val derived = state.indexType match {
-      case IndexType.Lsh => Right(state.lsh.fold(state) { m =>
-        state.copy(signatures = Some(reconcile(state.signatures, m.build(_, "id", "embedding"))._1))
-      })
-      case IndexType.Binary =>
-        val (sigs, n) = reconcile(state.signatures, buildBinarySignatures)
-        Right(state.copy(signatures = Some(sigs), sigCount = Some(n)))
-      case IndexType.Ivf =>
-        // the assigned rows keep the input's emb_hash column
-        Right(state.ivf.orElse(IvfModel.trainIfReady(libChunks, "embedding")).fold(state) { m =>
-          state.copy(assigned = Some(reconcile(state.assigned, m.assign(_, "embedding"))._1),
-            ivf = Some(m))
-        })
-      case IndexType.IvfPq =>
-        Right(state.ivfpq.map(_.coded).orElse(trainIvfPq(libChunks)).fold(state) { coded =>
-          state.copy(ivfpq = Some(IvfPqState(coded,
-            reconcile(state.ivfpq.map(_.encoded), coded.encode(_, "id", "embedding"))._1)))
-        })
-      case IndexType.Hnsw => deriveHnsw(state, libChunks)
-      case IndexType.Exact => Right(state)
-    }
-    derived.map(s => withResident(s.copy(builtAtVersion = at), Some(state)))
-  }
-
-  /** The binary tier's signature table: (id, sig, emb_hash) — sig is
-    * the packed sign bits (ceil(dim/64) longs). No training, no model:
-    * this table is the index, the Hamming prefilter's whole scan. */
-  private def buildBinarySignatures(libChunks: DataFrame): DataFrame =
-    libChunks.select($"id",
-      graft.functions.GraftFunctions.sign_bits($"embedding").as("sig"),
-      xxhash64($"embedding").as("emb_hash"))
-
-  /** Train the composed IVF-PQ model over the library's embedded
-    * chunks: coarse centroids + residual codebooks, trained once like
-    * IVF (n >= nlist, indexes.py:280). None below the training
-    * threshold (searches return empty, matching untrained IVF). `m`
-    * adapts to the embedding dimension (largest power of two <= 8
-    * dividing it). */
-  private def trainIvfPq(libChunks: DataFrame): Option[IvfPqModel] =
-    if (libChunks.count() < GraftConfig.ivfNlist) None
-    else Some(IvfPqModel.train(libChunks, "embedding",
-      m = Seq(8, 4, 2, 1).find(embeddingDim % _ == 0).get))
-
-  /** The HNSW graph over the library's embedded chunks, in chunk-id
-    * order (a deterministic build). The graph is bounded driver state
-    * BY DESIGN: past the cap the library is refused loudly instead of
-    * silently indexing a truncated subset (LSH/IVF/IVF-PQ cover every
-    * chunk and are the right tiers at that scale).
-    *
-    * Additions only INSERT into the existing graph (HnswModel.insertAll
-    * — the paper's insert IS the build step, and continuing the seeded
-    * level sequence keeps the result deterministic: O(new·log n)
-    * instead of the full O(n log n) driver rebuild, 417 s at the 200k
-    * cap). Any delete or update, detected with the (id, emb_hash) key
-    * of the other tiers, rebuilds: graph unlinking is outside the
-    * paper's contract and tombstones decay recall silently. Inserted
-    * ids need not sort after existing ones, so an insert-refreshed
-    * graph can differ from a from-scratch build of the same corpus; it
-    * is still a deterministic function of the refresh history. */
-  private def deriveHnsw(state: IndexState, libChunks: DataFrame): Either[ApiError, IndexState] = {
-    val cap = graft.index.HnswModel.maxGraphVectors
-    // counted first, so a past-cap library is refused before any
-    // embedding reaches the driver; id order is sorted here
-    collectBounded(libChunks.select("id", "embedding", "emb_hash"), cap) match {
-      case None => Left(ApiError.Validation(
-        s"hnsw index holds bounded graph state: more than $cap chunks; use ivf or ivfpq"))
-      case Some(rows) =>
-        val live = rows.map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2))).sortBy(_._1)
-        val liveByKey = live.map(r => (r._1, r._3)).toMap
-        val hnsw = state.hnsw.filter(s => s.embHashes.length == s.chunkIds.length &&
-            s.chunkIds.indices.forall(i => liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i)))) match {
-          case Some(s) =>
-            val known = s.chunkIds.toSet
-            val fresh = live.filterNot(r => known(r._1))
-            Some(if (fresh.isEmpty) s
-              else HnswState(s.graph.insertAll(
-                  Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2)),
-                s.chunkIds ++ fresh.map(_._1), s.embHashes ++ fresh.map(_._3)))
-          case None => Option.when(live.nonEmpty)(HnswState(graft.index.HnswModel.fromVectors(
-            Array.tabulate(live.length)(_.toLong), live.map(_._2)), live.map(_._1), live.map(_._3)))
-        }
-        Right(state.copy(hnsw = hnsw))
-    }
+    state.indexType.derive(state, new Derivation(libChunks, embeddingDim))
+      .map(s => withResident(s.copy(builtAtVersion = at), Some(state)))
   }
 
   /** True when chunk mutations occurred after the index build. */
@@ -727,7 +476,7 @@ final class VectorCatalog(val spark: SparkSession,
     appendChunks(rows)
   private[graft] def restoreDeleteLibrary(id: String): Unit = {
     libraries.remove(id)
-    indexes.remove(id)
+    setIndex(id, None)
     documents.filterInPlace { case (_, d) => d.library_id != id }
     mutate {
       upserts.filterInPlace((_, c) => c.library_id != id)
@@ -852,104 +601,26 @@ final class VectorCatalog(val spark: SparkSession,
       .start()
   }
 
-  /** Persist built index state alongside `save`: models (KB-scale) and
-    * the derived tables in their partitioned layouts (IndexStore).
+  /** Persist built index state alongside `save`, each library through
+    * its tier: models (KB-scale) and the derived tables (IndexStore).
     * A loaded catalog then probes WITHOUT rebuilding. */
   def saveIndexes(path: String): Unit =
-    indexes.snapshot().foreach { case (libId, state) =>
-      (state.lsh, state.signatures) match {
-        case (Some(m), Some(sigs)) =>
-          graft.index.IndexStore.writeLshModel(spark, m, s"$path/indexes/$libId/lsh_model")
-          graft.index.IndexStore.writeLshSignatures(sigs, s"$path/indexes/$libId/lsh_sigs")
-        case _ =>
-      }
-      (state.ivf, state.assigned) match {
-        case (Some(m), Some(assigned)) =>
-          graft.index.IndexStore.writeIvfModel(spark, m, s"$path/indexes/$libId/ivf_model")
-          graft.index.IndexStore.writeIvfAssigned(assigned, s"$path/indexes/$libId/ivf_assigned")
-        case _ =>
-      }
-      if (state.indexType == IndexType.Binary)
-        state.signatures.foreach(sigs =>
-          graft.index.IndexStore.writeBinarySignatures(sigs,
-            s"$path/indexes/$libId/binary_sigs"))
-      state.hnsw.foreach { hs =>
-        import spark.implicits._
-        graft.index.HnswModel.write(spark, hs.graph, s"$path/indexes/$libId/hnsw_graph")
-        hs.chunkIds.zipWithIndex.map { case (id, i) =>
-          (i, id, if (i < hs.embHashes.length) hs.embHashes(i) else 0L)
-        }.toSeq
-          .toDF("idx", "chunk_id", "emb_hash")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/indexes/$libId/hnsw_ids")
-      }
-      state.ivfpq.foreach { s =>
-        graft.index.IndexStore.writeIvfModel(spark, s.coded.ivf,
-          s"$path/indexes/$libId/ivfpq_centroids")
-        graft.index.IndexStore.writePqModel(spark, s.coded.pq,
-          s"$path/indexes/$libId/ivfpq_codebooks")
-        graft.index.IndexStore.writeIvfPqEncoded(s.encoded,
-          s"$path/indexes/$libId/ivfpq_encoded")
-      }
+    indexes.snapshot().foreach { case (libId, s) =>
+      s.indexType.save(s, new IndexDir(spark, s"$path/indexes/$libId"))
     }
 
-  /** Restore index state written by `saveIndexes` for one library.
-    * Every derived table comes back whole, with its emb_hash, cached and
-    * counted like a derived one: every search probes it, and the next
-    * refresh reconciles on it. Existence checks go through the Hadoop
-    * FileSystem of the path (saveIndexes writes via Spark's
-    * Hadoop-capable writers, so the index may live on HDFS/S3 where
-    * `java.io.File` always says no); a missing save surfaces as a
-    * NotFound Left, never an exception. */
+  /** Restore index state written by `saveIndexes` for one library: the
+    * first tier, in `IndexType.loadOrder`, whose save the library's
+    * directory holds. A missing save surfaces as a NotFound Left, never
+    * an exception. */
   def loadIndex(path: String, libraryId: String): Either[ApiError, IndexState] =
     getLibrary(libraryId).flatMap { _ =>
-      import graft.index.IndexStore
-      val base = s"$path/indexes/$libraryId"
-      val hconf = spark.sparkContext.hadoopConfiguration
-      def exists(p: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hconf).exists(hp)
-      }
-      def table(name: String): (DataFrame, Long) = {
-        val t = IndexStore.readTable(spark, s"$base/$name").cache()
-        (t, t.count())
-      }
-      if (exists(s"$base/lsh_model"))
-        Right(IndexState.empty(IndexType.Lsh).copy(signatures = Some(table("lsh_sigs")._1),
-          lsh = Some(IndexStore.readLshModel(spark, s"$base/lsh_model"))))
-      else if (exists(s"$base/ivf_model"))
-        Right(IndexState.empty(IndexType.Ivf).copy(assigned = Some(table("ivf_assigned")._1),
-          ivf = Some(IndexStore.readIvfModel(spark, s"$base/ivf_model"))))
-      else if (exists(s"$base/ivfpq_centroids"))
-        Right(IndexState.empty(IndexType.IvfPq).copy(ivfpq = Some(IvfPqState(
-          IvfPqModel(IndexStore.readIvfModel(spark, s"$base/ivfpq_centroids"),
-            IndexStore.readPqModel(spark, s"$base/ivfpq_codebooks")),
-          table("ivfpq_encoded")._1))))
-      else if (exists(s"$base/hnsw_graph")) {
-        val g = graft.index.HnswModel.read(spark, s"$base/hnsw_graph")
-        val idsDf = spark.read.parquet(s"$base/hnsw_ids")
-        // layouts persisted before emb_hash was stored load without
-        // hashes: the additions-only check then fails closed and the
-        // first refresh rebuilds (re-establishing hashes)
-        val hasHashes = idsDf.columns.contains("emb_hash")
-        val rows = idsDf
-          .select(Seq("idx", "chunk_id") ++
-            (if (hasHashes) Seq("emb_hash") else Nil) map col: _*)
-          .orderBy("idx").collect()
-        val ids = rows.map(_.getString(1))
-        val hashes = if (hasHashes) rows.map(_.getLong(2)) else Array.empty[Long]
-        Right(IndexState.empty(IndexType.Hnsw).copy(hnsw = Some(HnswState(g, ids, hashes))))
-      } else if (exists(s"$base/binary_sigs")) {
-        val (sigs, n) = table("binary_sigs")
-        Right(IndexState.empty(IndexType.Binary).copy(signatures = Some(sigs), sigCount = Some(n)))
-      } else if (exists(base))
-        // saveIndexes writes nothing for an Exact library — an existing
-        // base dir with no model is still a valid (exact) restore.
-        Right(IndexState.empty(IndexType.Exact))
-      else Left(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
+      val dir = new IndexDir(spark, s"$path/indexes/$libraryId")
+      IndexType.loadOrder.iterator.flatMap(_.load(dir)).nextOption()
+        .toRight(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
     }.map { state =>
       val restored = withResident(state.copy(builtAtVersion = version.get()))
-      indexes.put(libraryId, restored)
+      setIndex(libraryId, Some(restored))
       restored
     }
 

@@ -6,59 +6,40 @@ import org.apache.spark.sql.functions._
 /**
  * On-disk layout for the derived index tables and the models:
  *
- *  - LSH signatures persist partitioned by `bucket_part =
- *    pmod(bucket, numPartitions)`, so a search's <= numTables bucket
- *    keys would map to <= numTables partition directories.
+ *  - LSH and binary signatures persist unpartitioned, in a bounded
+ *    number of evenly sized files: no product read prunes them.
  *  - IVF assignments and IVF-PQ codes persist partitioned by
- *    `cluster_id`, so an nprobe-of-nlist probe would read nprobe
- *    directories.
+ *    `cluster_id`, so an nprobe-of-nlist probe of the files would read
+ *    nprobe directories.
  *
- * No product read prunes on these partitions:
  * `VectorCatalog.loadIndex` reads each table whole ([[readTable]]) and
  * caches it. Writes go through a deterministic repartition so file
  * counts stay bounded regardless of upstream parallelism.
  */
 object IndexStore {
 
-  /** Persist an LSH signatures table (id, bucket, emb_hash). */
-  def writeLshSignatures(signatures: DataFrame, path: String,
-      numPartitions: Int = 256): Unit =
-    signatures
-      .withColumn("bucket_part", pmod(col("bucket"), lit(numPartitions)))
-      .repartition(col("bucket_part"))
-      .write.mode("overwrite")
-      .partitionBy("bucket_part")
-      .parquet(path)
-
-  /** Persist a binary signature table (id, sig, emb_hash). There is no
-    * partition-pruning dimension here BY DESIGN — the Hamming prefilter
-    * scans every signature (that full scan is already the 32×-reduced
-    * form of the corpus read), so the layout goal is only bounded,
-    * evenly-sized files regardless of upstream parallelism. */
-  def writeBinarySignatures(signatures: DataFrame, path: String,
-      numFiles: Int = 32): Unit =
-    signatures.repartition(numFiles)
+  /** Persist a signature table: LSH (id, bucket, emb_hash) or binary
+    * (id, sig, emb_hash). The catalog probes the cached table, and the
+    * binary prefilter scans every signature anyway, so the layout goal
+    * is only bounded, evenly sized files. */
+  def writeSignatures(signatures: DataFrame, path: String): Unit =
+    signatures.repartition(32)
       .write.mode("overwrite").parquet(path)
 
-  /** Persist an IVF-assigned chunk table partitioned by cluster. */
-  def writeIvfAssigned(assigned: DataFrame, path: String): Unit =
-    assigned
-      .repartition(col("cluster_id"))
-      .write.mode("overwrite")
-      .partitionBy("cluster_id")
-      .parquet(path)
-
-  /** Persist an IVF-PQ encoded table (id, cluster_id, codes, emb_hash)
-    * in the same cluster-partitioned layout. */
-  def writeIvfPqEncoded(encoded: DataFrame, path: String): Unit =
-    encoded
+  /** Persist a table with a `cluster_id` column partitioned by cluster:
+    * IVF assignments (chunks + emb_hash + cluster_id) and IVF-PQ codes
+    * (id, cluster_id, codes, emb_hash). */
+  def writeByCluster(table: DataFrame, path: String): Unit =
+    table
       .repartition(col("cluster_id"))
       .write.mode("overwrite")
       .partitionBy("cluster_id")
       .parquet(path)
 
   /** Read back a whole derived table written above, with every column
-    * it was written with and without the layout's helper column. */
+    * it was written with. LSH signatures saved before they were written
+    * unpartitioned carry a `bucket_part` partition column; it is
+    * dropped, so those saves still load. */
   def readTable(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("bucket_part")
 

@@ -4,10 +4,9 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.graft.expressions.{BinarySig, CosineSimilarity, EuclideanDistance}
+import org.apache.spark.sql.graft.expressions.{CosineSimilarity, EuclideanDistance}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.catalog.{IndexState, IndexType, ResidentIndex}
 import graft.model._
 
 /**
@@ -15,7 +14,8 @@ import graft.model._
  * [[maxLibraryFloats]] is searched on the driver with ZERO Spark jobs
  * (ARCHITECTURE.md, "driver when tiny, cluster when big"). Every step
  * is the driver twin of the Spark plan in [[SearchService]] — the same
- * candidate set per tier, the same scalar math (the expressions'
+ * candidate set per tier (its `IndexType`'s driver and Spark
+ * candidates), the same scalar math (the expressions'
  * `eval` helpers), and Spark's own top-k order: score descending under
  * `SQLOrderingUtil.compareDoubles`, then id ascending in UTF8String
  * byte order — so both paths return the same ids, order and bits.
@@ -41,52 +41,6 @@ object LocalSearch {
   def maxRows(dim: Int): Int = (maxLibraryFloats / math.max(1, dim)).toInt
 
   def fits(rows: Long, dim: Int): Boolean = rows * math.max(1, dim) <= maxLibraryFloats
-
-  /** Which chunks a tier's probe admits to the exact rerank. */
-  sealed trait Candidates
-  object Candidates {
-    /** Every chunk of the filtered universe (exact, or LSH's fallback). */
-    case object All extends Candidates
-    final case class Only(ids: Set[String]) extends Candidates
-    /** Untrained IVF / IVF-PQ: no results by contract. */
-    case object Empty extends Candidates
-  }
-
-  /** The driver probe for a library's index, or None when the tier has
-    * no driver copy (the library then takes the Spark path). Mirrors
-    * SearchService's dispatch case for case. */
-  def candidates(state: Option[IndexState], query: Array[Float], k: Int): Option[Candidates] = {
-    import Candidates._
-    state match {
-      case Some(s) if s.indexType == IndexType.Lsh && s.signatures.isDefined =>
-        s.resident.collect { case ResidentIndex.Buckets(byBucket) =>
-          val ids = s.lsh.get.multiProbeBucketsOf(query, SearchService.lshFlips)
-            .iterator.flatMap(b => byBucket.getOrElse(b, Array.empty[String])).toSet
-          if (ids.isEmpty) All else Only(ids)
-        }
-      case Some(s) if s.indexType == IndexType.Ivf =>
-        if (s.ivf.isEmpty) Some(Empty)
-        else s.resident.collect { case ResidentIndex.Cells(byCell) =>
-          Only(s.ivf.get.probe(query).iterator.flatMap(c => byCell.getOrElse(c, Array.empty[String])).toSet)
-        }
-      case Some(s) if s.indexType == IndexType.Hnsw && s.hnsw.isDefined =>
-        Some(Only(SearchService.hnswCandidates(s.hnsw.get, query, k).toSet))
-      case Some(s) if s.indexType == IndexType.IvfPq =>
-        if (s.ivfpq.isEmpty) Some(Empty)
-        else s.resident.collect { case ResidentIndex.Codes(codes) =>
-          Only(s.ivfpq.get.coded.candidatesLocal(codes, query, GraftConfig.ivfNprobe,
-            SearchService.ivfPqFetch(k)).toSet)
-        }
-      case Some(s) if s.indexType == IndexType.Binary && s.signatures.isDefined =>
-        s.resident.collect { case ResidentIndex.Sigs(ids, sigs) =>
-          val fetch = SearchService.binaryFetch(s.sigCount.getOrElse(ids.length.toLong), k)
-          val q = UnsafeArrayData.fromPrimitiveArray(graft.index.BinaryQuant.pack(query))
-          val scored = ids.indices.iterator.map(i => (BinarySig.hamming(sigs(i), q).toDouble, ids(i)))
-          Only(firstN(scored, fetch, ascending).iterator.map(_._2).toSet)
-        }
-      case _ => Some(All)
-    }
-  }
 
   /** Exact cosine top-k over `rows` (the filtered universe, already
     * restricted to the candidates): cosine_sim / euclidean_dist's own

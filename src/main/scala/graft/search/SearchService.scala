@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{HnswState, IndexState, IndexType, VectorCatalog}
+import graft.catalog.{Candidates, IndexState, VectorCatalog}
 import graft.filter.MetadataFilter
 import graft.functions.GraftFunctions._
 import graft.model._
@@ -38,8 +38,6 @@ import graft.model._
  * Validation error on both, raised before any job or scan.
  */
 final class SearchService(catalog: VectorCatalog) {
-  import SearchService._
-
   def search(libraryId: String, query: SearchQuery): Either[ApiError, SearchResponse] =
     prepared(libraryId, query).map(p =>
       respond(p, localSearch(libraryId, p).getOrElse(sparkPlans(libraryId, p))))
@@ -78,141 +76,42 @@ final class SearchService(catalog: VectorCatalog) {
     * driver copy or the library is not resident (Spark path). */
   private def localSearch(libraryId: String, p: Prepared): Option[Seq[SearchResult]] =
     for {
-      cands <- LocalSearch.candidates(p.state, p.queryVec, p.k)
-      view <- if (cands == LocalSearch.Candidates.Empty) Some(Array.empty[ChunkRow])
+      cands <- p.state.fold[Option[Candidates]](Some(Candidates.All))(s =>
+        s.indexType.driverCandidates(s, p.queryVec, p.k))
+      view <- if (cands == Candidates.Empty) Some(Array.empty[ChunkRow])
         else catalog.residentView(libraryId)
     } yield {
       val admitted: ChunkRow => Boolean = cands match {
-        case LocalSearch.Candidates.Only(ids) => r => ids.contains(r.id)
+        case Candidates.Ids(ids) => r => ids.contains(r.id)
         case _ => _ => true
       }
       LocalSearch.topK(view.iterator.filter(r => admitted(r) && p.matches(r)), p.queryVec, p.k)
     }
 
+  /** The Spark path: the tier's Spark probe, then the exact rerank over
+    * the metadata-filtered universe (step 5) restricted to it. */
   private def sparkPlans(libraryId: String, p: Prepared): Seq[SearchResult] = {
-    val (queryVec, k) = (p.queryVec, p.k)
-    // (5) metadata pre-filter defines the chunk universe
-    val universe = catalog.chunksFiltered(libraryId, p.q.metadataFilters)
+    lazy val universe = catalog.chunksFiltered(libraryId, p.q.metadataFilters)
       .filter(col("embedding").isNotNull)
-    p.state match {
-      case Some(s) if s.indexType == IndexType.Lsh && s.signatures.isDefined =>
-        lshSearch(s, universe, queryVec, k)
-      case Some(s) if s.indexType == IndexType.Ivf =>
-        ivfSearch(s, universe, queryVec, k)
-      case Some(s) if s.indexType == IndexType.Hnsw && s.hnsw.isDefined =>
-        exactTopK(universe.filter(col("id").isin(hnswCandidates(s.hnsw.get, queryVec, k): _*)),
-          queryVec, k)
-      case Some(s) if s.indexType == IndexType.IvfPq =>
-        ivfPqSearch(s, universe, queryVec, k)
-      case Some(s) if s.indexType == IndexType.Binary && s.signatures.isDefined =>
-        binarySearch(s, universe, queryVec, k)
-      case _ => // exact index type, or index never built => brute force
-        exactTopK(universe, queryVec, k)
-    }
+    (p.state.fold[Candidates](Candidates.All)(s => s.indexType.sparkCandidates(s, p.queryVec, p.k)) match {
+      case Candidates.Empty => None
+      case Candidates.All => Some(universe)
+      case Candidates.Ids(ids) => Some(universe.filter(col("id").isin(ids.toSeq: _*)))
+      case Candidates.Plan(ids) => Some(universe.join(ids, Seq("id"), "left_semi"))
+    }).fold(Seq.empty[SearchResult])(exactTopK(_, p.queryVec, p.k))
   }
 
   /** Q1 exact: cosine + euclid, deterministic tiebreak (desc score, asc id). */
   private def exactTopK(universe: DataFrame, queryVec: Array[Float], k: Int): Seq[SearchResult] =
-    collectResults(universe
+    universe
       .withColumn("similarity_score", cosine_sim(col("embedding"), typedLit(queryVec)))
       .withColumn("distance", euclidean_dist(col("embedding"), typedLit(queryVec)))
       .orderBy(col("similarity_score").desc, col("id").asc)
-      .limit(k))
-
-  /** Q2: bucket-join candidates; an EMPTY CANDIDATE SET falls back to a
-    * full scan (indexes.py:151-153 — the fallback fires before the
-    * universe membership check, so a non-empty candidate set that the
-    * metadata post-filter eliminates correctly returns < k rows, it
-    * does NOT fall back). */
-  private def lshSearch(state: IndexState, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    val candidates = state.lsh.get.multiProbeCandidates(
-      state.signatures.get, queryVec, lshFlips)
-    if (candidates.isEmpty) exactTopK(universe, queryVec, k)
-    else exactTopK(universe.join(candidates, Seq("id"), "left_semi"), queryVec, k)
-  }
-
-  /** Q3: probe nprobe clusters; untrained => empty (indexes.py:343). */
-  private def ivfSearch(state: IndexState, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] =
-    state.ivf match {
-      case None => Seq.empty // untrained IVF returns no results
-      case Some(model) =>
-        val probed = model.candidates(state.assigned.get, queryVec).select("id")
-        val candidateChunks = universe.join(probed, Seq("id"), "left_semi")
-        exactTopK(candidateChunks, queryVec, k)
-    }
-
-  /** IVF-PQ tier: residual-ADC candidate generation over the encoded
-    * codes (probe nprobe cells, fetch 4k floor 50), exact cosine
-    * rerank over the survivors. Untrained (below the nlist threshold
-    * at build) => empty, exactly like plain IVF. */
-  private def ivfPqSearch(state: IndexState, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] =
-    state.ivfpq match {
-      case None => Seq.empty // untrained: reference IVF semantics
-      case Some(s) =>
-        val cands = s.candidatesWith(queryVec,
-          nprobe = GraftConfig.ivfNprobe, n = ivfPqFetch(k)).select("id")
-        exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
-    }
-
-  /** Binary sign-quantization tier: Hamming top-C over the packed
-    * signature table (integer distance, id tiebreak — a per-partition
-    * heap over 8-byte-per-64-dims rows, the cheapest prefilter scan of
-    * any tier), then the shared post-filter + exact-cosine top-k. The
-    * candidate set is never empty for a non-empty index (every indexed
-    * chunk has a signature), so there is no LSH-style fallback. */
-  private def binarySearch(state: IndexState, universe: DataFrame,
-      queryVec: Array[Float], k: Int): Seq[SearchResult] = {
-    // The count was captured when the cached table was materialized at
-    // build/refresh/restore — no Spark job on the search hot path.
-    val n = state.sigCount.getOrElse(state.signatures.get.count())
-    val qSig = graft.index.BinaryQuant.pack(queryVec)
-    val cands = state.signatures.get
-      .withColumn("ham", hamming_dist(col("sig"), typedLit(qSig.toSeq)))
-      .orderBy(col("ham").asc, col("id").asc)
-      .limit(binaryFetch(n, k))
-      .select("id")
-    exactTopK(universe.join(cands, Seq("id"), "left_semi"), queryVec, k)
-  }
-
-  private def collectResults(df: DataFrame): Seq[SearchResult] =
-    df.select(col("id"), col("document_id"), col("library_id"), col("text"),
+      .limit(k)
+      .select(col("id"), col("document_id"), col("library_id"), col("text"),
         col("embedding"), col("metadata"), col("created_at"), col("updated_at"),
         col("similarity_score"), col("distance"))
       .collect()
       .map(r => SearchResult(ChunkRow.fromRow(r), r.getDouble(8), r.getDouble(9)))
       .toSeq
-}
-
-/** Tier parameters shared by the Spark plans and their driver twins. */
-object SearchService {
-
-  /** LSH multi-probe flips: 0 is exactly the reference's single-probe
-    * candidates; >0 adds Lv-et-al multi-probe buckets (opt-in,
-    * GraftConfig — either the explicit flips knob or the active recall
-    * preset). */
-  def lshFlips: Int =
-    GraftConfig.lshActivePreset.map(_.flips).getOrElse(GraftConfig.lshMultiProbeFlips)
-
-  /** HNSW tier: graph navigation proposes a candidate set (fetch factor
-    * 4k, floor 50 — the two-tier contract: graph error is removed by
-    * the exact rerank). The graph covers all indexed chunks, so like
-    * IVF a selective metadata filter may return < k — the reference's
-    * observable post-filter semantics. */
-  def hnswCandidates(hs: HnswState, queryVec: Array[Float], k: Int): Seq[String] = {
-    val fetch = math.max(4 * k, 50)
-    hs.graph.search(queryVec, fetch, ef = math.max(100, fetch))
-      .map { case (node, _) => hs.chunkIds(node.toInt) }
-  }
-
-  /** IVF-PQ candidate budget: 4k, floor 50. */
-  def ivfPqFetch(k: Int): Int = math.max(4 * k, 50)
-
-  /** Binary candidate budget over `n` signatures: n-proportional, since
-    * 1-bit/dim signatures lose recall at FIXED C as the corpus grows
-    * (measured curve in GraftConfig.binaryCandidateFraction's doc). */
-  def binaryFetch(n: Long, k: Int): Int =
-    math.max(math.max(4 * k, 64), math.ceil(n * GraftConfig.binaryCandidateFraction).toInt)
 }

@@ -66,7 +66,7 @@ class AnnTopKProbeSpec extends SparkSpec {
     val q = corpus.filter($"vec_id" === 3).select("embedding")
       .collect()(0).getSeq[Float](0).toArray
     val path = java.nio.file.Files.createTempDirectory("annprobe").toString
-    graft.index.IndexStore.writeIvfAssigned(model.assign(corpus, "embedding"), path)
+    graft.index.IndexStore.writeByCluster(model.assign(corpus, "embedding"), path)
     val table = spark.read.parquet(path)
 
     AnnRegistry.register("spec-part", model, nprobe = 2)

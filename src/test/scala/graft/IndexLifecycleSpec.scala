@@ -7,15 +7,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
-import graft.catalog.VectorCatalog
+import graft.catalog.{IndexType, VectorCatalog}
 import graft.functions.GraftFunctions
-import graft.model.ChunkRow
+import graft.model.{ChunkRow, SearchQuery, SearchResponse}
+import graft.search.SearchService
 
 /**
  * One index lifecycle: a build is a refresh from the tier's empty
  * state, every derived table reconciles on (id, emb_hash), and a
  * restored table keeps its emb_hash, so a refresh after save and load
- * derives the same rows as one without them.
+ * derives the same rows as one without them. Every tier's save and
+ * load reproduce its replies, and a state the catalog replaces or drops
+ * gives its cached table back.
  */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -134,5 +137,50 @@ class IndexLifecycleSpec extends SparkSpec {
     val rebuild = jobs(assert(cat.refreshIndex(hnsw).isRight))
     info(s"hnsw rebuild-refresh jobs: $rebuild")
     assert(rebuild <= 4 - 1)
+  }
+
+  /** A reply as its ids, in order, with the bits of both scores. */
+  private def bits(r: Either[_, SearchResponse]): Seq[(String, Long, Long)] =
+    r.toOption.get.results.map(x => (x.chunk.id, java.lang.Double.doubleToRawLongBits(x.similarityScore),
+      java.lang.Double.doubleToRawLongBits(x.distance)))
+
+  test("every tier's save and load reproduce its replies on both read paths") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tier-rt").toString
+    val cat = new VectorCatalog(spark)
+    val libs = IndexType.all.map(t => t.name -> library(cat, t.name, 120)._1)
+    val queries = Seq(SearchQuery(queryText = Some("topic3 and word5"), k = 5),
+      SearchQuery(queryText = Some("chunk 17 about topic1"), k = 10),
+      SearchQuery(queryText = Some("word9 word2"), k = 1),
+      SearchQuery(queryEmbedding = Some(cat.embedder.embedOne("topic6 word10")), k = 20))
+    def replies(c: VectorCatalog): Map[String, Seq[Seq[(String, Long, Long)]]] = {
+      val svc = new SearchService(c)
+      libs.map { case (t, lib) =>
+        t -> queries.flatMap(q => Seq(bits(svc.search(lib, q)), bits(svc.sparkSearch(lib, q))))
+      }.toMap
+    }
+    val want = replies(cat)
+    assert(want.values.flatten.forall(_.nonEmpty))
+    cat.save(dir); cat.saveIndexes(dir)
+
+    val restored = new VectorCatalog(spark)
+    restored.load(dir)
+    libs.foreach { case (t, lib) =>
+      assert(restored.loadIndex(dir, lib).toOption.get.indexType.name == t, t)
+    }
+    val got = replies(restored)
+    libs.foreach { case (t, _) => assert(got(t) == want(t), s"$t: replies differ after save and load") }
+  }
+
+  test("re-indexing and deleting a library releases every cached table it built") {
+    val sc = spark.sparkContext
+    val cat = new VectorCatalog(spark)
+    val lib = cat.createLibrary("released", indexType = "lsh").toOption.get
+    val doc = cat.createDocument(lib.id, "D").toOption.get
+    cat.createChunks(doc.id, (1 to 120).map(i => (s"cached table $i word${i % 9}", Map.empty[String, String])))
+    val before = sc.getPersistentRDDs.size
+    for (_ <- 1 to 4; t <- Seq("lsh", "binary", "ivf")) assert(cat.indexLibrary(lib.id, t).isRight, t)
+    assert(sc.getPersistentRDDs.size == before + 1, "only the current state's table stays cached")
+    assert(cat.deleteLibrary(lib.id).isRight)
+    assert(sc.getPersistentRDDs.size == before)
   }
 }

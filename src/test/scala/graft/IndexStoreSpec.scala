@@ -32,6 +32,40 @@ class IndexStoreSpec extends SparkSpec {
     assert(resp.results.nonEmpty) // probes the RESTORED signatures, no rebuild
   }
 
+  test("an LSH directory saved in the old bucket-partitioned layout still loads and searches") {
+    import graft.catalog.VectorCatalog
+    import graft.model.SearchQuery
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-old").toString
+    val cat = new VectorCatalog(spark)
+    val lib = cat.createLibrary("L", indexType = "lsh").toOption.get
+    val doc = cat.createDocument(lib.id, "D").toOption.get
+    cat.createChunks(doc.id, (1 to 60).map(i => (s"old layout text $i topic${i % 6}", Map.empty[String, String])))
+    val sigs = cat.indexLibrary(lib.id, "lsh").toOption.get.signatures.get
+    cat.save(dir); cat.saveIndexes(dir)
+    // the layout LSH signatures were saved in before they were written
+    // unpartitioned: a bucket_part = pmod(bucket, 256) partition column
+    sigs.withColumn("bucket_part", pmod($"bucket", lit(256)))
+      .repartition($"bucket_part")
+      .write.mode("overwrite").partitionBy("bucket_part")
+      .parquet(s"$dir/indexes/${lib.id}/lsh_sigs")
+
+    val restored = new VectorCatalog(spark)
+    restored.load(dir)
+    val st = restored.loadIndex(dir, lib.id).toOption.get
+    assert(st.signatures.get.columns.toSeq == Seq("id", "bucket", "emb_hash"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "bucket", "emb_hash").collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    assert(rows(st.signatures.get) == rows(sigs))
+    val query = SearchQuery(queryText = Some("old layout topic2"), k = 5)
+    def ids(c: VectorCatalog) = {
+      val svc = new graft.search.SearchService(c)
+      Seq(svc.search(lib.id, query), svc.sparkSearch(lib.id, query)).map(_.toOption.get.results.map(_.chunk.id))
+    }
+    val want = ids(cat)
+    assert(want.head.nonEmpty)
+    assert(ids(restored) == want)
+  }
+
   test("streaming sessionization closes sessions on gap (flatMapGroupsWithState)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger

@@ -182,7 +182,7 @@ class PlanAuditSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val model = graft.index.IvfPqModel.train(emb, "embedding", nlist = 16, m = 8, k = 16)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-prune").toString
-    graft.index.IndexStore.writeIvfPqEncoded(
+    graft.index.IndexStore.writeByCluster(
       model.encode(emb, "vec_id", "embedding"), dir)
     val restored = graft.index.IndexStore.readTable(spark, dir)
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
@@ -225,7 +225,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("restored IVF index is cached; its saved layout still prunes") {
     // The persisted assigned table is partitionBy("cluster_id")
-    // (IndexStore.writeIvfAssigned): read back from disk, an
+    // (IndexStore.writeByCluster): read back from disk, an
     // nprobe-of-nlist probe becomes PARTITION pruning — reading nprobe
     // directories, the Spark analog of the reference scanning only the
     // probed inverted lists (indexes.py:346-356). loadIndex caches the
