@@ -1,15 +1,21 @@
 package graft.catalog
 
+import scala.collection.immutable.ArraySeq
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData, XxHash64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.expressions.BinarySig
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.expressions.{BinarySig, LshPlanes, NearestCentroidEval}
+import org.apache.spark.sql.types._
 
 import graft.functions.GraftFunctions.{hamming_dist, sign_bits}
 import graft.index.{BinaryQuant, HnswModel, IndexStore, IvfModel, IvfPqModel, LshModel}
-import graft.model.{ApiError, GraftConfig}
+import graft.model.{ApiError, ChunkRow, GraftConfig}
 import graft.search.LocalSearch
 
 /** Index type selector (reference: config.py:25 allows lsh|ivf; exact
@@ -18,19 +24,20 @@ import graft.search.LocalSearch
   * Each case object is the one definition of its tier, as each of the
   * reference's index classes owns its add, remove, search and rebuild
   * (indexes.py:103-168, 280-370): how its structures derive from its
-  * empty or current state, its driver copy, its Spark and driver
-  * candidates, its saved directories and the cached table it releases.
-  * The steps every tier shares stay outside it: the (id, emb_hash)
-  * reconcile ([[Derivation]]), the count-then-collect
-  * ([[IndexType.collectBounded]]) and the catalog's reuse of a driver
-  * copy while its table is the same object. */
+  * empty or current state (a driver form for a resident library, a
+  * Spark form for the rest, the same bits from both), its driver copy,
+  * its Spark and driver candidates, its saved directories and the
+  * cached table it releases. The steps every tier shares stay outside
+  * it: the (id, emb_hash) reconcile ([[Derivation]]) and the
+  * count-then-collect ([[IndexType.collectBounded]]). */
 sealed abstract class IndexType(val name: String) {
   /** The state `indexLibrary` derives from. */
   private[catalog] def initial(dim: Int): IndexState = IndexState.empty(this)
   /** `state` (this tier's empty state, or its current one) carried to
-    * the library's embedded chunks at the current version. */
+    * the library's embedded chunks at the current version, with the
+    * driver copy of its table. */
   private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState]
-  /** The derived table this tier caches, if it has one. */
+  /** The derived table this tier keeps, if it has one. */
   private[catalog] def table(s: IndexState): Option[DataFrame] = None
   /** The derived table collected to the driver, when under `maxRows`
     * chunks, so the resident read path probes it without a Spark job. */
@@ -49,6 +56,27 @@ sealed abstract class IndexType(val name: String) {
   private[catalog] final def release(s: IndexState): Unit = table(s).foreach(_.unpersist())
 }
 
+/** A tier that derives a table (LSH, IVF, IVF-PQ, binary) and keeps a
+  * driver copy of it. */
+sealed abstract class TableTier(name: String) extends IndexType(name) {
+  /** The columns of [[table]] the driver copy reads, in order; a table
+    * derived on the driver starts with the same columns. */
+  protected def copyColumns: Seq[String]
+  /** Table rows per chunk: the copy of a library of `maxRows` chunks
+    * holds up to `maxRows` times this many rows. */
+  protected def rowsPerChunk(s: IndexState): Int = 1
+  /** The driver copy over rows that start with [[copyColumns]]. */
+  protected def copyOf(s: IndexState, rows: Array[Row]): ResidentIndex
+  override private[catalog] final def driverCopy(s: IndexState, maxRows: Long): Option[ResidentIndex] = for {
+    t <- table(s)
+    rows <- IndexType.collectBounded(t.select(copyColumns.map(col): _*), maxRows * rowsPerChunk(s))
+  } yield copyOf(s, rows)
+  /** `s`, whose table `t` derived, with its driver copy: built from the
+    * driver form's rows, else collected from the Spark form's table. */
+  protected final def withCopy(s: IndexState, t: Derived, d: Derivation): IndexState =
+    s.copy(resident = t.rows.fold(driverCopy(s, d.maxRows))(rows => Some(copyOf(s, rows))))
+}
+
 object IndexType {
   import Candidates._
 
@@ -62,7 +90,7 @@ object IndexType {
       Option.when(dir.exists)(IndexState.empty(this))
   }
 
-  case object Lsh extends IndexType("lsh") {
+  case object Lsh extends TableTier("lsh") {
     /** Multi-probe flips: 0 is exactly the reference's single-probe
       * candidates; >0 adds Lv-et-al multi-probe buckets (opt-in,
       * GraftConfig — either the explicit flips knob or the active recall
@@ -77,15 +105,19 @@ object IndexType {
         LshModel(numTables = p.numTables, bitsPerTable = p.bitsPerTable, dim = dim))))
     private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] =
       Right(state.lsh.fold(state) { m =>
-        state.copy(signatures = Some(d.reconcile(state.signatures, m.build(_, "id", "embedding"))._1))
+        val t = d.table(state.signatures, schema)(
+          e => LshPlanes.buckets(e.array, m.numTables, m.bitsPerTable, m.dim, m.seed).toLongArray()
+            .iterator.map(b => Row(e.id, b, e.hash)),
+          m.build(_, "id", "embedding"))
+        withCopy(state.copy(signatures = Some(t.table)), t, d)
       })
+    private val schema = Derivation.schema("bucket" -> LongType)
     override private[catalog] def table(s: IndexState): Option[DataFrame] = s.signatures
-    override private[catalog] def driverCopy(s: IndexState, maxRows: Long): Option[ResidentIndex] = for {
-      m <- s.lsh; sigs <- s.signatures
-      rows <- collectBounded(sigs.select("id", "bucket"), maxRows * m.numTables)
-    } yield {
-      // one String per chunk, not one per (chunk, table): the ids
-      // dominate this table's heap
+    override protected def copyColumns: Seq[String] = Seq("id", "bucket")
+    override protected def rowsPerChunk(s: IndexState): Int = s.lsh.fold(1)(_.numTables)
+    /** One String per chunk, not one per (chunk, table): the ids
+      * dominate this copy's heap. */
+    override protected def copyOf(s: IndexState, rows: Array[Row]): ResidentIndex = {
       val canon = scala.collection.mutable.HashMap.empty[String, String]
       ResidentIndex.Buckets(rows.groupMap(_.getLong(1)) { r =>
         val id = r.getString(0)
@@ -122,21 +154,24 @@ object IndexType {
         lsh = Some(IndexStore.readLshModel(dir.spark, dir("lsh_model")))))
   }
 
-  case object Ivf extends IndexType("ivf") {
+  case object Ivf extends TableTier("ivf") {
     /** An untrained tier trains once the library holds nlist chunks
       * (reference trigger semantics, indexes.py:280) and keeps its model
-      * after; the assigned rows keep the input's emb_hash column. */
+      * after. `assigned` is (id, cluster_id, emb_hash): every probe
+      * reads the first two, the reconcile the first and last. */
     private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] =
-      Right(state.ivf.orElse(IvfModel.trainIfReady(d.chunks, "embedding")).fold(state) { m =>
-        state.copy(assigned = Some(d.reconcile(state.assigned, m.assign(_, "embedding"))._1),
-          ivf = Some(m))
+      Right(state.ivf.orElse(d.rows.fold(IvfModel.trainIfReady(d.chunks, "embedding"))(es =>
+          IvfModel.trainLocalIfReady(es.map(_.embedding)))).fold(state) { m =>
+        val t = d.table(state.assigned, schema)(
+          e => Iterator(Row(e.id, NearestCentroidEval.eval(e.array, m.centroids), e.hash)),
+          m.assign(_, "embedding").select("id", "cluster_id", "emb_hash"))
+        withCopy(state.copy(assigned = Some(t.table), ivf = Some(m)), t, d)
       })
+    private val schema = Derivation.schema("cluster_id" -> IntegerType)
     override private[catalog] def table(s: IndexState): Option[DataFrame] = s.assigned
-    override private[catalog] def driverCopy(s: IndexState, maxRows: Long): Option[ResidentIndex] = for {
-      _ <- s.ivf; assigned <- s.assigned
-      rows <- collectBounded(assigned.select("id", "cluster_id"), maxRows)
-    } yield ResidentIndex.Cells(
-      rows.groupMap(cell)(_.getString(0)).map { case (c, ids) => c -> ids.toArray })
+    override protected def copyColumns: Seq[String] = Seq("id", "cluster_id")
+    override protected def copyOf(s: IndexState, rows: Array[Row]): ResidentIndex =
+      ResidentIndex.Cells(rows.groupMap(cell)(_.getString(0)).map { case (c, ids) => c -> ids.toArray })
     /** Probe nprobe clusters; untrained => empty (indexes.py:343). */
     def sparkCandidates(s: IndexState, query: Array[Float], k: Int): Candidates =
       s.ivf.fold[Candidates](Empty)(m => Plan(m.candidates(s.assigned.get, query).select("id")))
@@ -144,15 +179,21 @@ object IndexType {
       s.ivf.fold[Option[Candidates]](Some(Empty))(m => s.resident.collect { case ResidentIndex.Cells(byCell) =>
         Ids(m.probe(query).iterator.flatMap(c => byCell.getOrElse(c, Array.empty[String])).toSet)
       })
+    /** An untrained tier saves its marker alone. */
     private[catalog] def save(s: IndexState, dir: IndexDir): Unit =
-      for (m <- s.ivf; assigned <- s.assigned) {
-        IndexStore.writeIvfModel(dir.spark, m, dir("ivf_model"))
-        IndexStore.writeByCluster(assigned, dir("ivf_assigned"))
+      (s.ivf, s.assigned) match {
+        case (Some(m), Some(assigned)) =>
+          IndexStore.writeIvfModel(dir.spark, m, dir("ivf_model"))
+          IndexStore.writeByCluster(assigned, dir("ivf_assigned"))
+        case _ => dir.mark("ivf_untrained")
       }
+    /** Saves from before `assigned` was narrowed hold whole chunk rows:
+      * the three columns are selected on read. */
     private[catalog] def load(dir: IndexDir): Option[IndexState] =
-      Option.when(dir.holds("ivf_model"))(IndexState.empty(this).copy(
-        assigned = Some(dir.table("ivf_assigned")._1),
+      if (dir.holds("ivf_model")) Some(IndexState.empty(this).copy(
+        assigned = Some(dir.table("ivf_assigned", Seq("id", "cluster_id", "emb_hash"))._1),
         ivf = Some(IndexStore.readIvfModel(dir.spark, dir("ivf_model")))))
+      else Option.when(dir.holds("ivf_untrained"))(IndexState.empty(this))
   }
 
   /** Beyond reference parity (config.py:25 knows only lsh|ivf): the
@@ -177,13 +218,15 @@ object IndexType {
       * is still a deterministic function of the refresh history. */
     private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] = {
       val cap = HnswModel.maxGraphVectors
-      // counted first, so a past-cap library is refused before any
-      // embedding reaches the driver; id order is sorted here
-      collectBounded(d.chunks.select("id", "embedding", "emb_hash"), cap) match {
+      // a Spark-form library is counted first, so a past-cap library is
+      // refused before any embedding reaches the driver
+      d.rows.fold(collectBounded(d.chunks.select("id", "embedding", "emb_hash"), cap).map(_.map(r =>
+          (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2)))))(es =>
+          Option.when(es.length <= cap)(es.map(e => (e.id, e.embedding, e.hash)))) match {
         case None => Left(ApiError.Validation(
           s"hnsw index holds bounded graph state: more than $cap chunks; use ivf or ivfpq"))
         case Some(rows) =>
-          val live = rows.map(r => (r.getString(0), r.getSeq[Float](1).toArray, r.getLong(2))).sortBy(_._1)
+          val live = rows.sortBy(_._1)
           val liveByKey = live.map(r => (r._1, r._3)).toMap
           val hnsw = state.hnsw.filter(s => s.embHashes.length == s.chunkIds.length &&
               s.chunkIds.indices.forall(i => liveByKey.get(s.chunkIds(i)).contains(s.embHashes(i)))) match {
@@ -214,15 +257,17 @@ object IndexType {
       }
     def driverCandidates(s: IndexState, query: Array[Float], k: Int): Option[Candidates] =
       Some(sparkCandidates(s, query, k))
+    /** A library with no embedded chunk has no graph: its marker alone. */
     private[catalog] def save(s: IndexState, dir: IndexDir): Unit =
-      s.hnsw.foreach { hs =>
+      s.hnsw.fold(dir.mark("hnsw_empty")) { hs =>
         import dir.spark.implicits._
         HnswModel.write(dir.spark, hs.graph, dir("hnsw_graph"))
         hs.chunkIds.indices.map(i => (i, hs.chunkIds(i), hs.embHashes.lift(i).getOrElse(0L)))
           .toDF("idx", "chunk_id", "emb_hash").coalesce(1).write.mode("overwrite").parquet(dir("hnsw_ids"))
       }
     private[catalog] def load(dir: IndexDir): Option[IndexState] =
-      Option.when(dir.holds("hnsw_graph")) {
+      if (!dir.holds("hnsw_graph")) Option.when(dir.holds("hnsw_empty"))(IndexState.empty(this))
+      else Some {
         val g = HnswModel.read(dir.spark, dir("hnsw_graph"))
         val idsDf = dir.spark.read.parquet(dir("hnsw_ids"))
         // layouts persisted before emb_hash was stored load without
@@ -238,7 +283,7 @@ object IndexType {
   /** The composed residual-coded index (IvfPqModel) as a selectable
     * type — 32x-compressed candidate tier behind the same facade.
     * Additive like Hnsw. */
-  case object IvfPq extends IndexType("ivfpq") {
+  case object IvfPq extends TableTier("ivfpq") {
     /** Candidate budget: 4k, floor 50. */
     def fetch(k: Int): Int = math.max(4 * k, 50)
     /** Coarse centroids + residual codebooks, trained once like IVF
@@ -246,19 +291,28 @@ object IndexType {
       * untrained (searches return empty, matching untrained IVF). `m`
       * adapts to the embedding dimension (largest power of two <= 8
       * dividing it). */
-    private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] =
-      Right(state.ivfpq.map(_.coded).orElse(Option.when(d.chunks.count() >= GraftConfig.ivfNlist)(
-          IvfPqModel.train(d.chunks, "embedding", m = Seq(8, 4, 2, 1).find(d.dim % _ == 0).get))
-        ).fold(state) { coded =>
-          state.copy(ivfpq = Some(IvfPqState(coded,
-            d.reconcile(state.ivfpq.map(_.encoded), coded.encode(_, "id", "embedding"))._1)))
+    private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] = {
+      val m = Seq(8, 4, 2, 1).find(d.dim % _ == 0).get
+      Right(state.ivfpq.map(_.coded).orElse(d.rows.fold(IvfModel.trainIfReady(d.chunks, "embedding")
+          .map(IvfPqModel.withCoarse(_, d.chunks, "embedding", m = m))) { es =>
+          Option.when(es.length >= GraftConfig.ivfNlist)(IvfPqModel.trainLocal(es.map(_.embedding), m = m))
+        }).fold(state) { coded =>
+          val t = d.table(state.ivfpq.map(_.encoded), schema)(
+            e => {
+              val (cell, codes) = coded.encodeLocal(e.array)
+              Iterator(Row(e.id, cell, ArraySeq.unsafeWrapArray(codes), e.hash))
+            },
+            coded.encode(_, "id", "embedding"))
+          withCopy(state.copy(ivfpq = Some(IvfPqState(coded, t.table))), t, d)
         })
+    }
+    private val schema = Derivation.schema("cluster_id" -> IntegerType,
+      "codes" -> ArrayType(IntegerType, containsNull = false))
     override private[catalog] def table(s: IndexState): Option[DataFrame] = s.ivfpq.map(_.encoded)
-    override private[catalog] def driverCopy(s: IndexState, maxRows: Long): Option[ResidentIndex] = for {
-      p <- s.ivfpq
-      rows <- collectBounded(p.encoded.select("id", "cluster_id", "codes"), maxRows)
-    } yield ResidentIndex.Codes(IvfPqModel.LocalCodes(rows.map(_.getString(0)),
-      rows.map(cell), rows.map(_.getSeq[Int](2).toArray)))
+    override protected def copyColumns: Seq[String] = Seq("id", "cluster_id", "codes")
+    override protected def copyOf(s: IndexState, rows: Array[Row]): ResidentIndex =
+      ResidentIndex.Codes(IvfPqModel.LocalCodes(rows.map(_.getString(0)),
+        rows.map(cell), rows.map(_.getSeq[Int](2).toArray)))
     /** Residual-ADC candidates over the encoded codes (probe nprobe
       * cells, fetch 4k floor 50); untrained => empty, like plain IVF. */
     def sparkCandidates(s: IndexState, query: Array[Float], k: Int): Candidates =
@@ -268,17 +322,19 @@ object IndexType {
       s.ivfpq.fold[Option[Candidates]](Some(Empty))(p => s.resident.collect { case ResidentIndex.Codes(codes) =>
         Ids(p.coded.candidatesLocal(codes, query, GraftConfig.ivfNprobe, fetch(k)).toSet)
       })
+    /** An untrained tier saves its marker alone. */
     private[catalog] def save(s: IndexState, dir: IndexDir): Unit =
-      s.ivfpq.foreach { p =>
+      s.ivfpq.fold(dir.mark("ivfpq_untrained")) { p =>
         IndexStore.writeIvfModel(dir.spark, p.coded.ivf, dir("ivfpq_centroids"))
         IndexStore.writePqModel(dir.spark, p.coded.pq, dir("ivfpq_codebooks"))
         IndexStore.writeByCluster(p.encoded, dir("ivfpq_encoded"))
       }
     private[catalog] def load(dir: IndexDir): Option[IndexState] =
-      Option.when(dir.holds("ivfpq_centroids"))(IndexState.empty(this).copy(ivfpq = Some(IvfPqState(
+      if (dir.holds("ivfpq_centroids")) Some(IndexState.empty(this).copy(ivfpq = Some(IvfPqState(
         IvfPqModel(IndexStore.readIvfModel(dir.spark, dir("ivfpq_centroids")),
           IndexStore.readPqModel(dir.spark, dir("ivfpq_codebooks"))),
         dir.table("ivfpq_encoded")._1))))
+      else Option.when(dir.holds("ivfpq_untrained"))(IndexState.empty(this))
   }
 
   /** Binary sign-quantization tier (graft.index.BinaryQuant): 1
@@ -287,7 +343,7 @@ object IndexType {
     * unlike LSH/IVF there is no model state at all — the index IS the
     * (id, sig, emb_hash) table, the prefilter's whole scan. Additive
     * like Hnsw. */
-  case object Binary extends IndexType("binary") {
+  case object Binary extends TableTier("binary") {
     /** Candidate budget over `n` signatures: n-proportional, since
       * 1-bit/dim signatures lose recall at FIXED C as the corpus grows
       * (measured curve in GraftConfig.binaryCandidateFraction's doc). */
@@ -295,16 +351,17 @@ object IndexType {
       math.max(math.max(4 * k, 64), math.ceil(n * GraftConfig.binaryCandidateFraction).toInt)
     /** `sig` is the packed sign bits (ceil(dim/64) longs). */
     private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] = {
-      val (sigs, n) = d.reconcile(state.signatures,
+      val t = d.table(state.signatures, schema)(
+        e => Iterator(Row(e.id, ArraySeq.unsafeWrapArray(BinarySig.pack(e.array).toLongArray()), e.hash)),
         _.select(col("id"), sign_bits(col("embedding")).as("sig"), col("emb_hash")))
-      Right(state.copy(signatures = Some(sigs), sigCount = Some(n)))
+      Right(withCopy(state.copy(signatures = Some(t.table), sigCount = Some(t.count)), t, d))
     }
+    private val schema = Derivation.schema("sig" -> ArrayType(LongType, containsNull = false))
     override private[catalog] def table(s: IndexState): Option[DataFrame] = s.signatures
-    override private[catalog] def driverCopy(s: IndexState, maxRows: Long): Option[ResidentIndex] = for {
-      sigs <- s.signatures
-      rows <- collectBounded(sigs.select("id", "sig"), maxRows)
-    } yield ResidentIndex.Sigs(rows.map(_.getString(0)), rows.map(r =>
-      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)))
+    override protected def copyColumns: Seq[String] = Seq("id", "sig")
+    override protected def copyOf(s: IndexState, rows: Array[Row]): ResidentIndex =
+      ResidentIndex.Sigs(rows.map(_.getString(0)), rows.map(r =>
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)))
     /** Hamming top-C over the signature table (integer distance, id
       * tiebreak — a per-partition heap over 8-byte-per-64-dims rows, the
       * cheapest prefilter scan of any tier). Never empty for a non-empty
@@ -379,9 +436,49 @@ object Candidates {
 }
 
 /** One derivation's input: the library's embedded chunks at the current
-  * version, with their emb_hash, and the reconcile every derived table
-  * (LSH and binary signatures, IVF `assigned`, IVF-PQ `encoded`) shares. */
-private[catalog] final class Derivation(val chunks: DataFrame, val dim: Int) {
+  * version, and the reconcile every derived table (LSH and binary
+  * signatures, IVF `assigned`, IVF-PQ `encoded`) shares. A resident
+  * library hands its tier the rows it shows (`rows`, its driver form);
+  * any other, the chunk view with emb_hash (`chunks`, its Spark form).
+  * Both are read on first use, so a tier that derives nothing (exact)
+  * reads neither. */
+private[catalog] final class Derivation(spark: SparkSession, val dim: Int,
+    chunksOf: => DataFrame, residentOf: => Option[Array[ChunkRow]]) {
+  import Derivation.Embedded
+
+  lazy val chunks: DataFrame = chunksOf
+  /** The library's embedded chunks, in the order the Spark form
+    * collects `chunks`: folded-base rows in partition order, then
+    * buffered upserts in insertion order. None: the Spark form. */
+  lazy val rows: Option[Array[Embedded]] = residentOf.map { rs =>
+    val live = rs.filter(_.embedding.isDefined)
+    Derivation.parTabulate(live.length)(i => new Embedded(live(i).id, live(i).embedding.get))
+  }
+  /** The chunks of a library whose driver copy is kept. */
+  def maxRows: Long = LocalSearch.maxRows(dim).toLong
+
+  /** The tier's table carried from `current` to the library's chunks.
+    * Driver form: each live (id, emb_hash) key's rows from `local` — the
+    * rows the Spark reconcile keeps are those the same model derives
+    * from the same embedding, so deriving every key gives the same bag
+    * of rows — in a DataFrame over driver rows (what
+    * `spark.createDataFrame` builds, converted on every core), with no
+    * cache and no job. Spark form: [[reconcile]] with `deriveRows`.
+    * `current` is released. */
+  def table(current: Option[DataFrame], schema: StructType)(
+      local: Embedded => Iterator[Row], deriveRows: DataFrame => DataFrame): Derived =
+    rows match {
+      case Some(es) =>
+        val out = Derivation.parTabulate(es.length)(i => local(es(i)).toArray).flatten
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+        val internal = Derivation.parTabulate(out.length)(i => toCatalyst(out(i)).asInstanceOf[InternalRow])
+        current.foreach(_.unpersist())
+        Derived(Bridge.localDataFrame(spark, schema, ArraySeq.unsafeWrapArray(internal)), out.length, Some(out))
+      case None =>
+        val (t, n) = reconcile(current, deriveRows)
+        Derived(t, n, None)
+    }
+
   /** `current` carried to `chunks` on (id, emb_hash), not id alone: a
     * chunk updated with new text is re-embedded under the SAME id, and
     * its hash turns the change into delete + insert. Rows whose key is
@@ -408,6 +505,40 @@ private[catalog] final class Derivation(val chunks: DataFrame, val dim: Int) {
   }
 }
 
+private[catalog] object Derivation {
+  /** One embedded chunk of a resident library. `hash` is its emb_hash:
+    * `xxhash64(embedding)`'s own expression evaluated on the driver. */
+  final class Embedded(val id: String, val embedding: Array[Float]) {
+    val array: ArrayData = UnsafeArrayData.fromPrimitiveArray(embedding)
+    val hash: Long = embHash.eval(InternalRow(array)).asInstanceOf[Long]
+  }
+  private val embHash = XxHash64(Seq(BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)), 42L)
+
+  /** `f` over `0 until n` on every core (the common fork-join pool), in
+    * runs of adjacent indexes, each result stored at its index: the
+    * output is the serial map's. */
+  def parTabulate[A: ClassTag](n: Int)(f: Int => A): Array[A] = {
+    val out = new Array[A](n)
+    val runs = math.max(1, math.min(n / 256, 4 * Runtime.getRuntime.availableProcessors))
+    java.util.stream.IntStream.range(0, runs).parallel().forEach { r =>
+      var i = (r.toLong * n / runs).toInt
+      val end = ((r + 1).toLong * n / runs).toInt
+      while (i < end) { out(i) = f(i); i += 1 }
+    }
+    out
+  }
+
+  /** A derived table's schema: id, the tier's columns, emb_hash. */
+  def schema(cols: (String, DataType)*): StructType =
+    StructType((("id" -> StringType) +: cols :+ ("emb_hash" -> LongType)).map { case (n, t) =>
+      StructField(n, t, nullable = n == "id")
+    })
+}
+
+/** A derived table, its row count, and its rows when the driver form
+  * derived it. */
+private[catalog] final case class Derived(table: DataFrame, count: Long, rows: Option[Array[Row]])
+
 /** One library's directory in a catalog save (`<path>/indexes/<id>`).
   * Existence checks go through the Hadoop FileSystem of the path: the
   * tiers write through Spark's Hadoop-capable writers, so the index may
@@ -419,11 +550,17 @@ private[catalog] final class IndexDir(val spark: SparkSession, path: String) {
   def exists: Boolean = fs.exists(root)
   def holds(name: String): Boolean = fs.exists(new Path(root, name))
   def create(): Unit = fs.mkdirs(root)
+  /** Save a tier with nothing derived: the directory and an empty
+    * marker file named `name`. */
+  def mark(name: String): Unit = fs.create(new Path(root, name), true).close()
   /** A saved derived table, whole, with its emb_hash, cached and
     * counted like a derived one: every search probes it, and the next
-    * refresh reconciles on it. */
-  def table(name: String): (DataFrame, Long) = {
-    val t = IndexStore.readTable(spark, apply(name)).cache()
+    * refresh reconciles on it. `cols`, when given, are the columns kept
+    * (those the save holds). */
+  def table(name: String, cols: Seq[String] = Nil): (DataFrame, Long) = {
+    val saved = IndexStore.readTable(spark, apply(name))
+    val kept = cols.filter(saved.columns.contains)
+    val t = (if (kept.isEmpty) saved else saved.select(kept.map(col): _*)).cache()
     (t, t.count())
   }
 }
@@ -465,7 +602,7 @@ object ResidentIndex {
 final case class IndexState(
     indexType: IndexType,
     signatures: Option[DataFrame],   // LSH: (id, bucket, emb_hash); Binary: (id, sig, emb_hash)
-    assigned: Option[DataFrame],     // IVF: chunks + emb_hash + cluster_id
+    assigned: Option[DataFrame],     // IVF: (id, cluster_id, emb_hash)
     lsh: Option[LshModel],
     ivf: Option[IvfModel],
     builtAtVersion: Long,

@@ -42,10 +42,15 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
  * Duplicate-id create overwrites (dict-set semantics, storage.py:40,
  * 105, 182); updates with None/absent fields leave fields unchanged
  * (library_service.py:66-69).
+ *
+ * `driverDerivation` off makes every index tier take its Spark form,
+ * even for a resident library: the reference that the driver form is
+ * tested and measured against.
  */
 final class VectorCatalog(val spark: SparkSession,
     val embedder: Embedder = Embedder.default,
-    val embeddingDim: Int = 64) {
+    val embeddingDim: Int = 64,
+    private[graft] val driverDerivation: Boolean = true) {
   import spark.implicits._
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[VectorCatalog])
 
@@ -79,9 +84,10 @@ final class VectorCatalog(val spark: SparkSession,
   private var mutationsSinceCompact = 0
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
-  // folded-base rows of each small library, collected on its first
-  // search (after a count says they fit) and carried through folds, so
-  // only `load` drops them. Reads copy the log entries that touch a
+  // folded-base rows of each small library — none for a library created
+  // with a generated id, else collected on its first search or index
+  // derivation (after a count says they fit) — carried through folds,
+  // so only `load` drops them. Reads copy the log entries that touch a
   // library under stateLock, as assembleView does, and overlay them
   // outside it, so writes never force a re-collect. None marks a
   // library that does not fit this epoch. `admitting` maps a library
@@ -113,6 +119,10 @@ final class VectorCatalog(val spark: SparkSession,
         is_indexed = false, created_at = t, updated_at = t)
       libraries.put(row.id, row)
       setIndex(row.id, Some(IndexState.empty(it)))
+      // a generated id has no base rows: the library is resident from
+      // its creation, its upserts overlay the empty snapshot, and the
+      // next fold carries it
+      if (id.isEmpty) stateLock.synchronized(install(row.id, Some(Array.empty)))
       row
     }
 
@@ -362,15 +372,6 @@ final class VectorCatalog(val spark: SparkSession,
     residentFloats = 0L
   }
 
-  /** `s` with its driver copy: reused from `prior` when the tier's
-    * table is the same object, else collected when under the cap. */
-  private def withResident(s: IndexState, prior: Option[IndexState] = None): IndexState = {
-    val table = s.indexType.table(s).toList
-    prior.filter(p => p.indexType.table(p).toList.corresponds(table)(_ eq _))
-      .map(p => s.copy(resident = p.resident))
-      .getOrElse(s.copy(resident = s.indexType.driverCopy(s, LocalSearch.maxRows(embeddingDim).toLong)))
-  }
-
   /** `s` becomes the library's index state (None: it has none), and the
     * cached table of the state it replaces is released. */
   private def setIndex(libraryId: String, s: Option[IndexState]): Unit =
@@ -412,13 +413,17 @@ final class VectorCatalog(val spark: SparkSession,
 
   /** The only derivation of a tier's structures: `state` (a tier's
     * initial state, or its current one) carried by its tier to the
-    * library's embedded chunks at the current version. */
+    * library's embedded chunks at the current version — on the driver
+    * from the rows `residentView` shows when the library is resident
+    * (unless `driverDerivation` is off), else with Spark. The version
+    * is read before either snapshot, so a racing write leaves the index
+    * stale rather than fresh. */
   private def derive(libraryId: String, state: IndexState): Either[ApiError, IndexState] = {
     val at = version.get()
-    val libChunks = chunksByLibrary(libraryId).filter($"embedding".isNotNull)
-      .withColumn("emb_hash", xxhash64($"embedding"))
-    state.indexType.derive(state, new Derivation(libChunks, embeddingDim))
-      .map(s => withResident(s.copy(builtAtVersion = at), Some(state)))
+    val d = new Derivation(spark, embeddingDim,
+      chunksByLibrary(libraryId).filter($"embedding".isNotNull).withColumn("emb_hash", xxhash64($"embedding")),
+      if (driverDerivation) residentView(libraryId) else None)
+    state.indexType.derive(state, d).map(_.copy(builtAtVersion = at))
   }
 
   /** True when chunk mutations occurred after the index build. */
@@ -550,10 +555,11 @@ final class VectorCatalog(val spark: SparkSession,
         rows.map(rs => lib -> overlay(lib, rs, chunkTombstones, docTombstones.keySet).visible)
       }.filter { case (lib, rows) => rows.nonEmpty || !libTombstones.contains(lib) }
     // fold the buffer into the existing partitions: the base must not
-    // gain partitions with every fold
+    // gain partitions with every fold, and keeps the view's row order,
+    // the order of every carried snapshot (base rows, then upserts)
     val parts = math.max(spark.sparkContext.defaultParallelism,
       (base +: streamedAppends.map(_._1)).map(_.rdd.getNumPartitions).sum)
-    base = assembleView().coalesce(parts).localCheckpoint(true)
+    base = org.apache.spark.sql.graft.Bridge.coalesceInOrder(assembleView(), parts).localCheckpoint(true)
     dropResident()
     carried.foreach { case (lib, rows) => if (admissible(rows.length)) install(lib, Some(rows)) }
     upserts.clear()
@@ -619,7 +625,8 @@ final class VectorCatalog(val spark: SparkSession,
       IndexType.loadOrder.iterator.flatMap(_.load(dir)).nextOption()
         .toRight(ApiError.NotFound(s"No saved index for library $libraryId under $path"))
     }.map { state =>
-      val restored = withResident(state.copy(builtAtVersion = version.get()))
+      val restored = state.copy(builtAtVersion = version.get(),
+        resident = state.indexType.driverCopy(state, LocalSearch.maxRows(embeddingDim).toLong))
       setIndex(libraryId, Some(restored))
       restored
     }

@@ -27,7 +27,7 @@ object IndexStore {
       .write.mode("overwrite").parquet(path)
 
   /** Persist a table with a `cluster_id` column partitioned by cluster:
-    * IVF assignments (chunks + emb_hash + cluster_id) and IVF-PQ codes
+    * IVF assignments (id, cluster_id, emb_hash) and IVF-PQ codes
     * (id, cluster_id, codes, emb_hash). */
   def writeByCluster(table: DataFrame, path: String): Unit =
     table

@@ -107,22 +107,47 @@ object IvfModel {
   def train(chunks: DataFrame, embCol: String,
       nlist: Int = GraftConfig.ivfNlist, maxIter: Int = 10,
       seed: Long = 42L): IvfModel = {
-    // Cast defensively: callers may hold array<double> embeddings (e.g. a
-    // parquet written by a different producer); getSeq[Float] on a double
-    // array would ClassCastException at element access.
-    val vecs = chunks.filter(col(embCol).isNotNull)
-      .select(col(embCol).cast("array<float>"))
-    val n = vecs.count()
+    val vecs = vectors(chunks, embCol)
+    trainShaped(chunks, embCol, vecs, shape(vecs), nlist, maxIter, seed)
+  }
+
+  /** `train` once the row count and dimension are known: one collect
+    * on the local path. */
+  private def trainShaped(chunks: DataFrame, embCol: String, vecs: DataFrame, shape: (Long, Int),
+      nlist: Int, maxIter: Int, seed: Long): IvfModel = {
+    val (n, dim) = shape
     require(n > 0, s"IvfModel.train: no non-null '$embCol' vectors to train on " +
       "(use trainIfReady for the n >= nlist trigger semantics)")
-    val k = math.min(nlist.toLong, math.max(1L, n)).toInt
-    val dim = vecs.limit(1).collect()(0).getSeq[Float](0).length.max(1)
-    if (n * dim <= localTrainMaxElements) {
-      val data = vecs.collect().map(_.getSeq[Float](0).toArray)
-      IvfModel(lloydLocal(data, k, maxIter, seed))
-    } else {
-      trainSampled(chunks, embCol, nlist, maxIter, seed)
-    }
+    if (n * dim.max(1) <= localTrainMaxElements)
+      trainLocal(vecs.collect().map(_.getSeq[Float](0).toArray), nlist, maxIter, seed)
+    else trainSampled(chunks, embCol, nlist, maxIter, seed)
+  }
+
+  /** `train`'s local path on driver-resident vectors, in the order the
+    * Spark path collects them: the same seeded Lloyd loop, so the same
+    * rows give the same centroids bit for bit. */
+  def trainLocal(data: Array[Array[Float]], nlist: Int = GraftConfig.ivfNlist,
+      maxIter: Int = 10, seed: Long = 42L): IvfModel =
+    IvfModel(lloydLocal(data, math.min(nlist, math.max(1, data.length)), maxIter, seed))
+
+  /** The non-null vectors of `embCol` as array<float>. Cast defensively:
+    * callers may hold array<double> embeddings (e.g. a parquet written
+    * by a different producer); getSeq[Float] on a double array would
+    * ClassCastException at element access. */
+  private def vectors(chunks: DataFrame, embCol: String): DataFrame =
+    chunks.filter(col(embCol).isNotNull).select(col(embCol).cast("array<float>"))
+
+  /** Row count and the first row's dimension (0 when empty) of a
+    * one-column vector table, in ONE job: per-partition counts and
+    * first lengths, combined in partition order. */
+  private def shape(vecs: DataFrame): (Long, Int) = {
+    val parts = vecs.sparkSession.sparkContext.runJob(vecs.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var n = 0L; var dim = -1
+        it.foreach { r => if (dim < 0) dim = r.getArray(0).numElements(); n += 1 }
+        (n, dim)
+      })
+    (parts.map(_._1).sum, parts.map(_._2).find(_ >= 0).getOrElse(0))
   }
 
   /**
@@ -472,7 +497,13 @@ object IvfModel {
   /** Reference trigger semantics: train only once n >= nlist (indexes.py:280). */
   def trainIfReady(chunks: DataFrame, embCol: String,
       nlist: Int = GraftConfig.ivfNlist, seed: Long = 42L): Option[IvfModel] = {
-    val n = chunks.filter(col(embCol).isNotNull).count()
-    if (n >= nlist) Some(train(chunks, embCol, nlist, 10, seed)) else None
+    val vecs = vectors(chunks, embCol)
+    val s = shape(vecs)
+    Option.when(s._1 >= nlist)(trainShaped(chunks, embCol, vecs, s, nlist, 10, seed))
   }
+
+  /** Driver twin of [[trainIfReady]] over resident vectors. */
+  def trainLocalIfReady(data: Array[Array[Float]], nlist: Int = GraftConfig.ivfNlist,
+      seed: Long = 42L): Option[IvfModel] =
+    Option.when(data.length >= nlist)(trainLocal(data, nlist, 10, seed))
 }

@@ -1,7 +1,10 @@
 package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.expressions.NearestCentroidEval
 
 /**
  * IVF-PQ — the composed index that serves billion-vector corpora
@@ -48,6 +51,18 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel) {
   def candidates(encoded: DataFrame, query: Array[Float],
       nprobe: Int = graft.model.GraftConfig.ivfNprobe, n: Int = 100): DataFrame =
     IvfPqModel.adcCandidates(encoded, ivf, pq.m, ivf.probe(query, nprobe), cellTable(query), n)
+
+  /** Driver twin of [[encode]] for one embedding: its cell and codes,
+    * from the static functions the encode columns evaluate
+    * (`NearestCentroidEval.eval` for the cell and for each subspace of
+    * the residual). */
+  def encodeLocal(emb: ArrayData): (Int, Array[Int]) = {
+    val cell = NearestCentroidEval.eval(emb, ivf.centroids)
+    val r = IvfPqModel.residualOf(emb, ivf.centroids(cell))
+    val d = pq.dsub
+    (cell, Array.tabulate(pq.m)(s => NearestCentroidEval.eval(UnsafeArrayData.fromPrimitiveArray(
+      java.util.Arrays.copyOfRange(r, s * d, math.min(r.length, (s + 1) * d))), pq.codebooks(s))))
+  }
 
   /** Driver twin of [[candidates]] over a collected encoded table. */
   def candidatesLocal(codes: IvfPqModel.LocalCodes, query: Array[Float],
@@ -137,13 +152,36 @@ object IvfPqModel {
   /** Train coarse quantizer on the vectors, then PQ on their residuals. */
   def train(df: DataFrame, embCol: String,
       nlist: Int = graft.model.GraftConfig.ivfNlist,
+      m: Int = 8, k: Int = 16, seed: Long = 42L): IvfPqModel =
+    withCoarse(IvfModel.train(df, embCol, nlist = nlist, seed = seed), df, embCol, m, k, seed)
+
+  /** [[train]] from its trained coarse quantizer: PQ on the residuals. */
+  def withCoarse(ivf: IvfModel, df: DataFrame, embCol: String,
       m: Int = 8, k: Int = 16, seed: Long = 42L): IvfPqModel = {
-    val ivf = IvfModel.train(df, embCol, nlist = nlist, seed = seed)
     val residuals = df.filter(col(embCol).isNotNull)
       .withColumn("cluster_id", ivf.assignColumn(col(embCol)))
       .select(residual(col(embCol), col("cluster_id"), ivf.centroids)
         .cast("array<float>").as("residual"))
-    val pq = PqModel.train(residuals, "residual", m = m, k = k, seed = seed)
-    IvfPqModel(ivf, pq)
+    IvfPqModel(ivf, PqModel.train(residuals, "residual", m = m, k = k, seed = seed))
   }
+
+  /** Driver twin of [[train]] over resident vectors, in the order the
+    * Spark path collects them: the coarse quantizer's local path, then
+    * codebooks on the residuals of the first `PqModel.maxTrainVectors`
+    * (the Spark path's limit), each residual from [[encodeLocal]]'s
+    * subtraction. */
+  def trainLocal(vecs: Array[Array[Float]], nlist: Int = graft.model.GraftConfig.ivfNlist,
+      m: Int = 8, k: Int = 16, seed: Long = 42L): IvfPqModel = {
+    val ivf = IvfModel.trainLocal(vecs, nlist, 10, seed)
+    val residuals = vecs.iterator.take(PqModel.maxTrainVectors).map { v =>
+      val emb = UnsafeArrayData.fromPrimitiveArray(v)
+      residualOf(emb, ivf.centroids(NearestCentroidEval.eval(emb, ivf.centroids)))
+    }.toArray
+    IvfPqModel(ivf, PqModel.trainLocal(residuals, m, k, 10, seed))
+  }
+
+  /** `emb - centroid` element-wise in float, as [[residual]]'s
+    * `zip_with(a - b)` evaluates it. */
+  private def residualOf(emb: ArrayData, centroid: Array[Float]): Array[Float] =
+    Array.tabulate(emb.numElements())(i => emb.getFloat(i) - centroid(i))
 }

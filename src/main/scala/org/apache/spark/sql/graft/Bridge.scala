@@ -32,6 +32,37 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark), plan)
 
+  /** A DataFrame over rows already in Catalyst form: the LocalRelation
+    * `spark.createDataFrame` builds from external rows, without its
+    * serial conversion. */
+  def localDataFrame(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df` in at most `n` partitions without a shuffle, its rows in the
+    * same order: each output partition is a contiguous run of input
+    * partitions. `Dataset.coalesce` may interleave them once some inputs
+    * have preferred locations (cached or checkpointed blocks). */
+  def coalesceInOrder(df: org.apache.spark.sql.DataFrame, n: Int): org.apache.spark.sql.DataFrame = {
+    val impl = org.apache.spark.sql.classic.ClassicConversions.castToImpl(df)
+    impl.sparkSession.internalCreateDataFrame(
+      impl.queryExecution.toRdd.coalesce(n, shuffle = false, Some(InOrderCoalescer)), df.schema)
+  }
+
+  private object InOrderCoalescer extends org.apache.spark.rdd.PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: org.apache.spark.rdd.RDD[_]): Array[org.apache.spark.rdd.PartitionGroup] = {
+      val parts = parent.partitions
+      val groups = math.max(1, math.min(maxPartitions, parts.length))
+      Array.tabulate(groups) { g =>
+        val group = new org.apache.spark.rdd.PartitionGroup()
+        group.partitions ++= parts.slice((g.toLong * parts.length / groups).toInt,
+          ((g + 1).toLong * parts.length / groups).toInt)
+        group
+      }
+    }
+  }
+
   /** Block until the SparkContext's listener bus has drained, so a
     * per-run shuffle-metric counter read after a job is race-free
     * against asynchronously delivered stage-completed events

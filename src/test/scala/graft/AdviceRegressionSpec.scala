@@ -340,11 +340,13 @@ class AdviceRegressionSpec extends SparkSpec {
 
     val st = cat.indexState(lib.id).get
     val row = st.assigned.get.filter(col("id") === target.id)
-      .select("cluster_id", "embedding").collect()
+      .select("cluster_id", "emb_hash").collect()
     assert(row.length == 1, "exactly one assigned row for the updated id")
     val newEmb = cat.getChunk(target.id).toOption.get.embedding.get
-    assert(row(0).getSeq[Float](1) == newEmb.toSeq,
-      "assigned row must carry the NEW embedding")
+    // `assigned` is (id, cluster_id, emb_hash): the row carries the new
+    // embedding's hash
+    assert(row(0).getLong(1) == spark.createDataFrame(Seq(Tuple1(newEmb))).select(xxhash64(col("_1")))
+      .head().getLong(0), "assigned row must carry the NEW embedding's hash")
     assert(row(0).getInt(0) ==
       st.ivf.get.probeLinear(newEmb, 1).head,
       "cluster assignment must be recomputed from the new embedding")

@@ -221,6 +221,41 @@ class CatalogSpec extends SparkSpec {
     assert(cat.chunks.count() == 50 * 8)
   }
 
+  test("a library created with a generated id is resident from creation, and folds carry it in the base's order") {
+    val cat = freshCatalog
+    val lib = cat.createLibrary("born resident", indexType = "ivf").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    // a library admitted on first use shares the base, so every fold
+    // coalesces partitions that hold both
+    val other = cat.createLibrary("other", id = Some("other-library")).toOption.get
+    val otherDoc = cat.createDocument(other.id, "d").toOption.get
+    def add(d: String, from: Int, n: Int): Seq[ChunkRow] =
+      cat.createChunks(d, (from until from + n).map(i => s"resident order $i word${i % 7}" -> Map.empty[String, String]))
+        .toOption.get
+    def view(): Array[ChunkRow] = {
+      var v: Option[Array[ChunkRow]] = None
+      assert(jobsStarted { v = cat.residentView(lib.id) } == 0, "no count or collect job")
+      v.get
+    }
+    def sparkOrder: Seq[String] = cat.chunksByLibrary(lib.id).collect().map(_.getString(0)).toSeq
+    assert(view().isEmpty)
+    val rows = (0 until 4).flatMap { i =>
+      val rs = add(doc.id, 40 * i, 40)
+      add(otherDoc.id, 40 * i, 30)
+      assert(view().map(_.id).toSeq == sparkOrder, s"before fold $i")
+      cat.compact()
+      assert(view().map(_.id).toSeq == sparkOrder, s"after fold $i")
+      rs
+    }
+    rows.take(5).foreach(r => assert(cat.deleteChunk(r.id).isRight))
+    rows.slice(5, 8).foreach(r => assert(cat.updateChunk(r.id, text = Some(s"rewritten ${r.id}")).isRight))
+    add(doc.id, 1000, 6)
+    assert(view().map(_.id).toSeq == sparkOrder, "with tombstones and buffered upserts")
+    cat.compact()
+    assert(view().length == 160 - 5 + 6)
+    assert(view().map(_.id).toSeq == sparkOrder, "after the last fold")
+  }
+
   test("createChunk rejects a wrong-dimension or non-finite embedding before buffering it") {
     val cat = freshCatalog
     val svc = new SearchService(cat)

@@ -66,8 +66,8 @@ class LocalSearchSpec extends SparkSpec {
       ids.foreach(docOf(_) = doc)
     }
     /** A library of index type `t` with two documents and `n` chunks. */
-    def addLibrary(t: String, r: Random, n: Int): String = {
-      val lib = cat.createLibrary(s"local-$t", indexType = t).toOption.get.id
+    def addLibrary(t: String, r: Random, n: Int, id: Option[String] = None): String = {
+      val lib = cat.createLibrary(s"local-$t", indexType = t, id = id).toOption.get.id
       libs(t) = lib
       docs(lib) = mutable.ArrayBuffer.empty
       chunks(lib) = mutable.ArrayBuffer.empty
@@ -382,8 +382,10 @@ class LocalSearchSpec extends SparkSpec {
   test("resident searches run zero Spark jobs, through buffered writes and folds") {
     val f = fixture(120, seed = 16L)
     val r = new Random(17L)
+    // created with generated ids, the libraries are resident from their
+    // creation: neither indexLibrary nor the first search runs a job
     val warm = countJobs(f.libs.values.foreach(lib => f.local.search(lib, query(f, r))))
-    assert(warm == 2 * types.size, s"first search: one count and one collect per library, got $warm")
+    assert(warm == 0, s"first search: $warm Spark jobs")
     val n = 60
     val hot = countJobs((0 until n).foreach { i =>
       assert(f.local.search(f.libs(types(i % types.size)), query(f, r)).isRight)
@@ -405,7 +407,8 @@ class LocalSearchSpec extends SparkSpec {
     val f = new Fixture(new VectorCatalog(spark))
     val r = new Random(23L)
     val lib = f.addLibrary("exact", r, 30)
-    val other = f.addLibrary("lsh", r, 30) // never searched: not resident
+    // an explicit id, never searched or indexed: not resident
+    val other = f.addLibrary("lsh", r, 30, id = Some("never-searched"))
     f.cat.compact()
     f.local.search(lib, query(f, r))
     val id = f.chunks(lib).head

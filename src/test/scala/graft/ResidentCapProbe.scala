@@ -10,8 +10,11 @@ import graft.search.SearchService
  * Measures what the resident search path's size cap trades
  * (`LocalSearch.maxLibraryFloats`, ARCHITECTURE.md): per library size,
  * the driver heap the resident rows retain, the heap each tier's driver
- * index copy retains, and search p50 on the resident path against the
- * Spark plans, interleaved. 64-dim hashing embedder, 20-40-word texts,
+ * index copy retains, search p50 on the resident path against the
+ * Spark plans, interleaved, and each tier's `indexLibrary` time on the
+ * driver derivation against the Spark derivation (a second catalog fed
+ * the same texts, `driverDerivation = false`; each build also makes the
+ * tier's driver copy). 64-dim hashing embedder, 20-40-word texts,
  * k = 10. Heap is read the way the benchmark's `retained_heap_mb` is:
  * used heap after repeated full collections.
  *
@@ -45,12 +48,18 @@ object ResidentCapProbe {
     for (n <- sizes) {
       val r = new Random(n.toLong)
       val cat = new VectorCatalog(spark)
+      val ref = new VectorCatalog(spark, driverDerivation = false)
       val svc = new SearchService(cat)
-      val lib = cat.createLibrary(s"probe-$n", indexType = "exact").toOption.get.id
-      val doc = cat.createDocument(lib, "d").toOption.get.id
+      // an explicit id: the library is admitted on its first view, so
+      // the heap its rows retain can be read across that view
+      val Seq((lib, doc), (refLib, refDoc)) = Seq(cat, ref).map { c =>
+        val lib = c.createLibrary(s"probe-$n", indexType = "exact", id = Some(s"probe-$n")).toOption.get.id
+        (lib, c.createDocument(lib, "d").toOption.get.id)
+      }
       (0 until n by 10000).foreach { off =>
-        cat.createChunks(doc, Seq.fill(math.min(10000, n - off))(text(r) -> meta(r)))
-        cat.compact()
+        val batch = Seq.fill(math.min(10000, n - off))(text(r) -> meta(r))
+        cat.createChunks(doc, batch); cat.compact()
+        ref.createChunks(refDoc, batch); ref.compact()
       }
       def query() = SearchQuery(queryText = Some(text(r)), k = 10)
 
@@ -59,8 +68,15 @@ object ResidentCapProbe {
       val rowsMb = retainedHeapMb() - before
       println(f"n=$n%7d resident_rows_mb=$rowsMb%8.1f bytes_per_row=${rowsMb * 1048576 / n}%7.0f")
 
+      def seconds(f: => Any): Double = { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
       for (tier <- tiers) {
-        assert(cat.indexLibrary(lib, tier).isRight)
+        // alternate which derivation goes first
+        val (onDriver, onSpark) = (0 until 3).map { i =>
+          def d = seconds(assert(cat.indexLibrary(lib, tier).isRight))
+          def s = seconds(assert(ref.indexLibrary(refLib, tier).isRight))
+          if (i % 2 == 0) { val a = d; (a, s) } else { val b = s; (d, b) }
+        }.unzip
+        println(f"n=$n%7d tier=$tier%-7s index_driver_s=${p50(onDriver)}%7.3f index_spark_s=${p50(onSpark)}%7.3f")
         var copy = cat.indexState(lib).flatMap(_.resident)
         (0 until 10).foreach { _ => svc.search(lib, query()); svc.sparkSearch(lib, query()) }
         val (local, remote) = (0 until reps).map { i =>
@@ -72,6 +88,7 @@ object ResidentCapProbe {
         // the driver copy's heap: drop the tier (and its cached tables),
         // then release the last reference to the copy
         cat.indexLibrary(lib, "exact")
+        ref.indexLibrary(refLib, "exact")
         spark.catalog.clearCache()
         val held = retainedHeapMb()
         val hadCopy = copy.isDefined

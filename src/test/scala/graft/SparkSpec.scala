@@ -24,4 +24,20 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  /** Spark jobs `body` starts on this thread. */
+  def jobsStarted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count probe")
+    try { body; org.apache.spark.sql.graft.Bridge.waitListenerBus(sc); n.get }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
 }
