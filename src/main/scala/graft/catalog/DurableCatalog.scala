@@ -1,10 +1,16 @@
 package graft.catalog
 
+import java.nio.ByteBuffer
+import java.util.zip.CRC32
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, LocalFileSystem, Path, StreamCapabilities}
 import org.apache.spark.sql.SparkSession
 
 import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
@@ -12,27 +18,25 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
 /**
  * Restart durability for the catalog: a write-ahead log of acknowledged
  * mutations plus periodic snapshot checkpoints, the transaction-log
- * pattern of log-structured table formats (one JSON commit file per
- * mutation under `wal/`, a `_manifest.json` naming the snapshot that
- * truncates the log — cf. the Delta Lake / Hudi commit-file layout,
- * which is exactly this at table scope).
+ * pattern of log-structured table formats (CRC-framed records appended
+ * to one segment per writing process under `wal/`, a `_manifest.json`
+ * naming the snapshot that truncates the log).
  *
  * Semantics:
  *  - A mutation is applied in memory FIRST, then its RESULT (generated
  *    ids and timestamps included) is logged; the call returns only
- *    after the log write. So every *acknowledged* mutation survives a
- *    crash, and replay reproduces byte-identical rows — replaying
- *    requests instead of results would re-generate ids and break every
- *    cross-reference.
+ *    after the record is written and hsync'ed. So every *acknowledged*
+ *    mutation survives a crash, and replay reproduces byte-identical
+ *    rows — replaying requests instead of results would re-generate ids
+ *    and break every cross-reference.
  *  - `checkpoint()` folds the catalog into a parquet snapshot
- *    (`VectorCatalog.save`), points the manifest at it, and deletes
- *    the logged prefix. `recover()` = load manifest snapshot (if any)
- *    + replay the WAL tail in sequence order.
+ *    (`VectorCatalog.save`), points the manifest at it, rolls the
+ *    active segment and deletes the logged prefix. `recover()` = load
+ *    manifest snapshot (if any) + replay the WAL tail in sequence order.
  *  - All paths go through the Hadoop FileSystem API, so the log can
- *    live on HDFS/S3/local alike. Commit files are created with
- *    overwrite=false: two writers racing the same sequence number —
- *    the classic split-brain — fail loudly instead of silently
- *    clobbering.
+ *    live on any file system whose output streams can hsync (local,
+ *    HDFS); an object store cannot hold it. See [[CatalogWal]] for the
+ *    segment format and the crash rules of replay.
  *  - Streamed ingest (`startIngest`) is deliberately NOT logged here:
  *    Structured Streaming already replays unacknowledged micro-batches
  *    from its own checkpoint on restart; double-logging them would
@@ -45,10 +49,10 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  */
 final class DurableCatalog private (
     val inner: VectorCatalog,
-    private val wal: CatalogWal) {
+    private[graft] val wal: CatalogWal) {
 
   // WAL order must equal application order: apply + log write happen
-  // under one lock, one commit file per mutation — simple and gapless.
+  // under one lock, one record per mutation — simple and gapless.
   private val logLock = new Object
 
   private def logged[A](op: => Either[ApiError, A])(record: A => ObjectNode): Either[ApiError, A] =
@@ -109,9 +113,9 @@ final class DurableCatalog private (
 
   /** Snapshot + manifest swap + log truncation. Crash-ordering: the
     * snapshot is complete before the manifest points at it, and WAL
-    * files are deleted only after the manifest commit — a crash at any
-    * point recovers to a consistent state (at worst replaying a tail
-    * the snapshot already contains is prevented by the seq fence). */
+    * segments are deleted only after the manifest commit — a crash at
+    * any point recovers to a consistent state (records the snapshot
+    * already holds are skipped by the seq fence). */
   def checkpoint(): Unit = logLock.synchronized {
     val seq = wal.lastSeq
     val snap = wal.snapshotPath(seq)
@@ -119,12 +123,6 @@ final class DurableCatalog private (
     wal.commitManifest(seq, snap)
     wal.truncateThrough(seq)
   }
-
-  /** Merge the accumulated commit files into one segment WITHOUT the
-    * cost of a snapshot — the maintenance move for long-lived roots
-    * between checkpoints (see [[CatalogWal.compact]]). Replay after
-    * compaction is record-identical. */
-  def compactWal(): Unit = logLock.synchronized(wal.compact())
 }
 
 object DurableCatalog {
@@ -136,12 +134,7 @@ object DurableCatalog {
       embedder: graft.functions.Embedder = graft.functions.Embedder.default,
       embeddingDim: Int = 64): DurableCatalog = {
     val inner = new VectorCatalog(spark, embedder, embeddingDim)
-    val wal = new CatalogWal(spark, root)
-    wal.readManifest().foreach { case (_, snapshot) =>
-      inner.load(snapshot)
-    }
-    val fence = wal.readManifest().map(_._1).getOrElse(-1L)
-    wal.replayAfter(fence) { node =>
+    val wal = CatalogWal.open(spark, root)(inner.load) { node =>
       node.get("op").asText() match {
         case "lib_create" =>
           inner.restoreLibrary(WalCodec.libFrom(node),
@@ -160,54 +153,50 @@ object DurableCatalog {
 }
 
 /**
- * The log itself: numbered JSON commit files `wal/%020d.json` plus an
- * atomically-renamed `_manifest.json`. Sequence numbers are dense per
- * writer; `create(overwrite = false)` turns a second writer on the
- * same root into an immediate error rather than corruption.
+ * The log itself: append-only segments `wal/%020d.wal`, each named by
+ * the sequence number of its first record, plus an atomically renamed
+ * `_manifest.json`.
+ *
+ * Writing: a process opens one segment on its first append and keeps
+ * appending to it until a checkpoint rolls it — there is no size-based
+ * roll. A record is one frame, `[u32 length][u32 CRC32][payload]`, the
+ * payload being the record's JSON with its `seq`, and `append` returns
+ * only after the frame is written and hsync'ed. Frames carry their own
+ * checksum, so on `file:` roots segments go through the raw local file
+ * system, without the checksummed one's `.crc` sibling. A segment is
+ * created with overwrite=false: two writers that open one root at the
+ * same state race for the same segment name, and the loser fails loudly
+ * instead of interleaving its records. After a failed append the log
+ * refuses further appends: a later frame behind a partial one would make
+ * the segment unreadable.
+ *
+ * Reading (replay and the seq bootstrap are one pass): segments in order
+ * of their first seq; a segment ends at EOF or at its first bad frame
+ * (short header, short payload, CRC mismatch). A bad frame with no valid
+ * frame after it is a torn, never-acknowledged tail and is dropped, and
+ * the next process numbers its writes from the last valid frame + 1. A
+ * valid frame after a bad one, or a gap in the sequence, is corruption:
+ * the read fails, naming the segment and byte offset. Files of the
+ * earlier layout — one `%020d.json` commit file per record and
+ * `%020dc%020d.json` compacted segments — replay read-only,
+ * deduplicated by seq.
  */
-final class CatalogWal(spark: SparkSession, root: String) {
+final class CatalogWal private (spark: SparkSession, root: String) {
+  import CatalogWal.{Header, Segment}
+
   private val mapper = new ObjectMapper()
-  private val hconf = spark.sparkContext.hadoopConfiguration
-  private def fs(p: Path): FileSystem = p.getFileSystem(hconf)
   private val walDir = new Path(root, "wal")
   private val manifestPath = new Path(root, "_manifest.json")
-
-  /** First sequence number encoded in a WAL file name: plain segments
-    * are `%020d.json`, compacted segments `%020dc%020d.json` (first and
-    * last seq — the last makes re-compaction after a crashed compaction
-    * idempotent by name). */
-  private def firstSeqOf(name: String): Option[Long] =
-    if (!name.endsWith(".json")) None
-    else scala.util.Try(name.stripSuffix(".json").split('c')(0).toLong).toOption
-
-  private def listWal(f: FileSystem): Array[(Long, Path)] =
-    if (!f.exists(walDir)) Array.empty
-    else f.listStatus(walDir).map(_.getPath)
-      .flatMap(p => firstSeqOf(p.getName).map(s => (s, p)))
-      .sortBy(_._1)
-
-  private def readRecords(f: FileSystem, p: Path): Seq[JsonNode] = {
-    val in = f.open(p)
-    val node =
-      try mapper.readTree(in)
-      finally in.close()
-    recordsOf(node)
+  private val manifestTmp = new Path(root, "_manifest.json.tmp")
+  private val fs: FileSystem = walDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val segmentFs: FileSystem = fs match {
+    case local: LocalFileSystem => local.getRawFileSystem
+    case other => other
   }
 
-  @volatile private var seq: Long = {
-    // scan ALL files' records, not just the max-named file: after a
-    // crashed compaction the merged segment (named by its FIRST seq)
-    // can hold the true maximum while higher-named originals are
-    // partially deleted — a name-only bootstrap would under-read and
-    // re-issue live sequence numbers. The manifest fence counts too: a
-    // checkpoint truncates every record at or below it, and a number
-    // re-issued there would be skipped by the next recovery.
-    val f = fs(walDir)
-    val all = listWal(f).flatMap { case (_, p) =>
-      readRecords(f, p).map(_.get("seq").asLong())
-    }
-    (all ++ readManifest().map(_._1)).maxOption.getOrElse(-1L)
-  }
+  @volatile private var seq: Long = -1L
+  private var active: FSDataOutputStream = null
+  private var failure: Throwable = null
 
   def lastSeq: Long = seq
 
@@ -215,32 +204,163 @@ final class CatalogWal(spark: SparkSession, root: String) {
     new Path(root, f"snapshot-$atSeq%020d").toString
 
   def append(record: ObjectNode): Unit = synchronized {
+    if (failure != null)
+      throw new IllegalStateException(s"an earlier append to the WAL under $walDir failed; reopen the root", failure)
     val next = seq + 1
     record.put("seq", next)
-    writeFile(next, record)
+    try {
+      if (active == null) active = openSegment(next)
+      active.write(frame(mapper.writeValueAsBytes(record)))
+      active.hsync()
+    } catch {
+      case NonFatal(e) => failure = e; throw e
+    }
     seq = next
   }
 
-  private def writeFile(atSeq: Long, node: ObjectNode): Unit = {
-    val p = new Path(walDir, f"$atSeq%020d.json")
-    val f = fs(p)
-    if (!f.exists(walDir)) f.mkdirs(walDir)
-    val out = f.create(p, /* overwrite = */ false)
-    try out.write(mapper.writeValueAsBytes(node))
-    finally out.close()
+  private def openSegment(firstSeq: Long): FSDataOutputStream = {
+    val p = new Path(walDir, f"$firstSeq%020d.wal")
+    // a writer that crashed right after opening its segment left it with
+    // no valid frame: nothing in it was acknowledged, and the restarted
+    // writer numbers its first record the same, so it takes the name over
+    if (segmentFs.exists(p) && frames(p).isEmpty) segmentFs.delete(p, false)
+    val out = segmentFs.create(p, /* overwrite = */ false)
+    if (!out.hasCapability(StreamCapabilities.HSYNC)) {
+      out.close()
+      throw new IllegalStateException(s"$p: ${segmentFs.getScheme} streams cannot hsync, so WAL appends would not be durable")
+    }
+    out
   }
 
-  def readManifest(): Option[(Long, String)] = {
-    val f = fs(manifestPath)
-    if (!f.exists(manifestPath)) None
-    else {
-      val in = f.open(manifestPath)
-      val node =
-        try mapper.readTree(in)
-        finally in.close()
-      Some((node.get("seq").asLong(), node.get("snapshot").asText()))
-    }
+  private def frame(payload: Array[Byte]): Array[Byte] = {
+    val crc = new CRC32
+    crc.update(payload)
+    ByteBuffer.allocate(Header + payload.length)
+      .putInt(payload.length).putInt(crc.getValue.toInt).put(payload).array()
   }
+
+  /** The payload of the frame at `pos`, if a whole frame whose CRC32
+    * matches starts there. No record is empty, so a zero length is bad:
+    * a zero-filled tail never reads as frames. */
+  private def frameAt(in: FSDataInputStream, pos: Long, len: Long): Option[Array[Byte]] =
+    if (len - pos < Header) None
+    else {
+      val head = ByteBuffer.allocate(Header)
+      in.readFully(pos, head.array())
+      val n = head.getInt(0) & 0xffffffffL
+      if (n == 0 || n > len - pos - Header || n > Int.MaxValue - Header) None
+      else {
+        val payload = new Array[Byte](n.toInt)
+        in.readFully(pos + Header, payload)
+        val crc = new CRC32
+        crc.update(payload)
+        if (crc.getValue == (head.getInt(4) & 0xffffffffL)) Some(payload) else None
+      }
+    }
+
+  /** Byte offset and payload of each valid frame of one segment; a torn
+    * tail is dropped, a valid frame after a bad one throws. */
+  private def frames(p: Path): Seq[(Long, Array[Byte])] = {
+    val len = segmentFs.getFileStatus(p).getLen
+    val in = segmentFs.open(p)
+    try {
+      val out = ArrayBuffer.empty[(Long, Array[Byte])]
+      var pos = 0L
+      var next = frameAt(in, pos, len)
+      while (next.isDefined) {
+        out += pos -> next.get
+        pos += Header + next.get.length
+        next = frameAt(in, pos, len)
+      }
+      (pos + 1 until len).find(frameAt(in, _, len).isDefined).foreach { valid =>
+        throw new IllegalStateException(
+          s"WAL corrupt: $p has a bad frame at byte $pos and a valid frame after it at byte $valid")
+      }
+      out.toSeq
+    } finally in.close()
+  }
+
+  /** Every log file, framed or legacy, in order of its first seq. */
+  private def segments(): Seq[Segment] =
+    if (!segmentFs.exists(walDir)) Nil
+    else segmentFs.listStatus(walDir).toSeq.map(_.getPath).flatMap { p =>
+      val name = p.getName
+      val first =
+        if (name.endsWith(".wal")) Try(name.stripSuffix(".wal").toLong).toOption
+        else if (name.endsWith(".json")) Try(name.stripSuffix(".json").split('c')(0).toLong).toOption
+        else None
+      first.map(Segment(_, p))
+    }.sortBy(_.firstSeq)
+
+  /** Byte offset and record of each record of one segment. A legacy
+    * file holds one record, or a compacted `batch` array at offset 0. */
+  private def recordsIn(s: Segment): Seq[(Long, JsonNode)] =
+    if (!s.legacy) frames(s.path).map { case (pos, payload) => pos -> parse(s.path, pos)(mapper.readTree(payload)) }
+    else {
+      val in = fs.open(s.path)
+      val node =
+        try parse(s.path, 0)(mapper.readTree(in))
+        finally in.close()
+      Option(node.get("batch")) match {
+        case Some(arr: ArrayNode) => arr.asScala.toSeq.map(0L -> _)
+        case _ => Seq(0L -> node)
+      }
+    }
+
+  private def parse(p: Path, pos: Long)(node: => JsonNode): JsonNode =
+    try node
+    catch {
+      case NonFatal(e) => throw new IllegalStateException(s"WAL corrupt: $p at byte $pos is not a JSON record", e)
+    }
+
+  /** The one reader: hand every record above `fence` to `apply` in seq
+    * order and return the last seq read (`fence` if none). Records at or
+    * below the fence are in the snapshot; a legacy record at or below the
+    * last one read is a duplicate a crashed compaction left. */
+  private def scan(fence: Long)(apply: JsonNode => Unit): Long = {
+    var last = fence
+    for (s <- segments(); (pos, rec) <- recordsIn(s)) {
+      val at = rec.get("seq").asLong()
+      def where = s"${s.path} at byte $pos"
+      if (at == last + 1) {
+        try apply(rec)
+        catch {
+          case NonFatal(e) => throw new IllegalStateException(s"WAL replay failed at seq $at ($where)", e)
+        }
+        last = at
+      } else if (at > last)
+        throw new IllegalStateException(s"WAL gap: $where holds seq $at, expected seq ${last + 1}")
+      else if (at > fence && !s.legacy)
+        throw new IllegalStateException(s"WAL overlap: $where holds seq $at again (two writers on one root?)")
+    }
+    last
+  }
+
+  /** Every record the log holds past the manifest's fence, in seq order. */
+  private[graft] def records(): Seq[JsonNode] = {
+    val out = ArrayBuffer.empty[JsonNode]
+    scan(readManifest().fold(-1L)(_._1))(out += _)
+    out.toSeq
+  }
+
+  private def parseManifest(p: Path): (Long, String) = {
+    val in = fs.open(p)
+    val node =
+      try mapper.readTree(in)
+      finally in.close()
+    (node.get("seq").asLong(), node.get("snapshot").asText())
+  }
+
+  private def readManifest(): Option[(Long, String)] =
+    if (fs.exists(manifestPath)) Some(parseManifest(manifestPath)) else None
+
+  /** A crash between `commitManifest`'s delete and its rename leaves
+    * only the tmp manifest. It is complete — closed before the delete,
+    * its snapshot written before it — so finish the rename. */
+  private def rollManifestForward(): Unit =
+    if (!fs.exists(manifestPath) && fs.exists(manifestTmp) && Try(parseManifest(manifestTmp)).isSuccess &&
+        !fs.rename(manifestTmp, manifestPath))
+      throw new IllegalStateException(s"Manifest roll-forward failed at $manifestPath")
 
   /** Manifest commit via write-temp-then-rename — the atomic publish
     * primitive on HDFS (and good enough on local FS; object stores
@@ -249,107 +369,43 @@ final class CatalogWal(spark: SparkSession, root: String) {
     val node = mapper.createObjectNode()
     node.put("seq", atSeq)
     node.put("snapshot", snapshot)
-    val tmp = new Path(root, s"_manifest.json.tmp")
-    val f = fs(manifestPath)
-    val out = f.create(tmp, true)
+    val out = fs.create(manifestTmp, true)
     try out.write(mapper.writeValueAsBytes(node))
     finally out.close()
-    if (f.exists(manifestPath)) f.delete(manifestPath, false)
-    if (!f.rename(tmp, manifestPath))
+    if (fs.exists(manifestPath)) fs.delete(manifestPath, false)
+    if (!fs.rename(manifestTmp, manifestPath))
       throw new IllegalStateException(s"Manifest rename failed at $manifestPath")
   }
 
-  /** Records inside one WAL file: singles hold one record, compacted
-    * segments hold a `batch` array. */
-  private def recordsOf(node: JsonNode): Seq[JsonNode] =
-    Option(node.get("batch")) match {
-      case Some(arr: ArrayNode) => (0 until arr.size()).map(arr.get)
-      case _ => Seq(node)
-    }
+  /** Roll the active segment — a checkpoint is the only roll — and
+    * delete every segment whose last record is at or below `atSeq`. */
+  def truncateThrough(atSeq: Long): Unit = synchronized {
+    if (active != null)
+      try active.close()
+      finally active = null
+    segments().filter(_.firstSeq <= atSeq)
+      .filter(s => recordsIn(s).forall(_._2.get("seq").asLong() <= atSeq))
+      .foreach(s => fs.delete(s.path, false))
+  }
+}
 
-  def truncateThrough(atSeq: Long): Unit = {
-    val f = fs(walDir)
-    listWal(f)
-      .filter(_._1 <= atSeq)
-      .filter { case (_, p) =>
-        // a segment is deletable only if its LAST record is fenced
-        // (checkpoint and compaction share the log lock, so a straddling
-        // segment cannot normally exist — this keeps truncation safe
-        // even if one does)
-        readRecords(f, p).forall(_.get("seq").asLong() <= atSeq)
-      }
-      .foreach { case (_, p) => f.delete(p, false) }
+object CatalogWal {
+  private val Header = 8 // u32 length + u32 CRC32
+
+  private final case class Segment(firstSeq: Long, path: Path) {
+    def legacy: Boolean = path.getName.endsWith(".json")
   }
 
-  /**
-   * Merge every commit file into ONE compacted segment — the
-   * between-checkpoints file-count lever: a long-lived root holds one
-   * file per acknowledged mutation, and both recovery opens and
-   * object-store LIST costs grow with file count. Compaction is pure
-   * log rewriting (no snapshot write, no catalog involvement).
-   *
-   * Crash safety by ordering + idempotent replay: the merged segment
-   * (named `firstSeq c lastSeq`) is fully written FIRST, originals are
-   * deleted after. A crash in between leaves overlapping segments —
-   * `replayAfter` dedups by sequence number, and a re-run targets the
-   * same merged name (found complete, skipped) then finishes the
-   * deletes.
-   */
-  def compact(): Unit = synchronized {
-    val f = fs(walDir)
-    val files = listWal(f)
-    if (files.length <= 1) return
-    // read + sort + dedup (a prior crashed compaction may have left
-    // overlapping segments)
-    var last = Long.MinValue
-    val records = files.flatMap { case (_, p) => readRecords(f, p) }
-      .sortBy(_.get("seq").asLong())
-      .flatMap { r =>
-        val s = r.get("seq").asLong()
-        if (s <= last) None else { last = s; Some(r) }
-      }
-    val first = records.head.get("seq").asLong()
-    val merged = new Path(walDir, f"$first%020dc$last%020d.json")
-    if (!f.exists(merged)) {
-      val node = mapper.createObjectNode()
-      val arr = node.putArray("batch")
-      records.foreach(arr.add)
-      // write-temp-then-rename: the merged segment must appear at its
-      // final name ATOMICALLY — a crash mid-write would otherwise
-      // leave a partial file that poisons replay, and whose existence
-      // a re-run would mistake for a complete merge before deleting
-      // the originals. The .tmp name has no ".json" suffix, so listWal
-      // (and therefore replay, truncation, and the seq bootstrap)
-      // never reads it; a leaked tmp from a crash is inert garbage
-      // overwritten by the next compaction.
-      val tmp = new Path(walDir, merged.getName + ".tmp")
-      val out = f.create(tmp, /* overwrite = */ true)
-      try out.write(mapper.writeValueAsBytes(node))
-      finally out.close()
-      if (!f.rename(tmp, merged))
-        throw new IllegalStateException(s"WAL compaction rename failed at $merged")
-    }
-    files.map(_._2).filter(_.getName != merged.getName)
-      .foreach(p => f.delete(p, false))
-  }
-
-  def replayAfter(fence: Long)(apply: JsonNode => Unit): Unit = {
-    val f = fs(walDir)
-    // per-RECORD fence and sequence dedup: a segment may straddle the
-    // fence, and a crashed compaction may leave the same record in two
-    // segments — each seq is applied exactly once, in order
-    var applied = fence
-    listWal(f).foreach { case (_, p) =>
-      readRecords(f, p).filter(_.get("seq").asLong() > applied).foreach { rec =>
-        try {
-          apply(rec)
-          applied = rec.get("seq").asLong()
-        } catch {
-          case NonFatal(e) =>
-            throw new IllegalStateException(s"WAL replay failed at ${p.getName}", e)
-        }
-      }
-    }
+  /** Open the log at `root`: finish an interrupted manifest swap, hand
+    * the manifest's snapshot to `restore`, then replay every record past
+    * its fence through `apply`. The next append is numbered from the
+    * last record read. */
+  def open(spark: SparkSession, root: String)(restore: String => Unit)(apply: JsonNode => Unit): CatalogWal = {
+    val wal = new CatalogWal(spark, root)
+    wal.rollManifestForward()
+    val fence = wal.readManifest().fold(-1L) { case (at, snapshot) => restore(snapshot); at }
+    wal.seq = wal.scan(fence)(apply)
+    wal
   }
 }
 

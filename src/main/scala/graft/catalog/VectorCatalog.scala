@@ -208,7 +208,9 @@ final class VectorCatalog(val spark: SparkSession,
     * before anything is buffered (or, in `DurableCatalog`, logged): a
     * wrong dimension would make every later search of the library
     * throw, and a non-finite element would top every descending top-k.
-    * WAL replay (`restoreChunks`) replays acknowledged rows unchecked. */
+    * WAL replay (`restoreChunks`) checks logged rows the same way: a
+    * root reopened with another dimension fails at recovery, not at a
+    * later search. */
   private def embeddingError(v: Array[Float]): Option[ApiError] =
     if (v.length != embeddingDim)
       Some(ApiError.Validation(s"embedding has dimension ${v.length}; " +
@@ -477,8 +479,11 @@ final class VectorCatalog(val spark: SparkSession,
   }
   private[graft] def restoreDocument(row: DocumentRow): Unit =
     documents.put(row.id, row)
-  private[graft] def restoreChunks(rows: Seq[ChunkRow]): Unit =
+  private[graft] def restoreChunks(rows: Seq[ChunkRow]): Unit = {
+    for (r <- rows; e <- r.embedding.flatMap(embeddingError))
+      throw new IllegalStateException(s"chunk ${r.id}: ${e.message}")
     appendChunks(rows)
+  }
   private[graft] def restoreDeleteLibrary(id: String): Unit = {
     libraries.remove(id)
     setIndex(id, None)

@@ -1,6 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.ByteBuffer
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.catalog.DurableCatalog
 import graft.model.ChunkRow
@@ -15,6 +20,28 @@ class DurabilitySpec extends SparkSpec {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-wal").toString
+
+  private val mapper = new ObjectMapper()
+
+  /** File names under the root's `wal/`, sorted. */
+  private def walFiles(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/wal").listFiles()).toSeq.flatten.map(_.getName).sorted
+
+  private def segment(root: String, firstSeq: Long): Path =
+    Paths.get(root, "wal", f"$firstSeq%020d.wal")
+
+  private def seqs(c: DurableCatalog): Seq[Long] = c.wal.records().map(_.get("seq").asLong())
+
+  /** End offset of each whole `[u32 length][u32 CRC32][payload]` frame. */
+  private def frameEnds(bytes: Array[Byte]): Seq[Int] = {
+    val ends = Seq.newBuilder[Int]
+    var pos = 0
+    while (pos + 8 <= bytes.length && pos + 8 + ByteBuffer.wrap(bytes, pos, 4).getInt <= bytes.length) {
+      pos += 8 + ByteBuffer.wrap(bytes, pos, 4).getInt
+      ends += pos
+    }
+    ends.result()
+  }
 
   private def chunkRows(c: DurableCatalog): Seq[ChunkRow] = {
     import c.inner.spark.implicits._
@@ -58,10 +85,8 @@ class DurabilitySpec extends SparkSpec {
     assert(rec.inner.indexState(lib.id).map(_.indexType.toString) == Some("Ivf"))
     assert(rec.inner.indexState(lib2.id).map(_.indexType.toString) == Some("Exact"))
     // the logged names, "flat" under its canonical name
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val logged = new java.io.File(s"$root/wal").listFiles().filter(_.getName.endsWith(".json"))
-      .sortBy(_.getName).map(mapper.readTree).filter(_.get("op").asText == "lib_create")
-      .map(_.get("index_type").asText).toSeq
+    val logged = rec.wal.records().filter(_.get("op").asText == "lib_create")
+      .map(_.get("index_type").asText)
     assert(logged == Seq("ivf", "exact", "lsh", "hnsw", "ivfpq", "binary", "exact"))
   }
 
@@ -99,8 +124,8 @@ class DurabilitySpec extends SparkSpec {
     val doc = cat.createDocument(lib.id, "d").toOption.get
     for (i <- 1 to 5) cat.createChunk(doc.id, s"chunk $i").toOption.get
     cat.checkpoint()
-    val walFiles = new java.io.File(s"$root/wal").listFiles()
-    assert(walFiles == null || walFiles.isEmpty, "checkpoint must truncate the WAL")
+    assert(cat.wal.records().isEmpty, "checkpoint must truncate the WAL")
+    assert(walFiles(root).isEmpty, "checkpoint must delete the rolled segment")
 
     // tail after the checkpoint
     val c6 = cat.createChunk(doc.id, "post-checkpoint").toOption.get
@@ -196,85 +221,79 @@ class DurabilitySpec extends SparkSpec {
     assert(res.toOption.get.results.head.chunk.text == "alpha beta gamma")
   }
 
-  test("WAL compaction merges the log into one segment, replay identical") {
+  test("checkpoint rolls the segment and truncates; numbering continues") {
     val root = freshRoot()
     val cat = DurableCatalog.recover(spark, root)
-    val lib = cat.createLibrary("comp", indexType = "exact").toOption.get
+    val lib = cat.createLibrary("roll", indexType = "exact").toOption.get
     val doc = cat.createDocument(lib.id, "d").toOption.get
     (0 until 20).foreach(i => assert(cat.createChunk(doc.id, s"chunk $i").isRight))
+    assert(walFiles(root) == Seq(segment(root, 0).getFileName.toString))
+    assert(seqs(cat) == (0L until 22L))
 
-    def walFiles(): Seq[java.io.File] =
-      new java.io.File(s"$root/wal").listFiles().toSeq
-        .filter(_.getName.endsWith(".json")).sortBy(_.getName)
-
-    assert(walFiles().size == 22) // one commit file per mutation
-    cat.compactWal()
-    assert(walFiles().size == 1, s"expected one merged segment: ${walFiles()}")
-    assertSameState(cat, DurableCatalog.recover(spark, root))
-
-    // sequence numbering continues correctly after compaction
-    cat.createChunk(doc.id, "after compact").toOption.get
-    assertSameState(cat, DurableCatalog.recover(spark, root))
-
-    // a second compaction folds the compacted segment + new singles
-    cat.compactWal()
-    assert(walFiles().size == 1)
-    assertSameState(cat, DurableCatalog.recover(spark, root))
-
-    // and checkpoint still truncates a compacted log
     cat.checkpoint()
-    assert(walFiles().isEmpty)
+    assert(walFiles(root).isEmpty && cat.wal.records().isEmpty)
     assertSameState(cat, DurableCatalog.recover(spark, root))
-  }
 
-  test("crashed compaction (merged + originals both present) replays without duplication") {
-    val root = freshRoot()
-    val cat = DurableCatalog.recover(spark, root)
-    val lib = cat.createLibrary("crash", indexType = "exact").toOption.get
-    val doc = cat.createDocument(lib.id, "d").toOption.get
-    (0 until 10).foreach(i => assert(cat.createChunk(doc.id, s"c$i").isRight))
+    // the next write opens a new segment named by its seq, past the fence
+    cat.createChunk(doc.id, "after checkpoint").toOption.get
+    assert(walFiles(root) == Seq(segment(root, 22).getFileName.toString))
+    assert(seqs(cat) == Seq(22L))
+    assertSameState(cat, DurableCatalog.recover(spark, root))
 
-    val walDir = java.nio.file.Paths.get(s"$root/wal")
-    // count commit files only (the Hadoop local FS adds .crc siblings)
-    def jsonCount(): Long = java.nio.file.Files.list(walDir).toArray
-      .map(_.toString).count(_.endsWith(".json"))
-    // snapshot the pre-compaction commit files
-    val originals = java.nio.file.Files.list(walDir).toArray.map(_.toString)
-      .filter(_.endsWith(".json"))
-      .map { p =>
-        val path = java.nio.file.Paths.get(p)
-        (path.getFileName.toString, java.nio.file.Files.readAllBytes(path))
-      }
-    cat.compactWal()
-    // simulate the crash window: merged segment written, originals not
-    // yet deleted — restore every original next to the merged file
-    originals.foreach { case (name, bytes) =>
-      java.nio.file.Files.write(walDir.resolve(name), bytes)
-    }
-    assert(jsonCount() == originals.length + 1)
-
-    // recovery must dedup by sequence: 12 mutations, not 24
+    // a second checkpoint rolls and truncates the new segment too
+    cat.createChunk(doc.id, "before the second checkpoint").toOption.get
+    cat.checkpoint()
+    assert(walFiles(root).isEmpty)
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)
+    assert(chunkRows(rec).size == 22)
+  }
+
+  test("legacy commit files and an overlapping compacted segment replay once") {
+    val src = DurableCatalog.recover(spark, freshRoot())
+    val lib = src.createLibrary("legacy", indexType = "exact").toOption.get
+    val doc = src.createDocument(lib.id, "d").toOption.get
+    (0 until 10).foreach(i => assert(src.createChunk(doc.id, s"c$i").isRight))
+    val records = src.wal.records()
+    assert(records.size == 12)
+
+    // the earlier layout: one JSON commit file per record, and a
+    // compaction that crashed after writing its merged segment (seqs
+    // 0..7) but before deleting the originals
+    val root = freshRoot()
+    val walDir = Files.createDirectories(Paths.get(root, "wal"))
+    records.foreach { r =>
+      Files.write(walDir.resolve(f"${r.get("seq").asLong()}%020d.json"), mapper.writeValueAsBytes(r))
+    }
+    val merged = mapper.createObjectNode()
+    merged.putArray("batch").addAll(records.take(8).asJava)
+    Files.write(walDir.resolve(f"${0}%020dc${7}%020d.json"), mapper.writeValueAsBytes(merged))
+
+    // recovery must dedup by sequence: 12 mutations, not 20
+    val rec = DurableCatalog.recover(spark, root)
+    assertSameState(src, rec)
     assert(chunkRows(rec).size == 10)
-    // appends against the recovered root keep live sequence numbers
-    rec.createChunk(doc.id, "post-crash append").toOption.get
-    assertSameState(rec, DurableCatalog.recover(spark, root))
-    // re-running compaction converges back to one segment
-    rec.compactWal()
-    assert(jsonCount() == 1)
+    assert(rec.wal.records() == records)
+
+    // appends against a legacy root continue its numbering in a segment
+    rec.createChunk(doc.id, "post-legacy append").toOption.get
+    assert(Files.exists(segment(root, 12)))
+    assert(seqs(rec) == (0L to 12L))
     assertSameState(rec, DurableCatalog.recover(spark, root))
 
-    // a leaked partial merge tmp (crash mid-write, pre-rename) is
-    // inert: no ".json" suffix, so replay/truncation/bootstrap all
-    // ignore it and recovery proceeds normally
-    java.nio.file.Files.write(
-      walDir.resolve("00000000000000000000c00000000000000000099.json.tmp"),
+    // a leaked partial merge tmp (crash mid-write, pre-rename) is inert:
+    // no ".json" suffix, so the reader never opens it
+    Files.write(walDir.resolve("00000000000000000000c00000000000000000099.json.tmp"),
       "{ not even valid json".getBytes)
+    assertSameState(rec, DurableCatalog.recover(spark, root))
+
+    // a checkpoint truncates the legacy files with the segment
+    rec.checkpoint()
+    assert(walFiles(root) == Seq("00000000000000000000c00000000000000000099.json.tmp"))
     assertSameState(rec, DurableCatalog.recover(spark, root))
   }
 
-  test("compaction races concurrent mutations without losing acknowledged writes") {
+  test("checkpoint races concurrent mutations without losing acknowledged writes") {
     val root = freshRoot()
     val cat = DurableCatalog.recover(spark, root)
     val lib = cat.createLibrary("race", indexType = "exact").toOption.get
@@ -284,10 +303,13 @@ class DurabilitySpec extends SparkSpec {
     val perThread = 20
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads + 1)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val checkpoints = new java.util.concurrent.atomic.AtomicInteger(0)
     try {
-      // one thread compacts in a loop while the others mutate
-      val compactor = pool.submit(new Runnable {
-        def run(): Unit = while (!stop.get()) { cat.compactWal(); Thread.sleep(5) }
+      // one thread checkpoints in a loop while the others mutate
+      val checkpointer = pool.submit(new Runnable {
+        def run(): Unit = while (!stop.get()) {
+          cat.checkpoint(); checkpoints.incrementAndGet(); Thread.sleep(5)
+        }
       })
       val writers = (0 until threads).map { t =>
         pool.submit(new Runnable {
@@ -298,14 +320,190 @@ class DurabilitySpec extends SparkSpec {
       }
       writers.foreach(_.get())
       stop.set(true)
-      compactor.get()
+      checkpointer.get()
     } finally pool.shutdown()
-    cat.compactWal()
+    assert(checkpoints.get() > 0)
 
     // every acknowledged write must survive recovery, byte-identically
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)
     assert(chunkRows(rec).size == threads * perThread)
+    assert(seqs(rec) == (rec.wal.lastSeq - seqs(rec).size + 1 to rec.wal.lastSeq))
+    assert(rec.wal.lastSeq == threads * perThread + 1)
+  }
+
+  /** Libraries, documents and chunk rows (embeddings as Seqs) of a catalog. */
+  private case class LogState(libs: Seq[graft.model.LibraryRow],
+      docs: Seq[Seq[graft.model.DocumentRow]], chunks: Seq[(ChunkRow, Option[Seq[Float]])])
+
+  private def comparable(r: ChunkRow) = (r.copy(embedding = None), r.embedding.map(_.toSeq))
+
+  private def logState(c: DurableCatalog): LogState = {
+    val libs = c.inner.listLibraries()
+    LogState(libs, libs.map(l => c.inner.listDocuments(l.id)), chunkRows(c).map(comparable))
+  }
+
+  /** A log of five records, a chunk delete among them, on a
+    * 2-dimensional catalog, with the catalog state after each record. */
+  private def smallLog(root: String): (DurableCatalog, Seq[LogState]) = {
+    val cat = DurableCatalog.recover(spark, root, embeddingDim = 2)
+    val states = scala.collection.mutable.ArrayBuffer(logState(cat))
+    def write[A](op: Either[graft.model.ApiError, A]): A = {
+      val a = op.toOption.get
+      states += logState(cat)
+      a
+    }
+    val lib = write(cat.createLibrary("torn", indexType = "exact"))
+    val doc = write(cat.createDocument(lib.id, "d"))
+    val c1 = write(cat.createChunk(doc.id, "one", embedding = Some(Array(0.1f, 0.2f))))
+    write(cat.createChunk(doc.id, "two", Map("k" -> "v"), embedding = Some(Array(0.3f, -0.4f))))
+    write(cat.deleteChunk(c1.id))
+    (cat, states.toSeq)
+  }
+
+  test("truncating the segment at every byte offset recovers the acknowledged prefix") {
+    val root = freshRoot()
+    val (cat, states) = smallLog(root)
+    val acked = cat.wal.records()
+    val seg = segment(root, 0)
+    val bytes = Files.readAllBytes(seg)
+    val ends = frameEnds(bytes)
+    assert(ends.size == acked.size && ends.last == bytes.length)
+    for (cut <- 0 to bytes.length) {
+      Files.write(seg, bytes.take(cut))
+      val k = ends.count(_ <= cut)
+      val want = states(k)
+      val rec = DurableCatalog.recover(spark, root, embeddingDim = 2)
+      assert(rec.wal.records() == acked.take(k), s"records after a cut at byte $cut")
+      assert(rec.wal.lastSeq == k - 1)
+      assert(rec.inner.listLibraries() == want.libs, s"libraries after a cut at byte $cut")
+      assert(want.libs.map(l => rec.inner.listDocuments(l.id)) == want.docs, s"documents after a cut at byte $cut")
+      want.chunks.foreach { case c @ (row, _) =>
+        assert(rec.inner.getChunk(row.id).map(comparable) == Right(c), s"chunk after a cut at byte $cut")
+      }
+      // the whole chunk table takes a Spark job: compare it once per prefix
+      if (cut == 0 || ends.contains(cut)) assert(logState(rec) == want, s"state after a cut at byte $cut")
+    }
+  }
+
+  test("a flipped byte in a non-final frame fails recovery loudly") {
+    val root = freshRoot()
+    val (cat, _) = smallLog(root)
+    val seg = segment(root, 0)
+    val bytes = Files.readAllBytes(seg)
+    val ends = frameEnds(bytes)
+    // every byte of every frame but the last: header and payload alike
+    for (at <- 0 until ends.init.last) {
+      Files.write(seg, bytes.updated(at, (bytes(at) ^ 0xff).toByte))
+      val e = intercept[IllegalStateException](DurableCatalog.recover(spark, root, embeddingDim = 2))
+      assert(e.getMessage.contains(seg.getFileName.toString) && e.getMessage.contains("byte"),
+        s"flip at byte $at: ${e.getMessage}")
+    }
+    Files.write(seg, bytes)
+    assertSameState(cat, DurableCatalog.recover(spark, root, embeddingDim = 2))
+  }
+
+  test("torn tail, restart, more writes: every ack recovers, seqs contiguous") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("torn", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val kept = (0 until 3).map(i => cat.createChunk(doc.id, s"kept $i").toOption.get)
+    val torn = cat.createChunk(doc.id, "torn").toOption.get
+    // a crash tears the last frame (seq 5)
+    val seg0 = segment(root, 0)
+    val bytes = Files.readAllBytes(seg0)
+    Files.write(seg0, bytes.take(bytes.length - 5))
+
+    val restarted = DurableCatalog.recover(spark, root)
+    assert(restarted.wal.lastSeq == 4)
+    assert(restarted.inner.getChunk(torn.id).isLeft)
+    val later = (0 until 3).map(i => restarted.createChunk(doc.id, s"later $i").toOption.get)
+    assert(walFiles(root) == Seq(seg0, segment(root, 5)).map(_.getFileName.toString))
+    assert(seqs(restarted) == (0L to 7L))
+    assertSameState(restarted, DurableCatalog.recover(spark, root))
+    // a lost segment leaves a gap in the sequence: recovery names it
+    val aside = Paths.get(root, "segment-aside")
+    Files.move(seg0, aside)
+    val gap = intercept[IllegalStateException](DurableCatalog.recover(spark, root))
+    assert(gap.getMessage.contains(segment(root, 5).getFileName.toString) && gap.getMessage.contains("seq 5"),
+      gap.getMessage)
+    Files.move(aside, seg0)
+
+    // a second crash tears the first frame of a fresh segment: the
+    // restarted writer takes its name over
+    restarted.checkpoint()
+    val lost = restarted.createChunk(doc.id, "lost").toOption.get
+    Files.write(segment(root, 8), Files.readAllBytes(segment(root, 8)).take(3))
+    val again = DurableCatalog.recover(spark, root)
+    assert(again.wal.lastSeq == 7)
+    val last = again.createChunk(doc.id, "last").toOption.get
+    val rec = DurableCatalog.recover(spark, root)
+    assertSameState(again, rec)
+    assert(seqs(rec) == Seq(8L))
+    assert(chunkRows(rec).map(_.id).toSet == (kept ++ later :+ last).map(_.id).toSet)
+    assert(!chunkRows(rec).exists(c => c.id == torn.id || c.id == lost.id))
+  }
+
+  test("100 writes from one process leave one segment file and no .crc") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("one-file", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    (0 until 98).foreach(i => assert(cat.createChunk(doc.id, s"chunk $i").isRight))
+    assert(walFiles(root) == Seq(segment(root, 0).getFileName.toString))
+    assert(seqs(cat) == (0L until 100L))
+    assertSameState(cat, DurableCatalog.recover(spark, root))
+  }
+
+  test("a crash between the manifest's delete and its rename rolls forward on open") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("manifest", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunk(doc.id, "before the first checkpoint").toOption.get
+    cat.checkpoint()
+    cat.createChunk(doc.id, "before the second checkpoint").toOption.get
+    cat.checkpoint()
+    // commitManifest's crash window: the tmp manifest (and its checksum)
+    // written, the old manifest deleted, the rename not yet done
+    val r = Paths.get(root)
+    Files.move(r.resolve("_manifest.json"), r.resolve("_manifest.json.tmp"))
+    if (Files.exists(r.resolve("._manifest.json.crc")))
+      Files.move(r.resolve("._manifest.json.crc"), r.resolve("._manifest.json.tmp.crc"))
+
+    val rec = DurableCatalog.recover(spark, root)
+    assertSameState(cat, rec)
+    assert(chunkRows(rec).size == 2)
+    assert(Files.exists(r.resolve("_manifest.json")) && !Files.exists(r.resolve("_manifest.json.tmp")))
+  }
+
+  test("a logged chunk of another embedding dimension fails recovery, naming its seq") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("dim", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunk(doc.id, "a 64-dimensional chunk").toOption.get
+    val e = intercept[IllegalStateException](DurableCatalog.recover(spark, root, embeddingDim = 32))
+    assert(e.getMessage.contains("seq 2"), e.getMessage)
+    assert(e.getCause.getMessage.contains("dimension 64"), e.getCause.getMessage)
+    assertSameState(cat, DurableCatalog.recover(spark, root))
+  }
+
+  test("two writers opened on one root at the same state: the second fails loudly") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("split", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val a = DurableCatalog.recover(spark, root)
+    val b = DurableCatalog.recover(spark, root)
+    val kept = a.createChunk(doc.id, "first writer").toOption.get
+    intercept[java.io.IOException](b.createChunk(doc.id, "second writer"))
+    // and it stays failed: a later append never lands behind the loser's
+    intercept[IllegalStateException](b.createChunk(doc.id, "second writer again"))
+    val rec = DurableCatalog.recover(spark, root)
+    assert(chunkRows(rec).map(_.id) == Seq(kept.id))
+    assertSameState(a, rec)
   }
 
   test("a rejected chunk create writes no WAL record and is absent after recover") {
@@ -314,14 +512,12 @@ class DurabilitySpec extends SparkSpec {
     val lib = cat.createLibrary("boundary", indexType = "exact").toOption.get
     val doc = cat.createDocument(lib.id, "d").toOption.get
     cat.createChunk(doc.id, "a valid chunk").toOption.get
-    def walFiles(): Int =
-      new java.io.File(s"$root/wal").listFiles().count(_.getName.endsWith(".json"))
-    val before = walFiles()
+    val before = cat.wal.records()
 
     val nan = Array.fill(cat.inner.embeddingDim)(0.1f).updated(0, Float.NaN)
     assert(cat.createChunk(doc.id, "nan", embedding = Some(nan), id = Some("nan")).isLeft)
     assert(cat.createChunk(doc.id, "short", embedding = Some(Array(1f, 2f)), id = Some("short")).isLeft)
-    assert(walFiles() == before, "a rejected create was logged")
+    assert(cat.wal.records() == before, "a rejected create was logged")
 
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)

@@ -12,7 +12,9 @@ prints, for every end-to-end metric that BENCHMARK.json declares: both
 medians, the parent's interquartile range, how many pairs the change won
 (ties count for neither side), and whether the change's median stays
 inside the metric's bound. It also prints failed/attempted operations per
-side and the median seconds of each setup phase from the receipt line.
+side, the median seconds of each setup phase and the medians of the
+receipt's write and search latencies and recovery time, so a gain can be
+traced to the layer it came from.
 Each checkout builds its own perfbench (run.py rebuilds on source change),
 so the first pair may include a build.
 """
@@ -24,6 +26,7 @@ import sys
 from pathlib import Path
 
 SECONDS = 20  # the measured run length of every pair
+RECEIPT_FIGURES = ["write_p50_ms", "write_p90_ms", "search_p90_ms", "recover_s"]
 
 
 def seeds_of(spec):
@@ -49,8 +52,10 @@ def run_once(checkout, workload, seed):
         name, _, value = item.partition("=")
         if value:
             phases[name] = float(value)
+    figures = {k: float(receipt[k]) for k in RECEIPT_FIGURES if k in receipt}
     return {"seed": seed, "attempted": result["attempted"], "failed": result["failed"],
-            "metrics": {k: v["value"] for k, v in result["metrics"].items()}, "phases": phases}
+            "metrics": {k: v["value"] for k, v in result["metrics"].items()}, "phases": phases,
+            "receipt": figures}
 
 
 def iqr(xs):
@@ -102,6 +107,9 @@ def main():
         med = " ".join(f"{k}={statistics.median(pr[side]['phases'].get(k, 0.0) for pr in pairs):.2f}"
                        for k in phases)
         print(f"{side}: failed/attempted {failed}/{attempted}; setup phase medians (s): {med}")
+        figures = " ".join(f"{k}={statistics.median(vals):.3f}" for k in RECEIPT_FIGURES
+                           if (vals := [pr[side]["receipt"][k] for pr in pairs if k in pr[side]["receipt"]]))
+        print(f"{side}: receipt medians: {figures}")
 
 
 if __name__ == "__main__":
