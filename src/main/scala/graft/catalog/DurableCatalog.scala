@@ -1,6 +1,10 @@
 package graft.catalog
 
+import java.io.File
 import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, StandardOpenOption}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.zip.CRC32
 
 import scala.collection.mutable.ArrayBuffer
@@ -10,7 +14,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, LocalFileSystem, Path, StreamCapabilities}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem, StreamCapabilities}
 import org.apache.spark.sql.SparkSession
 
 import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
@@ -33,10 +37,10 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  *    (`VectorCatalog.save`), points the manifest at it, rolls the
  *    active segment and deletes the logged prefix. `recover()` = load
  *    manifest snapshot (if any) + replay the WAL tail in sequence order.
- *  - All paths go through the Hadoop FileSystem API, so the log can
- *    live on any file system whose output streams can hsync (local,
- *    HDFS); an object store cannot hold it. See [[CatalogWal]] for the
- *    segment format and the crash rules of replay.
+ *  - All paths go through the Hadoop FileSystem API. Writes need the
+ *    root's writer lock, an OS file lock, so only `file:` roots take
+ *    them; other roots recover read-only. See [[CatalogWal]] for the
+ *    segment format, the one-writer rule and the crash rules of replay.
  *  - Streamed ingest (`startIngest`) is deliberately NOT logged here:
  *    Structured Streaming already replays unacknowledged micro-batches
  *    from its own checkpoint on restart; double-logging them would
@@ -116,13 +120,7 @@ final class DurableCatalog private (
     * segments are deleted only after the manifest commit — a crash at
     * any point recovers to a consistent state (records the snapshot
     * already holds are skipped by the seq fence). */
-  def checkpoint(): Unit = logLock.synchronized {
-    val seq = wal.lastSeq
-    val snap = wal.snapshotPath(seq)
-    inner.save(snap)
-    wal.commitManifest(seq, snap)
-    wal.truncateThrough(seq)
-  }
+  def checkpoint(): Unit = logLock.synchronized(wal.checkpoint(inner.save))
 }
 
 object DurableCatalog {
@@ -154,7 +152,7 @@ object DurableCatalog {
 
 /**
  * The log itself: append-only segments `wal/%020d.wal`, each named by
- * the sequence number of its first record, plus an atomically renamed
+ * the sequence number of its first record, plus an atomically replaced
  * `_manifest.json`.
  *
  * Writing: a process opens one segment on its first append and keeps
@@ -162,13 +160,19 @@ object DurableCatalog {
  * roll. A record is one frame, `[u32 length][u32 CRC32][payload]`, the
  * payload being the record's JSON with its `seq`, and `append` returns
  * only after the frame is written and hsync'ed. Frames carry their own
- * checksum, so on `file:` roots segments go through the raw local file
- * system, without the checksummed one's `.crc` sibling. A segment is
- * created with overwrite=false: two writers that open one root at the
- * same state race for the same segment name, and the loser fails loudly
- * instead of interleaving its records. After a failed append the log
- * refuses further appends: a later frame behind a partial one would make
- * the segment unreadable.
+ * checksum, so segments (and the manifest) go through the raw local
+ * file system, without the checksummed one's `.crc` sibling. After a
+ * failed append the log refuses further appends: a later frame behind a
+ * partial one would make the segment unreadable.
+ *
+ * One writer at a time: every append and checkpoint holds the root's
+ * writer lock (`_wal.lock`, an OS file lock, which the OS drops when
+ * its holder dies) and first checks that no other writer wrote since
+ * this one read or wrote the log — another writer's records sit in a
+ * segment of its own, newer than ours, and its checkpoint deletes ours.
+ * A stale writer fails loudly without writing. Locks need a local file
+ * system, so only `file:` roots take writes; other roots recover
+ * read-only.
  *
  * Reading (replay and the seq bootstrap are one pass): segments in order
  * of their first seq; a segment ends at EOF or at its first bad frame
@@ -189,47 +193,81 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   private val manifestPath = new Path(root, "_manifest.json")
   private val manifestTmp = new Path(root, "_manifest.json.tmp")
   private val fs: FileSystem = walDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val segmentFs: FileSystem = fs match {
+  private val logFs: FileSystem = fs match {
     case local: LocalFileSystem => local.getRawFileSystem
     case other => other
+  }
+  private val lockFile: Option[File] = logFs match {
+    case raw: RawLocalFileSystem => Some(raw.pathToFile(new Path(root, "_wal.lock")))
+    case _ => None
   }
 
   @volatile private var seq: Long = -1L
   private var active: FSDataOutputStream = null
+  private var activePath: Path = null
   private var failure: Throwable = null
 
   def lastSeq: Long = seq
 
-  def snapshotPath(atSeq: Long): String =
-    new Path(root, f"snapshot-$atSeq%020d").toString
-
   def append(record: ObjectNode): Unit = synchronized {
     if (failure != null)
       throw new IllegalStateException(s"an earlier append to the WAL under $walDir failed; reopen the root", failure)
-    val next = seq + 1
-    record.put("seq", next)
-    try {
-      if (active == null) active = openSegment(next)
-      active.write(frame(mapper.writeValueAsBytes(record)))
-      active.hsync()
-    } catch {
-      case NonFatal(e) => failure = e; throw e
+    exclusively {
+      val next = seq + 1
+      record.put("seq", next)
+      try {
+        if (active == null) openSegment(next)
+        active.write(frame(mapper.writeValueAsBytes(record)))
+        active.hsync()
+      } catch {
+        case NonFatal(e) => failure = e; throw e
+      }
+      seq = next
     }
-    seq = next
   }
 
-  private def openSegment(firstSeq: Long): FSDataOutputStream = {
+  /** [[DurableCatalog.checkpoint]] under the writer lock: `save` writes
+    * the snapshot, then the manifest points at it, then the logged
+    * prefix is deleted. */
+  def checkpoint(save: String => Unit): Unit = synchronized {
+    exclusively {
+      val at = seq
+      val snapshot = new Path(root, f"snapshot-$at%020d").toString
+      save(snapshot)
+      commitManifest(at, snapshot)
+      truncateThrough(at)
+    }
+  }
+
+  /** Run a write under the root's writer lock, once no other writer has
+    * written since this one last read or wrote the log. */
+  private[graft] def exclusively[A](write: => A): A = lockFile match {
+    case None => throw new IllegalStateException(s"$root: WAL writes need a writer lock, which only file: roots provide")
+    case Some(f) =>
+      CatalogWal.holding(f) {
+        val current =
+          if (active != null) segments().lastOption.exists(_.path.getName == activePath.getName)
+          else lastOnDisk() == seq
+        if (!current)
+          throw new IllegalStateException(
+            s"another writer has written to the WAL under $walDir since this catalog read it at seq $seq; reopen the root")
+        write
+      }
+  }
+
+  private def openSegment(firstSeq: Long): Unit = {
     val p = new Path(walDir, f"$firstSeq%020d.wal")
-    // a writer that crashed right after opening its segment left it with
-    // no valid frame: nothing in it was acknowledged, and the restarted
-    // writer numbers its first record the same, so it takes the name over
-    if (segmentFs.exists(p) && frames(p).isEmpty) segmentFs.delete(p, false)
-    val out = segmentFs.create(p, /* overwrite = */ false)
+    // under the lock, with the log's last seq ours, a segment named by
+    // our next seq holds no valid frame: its writer died or failed
+    // between the create and its first frame, which one lock hold spans
+    if (logFs.exists(p)) logFs.delete(p, false)
+    val out = logFs.create(p, /* overwrite = */ false)
     if (!out.hasCapability(StreamCapabilities.HSYNC)) {
       out.close()
-      throw new IllegalStateException(s"$p: ${segmentFs.getScheme} streams cannot hsync, so WAL appends would not be durable")
+      throw new IllegalStateException(s"$p: ${logFs.getScheme} streams cannot hsync, so WAL appends would not be durable")
     }
-    out
+    active = out
+    activePath = p
   }
 
   private def frame(payload: Array[Byte]): Array[Byte] = {
@@ -261,8 +299,8 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   /** Byte offset and payload of each valid frame of one segment; a torn
     * tail is dropped, a valid frame after a bad one throws. */
   private def frames(p: Path): Seq[(Long, Array[Byte])] = {
-    val len = segmentFs.getFileStatus(p).getLen
-    val in = segmentFs.open(p)
+    val len = logFs.getFileStatus(p).getLen
+    val in = logFs.open(p)
     try {
       val out = ArrayBuffer.empty[(Long, Array[Byte])]
       var pos = 0L
@@ -282,8 +320,8 @@ final class CatalogWal private (spark: SparkSession, root: String) {
 
   /** Every log file, framed or legacy, in order of its first seq. */
   private def segments(): Seq[Segment] =
-    if (!segmentFs.exists(walDir)) Nil
-    else segmentFs.listStatus(walDir).toSeq.map(_.getPath).flatMap { p =>
+    if (!logFs.exists(walDir)) Nil
+    else logFs.listStatus(walDir).toSeq.map(_.getPath).flatMap { p =>
       val name = p.getName
       val first =
         if (name.endsWith(".wal")) Try(name.stripSuffix(".wal").toLong).toOption
@@ -295,7 +333,7 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   /** Byte offset and record of each record of one segment. A legacy
     * file holds one record, or a compacted `batch` array at offset 0. */
   private def recordsIn(s: Segment): Seq[(Long, JsonNode)] =
-    if (!s.legacy) frames(s.path).map { case (pos, payload) => pos -> parse(s.path, pos)(mapper.readTree(payload)) }
+    if (!s.legacy) frames(s.path).map(record(s.path))
     else {
       val in = fs.open(s.path)
       val node =
@@ -307,11 +345,25 @@ final class CatalogWal private (spark: SparkSession, root: String) {
       }
     }
 
+  private def record(p: Path)(frame: (Long, Array[Byte])): (Long, JsonNode) =
+    frame._1 -> parse(p, frame._1)(mapper.readTree(frame._2))
+
   private def parse(p: Path, pos: Long)(node: => JsonNode): JsonNode =
     try node
     catch {
       case NonFatal(e) => throw new IllegalStateException(s"WAL corrupt: $p at byte $pos is not a JSON record", e)
     }
+
+  /** The log's last seq: its newest record's, or the manifest's fence
+    * where a checkpoint truncated past every record. Only the last frame
+    * of a segment is parsed. */
+  private def lastOnDisk(): Long = {
+    val newest = segments().flatMap { s =>
+      (if (s.legacy) recordsIn(s).lastOption else frames(s.path).lastOption.map(record(s.path)))
+        .map(_._2.get("seq").asLong())
+    }
+    (readManifest().fold(-1L)(_._1) +: newest).max
+  }
 
   /** The one reader: hand every record above `fence` to `apply` in seq
     * order and return the last seq read (`fence` if none). Records at or
@@ -344,7 +396,7 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   }
 
   private def parseManifest(p: Path): (Long, String) = {
-    val in = fs.open(p)
+    val in = logFs.open(p)
     val node =
       try mapper.readTree(in)
       finally in.close()
@@ -352,37 +404,40 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   }
 
   private def readManifest(): Option[(Long, String)] =
-    if (fs.exists(manifestPath)) Some(parseManifest(manifestPath)) else None
+    if (logFs.exists(manifestPath)) Some(parseManifest(manifestPath)) else None
 
-  /** A crash between `commitManifest`'s delete and its rename leaves
-    * only the tmp manifest. It is complete — closed before the delete,
-    * its snapshot written before it — so finish the rename. */
+  /** Roots written before the manifest was replaced by one rename
+    * deleted it first, then renamed the tmp manifest into place; a crash
+    * between the two left only the tmp one. It is complete — closed
+    * before the delete, its snapshot written before it — so finish the
+    * rename. `commitManifest` never leaves this state. */
   private def rollManifestForward(): Unit =
-    if (!fs.exists(manifestPath) && fs.exists(manifestTmp) && Try(parseManifest(manifestTmp)).isSuccess &&
-        !fs.rename(manifestTmp, manifestPath))
+    if (!logFs.exists(manifestPath) && logFs.exists(manifestTmp) && Try(parseManifest(manifestTmp)).isSuccess &&
+        !logFs.rename(manifestTmp, manifestPath))
       throw new IllegalStateException(s"Manifest roll-forward failed at $manifestPath")
 
-  /** Manifest commit via write-temp-then-rename — the atomic publish
-    * primitive on HDFS (and good enough on local FS; object stores
-    * substitute conditional PUT). */
-  def commitManifest(atSeq: Long, snapshot: String): Unit = {
+  /** Write the manifest to a tmp file, hsync it and rename it over the
+    * old one. On a local file system the rename replaces the destination
+    * atomically, so a crash leaves the old manifest or the new one. */
+  private def commitManifest(atSeq: Long, snapshot: String): Unit = {
     val node = mapper.createObjectNode()
     node.put("seq", atSeq)
     node.put("snapshot", snapshot)
-    val out = fs.create(manifestTmp, true)
-    try out.write(mapper.writeValueAsBytes(node))
-    finally out.close()
-    if (fs.exists(manifestPath)) fs.delete(manifestPath, false)
-    if (!fs.rename(manifestTmp, manifestPath))
+    val out = logFs.create(manifestTmp, true)
+    try {
+      out.write(mapper.writeValueAsBytes(node))
+      out.hsync()
+    } finally out.close()
+    if (!logFs.rename(manifestTmp, manifestPath))
       throw new IllegalStateException(s"Manifest rename failed at $manifestPath")
   }
 
   /** Roll the active segment — a checkpoint is the only roll — and
     * delete every segment whose last record is at or below `atSeq`. */
-  def truncateThrough(atSeq: Long): Unit = synchronized {
+  private def truncateThrough(atSeq: Long): Unit = {
     if (active != null)
       try active.close()
-      finally active = null
+      finally { active = null; activePath = null }
     segments().filter(_.firstSeq <= atSeq)
       .filter(s => recordsIn(s).forall(_._2.get("seq").asLong() <= atSeq))
       .foreach(s => fs.delete(s.path, false))
@@ -394,6 +449,24 @@ object CatalogWal {
 
   private final case class Segment(firstSeq: Long, path: Path) {
     def legacy: Boolean = path.getName.endsWith(".json")
+  }
+
+  /** One channel per lock file in this JVM, never closed: closing any
+    * descriptor of a file drops every lock the process holds on it. Its
+    * monitor orders this process's writers, its OS lock orders
+    * processes. */
+  private val lockChannels = new ConcurrentHashMap[File, FileChannel]()
+
+  private def holding[A](lock: File)(body: => A): A = {
+    val channel = lockChannels.computeIfAbsent(lock.getCanonicalFile, { f =>
+      Files.createDirectories(f.toPath.getParent)
+      FileChannel.open(f.toPath, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    })
+    channel.synchronized {
+      val os = channel.lock()
+      try body
+      finally os.release()
+    }
   }
 
   /** Open the log at `root`: finish an interrupted manifest swap, hand

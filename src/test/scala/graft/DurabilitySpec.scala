@@ -2,6 +2,7 @@ package graft
 
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit, TimeoutException}
 
 import scala.jdk.CollectionConverters._
 
@@ -465,12 +466,12 @@ class DurabilitySpec extends SparkSpec {
     cat.checkpoint()
     cat.createChunk(doc.id, "before the second checkpoint").toOption.get
     cat.checkpoint()
-    // commitManifest's crash window: the tmp manifest (and its checksum)
-    // written, the old manifest deleted, the rename not yet done
     val r = Paths.get(root)
+    // a checkpoint replaces the manifest by one rename, with no checksum file
+    assert(Seq("_manifest.json.tmp", "._manifest.json.crc").forall(n => !Files.exists(r.resolve(n))))
+    // the window of roots written before that: the tmp manifest written,
+    // the old manifest deleted, the rename not yet done
     Files.move(r.resolve("_manifest.json"), r.resolve("_manifest.json.tmp"))
-    if (Files.exists(r.resolve("._manifest.json.crc")))
-      Files.move(r.resolve("._manifest.json.crc"), r.resolve("._manifest.json.tmp.crc"))
 
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)
@@ -498,12 +499,81 @@ class DurabilitySpec extends SparkSpec {
     val a = DurableCatalog.recover(spark, root)
     val b = DurableCatalog.recover(spark, root)
     val kept = a.createChunk(doc.id, "first writer").toOption.get
-    intercept[java.io.IOException](b.createChunk(doc.id, "second writer"))
+    intercept[IllegalStateException](b.createChunk(doc.id, "second writer"))
     // and it stays failed: a later append never lands behind the loser's
     intercept[IllegalStateException](b.createChunk(doc.id, "second writer again"))
     val rec = DurableCatalog.recover(spark, root)
     assert(chunkRows(rec).map(_.id) == Seq(kept.id))
     assertSameState(a, rec)
+  }
+
+  test("two writers opened at different states: the stale one fails when it writes") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("stale", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    // a opens at seq 1 and writes seq 2 in its segment; b opens after that
+    val a = DurableCatalog.recover(spark, root)
+    val a1 = a.createChunk(doc.id, "a at seq 2").toOption.get
+    val b = DurableCatalog.recover(spark, root)
+    assert(b.wal.lastSeq == 2)
+    // a writes on, so b, which would number its write 3 as well, fails
+    val a2 = a.createChunk(doc.id, "a at seq 3").toOption.get
+    intercept[IllegalStateException](b.createChunk(doc.id, "b behind a"))
+    // c opens at a's state and writes first, in a newer segment: a fails
+    // on its next write and on a checkpoint, which would delete c's record
+    val c = DurableCatalog.recover(spark, root)
+    val c1 = c.createChunk(doc.id, "c at seq 4").toOption.get
+    intercept[IllegalStateException](a.createChunk(doc.id, "a behind c"))
+    intercept[IllegalStateException](a.checkpoint())
+    // c's checkpoint deletes every segment; b is still behind its fence
+    c.checkpoint()
+    assert(walFiles(root).isEmpty)
+    intercept[IllegalStateException](b.createChunk(doc.id, "b behind the fence"))
+    val c2 = c.createChunk(doc.id, "c after its checkpoint").toOption.get
+    val rec = DurableCatalog.recover(spark, root)
+    assert(chunkRows(rec).map(_.id).toSet == Set(a1, a2, c1, c2).map(_.id))
+    assert(rec.wal.lastSeq == 5)
+    assertSameState(c, rec)
+  }
+
+  test("a second writer waits on the lock while the first one's new segment is empty") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("empty", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val a = DurableCatalog.recover(spark, root)
+    val b = DurableCatalog.recover(spark, root)
+    val created = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      // a inside an append: its segment created, its first frame not written
+      val holder = pool.submit(new Runnable {
+        def run(): Unit = a.wal.exclusively {
+          Files.createFile(segment(root, 2))
+          created.countDown()
+          release.await()
+        }
+      })
+      created.await()
+      val second = pool.submit(new Callable[ChunkRow] {
+        def call(): ChunkRow = b.createChunk(doc.id, "b").toOption.get
+      })
+      intercept[TimeoutException](second.get(300, TimeUnit.MILLISECONDS))
+      assert(Files.exists(segment(root, 2)), "the second writer deleted a segment whose writer holds the lock")
+      // a stops there without a frame: b then takes the empty segment over
+      release.countDown()
+      holder.get()
+      val kept = second.get(60, TimeUnit.SECONDS)
+      intercept[IllegalStateException](a.createChunk(doc.id, "a behind b"))
+      val rec = DurableCatalog.recover(spark, root)
+      assert(chunkRows(rec).map(_.id) == Seq(kept.id))
+      assert(seqs(rec) == (0L to 2L))
+    } finally {
+      release.countDown()
+      pool.shutdown()
+    }
   }
 
   test("a rejected chunk create writes no WAL record and is absent after recover") {
