@@ -25,8 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.plans.AsOfJoinStrategy)
-    // opt-in ANN rewrite: inert unless spark.graft.ann.autoProbe is set
-    ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.rules.AnnTopKProbe)
     ext.injectFunction(fn("cosine_sim", classOf[CosineSimilarity],
       es => CosineSimilarity(es(0), es(1))))
     ext.injectFunction(fn("euclidean_dist", classOf[EuclideanDistance],

@@ -32,7 +32,8 @@ object SparkEntry {
     * replays must use [[oracleSqlFor]] with the fixture dir actually
     * being verified (as `graft.Verify` does). Keeping this form
     * environment-independent means no hidden Spark jobs or
-    * machine-specific paths behind an innocent-looking accessor. */
+    * machine-specific paths behind an innocent-looking accessor. Kept
+    * for SourcesSpec's driver-contract check. */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 

@@ -34,17 +34,14 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  *    rows — replaying requests instead of results would re-generate ids
  *    and break every cross-reference.
  *  - `checkpoint()` folds the catalog into a parquet snapshot
- *    (`VectorCatalog.save`), points the manifest at it, rolls the
- *    active segment and deletes the logged prefix. `recover()` = load
- *    manifest snapshot (if any) + replay the WAL tail in sequence order.
+ *    (`VectorCatalog.save`), points the manifest at it, deletes the
+ *    snapshot the manifest named before, rolls the active segment and
+ *    deletes the logged prefix. `recover()` = load manifest snapshot
+ *    (if any) + replay the WAL tail in sequence order.
  *  - All paths go through the Hadoop FileSystem API. Writes need the
  *    root's writer lock, an OS file lock, so only `file:` roots take
  *    them; other roots recover read-only. See [[CatalogWal]] for the
  *    segment format, the one-writer rule and the crash rules of replay.
- *  - Streamed ingest (`startIngest`) is deliberately NOT logged here:
- *    Structured Streaming already replays unacknowledged micro-batches
- *    from its own checkpoint on restart; double-logging them would
- *    duplicate rows. Scope: CRUD-facade mutations.
  *
  * The reference holds its state in process dicts with no durability
  * (storage.py keeps everything in memory); this layer is the part a
@@ -116,11 +113,18 @@ final class DurableCatalog private (
     logged(inner.deleteChunk(id))(_ => WalCodec.deleteRecord("chunk_delete", id))
 
   /** Snapshot + manifest swap + log truncation. Crash-ordering: the
-    * snapshot is complete before the manifest points at it, and WAL
-    * segments are deleted only after the manifest commit — a crash at
-    * any point recovers to a consistent state (records the snapshot
-    * already holds are skipped by the seq fence). */
-  def checkpoint(): Unit = logLock.synchronized(wal.checkpoint(inner.save))
+    * snapshot is complete before the manifest points at it, and the old
+    * snapshot and WAL segments are deleted only after the manifest
+    * commit — a crash at any point recovers to a consistent state
+    * (records the snapshot already holds are skipped by the seq fence).
+    * A catalog whose base is still read from the old snapshot folds
+    * first, so deleting that snapshot loses no rows. */
+  def checkpoint(): Unit = logLock.synchronized {
+    wal.checkpoint { snapshot =>
+      inner.detachFromFiles()
+      inner.save(snapshot)
+    }
+  }
 }
 
 object DurableCatalog {
@@ -132,7 +136,7 @@ object DurableCatalog {
       embedder: graft.functions.Embedder = graft.functions.Embedder.default,
       embeddingDim: Int = 64): DurableCatalog = {
     val inner = new VectorCatalog(spark, embedder, embeddingDim)
-    val wal = CatalogWal.open(spark, root)(inner.load) { node =>
+    val wal = inner.replaying(CatalogWal.open(spark, root)(inner.load) { node =>
       node.get("op").asText() match {
         case "lib_create" =>
           inner.restoreLibrary(WalCodec.libFrom(node),
@@ -145,7 +149,7 @@ object DurableCatalog {
         case "chunk_delete" => inner.restoreDeleteChunk(node.get("id").asText())
         case other => throw new IllegalStateException(s"Unknown WAL op: $other")
       }
-    }
+    })
     new DurableCatalog(inner, wal)
   }
 }
@@ -207,6 +211,8 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   private var activePath: Path = null
   private var failure: Throwable = null
 
+  /** The last sequence number written or replayed; kept as
+    * DurabilitySpec's probe of the numbering rules. */
   def lastSeq: Long = seq
 
   def append(record: ObjectNode): Unit = synchronized {
@@ -227,14 +233,16 @@ final class CatalogWal private (spark: SparkSession, root: String) {
   }
 
   /** [[DurableCatalog.checkpoint]] under the writer lock: `save` writes
-    * the snapshot, then the manifest points at it, then the logged
-    * prefix is deleted. */
+    * the snapshot, then the manifest points at it, then the snapshot it
+    * replaces and the logged prefix are deleted. */
   def checkpoint(save: String => Unit): Unit = synchronized {
     exclusively {
       val at = seq
+      val previous = readManifest().map(_._2)
       val snapshot = new Path(root, f"snapshot-$at%020d").toString
       save(snapshot)
       commitManifest(at, snapshot)
+      previous.filter(_ != snapshot).foreach(p => fs.delete(new Path(p), true))
       truncateThrough(at)
     }
   }

@@ -217,7 +217,7 @@ object IndexType {
       * graph can differ from a from-scratch build of the same corpus; it
       * is still a deterministic function of the refresh history. */
     private[catalog] def derive(state: IndexState, d: Derivation): Either[ApiError, IndexState] = {
-      val cap = HnswModel.maxGraphVectors
+      val cap = d.hnswCap
       // a Spark-form library is counted first, so a past-cap library is
       // refused before any embedding reaches the driver
       d.rows.fold(collectBounded(d.chunks.select("id", "embedding", "emb_hash"), cap).map(_.map(r =>
@@ -235,10 +235,10 @@ object IndexType {
               val fresh = live.filterNot(r => known(r._1))
               Some(if (fresh.isEmpty) s
                 else HnswState(s.graph.insertAll(
-                    Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2)),
+                    Array.tabulate(fresh.length)(j => (s.graph.size + j).toLong), fresh.map(_._2), cap),
                   s.chunkIds ++ fresh.map(_._1), s.embHashes ++ fresh.map(_._3)))
             case None => Option.when(live.nonEmpty)(HnswState(HnswModel.fromVectors(
-              Array.tabulate(live.length)(_.toLong), live.map(_._2)), live.map(_._1), live.map(_._3)))
+              Array.tabulate(live.length)(_.toLong), live.map(_._2), cap = cap), live.map(_._1), live.map(_._3)))
           }
           Right(state.copy(hnsw = hnsw))
       }
@@ -442,7 +442,7 @@ object Candidates {
   * any other, the chunk view with emb_hash (`chunks`, its Spark form).
   * Both are read on first use, so a tier that derives nothing (exact)
   * reads neither. */
-private[catalog] final class Derivation(spark: SparkSession, val dim: Int,
+private[catalog] final class Derivation(spark: SparkSession, val dim: Int, val hnswCap: Int,
     chunksOf: => DataFrame, residentOf: => Option[Array[ChunkRow]]) {
   import Derivation.Embedded
 

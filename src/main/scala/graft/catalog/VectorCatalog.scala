@@ -45,12 +45,14 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
  *
  * `driverDerivation` off makes every index tier take its Spark form,
  * even for a resident library: the reference that the driver form is
- * tested and measured against.
+ * tested and measured against. `hnswCap` is the HNSW tier's graph cap,
+ * which a test lowers to reach the cap boundary with a few chunks.
  */
 final class VectorCatalog(val spark: SparkSession,
     val embedder: Embedder = Embedder.default,
     val embeddingDim: Int = 64,
-    private[graft] val driverDerivation: Boolean = true) {
+    private[graft] val driverDerivation: Boolean = true,
+    private[graft] val hnswCap: Int = graft.index.HnswModel.maxGraphVectors) {
   import spark.implicits._
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[VectorCatalog])
 
@@ -71,17 +73,17 @@ final class VectorCatalog(val spark: SparkSession,
   private var base: DataFrame = emptyChunks
   private val upserts = scala.collection.mutable.LinkedHashMap.empty[String, ChunkRow]
   private val chunkTombstones = scala.collection.mutable.HashSet.empty[String]
-  // Cascade tombstones are sequence-stamped (id -> mutationSeq at delete)
-  // so they hide only data that existed at delete time: a streamed batch
-  // appended AFTER a delete+re-create of the same library/document id
-  // must NOT be filtered by the earlier tombstone. chunk-id tombstones
-  // stay global: they implement upsert-wins (hide any older copy of a
-  // re-written id), which IS retroactive by design.
-  private val docTombstones = scala.collection.mutable.HashMap.empty[String, Long]
-  private val libTombstones = scala.collection.mutable.HashMap.empty[String, Long]
-  private var streamedAppends = Vector.empty[(DataFrame, Long)] // (batch, seq at append)
-  private var mutationSeq = 0L
+  // Cascade tombstones hide the base rows of a deleted document or
+  // library. The delete drops the entity's buffered upserts itself, and
+  // rows written after it are upserts too, so a re-created id is never
+  // hidden by its earlier delete.
+  private val docTombstones = scala.collection.mutable.HashSet.empty[String]
+  private val libTombstones = scala.collection.mutable.HashSet.empty[String]
   private var mutationsSinceCompact = 0
+  // `load` set the base to a parquet read that no fold has replaced yet
+  private var baseFromFiles = false
+  // a WAL replay is running (`replaying`): mutations skip the threshold fold
+  private var replay = false
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
   // folded-base rows of each small library — none for a library created
@@ -241,7 +243,6 @@ final class VectorCatalog(val spark: SparkSession,
     val buffered = stateLock.synchronized {
       if (upserts.contains(id)) Some(Right(upserts(id)))
       else if (chunkTombstones.contains(id)) Some(notFound)
-      else if (streamedAppends.nonEmpty) None
       else residentById.get(id).map(r =>
         if (docTombstones.contains(r.document_id) || libTombstones.contains(r.library_id)) notFound
         else Right(r))
@@ -295,8 +296,7 @@ final class VectorCatalog(val spark: SparkSession,
     * when they fit: a library over the cap costs the driver one number,
     * never its rows. One caller per library and epoch runs those jobs;
     * the others wait for it. None when the library must take the Spark
-    * path: it exceeds the resident cap or budget, or streamed batches
-    * are pending. */
+    * path: it exceeds the resident cap or budget. */
   private[graft] def residentView(libraryId: String): Option[Array[ChunkRow]] = {
     val found = stateLock.synchronized {
       var s = snapshot(libraryId)
@@ -354,11 +354,10 @@ final class VectorCatalog(val spark: SparkSession,
     * when the library has not been collected this epoch. Copies only
     * the log entries: the per-row filtering runs outside the lock. */
   private def snapshot(libraryId: String): Either[(DataFrame, Long), Option[ResidentSnapshot]] =
-    if (streamedAppends.nonEmpty) Right(None)
-    else residentRows.get(libraryId) match {
+    residentRows.get(libraryId) match {
       case None => Left((base, baseEpoch))
       case Some(rows) => Right(rows.map(overlay(libraryId, _, chunkTombstones.toSet,
-        docTombstones.keySet.toSet)))
+        docTombstones.toSet)))
     }
 
   /** Under stateLock: `rows` with the library's own log entries. */
@@ -405,7 +404,8 @@ final class VectorCatalog(val spark: SparkSession,
    * k-means is trained once and never retrained after, indexes.py:280).
    * A past-cap HNSW library is refused with the same Validation as
    * `indexLibrary`, and its state is left as it was. The reconcile
-   * releases the table it replaces.
+   * releases the table it replaces. Kept for IndexLifecycleSpec's
+   * refresh contracts.
    */
   def refreshIndex(libraryId: String): Either[ApiError, IndexState] =
     getLibrary(libraryId).flatMap(_ => derive(libraryId, indexes(libraryId))).map { s =>
@@ -422,13 +422,14 @@ final class VectorCatalog(val spark: SparkSession,
     * stale rather than fresh. */
   private def derive(libraryId: String, state: IndexState): Either[ApiError, IndexState] = {
     val at = version.get()
-    val d = new Derivation(spark, embeddingDim,
+    val d = new Derivation(spark, embeddingDim, hnswCap,
       chunksByLibrary(libraryId).filter($"embedding".isNotNull).withColumn("emb_hash", xxhash64($"embedding")),
       if (driverDerivation) residentView(libraryId) else None)
     state.indexType.derive(state, d).map(_.copy(builtAtVersion = at))
   }
 
-  /** True when chunk mutations occurred after the index build. */
+  /** True when chunk mutations occurred after the index build; kept
+    * as the staleness probe of CatalogSpec and IndexLifecycleSpec. */
   def indexStale(libraryId: String): Boolean =
     indexes.get(libraryId).exists(s => s.builtAtVersion < version.get() && s.builtAtVersion >= 0)
 
@@ -439,10 +440,10 @@ final class VectorCatalog(val spark: SparkSession,
     "documents" -> documents.size.toLong,
     "chunks" -> chunks.count())
 
-  /** Orphan checks (storage.py:278-306) as anti-joins. */
+  /** Orphan checks (storage.py:278-306) as anti-joins; kept as the
+    * reference's oracle for CatalogSpec's cascade tests. */
   def validateRelationships(): Map[String, Long] = {
     val docIds = documents.keys.toSeq.toDF("id")
-    val libIds = libraries.keys.toSeq.toDF("id")
     val orphanChunks = chunks.join(docIds, chunks("document_id") === docIds("id"), "left_anti").count()
     val orphanDocs = documents.values.count(d => !libraries.contains(d.library_id)).toLong
     Map("orphan_chunks" -> orphanChunks, "orphan_documents" -> orphanDocs)
@@ -467,9 +468,11 @@ final class VectorCatalog(val spark: SparkSession,
   // ---- WAL replay hooks (DurableCatalog). Replay must reproduce the
   // EXACT post-op state, so these restore logged results verbatim —
   // no id/timestamp generation, no existence-check Spark jobs — while
-  // still flowing through `mutate` so staleness versions and
-  // compaction behave as in the original run. The public deletes run
-  // their existence check, then the same restore body.
+  // still flowing through `mutate` so staleness versions advance as in
+  // the original run. A fold is invisible to reads, so a replay folds
+  // once at its end (`replaying`), not every `compactEvery` records.
+  // The public deletes run their existence check, then the same
+  // restore body.
   private[graft] def restoreLibrary(row: LibraryRow, indexType: Option[IndexType]): Unit = {
     libraries.put(row.id, row)
     indexType.foreach { it =>
@@ -490,14 +493,14 @@ final class VectorCatalog(val spark: SparkSession,
     documents.filterInPlace { case (_, d) => d.library_id != id }
     mutate {
       upserts.filterInPlace((_, c) => c.library_id != id)
-      libTombstones(id) = mutationSeq
+      libTombstones += id
     }
   }
   private[graft] def restoreDeleteDocument(id: String): Unit = {
     documents.remove(id)
     mutate {
       upserts.filterInPlace((_, c) => c.document_id != id)
-      docTombstones(id) = mutationSeq
+      docTombstones += id
     }
   }
   private[graft] def restoreDeleteChunk(id: String): Unit =
@@ -509,37 +512,39 @@ final class VectorCatalog(val spark: SparkSession,
     indexes.get(libraryId).map(_.indexType)
 
   /** Apply a buffered mutation under the state lock, bump the index-
-    * staleness version, and fold the log when it crosses the threshold. */
+    * staleness version, and fold the log when it crosses the threshold
+    * (outside a WAL replay). */
   private def mutate(f: => Unit): Unit = stateLock.synchronized {
-    mutationSeq += 1
     f
     version.incrementAndGet()
     mutationsSinceCompact += 1
-    if (mutationsSinceCompact >= compactEvery) compactLocked()
+    if (!replay && mutationsSinceCompact >= compactEvery) compactLocked()
   }
 
   private val compactEvery = 64
 
-  /** The read view: base minus tombstones, plus streamed batches, plus
-    * buffered upserts. Constant plan depth regardless of CRUD history.
-    * Callers hold stateLock; the returned plan is an immutable snapshot
-    * (buffer contents are copied into it). */
+  /** Run `body`, a WAL replay through the restore hooks, without the
+    * threshold fold, then fold once if the replay crossed it. */
+  private[graft] def replaying[A](body: => A): A = stateLock.synchronized {
+    replay = true
+    val out = try body finally replay = false
+    if (mutationsSinceCompact >= compactEvery) compactLocked()
+    out
+  }
+
+  /** Fold the log when the base is still the parquet read `load` made,
+    * so the files it was loaded from can be deleted. */
+  private[graft] def detachFromFiles(): Unit =
+    stateLock.synchronized(if (baseFromFiles) compactLocked())
+
+  /** The read view: base minus tombstones, plus buffered upserts.
+    * Constant plan depth regardless of CRUD history. Callers hold
+    * stateLock; the returned plan is an immutable snapshot (buffer
+    * contents are copied into it). */
   private def assembleView(): DataFrame = {
-    // Cascade tombstones hide only rows that existed when the delete ran:
-    // base predates everything; a streamed batch is filtered only by
-    // tombstones stamped after its append seq. chunk-id tombstones
-    // (upsert-wins) apply everywhere.
-    def cascadeFiltered(df: DataFrame, appendedAt: Long): DataFrame = {
-      var v = df
-      val dt = docTombstones.collect { case (id, s) if s > appendedAt => id }.toSeq
-      val lt = libTombstones.collect { case (id, s) if s > appendedAt => id }.toSeq
-      if (dt.nonEmpty) v = v.filter(!$"document_id".isin(dt: _*))
-      if (lt.nonEmpty) v = v.filter(!$"library_id".isin(lt: _*))
-      v
-    }
-    val parts = cascadeFiltered(base, Long.MinValue) +:
-      streamedAppends.map { case (df, seq) => cascadeFiltered(df, seq) }
-    var v = parts.reduce(_.unionByName(_))
+    var v = base
+    if (docTombstones.nonEmpty) v = v.filter(!$"document_id".isin(docTombstones.toSeq: _*))
+    if (libTombstones.nonEmpty) v = v.filter(!$"library_id".isin(libTombstones.toSeq: _*))
     if (chunkTombstones.nonEmpty) v = v.filter(!$"id".isin(chunkTombstones.toSeq: _*))
     if (upserts.isEmpty) v
     else v.unionByName(spark.createDataFrame(
@@ -551,65 +556,24 @@ final class VectorCatalog(val spark: SparkSession,
 
   private def compactLocked(): Unit = {
     // a resident library's visible rows are exactly what the fold
-    // writes for it, so they become its snapshot in the new epoch;
-    // streamed batches fold rows no snapshot holds, so nothing carries
-    // past them. A library deleted and not re-created has nothing left.
-    val carried =
-      if (streamedAppends.nonEmpty) Nil
-      else residentRows.toList.flatMap { case (lib, rows) =>
-        rows.map(rs => lib -> overlay(lib, rs, chunkTombstones, docTombstones.keySet).visible)
-      }.filter { case (lib, rows) => rows.nonEmpty || !libTombstones.contains(lib) }
+    // writes for it, so they become its snapshot in the new epoch. A
+    // library deleted and not re-created has nothing left.
+    val carried = residentRows.toList.flatMap { case (lib, rows) =>
+      rows.map(rs => lib -> overlay(lib, rs, chunkTombstones, docTombstones).visible)
+    }.filter { case (lib, rows) => rows.nonEmpty || !libTombstones.contains(lib) }
     // fold the buffer into the existing partitions: the base must not
     // gain partitions with every fold, and keeps the view's row order,
     // the order of every carried snapshot (base rows, then upserts)
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      (base +: streamedAppends.map(_._1)).map(_.rdd.getNumPartitions).sum)
+    val parts = math.max(spark.sparkContext.defaultParallelism, base.rdd.getNumPartitions)
     base = org.apache.spark.sql.graft.Bridge.coalesceInOrder(assembleView(), parts).localCheckpoint(true)
+    baseFromFiles = false
     dropResident()
     carried.foreach { case (lib, rows) => if (admissible(rows.length)) install(lib, Some(rows)) }
     upserts.clear()
     chunkTombstones.clear()
     docTombstones.clear()
     libTombstones.clear()
-    streamedAppends = Vector.empty
     mutationsSinceCompact = 0
-  }
-
-  /**
-   * Streaming ingest (SURVEY.md §7.11): append chunk-shaped micro-
-   * batches into the catalog. The stream must carry the chunks schema
-   * minus embedding (text is embedded per batch with the catalog's
-   * embedder, mirroring embed-at-insert). Each micro-batch is one
-   * append + staleness bump; indexes reconcile via refreshIndex.
-   */
-  def startIngest(stream: DataFrame, queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val e = embedder // local binding: the udf must not capture `this`
-    val embedUdf = org.apache.spark.sql.functions.udf(
-      (text: String) => e.embed(Seq(text)).head)
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Validate against the LIVE registries at append time: a late
-        // batch for a deleted (and not re-created) library/document must
-        // not become permanently-visible orphan chunks — its sequence
-        // stamp postdates the cascade tombstone, so nothing downstream
-        // would ever hide it. The registry snapshot is driver-side
-        // dimension data (thousands of (doc, lib) pairs): broadcast
-        // semi-join, no shuffle of the batch.
-        val validPairs = documents.values
-          .map(d => (d.id, d.library_id)).toSeq
-          .toDF("document_id", "library_id")
-        val withEmb = batch
-          .join(broadcast(validPairs), Seq("document_id", "library_id"), "left_semi")
-          .withColumn("embedding", embedUdf(col("text")))
-          .select(Schemas.chunks.fieldNames.toIndexedSeq.map(col): _*)
-        // localCheckpoint: the micro-batch source is transient; pin the
-        // rows so the catalog's chunk table outlives the batch
-        val pinned = withEmb.localCheckpoint(true)
-        mutate { streamedAppends :+= ((pinned, mutationSeq)) }
-      }
-      .start()
   }
 
   /** Persist built index state alongside `save`, each library through
@@ -659,8 +623,8 @@ final class VectorCatalog(val spark: SparkSession,
         .select(Schemas.chunks.fieldNames.toIndexedSeq.map(col): _*)
       upserts.clear(); chunkTombstones.clear()
       docTombstones.clear(); libTombstones.clear()
-      streamedAppends = Vector.empty
       mutationsSinceCompact = 0
+      baseFromFiles = true
       dropResident()
     }
     libraries.clear()

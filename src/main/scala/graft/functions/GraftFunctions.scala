@@ -54,7 +54,8 @@ object GraftFunctions {
   def bounded_topk(item: Column, k: Int): Column =
     Bridge.column(BoundedTopK(Bridge.expression(item), k).toAggregateExpression())
 
-  /** Register every graft expression for SQL (`SELECT cosine_sim(a,b) ...`). */
+  /** Register every graft expression for SQL (`SELECT cosine_sim(a,b) ...`);
+    * kept as README's programmatic registration, which VectorOpsSpec runs. */
   def registerAll(spark: SparkSession): Unit = {
     Bridge.registerFunction(spark, "cosine_sim", es => CosineSimilarity(es(0), es(1)))
     Bridge.registerFunction(spark, "euclidean_dist", es => EuclideanDistance(es(0), es(1)))

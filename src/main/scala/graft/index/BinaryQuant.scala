@@ -78,9 +78,9 @@ object BinaryQuant {
    * near-linear. A corpus whose sign distribution is skewed enough to
    * make a band value hot (a constant-sign dim region puts the WHOLE
    * corpus in one band group — W²/2 pairs in one task) gets the LSH
-   * hot-bucket treatment: groups wider than the derived
-   * [[graft.model.GraftConfig.binaryMaxBandWidth]] (≈724 — W²/2 equals
-   * the per-task candidate budget) are thinned to ~cap members by a
+   * hot-bucket treatment: groups wider than `maxBandWidth` (default
+   * the derived [[graft.model.GraftConfig.binaryMaxBandWidth]], ≈724 —
+   * W²/2 equals the per-task candidate budget) are thinned to ~cap members by a
    * seeded deterministic id-hash. Thinning is SURVIVAL-AWARE in the
    * dedup: each row carries a bitmask of the bands it survived, and
    * the canonical filter defers a pair to an earlier shared band ONLY
@@ -161,7 +161,8 @@ object BinaryQuant {
   }
 
   def hammingNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
-      dim: Int, maxHamming: Int, minCosine: Double): DataFrame = {
+      dim: Int, maxHamming: Int, minCosine: Double,
+      maxBandWidth: Int = graft.model.GraftConfig.binaryMaxBandWidth): DataFrame = {
     val w = bandWidth(dim, maxHamming)
     val nb = dim / w
     val exploded = explodedBands(corpus, idCol, embCol, dim, maxHamming)
@@ -169,7 +170,7 @@ object BinaryQuant {
     // exchange (ReusedExchange); hot groups are rare by construction
     // (expected width n/2^w for random signs), so this is a cheap
     // driver decision, and the common case keeps last round's plan
-    val cap = graft.model.GraftConfig.binaryMaxBandWidth
+    val cap = maxBandWidth
     val widths = exploded.groupBy("b", "v").agg(count(lit(1)).as("__w"))
     val hot = widths.filter(col("__w") > cap)
     val hotN = hot.count()

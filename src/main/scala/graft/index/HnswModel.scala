@@ -64,13 +64,13 @@ final class HnswModel private[index] (
 
   def size: Int = ids.length
 
-  /** Vector dimensionality (0 for an empty graph) — lets consumers
-    * (e.g. the AnnTopKProbe rule) refuse a dimension-mismatched query. */
+  /** Vector dimensionality (0 for an empty graph). */
   def dim: Int = if (vectors.isEmpty) 0 else vectors(0).length
 
   /** Structural fingerprint of the whole graph (ids, adjacency, entry,
-    * top level) — lets tests assert two graphs are identical (e.g.
-    * insertAll vs fresh build) without exposing the internals. */
+    * top level) — kept so AnnRecallSpec can assert two graphs are
+    * identical (e.g. insertAll vs fresh build) without exposing the
+    * internals. */
   def structureHash: Int = {
     import scala.util.hashing.MurmurHash3
     MurmurHash3.orderedHash(Seq(
@@ -161,15 +161,15 @@ final class HnswModel private[index] (
    * recorded (m, efConstruction, seed) reproduce the original
    * construction parameters.
    */
-  def insertAll(newIds: Array[Long], newVecs: Array[Array[Float]]): HnswModel = {
+  def insertAll(newIds: Array[Long], newVecs: Array[Array[Float]],
+      cap: Int = HnswModel.maxGraphVectors): HnswModel = {
     require(paramsKnown,
       "HnswModel.insertAll: build params were assumed (pre-params " +
         "persistence format), so the seeded insert sequence cannot be " +
         "continued bit-identically — rebuild the graph instead")
     require(newIds.length == newVecs.length, "ids/vectors length mismatch")
-    require(size + newIds.length <= HnswModel.maxGraphVectors,
-      s"HnswModel holds bounded driver state: ${size + newIds.length} > " +
-        s"${HnswModel.maxGraphVectors}")
+    require(size + newIds.length <= cap,
+      s"HnswModel holds bounded driver state: ${size + newIds.length} > $cap")
     if (newIds.isEmpty) return this
     val b = new HnswBuilder(m, efConstruction, seed, normalized)
     b.restore(ids, vectors, neighbors, entryPoint, topLevel)
@@ -364,10 +364,10 @@ object HnswModel {
     * genuinely fits). 200k x dim 64 floats ≈ 51 MB of vectors + the
     * adjacency — comfortably broadcastable; anything larger belongs in
     * the IVF(-PQ) data plane with HNSW on top as coarse quantizer.
-    * (GraftConfig var, defaulted to 200000, so the cap boundary is
-    * testable; a 200k build at the real cap is measured in
-    * RECALL_SF10.md.) */
-  def maxGraphVectors: Int = graft.model.GraftConfig.hnswMaxGraphVectors
+    * The default `cap` of the builds, which a test lowers to reach the
+    * boundary; a 200k build at the real cap is measured in
+    * RECALL_SF10.md. */
+  val maxGraphVectors: Int = graft.model.GraftConfig.hnswMaxGraphVectors
 
   private[index] def unit(v: Array[Float]): Array[Float] = {
     var s = 0.0; var i = 0
@@ -382,18 +382,18 @@ object HnswModel {
     }
   }
 
-  /** Build from a DataFrame: collects up to `maxGraphVectors` (id,
-    * embedding) rows sorted by id (deterministic insertion order). */
+  /** Build from a DataFrame: collects up to `cap` (id, embedding) rows
+    * sorted by id (deterministic insertion order). */
   def build(df: DataFrame, idCol: String, embCol: String, m: Int = 16,
       efConstruction: Int = 200, seed: Long = 42L,
-      normalize: Boolean = true): HnswModel = {
+      normalize: Boolean = true, cap: Int = maxGraphVectors): HnswModel = {
     val rows = df.filter(col(embCol).isNotNull)
       .select(col(idCol).cast("long"), col(embCol).cast("array<float>"))
       .orderBy(col(idCol))
-      .limit(maxGraphVectors)
+      .limit(cap)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    fromVectors(rows.map(_._1), rows.map(_._2), m, efConstruction, seed, normalize)
+    fromVectors(rows.map(_._1), rows.map(_._2), m, efConstruction, seed, normalize, cap)
   }
 
   /** Build over IVF centroids (cell id = centroid index) — the coarse
@@ -454,11 +454,11 @@ object HnswModel {
     * seeded sequence `insertAll` later continues). */
   def fromVectors(rawIds: Array[Long], rawVecs: Array[Array[Float]],
       m: Int = 16, efConstruction: Int = 200, seed: Long = 42L,
-      normalize: Boolean = true): HnswModel = {
+      normalize: Boolean = true, cap: Int = maxGraphVectors): HnswModel = {
     require(rawIds.length == rawVecs.length, "ids/vectors length mismatch")
     require(rawIds.nonEmpty, "HnswModel: no vectors")
-    require(rawIds.length <= maxGraphVectors,
-      s"HnswModel holds bounded driver state: ${rawIds.length} > $maxGraphVectors")
+    require(rawIds.length <= cap,
+      s"HnswModel holds bounded driver state: ${rawIds.length} > $cap")
     val b = new HnswBuilder(m, efConstruction, seed, normalize)
     var i = 0
     while (i < rawIds.length) { b.insert(rawIds(i), rawVecs(i)); i += 1 }

@@ -44,28 +44,23 @@ final case class IvfModel(centroids: Array[Array[Float]]) {
     * [[trainDistributed]]'s `approxAssignEf` for the use case. */
   def assignColumnApprox(emb: Column, ef: Int = 64): Column =
     Bridge.column(org.apache.spark.sql.graft.expressions.HnswNearestCell(
-      Bridge.expression(emb),
-      coarseGraph.getOrElse(HnswModel.overCentroids(this)), ef))
+      Bridge.expression(emb), coarseGraph, ef))
 
   /** HNSW graph over the centroids, built lazily (seeded, deterministic)
-    * once `nlist` crosses [[GraftConfig.hnswCoarseMinNlist]] — at
-    * billion-vector scale nlist grows to ~sqrt(n) and the linear
-    * centroid scan below becomes the per-query bottleneck; the graph
-    * answers the same top-`nprobe` selection in O(log nlist) hops
-    * (FAISS's IndexHNSWFlat-as-coarse-quantizer composition). Driver
-    * state either way; the threshold is read once at first probe. */
-  @transient private lazy val coarseGraph: Option[HnswModel] =
-    if (nlist >= GraftConfig.hnswCoarseMinNlist) Some(HnswModel.overCentroids(this))
-    else None
+    * on first use. */
+  @transient private lazy val coarseGraph: HnswModel = HnswModel.overCentroids(this)
 
   /** Driver-side top-`nprobe` centroid ids (indexes.py:346-349): exact
-    * linear scan at reference-scale nlist, HNSW navigation past the
-    * config threshold. */
-  def probe(query: Array[Float], nprobe: Int = GraftConfig.ivfNprobe): Seq[Int] =
-    coarseGraph match {
-      case Some(g) => g.probeCells(query, math.max(1, nprobe))
-      case None => probeLinear(query, nprobe)
-    }
+    * linear scan at reference-scale nlist, navigation of the HNSW graph
+    * over the centroids once `nlist` reaches `coarseMinNlist` — at
+    * billion-vector scale nlist grows to ~sqrt(n) and the linear
+    * centroid scan becomes the per-query bottleneck; the graph answers
+    * the same top-`nprobe` selection in O(log nlist) hops (FAISS's
+    * IndexHNSWFlat-as-coarse-quantizer composition). */
+  def probe(query: Array[Float], nprobe: Int = GraftConfig.ivfNprobe,
+      coarseMinNlist: Int = GraftConfig.hnswCoarseMinNlist): Seq[Int] =
+    if (nlist >= coarseMinNlist) coarseGraph.probeCells(query, math.max(1, nprobe))
+    else probeLinear(query, nprobe)
 
   /** The exact (brute-force) centroid scan, kept callable for
     * differential tests against the graph path. */

@@ -80,28 +80,4 @@ final case class LshModel(
     signatures.filter(col("bucket").isin(qBuckets.toIndexedSeq.map(Long.box): _*))
       .select("id").dropDuplicates("id")
   }
-
-  /**
-   * Batch candidate generation — one bucket EQUI-JOIN for a whole
-   * DataFrame of queries (the per-query `candidates` filter does not
-   * scale to a query batch: N driver round-trips and N scans). Both
-   * sides explode to (key, bucket) rows and hash-join on `bucket`;
-   * with the signatures table bucketed/partitioned by `bucket` the
-   * join co-locates, and the output is the distinct (query_id, id)
-   * candidate pair set for a downstream per-query exact rerank —
-   * the same two-tier contract as `IvfModel`'s batch probe and
-   * `HnswModel.knnCandidates`.
-   *
-   * Differential contract: for each query row, the candidate id set
-   * equals `candidates(signatures, thatVector)` exactly (same bucket
-   * expression on both paths; OperatorSpec asserts it).
-   */
-  def batchCandidates(signatures: DataFrame, queries: DataFrame,
-      qidCol: String, embCol: String): DataFrame = {
-    val qb = queries.filter(col(embCol).isNotNull)
-      .select(col(qidCol).as("query_id"),
-        explode(bucketsColumn(col(embCol))).as("bucket"))
-    qb.join(signatures, Seq("bucket"))
-      .select("query_id", "id").dropDuplicates("query_id", "id")
-  }
 }

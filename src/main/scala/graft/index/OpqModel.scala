@@ -54,7 +54,7 @@ final case class OpqModel(rotation: Array[Array[Float]], pq: PqModel) {
     pq.candidates(encoded, codesCol, rotate(query), n, idCol)
 
   /** Mean squared reconstruction error of the model on a sample —
-    * the training objective, exposed for tests/reports. */
+    * the training objective; kept as AnnRecallSpec's OPQ oracle. */
   def quantizationError(vecs: Array[Array[Float]]): Double = {
     val errs = vecs.map { x =>
       val rx = rotate(x)

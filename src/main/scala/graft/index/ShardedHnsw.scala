@@ -163,7 +163,7 @@ object ShardedHnsw {
 
   /** Build from a corpus of any size. `targetShardRows` sizes the
     * router (expected shard ≈ one task's graph); skewed shards chunk
-    * at [[HnswModel.maxGraphVectors]] rather than fail. `replicas` > 1
+    * at `cap` (default [[HnswModel.maxGraphVectors]]) rather than fail. `replicas` > 1
     * assigns each vector to its top-R nearest shards (the SPANN-style
     * boundary replication): a query probing a shard then sees the
     * boundary neighbors a hard partition would have hidden in the
@@ -172,7 +172,8 @@ object ShardedHnsw {
       targetShardRows: Int = 100000, m: Int = 16,
       efConstruction: Int = 200, seed: Long = 42L,
       normalize: Boolean = true, maxShards: Int = 65536,
-      replicas: Int = 2, router0: Option[IvfModel] = None): ShardedHnsw = {
+      replicas: Int = 2, router0: Option[IvfModel] = None,
+      cap: Int = HnswModel.maxGraphVectors): ShardedHnsw = {
     val spark = corpus.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.graft.Bridge
@@ -187,8 +188,7 @@ object ShardedHnsw {
         math.max(2L, (n + targetShardRows - 1) / targetShardRows)).toInt
       IvfModel.train(rows, "v", nlist = nShards, seed = seed)
     }
-    val cap = HnswModel.maxGraphVectors
-    val (mm, efc, sd, nrm) = (m, efConstruction, seed, normalize)
+    val (mm, efc, sd, nrm, c) = (m, efConstruction, seed, normalize, cap)
     val r = math.max(1, replicas)
     val nodes = rows
       .withColumn("sids", Bridge.column(NearestCentroids(
@@ -198,9 +198,9 @@ object ShardedHnsw {
       .groupByKey(_._1)
       .flatMapGroups { (sid, it) =>
         val members = it.map(t => (t._2, t._3)).toArray.sortBy(_._1)
-        members.grouped(cap).zipWithIndex.flatMap { case (chunk, gi) =>
+        members.grouped(c).zipWithIndex.flatMap { case (chunk, gi) =>
           val g = HnswModel.fromVectors(chunk.map(_._1), chunk.map(_._2),
-            mm, efc, sd, nrm)
+            mm, efc, sd, nrm, c)
           g.ids.indices.iterator.map { i =>
             ShardNode(sid, gi, i, g.ids(i), g.vectors(i), g.neighbors(i),
               g.entryPoint, g.topLevel)

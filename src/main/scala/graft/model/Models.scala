@@ -134,13 +134,14 @@ object GraftConfig {
     * (IvfModel.coarseGraph). 1024 keeps every reference-scale index
     * (nlist=100, config.py:31) on the exact scan while the ~sqrt(n)
     * nlist of a billion-vector deployment gets O(log nlist) probes.
-    * Read once per model at first probe. */
-  @volatile var hnswCoarseMinNlist: Int = 1024
+    * The default of `IvfModel.probe`'s threshold parameter. */
+  val hnswCoarseMinNlist: Int = 1024
   /** Driver/broadcast budget for a direct HNSW graph
-    * (HnswModel.maxGraphVectors). Var so the cap-boundary behavior
+    * (HnswModel.maxGraphVectors): the default of the cap parameter of
+    * the graph builds and of `VectorCatalog`, so the cap boundary
     * (build at cap; loud refusal past it) is testable without a
-    * 200k-vector build; production leaves the default. */
-  @volatile var hnswMaxGraphVectors: Int = 200000
+    * 200k-vector build. */
+  val hnswMaxGraphVectors: Int = 200000
   /** k<=0 => default, k>max => max (config.py:62-68). */
   def clampK(k: Int): Int = if (k <= 0) defaultK else math.min(k, maxK)
 
@@ -166,10 +167,8 @@ object GraftConfig {
     * budget rationale as lshTargetBucketCandidates: 2^18 integer
     * Hamming verifies is well under a second on a core. */
   val binaryTargetBandCandidates: Int = 1 << 18
-  /** Optional FIXED hot-band width cap (tests / cluster tuning);
-    * <= 0 means derive from the candidate-mass model above. */
-  @volatile var binaryMaxBandWidthOverride: Int = 0
-  /** Hot-band width cap: band groups wider than this are thinned to
+  /** Hot-band width cap (the default of `hammingNearDupPairs`'s
+    * `maxBandWidth`): band groups wider than this are thinned to
     * ~this width by a seeded deterministic id-hash filter (the LSH
     * hot-bucket treatment — FAISS max_codes-style bounded work).
     * Derived: W²/2 = binaryTargetBandCandidates ⇒ W = √(2·2^18) ≈ 724.
@@ -182,9 +181,7 @@ object GraftConfig {
     * occurrence (the survival-aware canonical filter in
     * hammingNearDupPairs makes thinning lose ONLY hot-band-confined
     * pairs, never cascade). */
-  def binaryMaxBandWidth: Int =
-    if (binaryMaxBandWidthOverride > 0) binaryMaxBandWidthOverride
-    else math.max(1, math.sqrt(2.0 * binaryTargetBandCandidates).toInt)
+  val binaryMaxBandWidth: Int = math.max(1, math.sqrt(2.0 * binaryTargetBandCandidates).toInt)
 
   /** Target EXPECTED ids per LSH bucket per table for auto-sized bucket
     * bits (Similarity.autoBits): bits = ceil(log2(n / target)), i.e.
@@ -207,11 +204,8 @@ object GraftConfig {
     * ≈ 17 MFLOP at dim 64: tens of milliseconds on a core, so even an
     * all-hot-bucket adversarial partition stays a sub-second task. */
   val lshTargetBucketCandidates: Int = 1 << 18
-  /** Optional FIXED hot-bucket width cap (tests / cluster tuning);
-    * <= 0 means derive from the candidate-mass model below. */
-  @volatile var lshMaxBucketWidthOverride: Int = 0
   /** Hot-bucket width cap for the bulk LSH kNN join
-    * (Similarity.lshKnnJoin): corpus buckets wider than this (DISTINCT
+    * (the default of Similarity.lshKnnJoin's `maxBucketWidth`): corpus buckets wider than this (DISTINCT
     * vectors — identical ones are exact-collapsed first) are thinned to
     * ~this width by a seeded deterministic id-hash filter; the standard
     * bounded-probe recall trade (FAISS max_codes).
@@ -229,10 +223,8 @@ object GraftConfig {
     * WITH the occupancy target: denser buckets (higher target) mean
     * more queries share each bucket, and the cap shrinks to hold the
     * per-task mass budget constant. */
-  def lshMaxBucketWidth: Int =
-    if (lshMaxBucketWidthOverride > 0) lshMaxBucketWidthOverride
-    else math.max(1,
-      lshTargetBucketCandidates / math.max(1, lshTargetIdsPerBucket))
+  val lshMaxBucketWidth: Int =
+    math.max(1, lshTargetBucketCandidates / math.max(1, lshTargetIdsPerBucket))
   /** k-means assignment routing for large-k distributed training
     * (SemDedup.trainModel → IvfModel.trainDistributed): past this k,
     * Lloyd passes assign via the HNSW-routed approximate path
@@ -246,8 +238,9 @@ object GraftConfig {
     * the REAL break-even near k ≈ 4.5·ef·(log2 k + 4) ≈ 6000. 8192
     * adds margin and sits above the SemDedup maxAutoNlist clamp
     * (4096), so auto-sized trains stay on the codegen path and only
-    * explicitly-huge k routes through the graph. */
-  @volatile var approxAssignMinK: Int = 8192
+    * explicitly-huge k routes through the graph. The default of
+    * SemDedup.trainModel's `approxAssignMinK`. */
+  val approxAssignMinK: Int = 8192
   /** ef for the HNSW-routed approximate assignment above. */
   val approxAssignEf: Int = 64
 
@@ -265,8 +258,9 @@ object GraftConfig {
     * same parity band the sampled A-B established as acceptable).
     * Overhead roughly halves the flop advantage, so ratio 2 ≈ wall
     * break-even, and 3 adds margin. Double.MaxValue disables the
-    * route (always exact). */
-  @volatile var miniBatchTrainMargin: Double = 3.0
+    * route (always exact). The default of SemDedup.trainModel's
+    * `miniBatchMargin`. */
+  val miniBatchTrainMargin: Double = 3.0
 
   /** An LSH sizing + probe preset (tables x bits, multi-probe flips). */
   final case class LshPreset(numTables: Int, bitsPerTable: Int, flips: Int)

@@ -172,16 +172,4 @@ object VideoDemux {
     }
     bos.toByteArray
   }
-
-  /** Minimal Y4M writer: header + raw C420 frames (each `w*h*3/2`
-    * bytes, Y then quarter-res U, V planes). */
-  def writeY4M(w: Int, h: Int, frames: Seq[Array[Byte]]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bos.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420\n".getBytes("US-ASCII"))
-    frames.foreach { f =>
-      bos.write("FRAME\n".getBytes("US-ASCII"))
-      bos.write(f)
-    }
-    bos.toByteArray
-  }
 }

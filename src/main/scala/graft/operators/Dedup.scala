@@ -143,27 +143,6 @@ object Dedup {
   }
 
   /**
-   * SimHash near-dup candidate pairs within Hamming distance
-   * `maxHamming` (<= 3 guaranteed found with 4 chunks by pigeonhole).
-   */
-  def simHashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, seed: Long = 42L): DataFrame = {
-    val withSim = df.select(col(idCol).as("id"),
-      simhash(TextAnalysis.tokens(col(textCol)), seed).as("sim"))
-    // 4 16-bit chunks; near-dups share at least one chunk
-    val chunked = withSim.select(col("id"), col("sim"),
-      explode(array((0 until 4).map(c =>
-        struct(lit(c).as("chunk_idx"),
-          shiftright(col("sim"), c * 16).bitwiseAND(lit(0xffffL)).as("chunk_val"))): _*))
-        .as("chunk"))
-      .select(col("id"), col("sim"), col("chunk.chunk_idx"), col("chunk.chunk_val"))
-    bucketPairs(chunked, Seq("chunk_idx", "chunk_val"), payload = Seq("sim"))
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
-  /**
    * Exact n-gram Jaccard similarity pairs via shingle inverted index:
    * explode distinct shingles, self-join on shingle, count common
    * shingles per pair, then Jaccard = common / (|A| + |B| - common).
@@ -586,20 +565,6 @@ object Dedup {
       // diverge, and ReuseExchange silently stops deduping the
       // tokenize pipeline (it runs twice)
       .filter(col("span_hash").isNotNull)
-
-  /**
-   * Repeated token spans across the corpus: spans of `spanTokens`
-   * tokens (every `stride`) whose fingerprint occurs in >= `minDocs`
-   * distinct documents — the detection half of substring-level dedup
-   * (memorization-prone boilerplate: licenses, headers, templates).
-   * Output: (span_hash, n_docs, n_occ).
-   */
-  def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
-      spanTokens: Int = 8, stride: Int = 4, minDocs: Int = 2): DataFrame =
-    spanTable(df, idCol, textCol, spanTokens, stride)
-      .groupBy("span_hash")
-      .agg(countDistinct(col(idCol)).as("n_docs"), count(lit(1)).as("n_occ"))
-      .filter(col("n_docs") >= minDocs)
 
   /**
    * Per-document repetition profile: how much of each document is made

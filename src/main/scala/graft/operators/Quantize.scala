@@ -30,7 +30,8 @@ object Quantize {
   def int8Scale(emb: Column): Column =
     Bridge.column(Int8Scale(Bridge.expression(emb)))
 
-  /** Reconstruct approximate floats: x_i ~ q_i / scale. */
+  /** Reconstruct approximate floats: x_i ~ q_i / scale. Kept as the
+    * int8 round-trip reference of AnnRecallSpec. */
   def dequantizeInt8(qvec: Column, scale: Column): Column =
     when(scale === 0.0, transform(qvec, _ => lit(0.0f)))
       .otherwise(transform(qvec, q => (q.cast("double") / scale).cast("float")))

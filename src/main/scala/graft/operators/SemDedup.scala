@@ -142,7 +142,9 @@ object SemDedup {
     * executor-side codegen. */
   def trainModel(df: DataFrame, embCol: String, nlist: Int = 0,
       seed: Long = 42L, maxIter: Int = 10,
-      maxAutoNlist: Int = 4096): IvfModel = {
+      maxAutoNlist: Int = 4096,
+      miniBatchMargin: Double = graft.model.GraftConfig.miniBatchTrainMargin,
+      approxAssignMinK: Int = graft.model.GraftConfig.approxAssignMinK): IvfModel = {
     val n = graft.sources.TableStats.rowCountForSizing(df)
     val k =
       if (nlist > 0) nlist
@@ -163,7 +165,7 @@ object SemDedup {
       val exactPasses = math.min(maxIter, 6)
       val flopRatio = exactPasses.toDouble * n /
         (IvfModel.miniBatchIters.toDouble * IvfModel.miniBatchRows(k))
-      if (flopRatio >= graft.model.GraftConfig.miniBatchTrainMargin)
+      if (flopRatio >= miniBatchMargin)
         IvfModel.trainMiniBatch(df, embCol, nlist = k, seed = seed, nHint = n)
       else {
         // Exact regime. Within it, large-k Lloyd's per-row cost is the
@@ -175,7 +177,7 @@ object SemDedup {
         // w.r.t. the assignment it made; inertia parity gated in
         // IvfTrainSpec).
         val ef =
-          if (k >= graft.model.GraftConfig.approxAssignMinK)
+          if (k >= approxAssignMinK)
             graft.model.GraftConfig.approxAssignEf
           else 0
         IvfModel.trainDistributed(df, embCol, nlist = k,

@@ -25,15 +25,4 @@ object Sessionize {
       .withColumn("session_id", sum(col("__new_session")).over(w) - 1)
       .drop("__prev_ts", "__new_session")
   }
-
-  /** Per-session aggregates: bounds, event count, value sum. */
-  def sessionStats(events: DataFrame, userCol: String, tsCol: String,
-      valueCol: String, gapSeconds: Long, tieBreak: String): DataFrame =
-    sessionize(events, userCol, tsCol, gapSeconds, tieBreak)
-      .groupBy(col(userCol), col("session_id"))
-      .agg(
-        min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        count(lit(1)).as("n_events"),
-        sum(col(valueCol)).as("value_sum"))
 }

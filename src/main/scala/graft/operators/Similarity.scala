@@ -152,7 +152,7 @@ object Similarity {
    *     that precedes k members of kept groups (LshSkewSpec asserts
    *     output parity with brute force on adversarial corpora).
    *  2. Bucket width cap: DISTINCT-vector buckets wider than
-   *     [[graft.model.GraftConfig.lshMaxBucketWidth]] are thinned to
+   *     `maxBucketWidth` are thinned to
    *     ~that width by a seeded deterministic id-hash filter, bounding
    *     any single bucket's candidate mass at |q_bucket|·cap — the
    *     bounded-probe recall trade (FAISS `max_codes`). Inert below the
@@ -167,16 +167,19 @@ object Similarity {
    *   recall gain that otherwise needs more tables (more corpus-side
    *   exchange). 0 = classic single-probe. Candidates are a strict
    *   superset of the single-probe set, so recall never decreases
-   *   (asserted in AnnRecallSpec). */
+   *   (asserted in AnnRecallSpec).
+   * @param maxBucketWidth the hot-bucket width cap (default
+   *   [[graft.model.GraftConfig.lshMaxBucketWidth]]). */
   def lshKnnJoin(corpus: DataFrame, idCol: String, embCol: String,
       queries: DataFrame, qidCol: String, qembCol: String, k: Int,
       lsh: graft.index.LshModel, excludeSelf: Boolean = false,
-      queryFlips: Int = 0): DataFrame = {
+      queryFlips: Int = 0,
+      maxBucketWidth: Int = graft.model.GraftConfig.lshMaxBucketWidth): DataFrame = {
     // k+1 groups / k+1 members when the query may sit inside a collapsed
     // group: dropping self afterwards then still leaves >= k candidates
     // preceding anything outside the padded sets (proof in LshSkewSpec).
     val kPad = if (excludeSelf) k + 1 else k
-    val thinned = collapsedThinnedBuckets(corpus, idCol, embCol, kPad, lsh)
+    val thinned = collapsedThinnedBuckets(corpus, idCol, embCol, kPad, lsh, maxBucketWidth)
     val qBuckets =
       if (queryFlips <= 0) lsh.bucketsColumn(col(qembCol))
       else lsh.multiProbeBucketsColumn(col(qembCol), queryFlips)
@@ -211,20 +214,21 @@ object Similarity {
     * spec: (bucket, id=rep, __cemb, __members) rows after (1) the
     * exact-vector collapse (one rep per DISTINCT embedding, carrying
     * the kPad smallest member ids) and (2) hot-bucket thinning to
-    * ~[[graft.model.GraftConfig.lshMaxBucketWidth]] reps/bucket via a
+    * ~`maxBucketWidth` reps/bucket via a
     * seeded deterministic id-hash filter. The width aggregate + join
     * shuffle on the same `bucket` key the candidate join needs, so the
     * corpus side still crosses the wire once (ReusedExchange covers the
     * double consumption of the collapse exchange). */
   private[graft] def collapsedThinnedBuckets(corpus: DataFrame, idCol: String,
-      embCol: String, kPad: Int, lsh: graft.index.LshModel): DataFrame = {
+      embCol: String, kPad: Int, lsh: graft.index.LshModel,
+      maxBucketWidth: Int = graft.model.GraftConfig.lshMaxBucketWidth): DataFrame = {
     val groups = corpus.filter(col(embCol).isNotNull)
       .groupBy(col(embCol).as("__cemb"))
       .agg(bounded_topk(col(idCol), kPad).as("__members"))
     val bucketed = groups
       .select(element_at(col("__members"), 1).as("id"), col("__cemb"),
         col("__members"), explode(lsh.bucketsColumn(col("__cemb"))).as("bucket"))
-    val cap = graft.model.GraftConfig.lshMaxBucketWidth
+    val cap = maxBucketWidth
     // round-18 (§2.4): the bucket width rides a WINDOW over the same
     // bucket exchange the candidate join needs, instead of a separate
     // width aggregate joined back — one exchange and zero joins where

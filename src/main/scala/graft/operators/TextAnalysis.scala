@@ -61,15 +61,6 @@ object TextAnalysis {
         org.apache.spark.sql.functions.size(col("__win")).as("chunk_tokens"))
   }
 
-  /** Character n-gram shingles of the lowercased text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val t = lower(text)
-    when(length(t) < n, array().cast("array<string>")).otherwise(
-      array_distinct(transform(
-        sequence(lit(0), length(t) - lit(n)),
-        i => substring(t, lit(1) + i, lit(n)))))
-  }
-
   // Small fixed stopword lists per language for the n-gram/stopword
   // language-ID heuristic. Deterministic and mirrored verbatim in the
   // DuckDB oracle SQL.
@@ -672,15 +663,4 @@ object TextAnalysis {
       .select(col("id").as(idCol), col("n_bigrams"), col("sum_logp"),
         col("avg_logp"), col("ppl"), col("keep"))
   }
-
-  /** All quality metrics as a struct-expanded DataFrame helper. */
-  def withTextMetrics(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("__m", textMetrics(col(textCol)))
-      .withColumn("n_tokens", col("__m.n_tokens"))
-      .withColumn("avg_token_len", col("__m.avg_token_len"))
-      .withColumn("stopword_ratio", col("__m.stopword_ratio"))
-      .withColumn("punct_ratio", col("__m.punct_ratio"))
-      .withColumn("quality_score", col("__m.quality_score"))
-      .withColumn("lang_pred", col("__m.lang_pred"))
-      .drop("__m")
 }

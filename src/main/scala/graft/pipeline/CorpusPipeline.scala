@@ -131,7 +131,8 @@ object CorpusPipeline {
    * `Dedup.incrementalDedup` — the existing-existing pair mass never
    * forms, which is what makes re-curation affordable at 100 TB).
    * Returns the curated rows of the NEW batch only; append them to
-   * `existing` to advance the corpus.
+   * `existing` to advance the corpus. Kept for PipelineSpec's
+   * batch-vs-corpus dedup tests, the gate of the incremental stages.
    */
   def curateIncremental(existing: DataFrame, incoming0: DataFrame,
       idCol: String, textCol: String,
@@ -190,41 +191,10 @@ object CorpusPipeline {
     }
   }
 
-  /** Per-stage survival counts for an incremental batch (diagnostics;
-    * one action per stage, mirrors curationReport — semantic drops
-    * counted separately when the stage is on). */
-  def incrementalReport(existing: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String,
-      cfg: CurationConfig = CurationConfig(),
-      semanticModel: Option[graft.index.IvfModel] = None): Map[String, Long] = {
-    val scrubbed = if (!cfg.redactPii) incoming
-      else incoming.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
-    val withMetrics = scrubbed
-      .withColumn("__m", TextAnalysis.textMetrics(col(textCol)))
-    val quality = withMetrics.filter(col("__m.quality_score") >= cfg.minQuality)
-    val lang = if (cfg.keepLangs.isEmpty) quality
-      else quality.filter(col("__m.lang_pred").isin(cfg.keepLangs.toSeq: _*))
-    val exact = Dedup.exactDedup(lang.drop("__m"), idCol, textCol)
-    val lexical = curateIncremental(existing, incoming, idCol, textCol,
-      cfg.copy(semanticMinCosine = None))
-    val base = Map(
-      "batch_input" -> incoming.count(),
-      "after_quality" -> quality.count(),
-      "after_lang" -> lang.count(),
-      "after_exact_dedup" -> exact.count(),
-      "after_incremental_dedup" -> lexical.count())
-    cfg.semanticMinCosine match {
-      case None => base
-      case Some(_) =>
-        val curated = curateIncremental(existing, incoming, idCol, textCol,
-          cfg, semanticModel)
-        base + ("after_semantic_dedup" -> curated.count())
-    }
-  }
-
   /** Per-stage survival counts (one action per stage; diagnostics).
     * When the semantic stage is on, lexical and semantic drops are
-    * counted separately (`after_near_dedup` vs `after_semantic_dedup`). */
+    * counted separately (`after_near_dedup` vs `after_semantic_dedup`).
+    * Kept for PipelineSpec's stage-monotonicity test. */
   def curationReport(docs: DataFrame, idCol: String, textCol: String,
       cfg: CurationConfig = CurationConfig(),
       semanticModel: Option[graft.index.IvfModel] = None): Map[String, Long] = {

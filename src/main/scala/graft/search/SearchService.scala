@@ -31,9 +31,8 @@ import graft.model._
  *
  * Two read paths with one answer: a library under the resident cap is
  * served from the catalog's driver snapshot with zero Spark jobs
- * ([[LocalSearch]]); a larger one (or one with pending streamed
- * batches, or a tier without a driver copy) runs the Spark plans
- * below. Bad input — a query vector of the wrong dimension or with a
+ * ([[LocalSearch]]); a larger one (or a tier without a driver copy)
+ * runs the Spark plans below. Bad input — a query vector of the wrong dimension or with a
  * non-finite element, an unparseable `created_*` filter — is a
  * Validation error on both, raised before any job or scan.
  */

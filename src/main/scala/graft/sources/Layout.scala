@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /**
@@ -43,11 +43,6 @@ object Layout {
       .sortBy(keyCol)
       .saveAsTable(table)
 
-  /** Shuffle-free equi-join of two co-bucketed tables (callers assert
-    * the plan; this is just the read side). */
-  def bucketedTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Range-cluster `df` by `cols` into `numFiles` parquet files at
     * `path`: global range partition + in-file sort = tight per-file
     * min/max stats on every prefix of `cols`. */
@@ -72,7 +67,8 @@ object Layout {
    * sampler is re-seeded per job, literal boundaries are not). Rank
    * space also equalizes skewed distributions, which raw bit
    * interleaving of values does not. The z-value interleave itself is
-   * shiftleft/or arithmetic — codegen'd, no UDF.
+   * shiftleft/or arithmetic — codegen'd, no UDF. Kept for LayoutSpec's
+   * z-order skipping test.
    */
   def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
       bits: Int, cols: String*): Unit = {
@@ -98,62 +94,6 @@ object Layout {
       bit <- 0 until bits
     } yield shiftleft(shiftright(p, bit).bitwiseAND(lit(1L)), bit * k + ci)
     parts.reduce(_.bitwiseOR(_)).as(s"z_${cols.mkString("_")}")
-  }
-
-  /**
-   * Hilbert-curve clustering — same rank-space machinery as
-   * [[writeZOrdered]], but the two positions map to their distance
-   * along the Hilbert curve (codegen'd [[HilbertIndex2D]]) instead of
-   * bit interleaving. The Hilbert curve's consecutive indexes are
-   * always ADJACENT cells (the Z-curve jumps across the space at every
-   * quadrant boundary), so equal-size file cuts cover tighter
-   * rectangles — the documented upgrade path when two-column skipping
-   * at a given file count needs to beat Z's band overlap.
-   */
-  def writeHilbertClustered(df: DataFrame, path: String, numFiles: Int,
-      bits: Int, colX: String, colY: String): Unit = {
-    df.withColumn("__h", hilbertValue(df, bits, colX, colY))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Hilbert index of the two columns' rank-space positions. */
-  def hilbertValue(df: DataFrame, bits: Int, colX: String,
-      colY: String): org.apache.spark.sql.Column = {
-    require(bits >= 1 && 2 * bits <= 62, s"2 x bits=$bits must fit a long")
-    val Seq(px, py) = rankPositions(df, bits, colX, colY)
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(org.apache.spark.sql.graft.expressions.HilbertIndex2D(
-      Bridge.expression(px), Bridge.expression(py), bits))
-      .as(s"h_${colX}_$colY")
-  }
-
-  /** k-column Hilbert clustering (Skilling's N-dimensional transform —
-    * [[HilbertIndexND]]): same rank-space sweep, curve distance over
-    * all k positions. The 2-column writer stays on the classic xy2d
-    * form (both are valid Hilbert curves; their indexes differ). */
-  def writeHilbertClusteredND(df: DataFrame, path: String, numFiles: Int,
-      bits: Int, cols: String*): Unit = {
-    df.withColumn("__h", hilbertValueND(df, bits, cols: _*))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Hilbert index of k columns' rank-space positions. */
-  def hilbertValueND(df: DataFrame, bits: Int,
-      cols: String*): org.apache.spark.sql.Column = {
-    require(cols.nonEmpty, "at least one hilbert column")
-    require(bits >= 1 && cols.length * bits <= 62,
-      s"bits=$bits x ${cols.length} cols must fit a long")
-    val positions = rankPositions(df, bits, cols: _*)
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(org.apache.spark.sql.graft.expressions.HilbertIndexND(
-      Bridge.expression(array(positions: _*)), bits))
-      .as(s"h_${cols.mkString("_")}")
   }
 
   /**

@@ -407,23 +407,4 @@ object CorpusStream {
       true
     }
   }
-
-  def curateStream(docs: DataFrame, textCol: String,
-      minQuality: Double = 0.5,
-      keepLangs: Set[String] = Set.empty,
-      redactPii: Boolean = false): DataFrame = {
-    import graft.operators.TextAnalysis
-    val scrubbed =
-      if (!redactPii) docs
-      else docs.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
-    val withMetrics = scrubbed
-      .withColumn("__m", TextAnalysis.textMetrics(col(textCol)))
-      .withColumn("quality_score", col("__m.quality_score"))
-      .withColumn("lang_pred", col("__m.lang_pred"))
-      .withColumn("n_tokens", col("__m.n_tokens"))
-      .drop("__m")
-    val gated = withMetrics.filter(col("quality_score") >= minQuality)
-    if (keepLangs.isEmpty) gated
-    else gated.filter(col("lang_pred").isin(keepLangs.toSeq: _*))
-  }
 }

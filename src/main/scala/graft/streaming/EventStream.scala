@@ -1,31 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 /**
- * Structured Streaming ingest over events-shaped data (beyond-parity
- * extension, SURVEY.md §2.8): watermarked tumbling/sliding window
- * aggregation and streaming sessionization-ready event parsing. The
- * batch mirror of the windowed aggregate is EventQueries.q41 — the
- * same transform function is shared so batch and streaming cannot
- * drift.
+ * Event-stream transforms that run on both batch and streaming
+ * DataFrames (beyond-parity extension, SURVEY.md §2.8): the watermarked
+ * tumbling-window aggregate (EventQueries.q41 computes the batch hourly
+ * window with its own plan) and watermarked exact dedup.
  */
 object EventStream {
 
-  /** events-shaped schema for file-stream sources (micros timestamps). */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType, nullable = false),
-    StructField("ts", TimestampType, nullable = false),
-    StructField("user_id", LongType, nullable = false),
-    StructField("event_type", StringType, nullable = false),
-    StructField("value", DoubleType, nullable = true),
-    StructField("props", StringType, nullable = true)))
-
-  /** Shared transform: watermark + tumbling window counts per type.
-    * Works on both batch and streaming DataFrames. */
+  /** Watermark + tumbling window counts per type, on batch and
+    * streaming DataFrames alike; kept for MultimodalStreamingSpec's
+    * stream-vs-batch equivalence. */
   def tumblingCounts(events: DataFrame, windowLen: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
     val src = if (events.isStreaming) events.withWatermark("ts", watermark) else events
@@ -33,17 +21,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("value_sum"))
-  }
-
-  /** Start a file-source stream over a directory of event parquet/json. */
-  def startFileStream(spark: SparkSession, dir: String, queryName: String,
-      format: String = "parquet"): StreamingQuery = {
-    val stream = spark.readStream.schema(eventSchema).format(format).load(dir)
-    tumblingCounts(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
   /**
@@ -55,198 +32,4 @@ object EventStream {
   def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
-
-  /**
-   * Stream-stream interval join: left events joined to right events of
-   * the same user with right.ts in [left.ts, left.ts + windowSeconds].
-   * Both sides carry watermarks and the join condition bounds the time
-   * range in BOTH directions, so Spark can expire buffered state — the
-   * canonical watermarked interval-join shape. Batch mirror:
-   * `RangeJoin.rangeJoin` (differentially tested in StreamJoinSpec).
-   */
-  def intervalJoinStreams(left: DataFrame, right: DataFrame,
-      windowSeconds: Long, watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(r, expr(
-      s"""l.user_id = r.user_id AND
-         |r.ts >= l.ts AND
-         |r.ts <= l.ts + interval $windowSeconds seconds""".stripMargin))
-      .select(col("l.event_id").as("left_id"), col("l.user_id").as("user_id"),
-        col("l.ts").as("left_ts"), col("r.event_id").as("right_id"),
-        col("r.value").as("right_value"))
-  }
-
-  /** One event for stateful processing. */
-  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Option[Double])
-  /** Per-user running session state. */
-  case class SessionState(sessionStart: Long, lastTs: Long, nEvents: Long, valueSum: Double)
-  /** Emitted when a session closes (gap exceeded or state timeout). */
-  case class ClosedSession(user_id: Long, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long, value_sum: Double)
-
-  /** Per-user funnel buffer: the retained (tsMillis, event_id, type)
-    * events of the funnel's step types, plus the highest stage already
-    * emitted. Retention is what makes the funnel ORDER-INDEPENDENT
-    * across micro-batches: a late-arriving earlier `view` can lower
-    * step 1's anchor time and retroactively unlock a click that was
-    * already buffered — recomputing over the buffer gets that right,
-    * a forgetful state machine cannot. State is bounded by the user's
-    * own funnel-step activity (non-step events are filtered upstream). */
-  case class FunnelState(events: List[(Long, Long, String)], emittedStage: Int)
-  /** Emitted once per user per newly-reached funnel stage (1-based). */
-  case class FunnelProgress(user_id: Long, stage: Int, step: String,
-      reached_at: java.sql.Timestamp)
-
-  /**
-   * Streaming ordered-funnel tracking via `flatMapGroupsWithState`:
-   * the stateful mirror of EventQueries.q94 (view -> click -> purchase
-   * with each step strictly after the previous step's anchor). Events
-   * buffer per user; each batch recomputes the furthest reachable
-   * stage over the full buffer (sorted by event time, so arrival order
-   * — within or across batches — cannot change the outcome) and emits
-   * one FunnelProgress row per NEWLY reached stage. Append-mode
-   * compatible: emitted rows are immutable facts ("user u reached
-   * stage k at t"); a retroactive improvement of an anchor time for an
-   * already-emitted stage does not re-emit (the stage was genuinely
-   * reached — q94's batch semantics over the same prefix agree on
-   * stage membership, which is what the differential test pins).
-   */
-  def funnelStream(events: org.apache.spark.sql.Dataset[Event],
-      steps: Seq[String],
-      maxSpanMs: Option[Long] = None): org.apache.spark.sql.Dataset[FunnelProgress] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(maxSpanMs.forall(_ > 0), "maxSpanMs must be positive")
-    val stepSet = steps.toSet
-    val span = maxSpanMs.getOrElse(Long.MaxValue)
-
-    // Best chain over a time-sorted event list: stage k needs an event
-    // of steps(k) strictly after stage k-1's anchor, and (windowed
-    // form) within `span` of the stage-0 anchor. UNBOUNDED: greedy
-    // from the EARLIEST step-0 event is maximal (earliest anchors
-    // dominate eligibility). WINDOWED: a later stage-0 anchor can
-    // succeed where the earliest violates the span, so every step-0
-    // candidate is tried; first candidate reaching the full funnel
-    // wins (earliest, deterministic).
-    def anchors(sorted: List[(Long, Long, String)]): List[(Int, Long)] = {
-      var best = List.empty[(Int, Long)] // reversed (stage, time)
-      val step0s = sorted.iterator.filter(_._3 == steps.head).map(_._1)
-      while (step0s.hasNext && best.length < steps.length) {
-        val t0 = step0s.next()
-        var out = List((0, t0))
-        var prev = t0
-        var k = 1
-        var cont = true
-        while (k < steps.length && cont) {
-          sorted.find(e => e._3 == steps(k) && e._1 > prev && e._1 - t0 <= span) match {
-            case Some((t, _, _)) => out = (k, t) :: out; prev = t; k += 1
-            case None => cont = false
-          }
-        }
-        if (out.length > best.length) best = out
-      }
-      best.reverse
-    }
-
-    events.filter(e => stepSet.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Event], state: GroupState[FunnelState]) =>
-          val prev = state.getOption.getOrElse(FunnelState(Nil, 0))
-          if (prev.emittedStage >= steps.length) {
-            // funnel complete: every stage is emitted, nothing a future
-            // event could add — state is one empty-buffer marker, not
-            // an ever-growing event list
-            Iterator.empty
-          } else {
-            val added = it.map(e => (e.ts.getTime, e.event_id, e.event_type)).toList
-            val all = (prev.events ++ added).sortBy(t => (t._1, t._2))
-            val reached = anchors(all)
-            val newOnes = reached.filter { case (k, _) => k >= prev.emittedStage }
-            val top = if (reached.isEmpty) prev.emittedStage
-              else math.max(prev.emittedStage, reached.map(_._1).max + 1)
-            // completed funnel drops its buffer (see above); an open
-            // funnel must RETAIN it — a late earlier event can still
-            // improve an anchor and unlock buffered later-step events.
-            // With a span bound, events older than (newest seen - span)
-            // cannot join any chain that also contains a future
-            // on-time event, so they prune — bounded state for bounded
-            // lateness, the watermark-style tradeoff (a late event
-            // older than the pruned horizon may miss its chain).
-            val retained = maxSpanMs match {
-              case Some(s) =>
-                val horizon = all.lastOption.map(_._1 - s).getOrElse(Long.MinValue)
-                // >= so retention matches the chain predicate's inclusive
-                // `e.t - t0 <= span`: an event at exactly newest-span can
-                // still anchor a chain completed by a later on-time event
-                all.filter(_._1 >= horizon)
-              case None => all
-            }
-            state.update(
-              if (top >= steps.length) FunnelState(Nil, top)
-              else FunnelState(retained, top))
-            newOnes.map { case (k, t) =>
-              FunnelProgress(uid, k + 1, steps(k), new java.sql.Timestamp(t))
-            }.iterator
-          }
-      }
-  }
-
-  /**
-   * Streaming gap-sessionization via `flatMapGroupsWithState`: the
-   * stateful mirror of the batch `Sessionize` operator. Events group by
-   * user; state holds the open session; an event past the gap closes
-   * and emits the previous session. Event-time timeout closes idle
-   * sessions at the watermark. State is per-user constant-size —
-   * the pattern scales to any user cardinality by key partitioning.
-   */
-  def sessionizeStream(events: org.apache.spark.sql.Dataset[Event],
-      gapSeconds: Long, watermark: String = "2 hours"): org.apache.spark.sql.Dataset[ClosedSession] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-
-    def close(uid: Long, s: SessionState): ClosedSession =
-      ClosedSession(uid, new java.sql.Timestamp(s.sessionStart),
-        new java.sql.Timestamp(s.lastTs), s.nEvents, s.valueSum)
-
-    // event-time timeout requires a watermark on the stream
-    val src = if (events.isStreaming)
-      events.withWatermark("ts", watermark).as[Event] else events
-    val grouped = src.groupByKey(_.user_id)
-    grouped.flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (uid: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
-        if (state.hasTimedOut) {
-          val out = state.getOption.map(close(uid, _)).toSeq
-          state.remove()
-          out.iterator
-        } else {
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var closed = List.empty[ClosedSession]
-          var cur = state.getOption
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            cur match {
-              case Some(s) if t - s.lastTs <= gapSeconds * 1000 =>
-                cur = Some(s.copy(lastTs = t, nEvents = s.nEvents + 1,
-                  valueSum = s.valueSum + e.value.getOrElse(0.0)))
-              case Some(s) =>
-                closed ::= close(uid, s)
-                cur = Some(SessionState(t, t, 1, e.value.getOrElse(0.0)))
-              case None =>
-                cur = Some(SessionState(t, t, 1, e.value.getOrElse(0.0)))
-            }
-          }
-          cur.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp(s.lastTs + gapSeconds * 1000)
-          }
-          closed.reverseIterator
-        }
-    }
-  }
 }

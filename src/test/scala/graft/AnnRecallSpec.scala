@@ -365,7 +365,6 @@ class AnnRecallSpec extends SparkSpec {
 
   test("sharded HNSW: flat-quality recall PAST maxGraphVectors, no driver collect (VERDICT r15)") {
     import graft.index.{HnswModel, ShardedHnsw}
-    import graft.model.GraftConfig
     val n = emb.count()
     // flat baseline at the normal cap (corpus fits)
     val flat = HnswModel.build(emb, "vec_id", "embedding")
@@ -387,48 +386,45 @@ class AnnRecallSpec extends SparkSpec {
     // inside executor tasks; fromVectors would throw past the cap, so
     // green here proves no subgraph exceeded it and the driver never
     // collected the corpus)
-    val saved = GraftConfig.hnswMaxGraphVectors
-    try {
-      GraftConfig.hnswMaxGraphVectors = (n / 3).toInt.max(60)
-      intercept[IllegalArgumentException] {
-        HnswModel.build(emb, "vec_id", "embedding").size
-        // build() limits its collect to the cap, so force the refusal
-        // via fromVectors on the full corpus
-        val rows = emb.select(col("vec_id"), col("embedding")).collect()
-        HnswModel.fromVectors(rows.map(_.getLong(0)),
-          rows.map(_.getSeq[Float](1).toArray))
-      }
-      val sharded = ShardedHnsw.build(emb, "vec_id", "embedding",
-        targetShardRows = GraftConfig.hnswMaxGraphVectors)
-      val hits = sharded.knnJoin(emb.filter(col("vec_id") < 20),
-          "vec_id", "embedding", emb, "vec_id", "embedding",
-          k = 10, ef = 100, probeShards = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val shardedRecall = recallOf(qid => hits.getOrElse(qid, Set.empty))
-      info(f"sharded recall@10 = $shardedRecall%.2f vs flat $flatRecall%.2f")
-      assert(shardedRecall >= flatRecall - 0.05,
-        s"sharded lost flat quality: $shardedRecall vs $flatRecall")
-      assert(shardedRecall >= 0.75, s"sharded recall collapsed: $shardedRecall")
-      // determinism: same (data, params) => same candidates
-      val again = sharded.knnCandidates(emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val fresh = ShardedHnsw.build(emb, "vec_id", "embedding",
-          targetShardRows = GraftConfig.hnswMaxGraphVectors)
-        .knnCandidates(emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(again == fresh, "sharded build/search must be deterministic")
-      // persistence round-trip serves identical candidates
-      val dir = java.nio.file.Files.createTempDirectory("sharded-hnsw").toString
-      sharded.save(dir)
-      val loaded = ShardedHnsw.load(spark, dir)
-        .knnCandidates(emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(loaded == again, "persisted index must serve identical candidates")
-    } finally GraftConfig.hnswMaxGraphVectors = saved
+    val cap = (n / 3).toInt.max(60)
+    intercept[IllegalArgumentException] {
+      HnswModel.build(emb, "vec_id", "embedding", cap = cap).size
+      // build() limits its collect to the cap, so force the refusal
+      // via fromVectors on the full corpus
+      val rows = emb.select(col("vec_id"), col("embedding")).collect()
+      HnswModel.fromVectors(rows.map(_.getLong(0)),
+        rows.map(_.getSeq[Float](1).toArray), cap = cap)
+    }
+    val sharded = ShardedHnsw.build(emb, "vec_id", "embedding",
+      targetShardRows = cap, cap = cap)
+    val hits = sharded.knnJoin(emb.filter(col("vec_id") < 20),
+        "vec_id", "embedding", emb, "vec_id", "embedding",
+        k = 10, ef = 100, probeShards = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val shardedRecall = recallOf(qid => hits.getOrElse(qid, Set.empty))
+    info(f"sharded recall@10 = $shardedRecall%.2f vs flat $flatRecall%.2f")
+    assert(shardedRecall >= flatRecall - 0.05,
+      s"sharded lost flat quality: $shardedRecall vs $flatRecall")
+    assert(shardedRecall >= 0.75, s"sharded recall collapsed: $shardedRecall")
+    // determinism: same (data, params) => same candidates
+    val again = sharded.knnCandidates(emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val fresh = ShardedHnsw.build(emb, "vec_id", "embedding",
+        targetShardRows = cap, cap = cap)
+      .knnCandidates(emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(again == fresh, "sharded build/search must be deterministic")
+    // persistence round-trip serves identical candidates
+    val dir = java.nio.file.Files.createTempDirectory("sharded-hnsw").toString
+    sharded.save(dir)
+    val loaded = ShardedHnsw.load(spark, dir)
+      .knnCandidates(emb.filter(col("vec_id") < 5),
+        "vec_id", "embedding", k = 10, ef = 100, probeShards = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(loaded == again, "persisted index must serve identical candidates")
   }
 
   test("HNSW build is deterministic for fixed (data, seed)") {
@@ -575,33 +571,28 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("IVF probe auto-switches to the HNSW coarse quantizer past the nlist threshold") {
-    import graft.model.GraftConfig
-    val saved = GraftConfig.hnswCoarseMinNlist
-    try {
-      GraftConfig.hnswCoarseMinNlist = 16
-      // model constructed AFTER the threshold drop: its lazy coarse
-      // graph sees nlist (16) >= threshold (16) and builds
-      val graphModel = IvfModel.train(emb, "embedding", nlist = 16)
-      val overlaps = (0L until 20L).map { qid =>
-        val q = queryVec(qid)
-        val graph = graphModel.probe(q, nprobe = 4).toSet
-        val brute = graphModel.probeLinear(q, nprobe = 4).toSet
-        brute.intersect(graph).size / 4.0
-      }
-      val mean = overlaps.sum / overlaps.size
-      info(f"auto-switched probe vs linear overlap @4/16 = $mean%.2f")
-      assert(mean >= 0.9, s"graph probe disagreement: $mean")
-      // the switched probe drives the same pruned candidate scan
-      val assigned = graphModel.assign(emb, "embedding")
-      assert(graphModel.candidates(assigned, queryVec(0L), nprobe = 4).count() > 0)
+    // a threshold of 16: nlist (16) >= threshold, so the probe walks
+    // the lazy coarse graph
+    val graphModel = IvfModel.train(emb, "embedding", nlist = 16)
+    val overlaps = (0L until 20L).map { qid =>
+      val q = queryVec(qid)
+      val graph = graphModel.probe(q, nprobe = 4, coarseMinNlist = 16).toSet
+      val brute = graphModel.probeLinear(q, nprobe = 4).toSet
+      brute.intersect(graph).size / 4.0
+    }
+    val mean = overlaps.sum / overlaps.size
+    info(f"auto-switched probe vs linear overlap @4/16 = $mean%.2f")
+    assert(mean >= 0.9, s"graph probe disagreement: $mean")
+    // the switched probe drives the same pruned candidate scan
+    val assigned = graphModel.assign(emb, "embedding")
+    val cells = graphModel.probe(queryVec(0L), nprobe = 4, coarseMinNlist = 16)
+    assert(assigned.filter(col("cluster_id").isin(cells.map(Int.box): _*)).count() > 0)
 
-      // below the threshold the identical training stays on the exact scan
-      GraftConfig.hnswCoarseMinNlist = 1024
-      val exactModel = IvfModel.train(emb, "embedding", nlist = 16)
-      assert((0L until 5L).forall { qid =>
-        exactModel.probe(queryVec(qid), 4) == exactModel.probeLinear(queryVec(qid), 4)
-      })
-    } finally GraftConfig.hnswCoarseMinNlist = saved
+    // below the default threshold the identical training stays on the exact scan
+    val exactModel = IvfModel.train(emb, "embedding", nlist = 16)
+    assert((0L until 5L).forall { qid =>
+      exactModel.probe(queryVec(qid), 4) == exactModel.probeLinear(queryVec(qid), 4)
+    })
   }
 
   test("HNSW cap boundary: builds AT the cap, refuses loudly past it, facade reroutes") {
@@ -620,41 +611,38 @@ class AnnRecallSpec extends SparkSpec {
     // with a lowered cap the full boundary is exercisable end to end:
     // exactly-at-cap builds, past-cap indexing refuses with guidance,
     // and a library that GROWS past the cap keeps its complete graph
-    val saved = GraftConfig.hnswMaxGraphVectors
-    try {
-      GraftConfig.hnswMaxGraphVectors = 12
-      val atCap = HnswModel.fromVectors(Array.tabulate(12)(_.toLong),
-        Array.tabulate(12)(i => Array(math.cos(i * 0.5).toFloat, math.sin(i * 0.5).toFloat)),
-        m = 4, efConstruction = 8)
-      assert(atCap.search(Array(1.0f, 0.0f), 3, 8).nonEmpty)
+    val cap = 12
+    val atCap = HnswModel.fromVectors(Array.tabulate(12)(_.toLong),
+      Array.tabulate(12)(i => Array(math.cos(i * 0.5).toFloat, math.sin(i * 0.5).toFloat)),
+      m = 4, efConstruction = 8, cap = cap)
+    assert(atCap.search(Array(1.0f, 0.0f), 3, 8).nonEmpty)
 
-      val cat = new VectorCatalog(spark)
-      val lib = cat.createLibrary("L", indexType = "hnsw").toOption.get
-      val doc = cat.createDocument(lib.id, "D").toOption.get
-      cat.createChunks(doc.id,
-        (1 to 13).map(i => (s"chunk number $i", Map.empty[String, String])))
-      val refused = cat.indexLibrary(lib.id, "hnsw")
-      assert(refused.left.toOption.exists(_.message.contains("use ivf or ivfpq")))
+    val cat = new VectorCatalog(spark, hnswCap = cap)
+    val lib = cat.createLibrary("L", indexType = "hnsw").toOption.get
+    val doc = cat.createDocument(lib.id, "D").toOption.get
+    cat.createChunks(doc.id,
+      (1 to 13).map(i => (s"chunk number $i", Map.empty[String, String])))
+    val refused = cat.indexLibrary(lib.id, "hnsw")
+    assert(refused.left.toOption.exists(_.message.contains("use ivf or ivfpq")))
 
-      // index at 12 chunks (at cap), then grow to 13: refresh keeps the
-      // previous complete graph instead of silently truncating
-      val cat2 = new VectorCatalog(spark)
-      val lib2 = cat2.createLibrary("L2", indexType = "hnsw").toOption.get
-      val doc2 = cat2.createDocument(lib2.id, "D2").toOption.get
-      val seedIds = (1 to 12).map(i =>
-        cat2.createChunk(doc2.id, s"seed chunk $i").toOption.get.id)
-      assert(cat2.indexLibrary(lib2.id, "hnsw").isRight)
-      val graphBefore = cat2.indexState(lib2.id).get.hnsw.get
-      cat2.createChunk(doc2.id, "one past the cap")
-      // refresh refuses like indexLibrary and leaves the state as it
-      // was, so the index still reads stale
-      val refusedRefresh = cat2.refreshIndex(lib2.id)
-      assert(refusedRefresh.left.toOption.exists(_.message.contains("use ivf or ivfpq")))
-      assert(cat2.indexStale(lib2.id))
-      val after = cat2.indexState(lib2.id).get.hnsw.get
-      assert(after.graph eq graphBefore.graph, "past-cap refresh must keep the old graph")
-      assert(after.chunkIds.toSet == seedIds.toSet)
-    } finally GraftConfig.hnswMaxGraphVectors = saved
+    // index at 12 chunks (at cap), then grow to 13: refresh keeps the
+    // previous complete graph instead of silently truncating
+    val cat2 = new VectorCatalog(spark, hnswCap = cap)
+    val lib2 = cat2.createLibrary("L2", indexType = "hnsw").toOption.get
+    val doc2 = cat2.createDocument(lib2.id, "D2").toOption.get
+    val seedIds = (1 to 12).map(i =>
+      cat2.createChunk(doc2.id, s"seed chunk $i").toOption.get.id)
+    assert(cat2.indexLibrary(lib2.id, "hnsw").isRight)
+    val graphBefore = cat2.indexState(lib2.id).get.hnsw.get
+    cat2.createChunk(doc2.id, "one past the cap")
+    // refresh refuses like indexLibrary and leaves the state as it
+    // was, so the index still reads stale
+    val refusedRefresh = cat2.refreshIndex(lib2.id)
+    assert(refusedRefresh.left.toOption.exists(_.message.contains("use ivf or ivfpq")))
+    assert(cat2.indexStale(lib2.id))
+    val after = cat2.indexState(lib2.id).get.hnsw.get
+    assert(after.graph eq graphBefore.graph, "past-cap refresh must keep the old graph")
+    assert(after.chunkIds.toSet == seedIds.toSet)
   }
 
   test("HNSW insertAll: appended inserts are bit-identical to a fresh build of the union") {

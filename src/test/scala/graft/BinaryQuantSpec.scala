@@ -233,7 +233,6 @@ class BinaryQuantSpec extends SparkSpec {
   }
 
   test("hot-band cap: constant-sign region stays near-linear, planted pairs kept") {
-    import graft.model.GraftConfig
     // adversarial fixture (VERDICT r13 item 4): dims 0-15 share ONE
     // sign pattern across the whole corpus, so band 0 is a single
     // group holding every row (the n^2/2 regime the cap exists for);
@@ -257,42 +256,39 @@ class BinaryQuantSpec extends SparkSpec {
     }
     val df = (base ++ planted).toDF("vec_id", "embedding")
     val cap = 50
-    GraftConfig.binaryMaxBandWidthOverride = cap
-    try {
-      val got = BinaryQuant.hammingNearDupPairs(df, "vec_id", "embedding",
-          dim = 64, maxHamming = 3, minCosine = 0.5)
-        .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1)))
-      // exact recovery: the true pair set IS the n planted pairs
-      // (random 48-bit tails put every other pair at ham >> 3), found
-      // once each — no loss through the thinned hot band, no dupes
-      assert(got.length == got.distinct.length, "duplicate emissions")
-      val gotSet = got.toSet
-      (0L until n.toLong).foreach { i =>
-        assert(gotSet.contains((i, i + 10000L)), s"planted pair $i lost")
-      }
-      assert(got.length == n, s"false positives: ${got.length} != $n")
+    val got = BinaryQuant.hammingNearDupPairs(df, "vec_id", "embedding",
+        dim = 64, maxHamming = 3, minCosine = 0.5, maxBandWidth = cap)
+      .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1)))
+    // exact recovery: the true pair set IS the n planted pairs
+    // (random 48-bit tails put every other pair at ham >> 3), found
+    // once each — no loss through the thinned hot band, no dupes
+    assert(got.length == got.distinct.length, "duplicate emissions")
+    val gotSet = got.toSet
+    (0L until n.toLong).foreach { i =>
+      assert(gotSet.contains((i, i + 10000L)), s"planted pair $i lost")
+    }
+    assert(got.length == n, s"false positives: ${got.length} != $n")
 
-      // candidate-mass receipt: the capped occurrence stream's group
-      // widths bound the join work at sum(w*(w-1)/2); uncapped, band 0
-      // alone is 4000*3999/2 = 8.0M pair rows in ONE task
-      val exploded = BinaryQuant.explodedBands(df, "vec_id", "embedding", 64, 3)
-      val widths = exploded.groupBy("b", "v").agg(count(lit(1)).as("__w"))
-      val hot = widths.filter(col("__w") > cap)
-      val hotN = hot.count()
-      assert(hotN >= 1, "the constant band must actually be hot")
-      val keyed = BinaryQuant.cappedBands(exploded, hot, hotN, cap, 64, 3)
-      val mass = keyed.groupBy("b", "v").count()
-        .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
-        .collect()(0).getLong(0)
-      val uncapped = widths
-        .agg(sum((col("__w") * (col("__w") - 1) / 2).cast("long")))
-        .collect()(0).getLong(0)
-      info(s"candidate mass: capped=$mass uncapped=$uncapped")
-      assert(uncapped > 8000000L, "fixture must be genuinely quadratic uncapped")
-      // near-linear: ~3n from the planted pairs' shared bands plus the
-      // capped hot band's ~cap^2/2 plus random 16-bit collisions
-      assert(mass < 50L * n, s"capped mass $mass not near-linear")
-    } finally GraftConfig.binaryMaxBandWidthOverride = 0
+    // candidate-mass receipt: the capped occurrence stream's group
+    // widths bound the join work at sum(w*(w-1)/2); uncapped, band 0
+    // alone is 4000*3999/2 = 8.0M pair rows in ONE task
+    val exploded = BinaryQuant.explodedBands(df, "vec_id", "embedding", 64, 3)
+    val widths = exploded.groupBy("b", "v").agg(count(lit(1)).as("__w"))
+    val hot = widths.filter(col("__w") > cap)
+    val hotN = hot.count()
+    assert(hotN >= 1, "the constant band must actually be hot")
+    val keyed = BinaryQuant.cappedBands(exploded, hot, hotN, cap, 64, 3)
+    val mass = keyed.groupBy("b", "v").count()
+      .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
+      .collect()(0).getLong(0)
+    val uncapped = widths
+      .agg(sum((col("__w") * (col("__w") - 1) / 2).cast("long")))
+      .collect()(0).getLong(0)
+    info(s"candidate mass: capped=$mass uncapped=$uncapped")
+    assert(uncapped > 8000000L, "fixture must be genuinely quadratic uncapped")
+    // near-linear: ~3n from the planted pairs' shared bands plus the
+    // capped hot band's ~cap^2/2 plus random 16-bit collisions
+    assert(mass < 50L * n, s"capped mass $mass not near-linear")
   }
 
   test("hot-band cap derives from the candidate-mass budget") {

@@ -105,9 +105,6 @@ class DedupSpec extends SparkSpec {
     val hamming13 = java.lang.Long.bitCount(sims(1L) ^ sims(3L))
     val hamming14 = java.lang.Long.bitCount(sims(1L) ^ sims(4L))
     assert(hamming13 < hamming14) // near dup closer than unrelated
-    val pairs = Dedup.simHashNearDupPairs(corpus, "doc_id", "text", maxHamming = 16)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
   }
 
   test("embedding near-dup: exact dups found by LSH-bucketed path") {
@@ -150,11 +147,6 @@ class DedupSpec extends SparkSpec {
       (2L, s"$boiler iota kappa lambda mu nu xi omicron pi"),
       (3L, "entirely unique words that no other document carries here ok"))
       .toDF("doc_id", "text")
-    val rep = Dedup.repeatedSpans(docs, "doc_id", "text",
-      spanTokens = 8, stride = 4, minDocs = 2).collect()
-    // the boilerplate window (at offset 0) appears in docs 1 and 2
-    assert(rep.exists(r => r.getLong(1) == 2L), s"expected a 2-doc span, got ${rep.toSeq}")
-
     val prof = Dedup.repetitionProfile(docs, "doc_id", "text",
       spanTokens = 8, stride = 4, minDocs = 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap

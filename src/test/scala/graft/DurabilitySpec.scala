@@ -155,6 +155,43 @@ class DurabilitySpec extends SparkSpec {
     assertSameState(reopened, rec)
   }
 
+  test("a checkpoint deletes the snapshot it replaces, and a recovered catalog still reads every row") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("snapshots", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val before = (1 to 3).map(i => cat.createChunk(doc.id, s"before $i").toOption.get)
+    cat.checkpoint()
+    val after = (1 to 2).map(i => cat.createChunk(doc.id, s"after $i").toOption.get)
+    def snapshots = Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("snapshot-")).sorted
+    assert(snapshots.size == 1)
+
+    // the recovered base reads the first snapshot until a fold; the
+    // checkpoint, with no write of its own, must not lose it
+    val rec = DurableCatalog.recover(spark, root)
+    rec.checkpoint()
+    assert(snapshots == Seq(f"snapshot-${rec.wal.lastSeq}%020d"))
+    val ids = rec.inner.chunksByLibrary(lib.id).select("id").collect().map(_.getString(0)).toSet
+    assert(ids == (before ++ after).map(_.id).toSet)
+    assertSameState(rec, DurableCatalog.recover(spark, root))
+  }
+
+  test("a WAL replay folds once, not once per 64 records") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("replay", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val acked = (0 until 200).map(i => cat.createChunk(doc.id, s"chunk $i").toOption.get)
+    // a fold is a localCheckpoint: one job each; the replay itself runs
+    // none (no snapshot to read, no existence checks)
+    var rec: DurableCatalog = null
+    val jobs = jobsStarted { rec = DurableCatalog.recover(spark, root) }
+    assert(jobs <= 1, s"replay of 200 creates ran $jobs fold jobs")
+    assert(chunkRows(rec).map(_.id) == acked.map(_.id).sorted)
+    assertSameState(cat, rec)
+  }
+
   test("recover on an empty root yields an empty catalog") {
     val rec = DurableCatalog.recover(spark, freshRoot())
     assert(rec.inner.listLibraries().isEmpty)

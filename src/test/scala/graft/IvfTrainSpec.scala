@@ -111,41 +111,35 @@ class IvfTrainSpec extends SparkSpec {
     // pull the threshold down to the fixture's k for the switch test
     // (the production default sits above maxAutoNlist by calibration —
     // see GraftConfig.approxAssignMinK scaladoc)
-    val saved = GraftConfig.approxAssignMinK
-    GraftConfig.approxAssignMinK = k
-    try {
-    val auto = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k)
+    val auto = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k,
+      approxAssignMinK = k)
     val viaApprox = IvfModel.trainDistributed(big, "embedding", nlist = k,
       maxIter = 6, approxAssignEf = GraftConfig.approxAssignEf)
     auto.centroids.zip(viaApprox.centroids).foreach { case (x, y) =>
       assert(x.sameElements(y), "trainModel did not take the graph-routed path")
     }
     // below the threshold the exact path is taken, bit-for-bit
-    val old = GraftConfig.approxAssignMinK
-    GraftConfig.approxAssignMinK = Int.MaxValue
-    try {
-      val exact = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k)
-      val viaExact = IvfModel.trainDistributed(big, "embedding", nlist = k, maxIter = 6)
-      exact.centroids.zip(viaExact.centroids).foreach { case (x, y) =>
-        assert(x.sameElements(y), "raised threshold did not restore the exact path")
-      }
-      // inertia parity AT the switch point — the gate for task-4 wiring
-      def inertiaOn(m: IvfModel): Double = {
-        val rows = big.select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
-        rows.map { v =>
-          m.centroids.map { c =>
-            var d = 0.0; var j = 0
-            while (j < v.length) { val x = v(j) - c(j); d += x * x; j += 1 }
-            d
-          }.min
-        }.sum / rows.length
-      }
-      val (ai, ei) = (inertiaOn(auto), inertiaOn(exact))
-      info(f"switch-point inertia exact=$ei%.4f graph-routed=$ai%.4f")
-      assert(ai <= ei * 1.2,
-        s"graph-routed inertia $ai too far above exact $ei at the switch point")
-    } finally GraftConfig.approxAssignMinK = old
-    } finally GraftConfig.approxAssignMinK = saved
+    val exact = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k,
+      approxAssignMinK = Int.MaxValue)
+    val viaExact = IvfModel.trainDistributed(big, "embedding", nlist = k, maxIter = 6)
+    exact.centroids.zip(viaExact.centroids).foreach { case (x, y) =>
+      assert(x.sameElements(y), "raised threshold did not restore the exact path")
+    }
+    // inertia parity AT the switch point — the gate for task-4 wiring
+    def inertiaOn(m: IvfModel): Double = {
+      val rows = big.select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
+      rows.map { v =>
+        m.centroids.map { c =>
+          var d = 0.0; var j = 0
+          while (j < v.length) { val x = v(j) - c(j); d += x * x; j += 1 }
+          d
+        }.min
+      }.sum / rows.length
+    }
+    val (ai, ei) = (inertiaOn(auto), inertiaOn(exact))
+    info(f"switch-point inertia exact=$ei%.4f graph-routed=$ai%.4f")
+    assert(ai <= ei * 1.2,
+      s"graph-routed inertia $ai too far above exact $ei at the switch point")
   }
 
   test("trainMiniBatch is deterministic and near full-train quality") {
@@ -180,22 +174,19 @@ class IvfTrainSpec extends SparkSpec {
 
   test("SemDedup.trainModel routes to mini-batch past the flop margin") {
     import spark.implicits._
-    import graft.model.GraftConfig
     val rnd = new scala.util.Random(7)
     val big = (0 until 3000).map(i =>
         (i.toLong, Seq.fill(16)(rnd.nextGaussian().toFloat)))
       .toDF("id", "embedding").localCheckpoint(true)
     val k = 1024 // n·k = 3.07e6 crosses the driver budget
-    val saved = GraftConfig.miniBatchTrainMargin
-    GraftConfig.miniBatchTrainMargin = 0.0 // force the mini-batch route
-    try {
-      val auto = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k)
-      val direct = IvfModel.trainMiniBatch(big, "embedding", nlist = k,
-        nHint = 3000L)
-      auto.centroids.zip(direct.centroids).foreach { case (x, y) =>
-        assert(x.sameElements(y), "trainModel did not take the mini-batch path")
-      }
-    } finally GraftConfig.miniBatchTrainMargin = saved
+    // margin 0 forces the mini-batch route
+    val auto = graft.operators.SemDedup.trainModel(big, "embedding", nlist = k,
+      miniBatchMargin = 0.0)
+    val direct = IvfModel.trainMiniBatch(big, "embedding", nlist = k,
+      nHint = 3000L)
+    auto.centroids.zip(direct.centroids).foreach { case (x, y) =>
+      assert(x.sameElements(y), "trainModel did not take the mini-batch path")
+    }
     // the production default keeps this fixture on the exact path
     // (flop ratio 6·3000/(15·8192) ≈ 0.15 « margin)
     val viaExact = IvfModel.trainDistributed(big, "embedding", nlist = k,

@@ -28,8 +28,8 @@ class LayoutSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val j = Layout.bucketedTable(spark, "li_bucketed")
-        .join(Layout.bucketedTable(spark, "ord_bucketed"),
+      val j = spark.table("li_bucketed")
+        .join(spark.table("ord_bucketed"),
           col("l_orderkey") === col("o_orderkey"))
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
@@ -58,7 +58,7 @@ class LayoutSpec extends SparkSpec {
     Layout.writeBucketed(li, "li_agg_bucketed", "l_orderkey", 8)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val agg = Layout.bucketedTable(spark, "li_agg_bucketed")
+      val agg = spark.table("li_agg_bucketed")
         .groupBy("l_orderkey").agg(sum("l_quantity"))
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
@@ -208,66 +208,5 @@ class LayoutSpec extends SparkSpec {
       math.abs(x1 - x0) + math.abs(y1 - y0) + math.abs(z1 - z0)
     }
     assert(steps.forall(_ == 1L), "consecutive ND-Hilbert cells must be adjacent")
-  }
-
-  test("3-column Hilbert layout gives every column real file skipping") {
-    val base = Files.createTempDirectory("graft-hilbert3").toString
-    val li = queries.Tables.table(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_partkey", "l_suppkey")
-    val files = 32
-    Layout.writeHilbertClusteredND(li, s"$base/h3", files, bits = 4,
-      "l_orderkey", "l_partkey", "l_suppkey")
-    def overlapFraction(c: String): Double = {
-      val stats = spark.read.parquet(s"$base/h3")
-        .select(input_file_name().as("f"), col(c).cast("long").as("v"))
-        .groupBy("f").agg(min("v").as("mn"), max("v").as("mx"))
-        .collect().map(r => (r.getLong(1), r.getLong(2)))
-      val lo = li.select(percentile_approx(col(c).cast("long"), lit(0.45), lit(1000)))
-        .collect()(0).getLong(0)
-      val hi = li.select(percentile_approx(col(c).cast("long"), lit(0.55), lit(1000)))
-        .collect()(0).getLong(0)
-      stats.count { case (mn, mx) => mx >= lo && mn <= hi }.toDouble / stats.length
-    }
-    val fr = Seq("l_orderkey", "l_partkey", "l_suppkey").map(c => c -> overlapFraction(c))
-    info(fr.map { case (c, f) => f"$c=$f%.2f" }.mkString("10% band overlap — ", ", ", ""))
-    // a linear sort serves only its leading column (trailing ~1.0);
-    // the 3-D curve must give every column genuine skipping
-    assert(fr.forall(_._2 < 0.85), s"a column lost skipping entirely: $fr")
-    assert(spark.read.parquet(s"$base/h3").count() == li.count())
-  }
-
-  test("Hilbert clustering skips at least as well as z-order on both columns") {
-    val base = Files.createTempDirectory("graft-hilbert").toString
-    val li = queries.Tables.table(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_partkey", "l_quantity")
-    val files = 32
-    Layout.writeZOrdered(li, s"$base/zorder", files, bits = 4, "l_orderkey", "l_partkey")
-    Layout.writeHilbertClustered(li, s"$base/hilbert", files, bits = 4,
-      "l_orderkey", "l_partkey")
-
-    def overlapFraction(dir: String, c: String): Double = {
-      val stats = spark.read.parquet(dir)
-        .select(input_file_name().as("f"), col(c).cast("long").as("v"))
-        .groupBy("f").agg(min("v").as("mn"), max("v").as("mx"))
-        .collect().map(r => (r.getLong(1), r.getLong(2)))
-      val lo = li.select(percentile_approx(col(c).cast("long"), lit(0.45), lit(1000)))
-        .collect()(0).getLong(0)
-      val hi = li.select(percentile_approx(col(c).cast("long"), lit(0.55), lit(1000)))
-        .collect()(0).getLong(0)
-      stats.count { case (mn, mx) => mx >= lo && mn <= hi }.toDouble / stats.length
-    }
-
-    val zWorst = math.max(overlapFraction(s"$base/zorder", "l_orderkey"),
-      overlapFraction(s"$base/zorder", "l_partkey"))
-    val hLead = overlapFraction(s"$base/hilbert", "l_orderkey")
-    val hTrail = overlapFraction(s"$base/hilbert", "l_partkey")
-    val hWorst = math.max(hLead, hTrail)
-    info(f"10%% band overlap — z worst: $zWorst%.2f; hilbert: lead=$hLead%.2f trail=$hTrail%.2f")
-    // both columns must skip, and the worst column must not regress
-    // vs the Z layout at the same (bits, files) budget
-    assert(hWorst < 0.7, s"Hilbert failed to skip: $hLead / $hTrail")
-    assert(hWorst <= zWorst + 0.1,
-      s"Hilbert worst column ($hWorst) regressed vs z-order ($zWorst)")
-    assert(spark.read.parquet(s"$base/hilbert").count() == li.count())
   }
 }

@@ -143,32 +143,29 @@ class LshSkewSpec extends SparkSpec {
   }
 
   test("width cap thins hot buckets deterministically; join stays well-formed") {
-    val oldCap = GraftConfig.lshMaxBucketWidthOverride
-    GraftConfig.lshMaxBucketWidthOverride = 8
-    try {
-      // 2-bit tables over 200+ distinct vectors: every bucket is hot
-      val crowd = (0 until 240).map(i => (i.toLong, randVec()))
-        .toDF("vec_id", "embedding")
-        .withColumn("embedding", col("embedding").cast("array<float>"))
-        .localCheckpoint(true)
-      val tiny = LshModel(numTables = 4, bitsPerTable = 2, dim = dim)
-      val thinned = Similarity.collapsedThinnedBuckets(
-        crowd, "vec_id", "embedding", kPad = 5, tiny)
-      val widths = thinned.groupBy("bucket").count().collect().map(_.getLong(1))
-      assert(widths.nonEmpty)
-      // hash thinning is Binomial(w, cap/w) around cap — 3x is far
-      // outside its tail at these sizes, while the unthinned width (60
-      // rows/bucket at 2 bits) would trip it
-      assert(widths.max <= 3L * 8,
-        s"cap did not bound bucket width: max ${widths.max}")
-      val r1 = resultKey(Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
-        crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true))
-      val r2 = resultKey(Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
-        crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true))
-      assert(r1 == r2, "thinned join not deterministic")
-      assert(r1.nonEmpty)
-      assert(r1.forall { case (q, n, _, rank) => q != n && rank >= 1 && rank <= 3 })
-    } finally GraftConfig.lshMaxBucketWidthOverride = oldCap
+    val cap = 8
+    // 2-bit tables over 200+ distinct vectors: every bucket is hot
+    val crowd = (0 until 240).map(i => (i.toLong, randVec()))
+      .toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .localCheckpoint(true)
+    val tiny = LshModel(numTables = 4, bitsPerTable = 2, dim = dim)
+    val thinned = Similarity.collapsedThinnedBuckets(
+      crowd, "vec_id", "embedding", kPad = 5, tiny, maxBucketWidth = cap)
+    val widths = thinned.groupBy("bucket").count().collect().map(_.getLong(1))
+    assert(widths.nonEmpty)
+    // hash thinning is Binomial(w, cap/w) around cap — 3x is far
+    // outside its tail at these sizes, while the unthinned width (60
+    // rows/bucket at 2 bits) would trip it
+    assert(widths.max <= 3L * cap,
+      s"cap did not bound bucket width: max ${widths.max}")
+    val r1 = resultKey(Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
+      crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true, maxBucketWidth = cap))
+    val r2 = resultKey(Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
+      crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true, maxBucketWidth = cap))
+    assert(r1 == r2, "thinned join not deterministic")
+    assert(r1.nonEmpty)
+    assert(r1.forall { case (q, n, _, rank) => q != n && rank >= 1 && rank <= 3 })
   }
 
   test("derived width cap: default replays the calibrated constant; thinning recall delta quantified") {
@@ -185,15 +182,12 @@ class LshSkewSpec extends SparkSpec {
       .withColumn("embedding", col("embedding").cast("array<float>"))
       .localCheckpoint(true)
     val tiny = LshModel(numTables = 4, bitsPerTable = 2, dim = dim)
-    def knnSet(capOverride: Int): Set[(Long, Long)] = {
-      val old = GraftConfig.lshMaxBucketWidthOverride
-      GraftConfig.lshMaxBucketWidthOverride = capOverride
-      try Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
-          crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true)
+    def knnSet(cap: Int): Set[(Long, Long)] =
+      Similarity.lshKnnJoin(crowd, "vec_id", "embedding",
+          crowd, "vec_id", "embedding", k = 3, lsh = tiny, excludeSelf = true,
+          maxBucketWidth = cap)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally GraftConfig.lshMaxBucketWidthOverride = old
-    }
     val exact = crowd.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       .crossJoin(crowd.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.multimodal.Multimodal
 import graft.streaming.EventStream
@@ -233,7 +234,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // 8x6 C420: frame = 48 luma + 2*12 chroma = 72 bytes
     val f0 = Array.tabulate(72)(i => i.toByte)
     val f1 = Array.tabulate(72)(i => (200 - i).toByte)
-    val clip = VideoDemux.writeY4M(8, 6, Seq(f0, f1))
+    val clip = writeY4M(8, 6, Seq(f0, f1))
 
     val sampled = VideoDemux.sampleFrames(clip, 1)
     assert(sampled.length == 2)
@@ -258,7 +259,12 @@ class MultimodalStreamingSpec extends SparkSpec {
     val events = graft.queries.Tables.table(spark, sfDir, "events")
     events.coalesce(1).write.mode("overwrite").parquet(staging)
 
-    val q = EventStream.startFileStream(spark, staging, "stream_out")
+    val stream = spark.readStream.schema(spark.read.parquet(staging).schema).parquet(staging)
+    val q = EventStream.tumblingCounts(stream)
+      .writeStream.outputMode("complete")
+      .format("memory").queryName("stream_out")
+      .trigger(Trigger.AvailableNow())
+      .start()
     q.processAllAvailable()
     q.stop()
 
@@ -271,5 +277,17 @@ class MultimodalStreamingSpec extends SparkSpec {
       .orderBy("window_start", "event_type").collect().toSeq
     assert(streamed == batch)
     assert(streamed.nonEmpty)
+  }
+
+  /** Minimal Y4M writer: header + raw C420 frames (each `w*h*3/2`
+    * bytes, Y then quarter-res U, V planes). */
+  private def writeY4M(w: Int, h: Int, frames: Seq[Array[Byte]]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bos.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420\n".getBytes("US-ASCII"))
+    frames.foreach { f =>
+      bos.write("FRAME\n".getBytes("US-ASCII"))
+      bos.write(f)
+    }
+    bos.toByteArray
   }
 }

@@ -63,8 +63,9 @@ class OperatorSpec extends SparkSpec {
       .select($"event_id", $"session_id").as[(Long, Long)].collect().toMap
     assert(s(1L) == 0 && s(2L) == 0 && s(3L) == 1 && s(4L) == 0)
 
-    val stats = Sessionize.sessionStats(ev, "user_id", "ts", "value", 1800, "event_id")
-    assert(stats.count() == 3)
+    val sessions = Sessionize.sessionize(ev, "user_id", "ts", gapSeconds = 1800, tieBreak = "event_id")
+      .select("user_id", "session_id").distinct()
+    assert(sessions.count() == 3)
   }
 
   test("text metrics: tokens, counts, langid") {
@@ -277,27 +278,5 @@ class OperatorSpec extends SparkSpec {
     val plan = Packing.weightedSample(rows, "id", "w", m = 100)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
-  }
-
-  test("LSH batchCandidates == per-query candidates, via one bucket join") {
-    import graft.index.LshModel
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val dim = emb.select("embedding").head.getSeq[Float](0).length
-    val model = LshModel(numTables = 6, bitsPerTable = 6, dim = dim, seed = 5L)
-    val sig = model.build(emb, "vec_id", "embedding")
-
-    val queries = emb.filter(col("vec_id") < 5).select("vec_id", "embedding")
-    val batch = model.batchCandidates(sig, queries, "vec_id", "embedding")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-
-    queries.select("vec_id", "embedding").collect().foreach { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Float](1).toArray
-      val single = model.candidates(sig, q).collect().map(_.getLong(0)).toSet
-      assert(batch.getOrElse(qid, Set.empty) == single,
-        s"batch != per-query for qid=$qid")
-    }
-    assert(batch.values.forall(_.nonEmpty)) // each query finds itself at least
   }
 }

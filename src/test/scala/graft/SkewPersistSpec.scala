@@ -5,29 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.catalog.VectorCatalog
-import graft.operators.SkewJoin
 
-/** Salted-join equivalence + full catalog persistence round-trip. */
+/** Approximate distinct counts + full catalog persistence round-trip. */
 class SkewPersistSpec extends SparkSpec {
   import spark.implicits._
-
-  test("saltedJoin result equals plain join (skewed key distribution)") {
-    // 90% of left rows share one hot key
-    val left = (1L to 2000L).map(i => (if (i % 10 == 0) i % 7 else 1L, i)).toDF("k", "lv")
-    val right = (0L to 8L).map(i => (i, s"r$i")).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).select("k", "lv", "rv")
-      .collect().map(_.toSeq).toSet
-    val salted = SkewJoin.saltedJoin(left, right, "k", saltFactor = 8)
-      .select("k", "lv", "rv").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-
-    val counts = SkewJoin.saltedCount(left, "k", saltFactor = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expected = left.groupBy("k").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts == expected)
-  }
 
   test("approx_count_distinct within 5% of exact on lineitem keys") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,41 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.functions._
-
-import graft.sources.CorpusSource
-
-/** Corpus round-trips across formats + the driver entry smoke. */
+/** The driver entry smoke and contract checks. */
 class SourcesSpec extends SparkSpec {
-
-  private lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-
-  test("documents round-trip through jsonl, csv, and orc with identical content") {
-    val dir = Files.createTempDirectory("graft-src").toString
-    CorpusSource.writeDocuments(docs, s"$dir/j", "jsonl")
-    CorpusSource.writeDocuments(docs, s"$dir/c", "csv")
-    CorpusSource.writeDocuments(docs, s"$dir/o", "orc")
-    val orig = docs.select(CorpusSource.documentSchema.fieldNames.map(col): _*)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    for (fmt <- Seq("jsonl", "csv", "orc")) {
-      val got = CorpusSource.readDocuments(spark,
-          s"$dir/${fmt.take(1)}", fmt)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(got == orig, s"round-trip mismatch for $fmt")
-    }
-  }
-
-  test("malformed jsonl records are dropped, not fatal") {
-    val dir = Files.createTempDirectory("graft-bad").toString
-    Files.write(java.nio.file.Paths.get(dir, "part.jsonl"), java.util.List.of(
-      """{"doc_id": 1, "text": "good row", "lang": "en", "source": "s", "n_chars": 8}""",
-      """this is not json at all""",
-      """{"doc_id": 2, "text": "also good", "lang": "en", "source": "s", "n_chars": 9}"""))
-    val got = CorpusSource.readDocuments(spark, dir, "jsonl")
-    assert(got.count() == 2)
-    assert(got.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-  }
 
   test("driver contract smoke: entry() returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)

@@ -1,58 +1,9 @@
 package graft
-// (stream-static near-dup flag test at the bottom)
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.functions._
-
-import graft.operators.RangeJoin
-import graft.streaming.EventStream
-
-/** Watermarked stream-stream interval join, differentially tested
-  * against its batch mirror (RangeJoin). */
+/** Stream-static near-dup flagging, differentially tested against the
+  * batch incremental minhash pairs. */
 class StreamJoinSpec extends SparkSpec {
   import spark.implicits._
-
-  private def ev(id: Long, uid: Long, minute: Int, value: Double = 1.0): EventStream.Event =
-    EventStream.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
-      uid, "e", Some(value))
-
-  test("stream-stream interval join == batch range join on the same data") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-
-    val clicks = Seq(ev(1, 7, 0), ev(2, 7, 30), ev(3, 8, 10))
-    val purchases = Seq(
-      ev(100, 7, 5, 9.0),   // within 10 min of click 1
-      ev(101, 7, 32, 5.0),  // within 10 min of click 2
-      ev(102, 7, 55, 4.0),  // matches nothing
-      ev(103, 8, 10, 2.0),  // exactly at click 3 (inclusive lower)
-      ev(104, 9, 11, 3.0)   // no click for user 9
-    )
-
-    val lIn = MemoryStream[EventStream.Event]
-    val rIn = MemoryStream[EventStream.Event]
-    val joined = EventStream.intervalJoinStreams(lIn.toDF(), rIn.toDF(),
-      windowSeconds = 600)
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("sj_out").start()
-    val streamed = try {
-      lIn.addData(clicks: _*)
-      rIn.addData(purchases: _*)
-      q.processAllAvailable()
-      spark.sql("SELECT left_id, right_id FROM sj_out")
-        .as[(Long, Long)].collect().toSet
-    } finally q.stop()
-
-    val batch = RangeJoin.rangeJoin(
-        clicks.toDF().select($"event_id", $"user_id", $"ts"),
-        purchases.toDF().select($"user_id", $"ts", $"event_id".as("rid")),
-        Seq("user_id"), "ts", "ts", 0L, 600L, Seq("rid"))
-      .select($"event_id", $"r_rid").as[(Long, Long)].collect().toSet
-
-    assert(streamed == Set((1L, 100L), (2L, 101L), (3L, 103L)))
-    assert(batch == streamed, "streaming interval join must mirror the batch range join")
-  }
 
   test("stream-static near-dup flag mirrors incremental minhash candidates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -90,47 +41,5 @@ class StreamJoinSpec extends SparkSpec {
         "doc_id", "text", shingleSize = 2, bands = 32, minJaccard = 0.5)
       .select("id_b", "id_a").as[(Long, Long)].collect().toSet
     assert(batchPairs == got.filter { case (_, c) => c >= 10L && c < 20L })
-  }
-
-  test("streaming curation gates == batch curation gates on the same docs") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and keeps running for a while"),
-      (2L, "x"), // too short: quality-gated out
-      (3L, "another reasonable english document that talks about data and the system today"))
-
-    val in = MemoryStream[(Long, String)]
-    val curated = graft.streaming.CorpusStream.curateStream(
-      in.toDF().toDF("doc_id", "text"), "text", minQuality = 0.5)
-    val q = curated.writeStream.outputMode("append")
-      .format("memory").queryName("curated_stream").start()
-    val got = try {
-      in.addData(docs: _*)
-      q.processAllAvailable()
-      spark.sql("SELECT doc_id, quality_score, lang_pred, n_tokens FROM curated_stream")
-        .as[(Long, Double, String, Int)].collect().toSet
-    } finally q.stop()
-
-    // batch mirror: identical expressions over the same rows
-    val batch = docs.toDF("doc_id", "text")
-      .withColumn("__m", graft.operators.TextAnalysis.textMetrics($"text"))
-      .filter($"__m.quality_score" >= 0.5)
-      .select($"doc_id", $"__m.quality_score", $"__m.lang_pred", $"__m.n_tokens")
-      .as[(Long, Double, String, Int)].collect().toSet
-    assert(got == batch)
-    assert(!got.exists(_._1 == 2L))
-    assert(got.map(_._1) == Set(1L, 3L))
-  }
-
-  test("watermark bounds join state (plan has watermarks on both sides)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val lIn = MemoryStream[EventStream.Event]
-    val rIn = MemoryStream[EventStream.Event]
-    val joined = EventStream.intervalJoinStreams(lIn.toDF(), rIn.toDF(), 600)
-    val analyzed = joined.queryExecution.analyzed.toString
-    assert(analyzed.contains("EventTimeWatermark"),
-      s"both inputs must be watermarked for state expiry:\n$analyzed")
   }
 }
