@@ -158,9 +158,9 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
         if (node != null && node.hasNonNull("metadata_filters") && !node.get("metadata_filters").isObject)
           throw new BadRequest("metadata_filters must be an object")
         val q = SearchQuery(
-          queryText = optText(node, "query_text"),
+          queryText = optString(node, "query_text"),
           queryEmbedding = optFloats(node, "query_embedding"),
-          k = if (node != null && node.has("k")) node.get("k").asInt(5) else 5,
+          k = kOf(node),
           metadataFilters = Option(node).map(n => metaAt(n, "metadata_filters")).getOrElse(Map.empty))
         db.search(libId, q).fold(
           // reference parity: search surfaces NotFound as ValueError -> 400
@@ -333,6 +333,31 @@ object HttpApi {
 
   private def optText(node: JsonNode, field: String): Option[String] =
     Option(node).filter(_.hasNonNull(field)).map(_.get(field).asText())
+
+  // The search body's fields are read as the reference's pydantic v2
+  // models read them in lax mode (SURVEY.md §1.1): a wrongly typed field
+  // is a 400 naming it, never a coerced value.
+
+  /** A string field; a number, bool, array or object is a 400. */
+  private def optString(node: JsonNode, field: String): Option[String] =
+    optText(node, field).map { text =>
+      if (!node.get(field).isTextual) throw new BadRequest(s"$field must be a string")
+      text
+    }
+
+  /** `k`, 5 when absent: an integer, or a number, numeric string or bool
+    * that is one; "abc", 5.5, null or an array is a 400. */
+  private def kOf(node: JsonNode): Int =
+    if (node == null || !node.has("k")) 5
+    else {
+      val v = node.get("k")
+      val n =
+        if (v.isNumber || v.isTextual) scala.util.Try(BigDecimal(v.asText.trim)).toOption
+        else if (v.isBoolean) Some(BigDecimal(if (v.booleanValue) 1 else 0))
+        else None
+      n.filter(_.isWhole).map(_.max(Int.MinValue).min(Int.MaxValue).toInt)
+        .getOrElse(throw new BadRequest("k must be an integer"))
+    }
 
   /** metadata object; scalar values stringified the way the reference
     * compares them (str() coercion — same rule as JsonCodec.parseFilter). */

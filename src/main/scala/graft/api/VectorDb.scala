@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.{IndexState, VectorCatalog}
+import graft.catalog.{DurableCatalog, IndexState, VectorCatalog}
 import graft.functions.Embedder
 import graft.model._
 import graft.search.SearchService
@@ -19,25 +19,20 @@ import graft.search.SearchService
 final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
     embeddingDim: Int = 64, durableRoot: Option[String] = None) {
 
-  // With a durableRoot, every CRUD mutation routes through the
-  // write-ahead-logged DurableCatalog (recovering prior state at
-  // construction); reads and search always hit the underlying catalog.
-  private val durable: Option[graft.catalog.DurableCatalog] =
-    durableRoot.map(root =>
-      graft.catalog.DurableCatalog.recover(spark, root, embedder, embeddingDim))
-  val catalog: VectorCatalog =
-    durable.map(_.inner).getOrElse(new VectorCatalog(spark, embedder, embeddingDim))
+  // With a durableRoot, the catalog recovers prior state at
+  // construction and write-ahead-logs every mutation made through it.
+  val catalog: VectorCatalog = durableRoot.fold(new VectorCatalog(spark, embedder, embeddingDim))(
+    DurableCatalog.recover(spark, _, embedder, embeddingDim))
   private val searchService = new SearchService(catalog)
 
   /** Fold the WAL into a parquet snapshot (no-op without durableRoot). */
-  def checkpoint(): Unit = durable.foreach(_.checkpoint())
+  def checkpoint(): Unit = catalog.checkpoint()
 
   // -------- libraries (app/api/routes/libraries.py)
   /** POST /api/v1/libraries/ (:11-17) */
   def createLibrary(name: String, description: Option[String] = None,
       metadata: Map[String, String] = Map.empty, indexType: String = "lsh") =
-    durable.fold(catalog.createLibrary(name, description, metadata, indexType))(
-      _.createLibrary(name, description, metadata, indexType))
+    catalog.createLibrary(name, description, metadata, indexType)
   /** GET /api/v1/libraries/ (:20-26) */
   def listLibraries(): Seq[LibraryRow] = catalog.listLibraries()
   /** GET /api/v1/libraries/{id} (:29-42) */
@@ -45,11 +40,9 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
   /** PUT /api/v1/libraries/{id} (:45-59) */
   def updateLibrary(id: String, name: Option[String] = None,
       description: Option[String] = None, metadata: Option[Map[String, String]] = None) =
-    durable.fold(catalog.updateLibrary(id, name, description, metadata))(
-      _.updateLibrary(id, name, description, metadata))
+    catalog.updateLibrary(id, name, description, metadata)
   /** DELETE /api/v1/libraries/{id} — cascade (:62-75) */
-  def deleteLibrary(id: String) =
-    durable.fold(catalog.deleteLibrary(id))(_.deleteLibrary(id))
+  def deleteLibrary(id: String) = catalog.deleteLibrary(id)
   /** POST /api/v1/libraries/{id}/index?index_type= (:78-103) */
   def indexLibrary(id: String, indexType: String): Either[ApiError, IndexState] =
     catalog.indexLibrary(id, indexType)
@@ -58,18 +51,15 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
   /** POST /api/v1/documents/?library_id= (:9-20) */
   def createDocument(libraryId: String, name: String,
       description: Option[String] = None, metadata: Map[String, String] = Map.empty) =
-    durable.fold(catalog.createDocument(libraryId, name, description, metadata))(
-      _.createDocument(libraryId, name, description, metadata))
+    catalog.createDocument(libraryId, name, description, metadata)
   /** GET /api/v1/documents/{id} (:23-36) */
   def getDocument(id: String) = catalog.getDocument(id)
   /** PUT /api/v1/documents/{id} (:39-53) */
   def updateDocument(id: String, name: Option[String] = None,
       description: Option[String] = None, metadata: Option[Map[String, String]] = None) =
-    durable.fold(catalog.updateDocument(id, name, description, metadata))(
-      _.updateDocument(id, name, description, metadata))
+    catalog.updateDocument(id, name, description, metadata)
   /** DELETE /api/v1/documents/{id} — cascade (:56-69) */
-  def deleteDocument(id: String) =
-    durable.fold(catalog.deleteDocument(id))(_.deleteDocument(id))
+  def deleteDocument(id: String) = catalog.deleteDocument(id)
   /** GET /api/v1/documents/library/{library_id} (:72-80) */
   def documentsByLibrary(libraryId: String): Seq[DocumentRow] = catalog.listDocuments(libraryId)
   /** GET /api/v1/documents/library/{id}/filter?metadata_filter= (:82-103);
@@ -82,18 +72,15 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
   /** POST /api/v1/chunks/?document_id= — embeds at create (:9-20) */
   def createChunk(documentId: String, text: String,
       metadata: Map[String, String] = Map.empty) =
-    durable.fold(catalog.createChunk(documentId, text, metadata))(
-      _.createChunk(documentId, text, metadata))
+    catalog.createChunk(documentId, text, metadata)
   /** GET /api/v1/chunks/{id} (:22-35) */
   def getChunk(id: String) = catalog.getChunk(id)
   /** PUT /api/v1/chunks/{id} — re-embeds on text change (:38-52) */
   def updateChunk(id: String, text: Option[String] = None,
       metadata: Option[Map[String, String]] = None) =
-    durable.fold(catalog.updateChunk(id, text, metadata))(
-      _.updateChunk(id, text, metadata))
+    catalog.updateChunk(id, text, metadata)
   /** DELETE /api/v1/chunks/{id} (:55-68) */
-  def deleteChunk(id: String) =
-    durable.fold(catalog.deleteChunk(id))(_.deleteChunk(id))
+  def deleteChunk(id: String) = catalog.deleteChunk(id)
   /** GET /api/v1/chunks/document/{document_id} (:71-79).
     * `includeEmbeddings=false` / `limit` / `offset` are scale-safe
     * ADDITIVE params (defaults = reference behavior: every chunk with

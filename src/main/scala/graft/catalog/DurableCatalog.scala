@@ -17,7 +17,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileSystem, LocalFileSystem, Path, RawLocalFileSystem, StreamCapabilities}
 import org.apache.spark.sql.SparkSession
 
-import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
+import graft.model.{ChunkRow, DocumentRow, LibraryRow}
 
 /**
  * Restart durability for the catalog: a write-ahead log of acknowledged
@@ -32,11 +32,12 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  *    after the record is written and hsync'ed. So every *acknowledged*
  *    mutation survives a crash, and replay reproduces byte-identical
  *    rows — replaying requests instead of results would re-generate ids
- *    and break every cross-reference.
- *  - `checkpoint()` folds the catalog into a parquet snapshot
- *    (`VectorCatalog.save`), points the manifest at it, deletes the
- *    snapshot the manifest named before, rolls the active segment and
- *    deletes the logged prefix. `recover()` = load manifest snapshot
+ *    and break every cross-reference. The catalog does both itself, in
+ *    its one write path (`VectorCatalog.commit`).
+ *  - `VectorCatalog.checkpoint()` folds the catalog into a parquet
+ *    snapshot (`VectorCatalog.save`), points the manifest at it, deletes
+ *    the snapshot the manifest named before, rolls the active segment
+ *    and deletes the logged prefix. `recover()` = load manifest snapshot
  *    (if any) + replay the WAL tail in sequence order.
  *  - All paths go through the Hadoop FileSystem API. Writes need the
  *    root's writer lock, an OS file lock, so only `file:` roots take
@@ -45,112 +46,21 @@ import graft.model.{ApiError, ChunkRow, DocumentRow, LibraryRow}
  *
  * The reference holds its state in process dicts with no durability
  * (storage.py keeps everything in memory); this layer is the part a
- * production deployment adds on top, and is opt-in — `VectorCatalog`
- * alone stays zero-I/O.
+ * production deployment adds on top, and is opt-in — a catalog built
+ * with `new VectorCatalog` stays zero-I/O.
  */
-final class DurableCatalog private (
-    val inner: VectorCatalog,
-    private[graft] val wal: CatalogWal) {
-
-  // WAL order must equal application order: apply + log write happen
-  // under one lock, one record per mutation — simple and gapless.
-  private val logLock = new Object
-
-  private def logged[A](op: => Either[ApiError, A])(record: A => ObjectNode): Either[ApiError, A] =
-    logLock.synchronized { op.map { a => wal.append(record(a)); a } }
-
-  def createLibrary(name: String, description: Option[String] = None,
-      metadata: Map[String, String] = Map.empty,
-      indexType: String = "lsh", id: Option[String] = None): Either[ApiError, LibraryRow] =
-    logged(inner.createLibrary(name, description, metadata, indexType, id)) { row =>
-      WalCodec.libRecord("lib_create", row,
-        indexTypeName = inner.indexTypeOf(row.id).map(_.name))
-    }
-
-  def updateLibrary(id: String, name: Option[String] = None,
-      description: Option[String] = None,
-      metadata: Option[Map[String, String]] = None): Either[ApiError, LibraryRow] =
-    logged(inner.updateLibrary(id, name, description, metadata))(
-      WalCodec.libRecord("lib_update", _, None))
-
-  def deleteLibrary(id: String): Either[ApiError, Unit] =
-    logged(inner.deleteLibrary(id))(_ => WalCodec.deleteRecord("lib_delete", id))
-
-  def createDocument(libraryId: String, name: String,
-      description: Option[String] = None,
-      metadata: Map[String, String] = Map.empty,
-      id: Option[String] = None): Either[ApiError, DocumentRow] =
-    logged(inner.createDocument(libraryId, name, description, metadata, id))(
-      WalCodec.docRecord("doc_put"))
-
-  def updateDocument(id: String, name: Option[String] = None,
-      description: Option[String] = None,
-      metadata: Option[Map[String, String]] = None): Either[ApiError, DocumentRow] =
-    logged(inner.updateDocument(id, name, description, metadata))(
-      WalCodec.docRecord("doc_put"))
-
-  def deleteDocument(id: String): Either[ApiError, Unit] =
-    logged(inner.deleteDocument(id))(_ => WalCodec.deleteRecord("doc_delete", id))
-
-  def createChunk(documentId: String, text: String,
-      metadata: Map[String, String] = Map.empty,
-      embedding: Option[Array[Float]] = None,
-      id: Option[String] = None): Either[ApiError, ChunkRow] =
-    logged(inner.createChunk(documentId, text, metadata, embedding, id))(
-      row => WalCodec.chunkRecord(Seq(row)))
-
-  /** Bulk create is ONE commit record for the whole batch. */
-  def createChunks(documentId: String,
-      items: Seq[(String, Map[String, String])]): Either[ApiError, Seq[ChunkRow]] =
-    logged(inner.createChunks(documentId, items))(WalCodec.chunkRecord)
-
-  def updateChunk(id: String, text: Option[String] = None,
-      metadata: Option[Map[String, String]] = None): Either[ApiError, ChunkRow] =
-    logged(inner.updateChunk(id, text, metadata))(
-      row => WalCodec.chunkRecord(Seq(row)))
-
-  def deleteChunk(id: String): Either[ApiError, Unit] =
-    logged(inner.deleteChunk(id))(_ => WalCodec.deleteRecord("chunk_delete", id))
-
-  /** Snapshot + manifest swap + log truncation. Crash-ordering: the
-    * snapshot is complete before the manifest points at it, and the old
-    * snapshot and WAL segments are deleted only after the manifest
-    * commit — a crash at any point recovers to a consistent state
-    * (records the snapshot already holds are skipped by the seq fence).
-    * A catalog whose base is still read from the old snapshot folds
-    * first, so deleting that snapshot loses no rows. */
-  def checkpoint(): Unit = logLock.synchronized {
-    wal.checkpoint { snapshot =>
-      inner.detachFromFiles()
-      inner.save(snapshot)
-    }
-  }
-}
-
 object DurableCatalog {
 
   /** Open a durable catalog at `root`, replaying any prior state:
     * manifest snapshot first, then the WAL tail past the snapshot's
-    * sequence fence, in sequence order. */
+    * sequence fence, in sequence order. Every later write through the
+    * returned catalog is logged. */
   def recover(spark: SparkSession, root: String,
       embedder: graft.functions.Embedder = graft.functions.Embedder.default,
-      embeddingDim: Int = 64): DurableCatalog = {
-    val inner = new VectorCatalog(spark, embedder, embeddingDim)
-    val wal = inner.replaying(CatalogWal.open(spark, root)(inner.load) { node =>
-      node.get("op").asText() match {
-        case "lib_create" =>
-          inner.restoreLibrary(WalCodec.libFrom(node),
-            Option(node.get("index_type")).map(n => WalCodec.parseIndexType(n.asText())))
-        case "lib_update" => inner.restoreLibrary(WalCodec.libFrom(node), None)
-        case "lib_delete" => inner.restoreDeleteLibrary(node.get("id").asText())
-        case "doc_put" => inner.restoreDocument(WalCodec.docFrom(node))
-        case "doc_delete" => inner.restoreDeleteDocument(node.get("id").asText())
-        case "chunk_put" => inner.restoreChunks(WalCodec.chunksFrom(node))
-        case "chunk_delete" => inner.restoreDeleteChunk(node.get("id").asText())
-        case other => throw new IllegalStateException(s"Unknown WAL op: $other")
-      }
-    })
-    new DurableCatalog(inner, wal)
+      embeddingDim: Int = 64): VectorCatalog = {
+    val catalog = new VectorCatalog(spark, embedder, embeddingDim)
+    catalog.openLog(root)
+    catalog
   }
 }
 
@@ -232,9 +142,11 @@ final class CatalogWal private (spark: SparkSession, root: String) {
     }
   }
 
-  /** [[DurableCatalog.checkpoint]] under the writer lock: `save` writes
+  /** `VectorCatalog.checkpoint` under the writer lock: `save` writes
     * the snapshot, then the manifest points at it, then the snapshot it
-    * replaces and the logged prefix are deleted. */
+    * replaces and the logged prefix are deleted. So a crash at any point
+    * recovers to a consistent state: records the snapshot already holds
+    * are skipped by the seq fence. */
   def checkpoint(save: String => Unit): Unit = synchronized {
     exclusively {
       val at = seq
@@ -490,13 +402,35 @@ object CatalogWal {
   }
 }
 
-/** JSON <-> row codecs for WAL records. Timestamps travel as epoch
-  * millis (catalog `now()` is millis-granular); embeddings as float
-  * arrays. */
+/** JSON <-> mutation codec for WAL records, one op string per record
+  * kind. Timestamps travel as epoch millis (catalog `now()` is
+  * millis-granular); embeddings as float arrays. */
 private[catalog] object WalCodec {
+  import Mutation._
+
   private val mapper = new ObjectMapper()
 
-  def parseIndexType(s: String): IndexType =
+  def record(m: Mutation): ObjectNode = m match {
+    case LibraryPut(row, created) => libRecord(row, created)
+    case LibraryDelete(id) => deleteRecord("lib_delete", id)
+    case DocumentPut(row) => docRecord(row)
+    case DocumentDelete(id) => deleteRecord("doc_delete", id)
+    case ChunkPut(rows) => chunkRecord(rows)
+    case ChunkDelete(id) => deleteRecord("chunk_delete", id)
+  }
+
+  def mutation(n: JsonNode): Mutation = n.get("op").asText() match {
+    case "lib_create" => LibraryPut(libFrom(n), Option(n.get("index_type")).map(t => parseIndexType(t.asText())))
+    case "lib_update" => LibraryPut(libFrom(n), None)
+    case "lib_delete" => LibraryDelete(n.get("id").asText())
+    case "doc_put" => DocumentPut(docFrom(n))
+    case "doc_delete" => DocumentDelete(n.get("id").asText())
+    case "chunk_put" => ChunkPut(chunksFrom(n))
+    case "chunk_delete" => ChunkDelete(n.get("id").asText())
+    case other => throw new IllegalStateException(s"Unknown WAL op: $other")
+  }
+
+  private def parseIndexType(s: String): IndexType =
     IndexType.parse(s).getOrElse(throw new IllegalStateException(s"Bad index type in WAL: $s"))
 
   private def putMeta(node: ObjectNode, meta: Map[String, String]): Unit = {
@@ -512,20 +446,20 @@ private[catalog] object WalCodec {
   }
   private def ts(millis: Long) = new java.sql.Timestamp(millis)
 
-  def deleteRecord(op: String, id: String): ObjectNode = {
+  private def deleteRecord(op: String, id: String): ObjectNode = {
     val n = mapper.createObjectNode()
     n.put("op", op)
     n.put("id", id)
     n
   }
 
-  def libRecord(op: String, row: LibraryRow, indexTypeName: Option[String]): ObjectNode = {
+  private def libRecord(row: LibraryRow, created: Option[IndexType]): ObjectNode = {
     val n = mapper.createObjectNode()
-    n.put("op", op)
+    n.put("op", if (created.isDefined) "lib_create" else "lib_update")
     n.put("id", row.id)
     n.put("name", row.name)
     row.description.foreach(n.put("description", _))
-    indexTypeName.foreach(n.put("index_type", _))
+    created.foreach(it => n.put("index_type", it.name))
     putMeta(n, row.metadata)
     n.put("is_indexed", row.is_indexed)
     n.put("created_at", row.created_at.getTime)
@@ -533,15 +467,15 @@ private[catalog] object WalCodec {
     n
   }
 
-  def libFrom(n: JsonNode): LibraryRow = LibraryRow(
+  private def libFrom(n: JsonNode): LibraryRow = LibraryRow(
     n.get("id").asText(), n.get("name").asText(),
     Option(n.get("description")).map(_.asText()),
     metaFrom(n), n.get("is_indexed").asBoolean(),
     ts(n.get("created_at").asLong()), ts(n.get("updated_at").asLong()))
 
-  def docRecord(op: String)(row: DocumentRow): ObjectNode = {
+  private def docRecord(row: DocumentRow): ObjectNode = {
     val n = mapper.createObjectNode()
-    n.put("op", op)
+    n.put("op", "doc_put")
     n.put("id", row.id)
     n.put("library_id", row.library_id)
     n.put("name", row.name)
@@ -552,13 +486,13 @@ private[catalog] object WalCodec {
     n
   }
 
-  def docFrom(n: JsonNode): DocumentRow = DocumentRow(
+  private def docFrom(n: JsonNode): DocumentRow = DocumentRow(
     n.get("id").asText(), n.get("library_id").asText(), n.get("name").asText(),
     Option(n.get("description")).map(_.asText()),
     metaFrom(n),
     ts(n.get("created_at").asLong()), ts(n.get("updated_at").asLong()))
 
-  def chunkRecord(rows: Seq[ChunkRow]): ObjectNode = {
+  private def chunkRecord(rows: Seq[ChunkRow]): ObjectNode = {
     val n = mapper.createObjectNode()
     n.put("op", "chunk_put")
     val arr = n.putArray("chunks")
@@ -579,7 +513,7 @@ private[catalog] object WalCodec {
     n
   }
 
-  def chunksFrom(n: JsonNode): Seq[ChunkRow] = {
+  private def chunksFrom(n: JsonNode): Seq[ChunkRow] = {
     val arr = n.get("chunks").asInstanceOf[ArrayNode]
     (0 until arr.size()).map { i =>
       val cn = arr.get(i)

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.filter.MetadataFilter
 import graft.functions.Embedder
@@ -29,6 +30,20 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
   }
 }
 
+/** One catalog mutation as its result, generated ids and timestamps
+  * included: what a public write applies and a durable catalog logs, and
+  * what WAL replay applies again (`WalCodec` maps each to its record). */
+private[catalog] sealed trait Mutation
+private[catalog] object Mutation {
+  /** A library row put: a create carries its tier, an update None. */
+  final case class LibraryPut(row: LibraryRow, created: Option[IndexType]) extends Mutation
+  final case class LibraryDelete(id: String) extends Mutation
+  final case class DocumentPut(row: DocumentRow) extends Mutation
+  final case class DocumentDelete(id: String) extends Mutation
+  final case class ChunkPut(rows: Seq[ChunkRow]) extends Mutation
+  final case class ChunkDelete(id: String) extends Mutation
+}
+
 /**
  * Driver-side catalog + chunk store for the Library -> Document -> Chunk
  * hierarchy. Libraries and documents are driver-side registries (they
@@ -43,6 +58,13 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
  * 105, 182); updates with None/absent fields leave fields unchanged
  * (library_service.py:66-69).
  *
+ * One write path: a public write builds its result (ids, timestamps,
+ * embeddings), applies it through `applyMutation` — the function WAL
+ * replay calls — and, on a catalog `DurableCatalog.recover` opened,
+ * appends it to the write-ahead log and hsyncs it before returning. The
+ * existence check, the apply and the append hold one lock, so the log's
+ * order is the apply order and a rejected write logs nothing.
+ *
  * `driverDerivation` off makes every index tier take its Spark form,
  * even for a resident library: the reference that the driver form is
  * tested and measured against. `hnswCap` is the HNSW tier's graph cap,
@@ -54,7 +76,7 @@ final class VectorCatalog(val spark: SparkSession,
     private[graft] val driverDerivation: Boolean = true,
     private[graft] val hnswCap: Int = graft.index.HnswModel.maxGraphVectors) {
   import spark.implicits._
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[VectorCatalog])
+  import Mutation._
 
   private val libraries = new TrieMap[String, LibraryRow]()
   private val documents = new TrieMap[String, DocumentRow]()
@@ -82,8 +104,13 @@ final class VectorCatalog(val spark: SparkSession,
   private var mutationsSinceCompact = 0
   // `load` set the base to a parquet read that no fold has replaced yet
   private var baseFromFiles = false
-  // a WAL replay is running (`replaying`): mutations skip the threshold fold
+  // a WAL replay is running (`openLog`): mutations skip the threshold fold
   private var replay = false
+
+  // the write-ahead log, on a catalog `DurableCatalog.recover` opened;
+  // set, read and appended to under writeLock
+  private val writeLock = new Object
+  private var durable: Option[CatalogWal] = None
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
   // folded-base rows of each small library — none for a library created
@@ -115,12 +142,13 @@ final class VectorCatalog(val spark: SparkSession,
   def createLibrary(name: String, description: Option[String] = None,
       metadata: Map[String, String] = Map.empty,
       indexType: String = "lsh", id: Option[String] = None): Either[ApiError, LibraryRow] =
-    IndexType.parse(indexType).map { it =>
-      val t = now()
-      val row = LibraryRow(id.getOrElse(newId()), name, description, metadata,
-        is_indexed = false, created_at = t, updated_at = t)
-      libraries.put(row.id, row)
-      setIndex(row.id, Some(IndexState.empty(it)))
+    IndexType.parse(indexType).flatMap { it =>
+      commit(Right {
+        val t = now()
+        LibraryRow(id.getOrElse(newId()), name, description, metadata,
+          is_indexed = false, created_at = t, updated_at = t)
+      })(LibraryPut(_, Some(it)))
+    }.map { row =>
       // a generated id has no base rows: the library is resident from
       // its creation, its upserts overlay the empty snapshot, and the
       // next fold carries it
@@ -136,31 +164,25 @@ final class VectorCatalog(val spark: SparkSession,
   def updateLibrary(id: String, name: Option[String] = None,
       description: Option[String] = None,
       metadata: Option[Map[String, String]] = None): Either[ApiError, LibraryRow] =
-    getLibrary(id).map { lib =>
-      val updated = lib.copy(
-        name = name.getOrElse(lib.name),
-        description = description.orElse(lib.description),
-        metadata = metadata.getOrElse(lib.metadata),
-        updated_at = now())
-      libraries.put(id, updated)
-      updated
-    }
+    commit(getLibrary(id).map(lib => lib.copy(
+      name = name.getOrElse(lib.name),
+      description = description.orElse(lib.description),
+      metadata = metadata.getOrElse(lib.metadata),
+      updated_at = now())))(LibraryPut(_, None))
 
   /** Cascade: documents and chunks of the library go too (storage.py:67-90). */
   def deleteLibrary(id: String): Either[ApiError, Unit] =
-    getLibrary(id).map(_ => restoreDeleteLibrary(id))
+    commit(getLibrary(id).map(_ => ()))(_ => LibraryDelete(id))
 
   // --------------------------------------------------------------- document
   def createDocument(libraryId: String, name: String,
       description: Option[String] = None,
       metadata: Map[String, String] = Map.empty,
       id: Option[String] = None): Either[ApiError, DocumentRow] =
-    getLibrary(libraryId).map { _ =>
+    commit(getLibrary(libraryId).map { _ =>
       val t = now()
-      val row = DocumentRow(id.getOrElse(newId()), libraryId, name, description, metadata, t, t)
-      documents.put(row.id, row)
-      row
-    }
+      DocumentRow(id.getOrElse(newId()), libraryId, name, description, metadata, t, t)
+    })(DocumentPut)
 
   def getDocument(id: String): Either[ApiError, DocumentRow] =
     documents.get(id).toRight(ApiError.NotFound(s"Document $id not found"))
@@ -171,19 +193,15 @@ final class VectorCatalog(val spark: SparkSession,
   def updateDocument(id: String, name: Option[String] = None,
       description: Option[String] = None,
       metadata: Option[Map[String, String]] = None): Either[ApiError, DocumentRow] =
-    getDocument(id).map { doc =>
-      val updated = doc.copy(
-        name = name.getOrElse(doc.name),
-        description = description.orElse(doc.description),
-        metadata = metadata.getOrElse(doc.metadata),
-        updated_at = now())
-      documents.put(id, updated)
-      updated
-    }
+    commit(getDocument(id).map(doc => doc.copy(
+      name = name.getOrElse(doc.name),
+      description = description.orElse(doc.description),
+      metadata = metadata.getOrElse(doc.metadata),
+      updated_at = now())))(DocumentPut)
 
   /** Cascade: the document's chunks go too (storage.py:137-161). */
   def deleteDocument(id: String): Either[ApiError, Unit] =
-    getDocument(id).map(_ => restoreDeleteDocument(id))
+    commit(getDocument(id).map(_ => ()))(_ => DocumentDelete(id))
 
   /** Equality-only metadata filter over documents (document_service.py:117-143). */
   def documentsByMetadata(libraryId: String, filters: Map[String, String]): Seq[DocumentRow] =
@@ -195,24 +213,21 @@ final class VectorCatalog(val spark: SparkSession,
       metadata: Map[String, String] = Map.empty,
       embedding: Option[Array[Float]] = None,
       id: Option[String] = None): Either[ApiError, ChunkRow] =
-    for {
+    commit(for {
       doc <- getDocument(documentId)
       _ <- embedding.flatMap(embeddingError).toLeft(())
     } yield {
       val t = now()
       val emb = embedding.orElse(Some(embedder.embedOne(text)))
-      val row = ChunkRow(id.getOrElse(newId()), documentId, doc.library_id, text, emb, metadata, t, t)
-      appendChunks(Seq(row))
-      row
-    }
+      ChunkRow(id.getOrElse(newId()), documentId, doc.library_id, text, emb, metadata, t, t)
+    })(row => ChunkPut(Seq(row)))
 
   /** The chunk-write boundary for a caller-supplied embedding, checked
-    * before anything is buffered (or, in `DurableCatalog`, logged): a
-    * wrong dimension would make every later search of the library
-    * throw, and a non-finite element would top every descending top-k.
-    * WAL replay (`restoreChunks`) checks logged rows the same way: a
-    * root reopened with another dimension fails at recovery, not at a
-    * later search. */
+    * before anything is buffered or logged: a wrong dimension would make
+    * every later search of the library throw, and a non-finite element
+    * would top every descending top-k. WAL replay (`openLog`) checks
+    * logged rows the same way: a root reopened with another dimension
+    * fails at recovery, not at a later search. */
   private def embeddingError(v: Array[Float]): Option[ApiError] =
     if (v.length != embeddingDim)
       Some(ApiError.Validation(s"embedding has dimension ${v.length}; " +
@@ -221,17 +236,16 @@ final class VectorCatalog(val spark: SparkSession,
       Some(ApiError.Validation("embedding must contain only finite numbers"))
     else None
 
-  /** Bulk create for batch ingest — single union, one embed pass. */
+  /** Bulk create for batch ingest — single union, one embed pass, one
+    * WAL record for the whole batch on a durable catalog. */
   def createChunks(documentId: String, items: Seq[(String, Map[String, String])]): Either[ApiError, Seq[ChunkRow]] =
-    getDocument(documentId).map { doc =>
+    commit(getDocument(documentId).map { doc =>
       val t = now()
       val embs = embedder.embed(items.map(_._1))
-      val rows = items.zip(embs).map { case ((text, meta), emb) =>
+      items.zip(embs).map { case ((text, meta), emb) =>
         ChunkRow(newId(), documentId, doc.library_id, text, Some(emb), meta, t, t)
       }
-      appendChunks(rows)
-      rows
-    }
+    })(ChunkPut)
 
   def getChunk(id: String): Either[ApiError, ChunkRow] = {
     // O(1) fast path: a recently-written row lives in the driver buffer
@@ -257,19 +271,14 @@ final class VectorCatalog(val spark: SparkSession,
     * fields unchanged (PATCH semantics). */
   def updateChunk(id: String, text: Option[String] = None,
       metadata: Option[Map[String, String]] = None): Either[ApiError, ChunkRow] =
-    getChunk(id).map { old =>
-      val t = now()
-      val updated = old.copy(
-        text = text.getOrElse(old.text),
-        embedding = text.map(tx => embedder.embedOne(tx)).orElse(old.embedding),
-        metadata = metadata.getOrElse(old.metadata),
-        updated_at = t)
-      appendChunks(Seq(updated)) // upsert: buffers the row, tombstones the old
-      updated
-    }
+    commit(getChunk(id).map(old => old.copy(
+      text = text.getOrElse(old.text),
+      embedding = text.map(tx => embedder.embedOne(tx)).orElse(old.embedding),
+      metadata = metadata.getOrElse(old.metadata),
+      updated_at = now())))(row => ChunkPut(Seq(row)))
 
   def deleteChunk(id: String): Either[ApiError, Unit] =
-    getChunk(id).map(_ => restoreDeleteChunk(id))
+    commit(getChunk(id).map(_ => ()))(_ => ChunkDelete(id))
 
   def chunksByDocument(documentId: String): DataFrame =
     chunks.filter($"document_id" === documentId)
@@ -454,66 +463,63 @@ final class VectorCatalog(val spark: SparkSession,
     c.id, c.document_id, c.library_id, c.text,
     c.embedding.orNull, c.metadata, c.created_at, c.updated_at)
 
-  /** Upsert: duplicate-id create OVERWRITES (dict-set parity,
-    * storage.py:40/105/182) — the buffer keys by id and the tombstone
-    * hides any base-resident row with the same id. O(1), no Spark job. */
-  private def appendChunks(rows: Seq[ChunkRow]): Unit =
-    mutate {
-      rows.foreach { r =>
-        upserts(r.id) = r
-        chunkTombstones += r.id
+  /** Under writeLock: `result`, once built, applied and, on a durable
+    * catalog, logged and hsync'ed; a Left applies and logs nothing. */
+  private def commit[A](result: => Either[ApiError, A])(mutation: A => Mutation): Either[ApiError, A] =
+    writeLock.synchronized {
+      result.map { a =>
+        val m = mutation(a)
+        applyMutation(m)
+        durable.foreach(_.append(WalCodec.record(m)))
+        a
       }
     }
 
-  // ---- WAL replay hooks (DurableCatalog). Replay must reproduce the
-  // EXACT post-op state, so these restore logged results verbatim —
-  // no id/timestamp generation, no existence-check Spark jobs — while
-  // still flowing through `mutate` so staleness versions advance as in
-  // the original run. A fold is invisible to reads, so a replay folds
-  // once at its end (`replaying`), not every `compactEvery` records.
-  // The public deletes run their existence check, then the same
-  // restore body.
-  private[graft] def restoreLibrary(row: LibraryRow, indexType: Option[IndexType]): Unit = {
-    libraries.put(row.id, row)
-    indexType.foreach { it =>
-      if (!indexes.contains(row.id))
-        indexes.put(row.id, IndexState.empty(it))
-    }
+  /** The one apply of each mutation, for a public write and for WAL
+    * replay alike. It takes the result verbatim — no id or timestamp
+    * generation, no existence check — so replay reproduces the exact
+    * post-op state; chunk mutations flow through `mutate`, so staleness
+    * versions advance as in the original run. A chunk put is an upsert:
+    * duplicate-id create OVERWRITES (dict-set parity, storage.py:40/105/
+    * 182) — the buffer keys by id and the tombstone hides any base row
+    * with the same id. O(1), no Spark job. */
+  private def applyMutation(m: Mutation): Unit = m match {
+    case LibraryPut(row, created) =>
+      libraries.put(row.id, row)
+      created.foreach(it => setIndex(row.id, Some(IndexState.empty(it))))
+    case LibraryDelete(id) =>
+      libraries.remove(id)
+      setIndex(id, None)
+      documents.filterInPlace { case (_, d) => d.library_id != id }
+      mutate {
+        upserts.filterInPlace((_, c) => c.library_id != id)
+        libTombstones += id
+      }
+    case DocumentPut(row) => documents.put(row.id, row)
+    case DocumentDelete(id) =>
+      documents.remove(id)
+      mutate {
+        upserts.filterInPlace((_, c) => c.document_id != id)
+        docTombstones += id
+      }
+    case ChunkPut(rows) =>
+      mutate {
+        rows.foreach { r =>
+          upserts(r.id) = r
+          chunkTombstones += r.id
+        }
+      }
+    case ChunkDelete(id) =>
+      mutate {
+        upserts.remove(id)
+        chunkTombstones += id
+      }
   }
-  private[graft] def restoreDocument(row: DocumentRow): Unit =
-    documents.put(row.id, row)
-  private[graft] def restoreChunks(rows: Seq[ChunkRow]): Unit = {
-    for (r <- rows; e <- r.embedding.flatMap(embeddingError))
-      throw new IllegalStateException(s"chunk ${r.id}: ${e.message}")
-    appendChunks(rows)
-  }
-  private[graft] def restoreDeleteLibrary(id: String): Unit = {
-    libraries.remove(id)
-    setIndex(id, None)
-    documents.filterInPlace { case (_, d) => d.library_id != id }
-    mutate {
-      upserts.filterInPlace((_, c) => c.library_id != id)
-      libTombstones += id
-    }
-  }
-  private[graft] def restoreDeleteDocument(id: String): Unit = {
-    documents.remove(id)
-    mutate {
-      upserts.filterInPlace((_, c) => c.document_id != id)
-      docTombstones += id
-    }
-  }
-  private[graft] def restoreDeleteChunk(id: String): Unit =
-    mutate {
-      upserts.remove(id)
-      chunkTombstones += id
-    }
-  private[graft] def indexTypeOf(libraryId: String): Option[IndexType] =
-    indexes.get(libraryId).map(_.indexType)
 
   /** Apply a buffered mutation under the state lock, bump the index-
     * staleness version, and fold the log when it crosses the threshold
-    * (outside a WAL replay). */
+    * (outside a WAL replay: a fold is invisible to reads, so a replay
+    * folds once at its end). */
   private def mutate(f: => Unit): Unit = stateLock.synchronized {
     f
     version.incrementAndGet()
@@ -523,19 +529,46 @@ final class VectorCatalog(val spark: SparkSession,
 
   private val compactEvery = 64
 
-  /** Run `body`, a WAL replay through the restore hooks, without the
-    * threshold fold, then fold once if the replay crossed it. */
-  private[graft] def replaying[A](body: => A): A = stateLock.synchronized {
-    replay = true
-    val out = try body finally replay = false
-    if (mutationsSinceCompact >= compactEvery) compactLocked()
-    out
+  /** Open the write-ahead log at `root` on this new catalog: load the
+    * manifest's snapshot, replay every record past its fence through
+    * `applyMutation` without the threshold fold, fold once if the replay
+    * crossed it, and log every later write there. A logged chunk's
+    * embedding is checked as a caller's is. */
+  private[catalog] def openLog(root: String): Unit = writeLock.synchronized {
+    stateLock.synchronized {
+      replay = true
+      val wal =
+        try CatalogWal.open(spark, root)(load) { record =>
+          val m = WalCodec.mutation(record)
+          m match {
+            case ChunkPut(rows) =>
+              for (r <- rows; e <- r.embedding.flatMap(embeddingError))
+                throw new IllegalStateException(s"chunk ${r.id}: ${e.message}")
+            case _ =>
+          }
+          applyMutation(m)
+        } finally replay = false
+      if (mutationsSinceCompact >= compactEvery) compactLocked()
+      durable = Some(wal)
+    }
   }
 
-  /** Fold the log when the base is still the parquet read `load` made,
-    * so the files it was loaded from can be deleted. */
-  private[graft] def detachFromFiles(): Unit =
-    stateLock.synchronized(if (baseFromFiles) compactLocked())
+  /** The catalog's write-ahead log; DurabilitySpec's probe of it. */
+  private[graft] def wal: CatalogWal =
+    durable.getOrElse(throw new IllegalStateException("an in-memory catalog has no write-ahead log"))
+
+  /** Fold the catalog into a parquet snapshot, point the manifest at it
+    * and truncate the log; a no-op on an in-memory catalog. A crash at
+    * any point recovers to a consistent state (see
+    * [[CatalogWal.checkpoint]]). A base still read from the snapshot
+    * being replaced is folded first, so deleting that snapshot loses no
+    * rows. */
+  def checkpoint(): Unit = writeLock.synchronized {
+    durable.foreach(_.checkpoint { snapshot =>
+      stateLock.synchronized(if (baseFromFiles) compactLocked())
+      save(snapshot)
+    })
+  }
 
   /** The read view: base minus tombstones, plus buffered upserts.
     * Constant plan depth regardless of CRUD history. Callers hold
@@ -600,6 +633,10 @@ final class VectorCatalog(val spark: SparkSession,
       restored
     }
 
+  /** The saved library table: the registry's rows and each library's
+    * index type (null in saves written before it was kept). */
+  private val savedLibraries = Schemas.libraries.add("index_type", StringType)
+
   /** Persist the full catalog: chunks partitioned by library (partition
     * pruning on the per-library scan path, SURVEY.md §4) + the
     * library/document registries as parquet dimension tables. */
@@ -607,7 +644,7 @@ final class VectorCatalog(val spark: SparkSession,
     chunks.write.mode("overwrite").partitionBy("library_id").parquet(s"$path/chunks")
     spark.createDataFrame(libraries.values.toSeq.map(l => Row(
         l.id, l.name, l.description.orNull, l.metadata, l.is_indexed,
-        l.created_at, l.updated_at)).asJava, Schemas.libraries)
+        l.created_at, l.updated_at, indexes.get(l.id).map(_.indexType.name).orNull)).asJava, savedLibraries)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/libraries")
     spark.createDataFrame(documents.values.toSeq.map(d => Row(
         d.id, d.library_id, d.name, d.description.orNull, d.metadata,
@@ -615,8 +652,10 @@ final class VectorCatalog(val spark: SparkSession,
       .coalesce(1).write.mode("overwrite").parquet(s"$path/documents")
   }
 
-  /** Restore a saved catalog (indexes rebuild on demand — they are
-    * derived data). */
+  /** Restore a saved catalog. A library the catalog holds no index state
+    * for gets its saved type's empty state, as at its creation; built
+    * indexes rebuild on demand (they are derived data) or load through
+    * `loadIndex`. */
   def load(path: String): Unit = {
     stateLock.synchronized {
       base = spark.read.schema(Schemas.chunks).parquet(s"$path/chunks")
@@ -628,11 +667,15 @@ final class VectorCatalog(val spark: SparkSession,
       dropResident()
     }
     libraries.clear()
-    spark.read.schema(Schemas.libraries).parquet(s"$path/libraries").collect().foreach { r =>
+    spark.read.schema(savedLibraries).parquet(s"$path/libraries").collect().foreach { r =>
       libraries.put(r.getString(0), LibraryRow(r.getString(0), r.getString(1),
         Option(r.getString(2)),
         Option(r.getAs[scala.collection.Map[String, String]](3)).map(_.toMap).getOrElse(Map.empty),
         r.getBoolean(4), r.getTimestamp(5), r.getTimestamp(6)))
+      Option(r.getString(7)).foreach { t =>
+        val it = IndexType.parse(t).fold(e => throw new IllegalStateException(s"$path: ${e.message}"), identity)
+        indexes.putIfAbsent(r.getString(0), IndexState.empty(it))
+      }
     }
     documents.clear()
     spark.read.schema(Schemas.documents).parquet(s"$path/documents").collect().foreach { r =>

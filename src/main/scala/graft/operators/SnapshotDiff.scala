@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * one full-outer equi-join on the key, null-safe column comparison for
  * the payload, and a four-way status (`added` / `removed` / `changed` /
  * `same`). At scale this is ONE key-partitioned shuffle of each side —
- * co-bucketed snapshots (Layout.writeBucketed on the key) join with no
+ * snapshots bucketed on the key (Spark's `bucketBy`) join with no
  * exchange at all, which is how a daily diff over a 100 TB table stays
  * an I/O-bound scan.
  *

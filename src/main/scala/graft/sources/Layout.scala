@@ -4,53 +4,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /**
- * Physical data layout for the 100 TB read path. Two levers the query
- * planner exploits for free once the data is written right:
- *
- *  - **Bucketing** (`writeBucketed`): pre-hash-partition a table on
- *    its join/aggregation key into a fixed bucket count. Two tables
- *    bucketed on the same key with the same count join WITHOUT any
- *    exchange — the shuffle that dominates a fact-fact join at scale
- *    is paid once at write time, then amortized over every subsequent
- *    join/aggregate on that key. Sorted buckets additionally let
- *    sort-merge join skip its sort.
- *
- *  - **Range clustering** (`writeClustered`): range-partition +
- *    sort by the hot filter columns before writing parquet, so each
- *    file (and row group) covers a narrow slice of the filter space.
- *    Parquet min/max footer stats then let pushed predicates skip
- *    whole files/row groups — I/O proportional to selectivity, not
- *    table size. (This is the sorted-layout half of Z-ordering; for
- *    one or two correlated columns, lexicographic range-sort gives
- *    the same skipping without interleaved bit tricks.)
- *
- * Both write plain parquet readable by any engine; bucketing metadata
- * lives in the session catalog (Spark's bucketed-table contract).
+ * Physical data layout for the 100 TB read path: z-order clustering,
+ * written as plain parquet readable by any engine. Each file covers a
+ * narrow slice of every clustering column, so parquet min/max footer
+ * stats let pushed predicates skip whole files/row groups — I/O
+ * proportional to selectivity, not table size.
  */
 object Layout {
-
-  /** Write `df` as a bucketed, per-bucket-sorted catalog table. The
-    * bucket count is a layout contract: pick once per key domain
-    * (co-bucketed tables must match) and size so one bucket of the
-    * LARGEST table fits an executor (#buckets >= table_bytes /
-    * executor_working_set). */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String,
-      numBuckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write
-      .mode(mode)
-      .format("parquet")
-      .bucketBy(numBuckets, keyCol)
-      .sortBy(keyCol)
-      .saveAsTable(table)
-
-  /** Range-cluster `df` by `cols` into `numFiles` parquet files at
-    * `path`: global range partition + in-file sort = tight per-file
-    * min/max stats on every prefix of `cols`. */
-  def writeClustered(df: DataFrame, path: String, numFiles: Int,
-      cols: String*): Unit =
-    df.repartitionByRange(numFiles, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
 
   /**
    * Z-order clustering (the multi-column skipping lever — what Delta's
@@ -94,41 +54,6 @@ object Layout {
       bit <- 0 until bits
     } yield shiftleft(shiftright(p, bit).bitwiseAND(lit(1L)), bit * k + ci)
     parts.reduce(_.bitwiseOR(_)).as(s"z_${cols.mkString("_")}")
-  }
-
-  /**
-   * Size-targeted parquet writer — the file-sizing lever the other
-   * writers leave implicit: at 100 TB both failure modes are real
-   * (millions of small files make LISTing and task scheduling the
-   * bottleneck; few huge files starve parallelism and blow task
-   * memory). File count derives from the plan's size statistics —
-   * for file-source-rooted plans that is the SOURCE'S on-disk bytes
-   * (already parquet-encoded), so the default ratio is 1.0; set
-   * `parquetRatio` below 1 when the plan projects away columns or
-   * filters heavily (output smaller than input), above 1 when it
-   * explodes/joins (larger). A round-robin repartition balances rows
-   * regardless of upstream skew.
-   */
-  def writeSized(df: DataFrame, path: String,
-      targetBytesPerFile: Long = 128L * 1024 * 1024,
-      parquetRatio: Double = 1.0): Unit = {
-    require(targetBytesPerFile > 0, "target must be positive")
-    val planBytes = org.apache.spark.sql.graft.Bridge.analyzed(df)
-      .stats.sizeInBytes
-    // Plans with no real statistics fall back to
-    // spark.sql.defaultSizeInBytes (Long.MaxValue by default); sizing
-    // off that would attempt repartition(Int.MaxValue). Fail with the
-    // remedy instead of a nonsense partition count.
-    val defaultSize = BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
-    require(BigInt(planBytes.bigInteger) < defaultSize,
-      s"writeSized: plan has no usable size statistics (sizeInBytes=$planBytes " +
-        "is the defaultSizeInBytes fallback). Root the plan at a file source, " +
-        "run ANALYZE TABLE, or pick a file count explicitly via repartition().")
-    val est = (BigDecimal(planBytes) * parquetRatio).toBigInt
-    val maxFiles = 1000000L // 1e6 files x 128 MB ≈ 128 TB — sane upper bound
-    val files = (est / targetBytesPerFile).toLong + 1
-    df.repartition(math.max(1L, math.min(files, maxFiles)).toInt)
-      .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** Rank-space positions (0 .. 2^bits - 1, monotone, skew-equalizing)

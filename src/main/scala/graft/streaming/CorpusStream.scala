@@ -43,7 +43,7 @@ object CorpusStream {
    * reimplementation. Stateless (append-mode streamable, no
    * watermark); near-dup screening composes via `nearDupFlagStream`
    * against a static banded corpus, and exact cross-batch dedup
-   * belongs to the ingest layer (`EventStream.dedupStream` pattern) —
+   * belongs to the ingest layer (`dropDuplicatesWithinWatermark`) —
    * cross-batch NEAR-dup would need stateful shingle storage, scoped
    * out just like the reference has no streaming surface at all.
    * Output: input columns + quality_score/lang_pred/n_tokens.
@@ -61,7 +61,7 @@ object CorpusStream {
    * The clustering `model` is the served train-once state (same
    * contract as the IVF index: never retrained on ingest); `readCorpus`
    * re-reads the authoritative corpus each trigger so the sink and the
-   * dedup view can be backed by the same table (e.g. DurableCatalog or
+   * dedup view can be backed by the same table (e.g. a durable catalog or
    * a Delta-style append sink — at scale, persist/bucket it so each
    * trigger pays a lookup, not a rebuild). foreachBatch is the right
    * primitive (not a stateful operator): the corpus is far beyond

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * Event-stream transforms that run on both batch and streaming
  * DataFrames (beyond-parity extension, SURVEY.md §2.8): the watermarked
  * tumbling-window aggregate (EventQueries.q41 computes the batch hourly
- * window with its own plan) and watermarked exact dedup.
+ * window with its own plan).
  */
 object EventStream {
 
@@ -23,13 +23,4 @@ object EventStream {
         col("n"), col("value_sum"))
   }
 
-  /**
-   * Streaming exact deduplication: drop events whose `event_id` was
-   * already seen within the watermark window — the streaming mirror of
-   * the batch exact-dedup operator. State is bounded by the watermark
-   * (late duplicates beyond it age out of the dedup map).
-   */
-  def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
 }

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import graft.catalog.DurableCatalog
+import graft.catalog.{DurableCatalog, VectorCatalog}
 import graft.model.ChunkRow
 
 /**
@@ -31,7 +31,7 @@ class DurabilitySpec extends SparkSpec {
   private def segment(root: String, firstSeq: Long): Path =
     Paths.get(root, "wal", f"$firstSeq%020d.wal")
 
-  private def seqs(c: DurableCatalog): Seq[Long] = c.wal.records().map(_.get("seq").asLong())
+  private def seqs(c: VectorCatalog): Seq[Long] = c.wal.records().map(_.get("seq").asLong())
 
   /** End offset of each whole `[u32 length][u32 CRC32][payload]` frame. */
   private def frameEnds(bytes: Array[Byte]): Seq[Int] = {
@@ -44,16 +44,16 @@ class DurabilitySpec extends SparkSpec {
     ends.result()
   }
 
-  private def chunkRows(c: DurableCatalog): Seq[ChunkRow] = {
-    import c.inner.spark.implicits._
-    c.inner.chunks.as[ChunkRow].collect().toSeq.sortBy(_.id)
+  private def chunkRows(c: VectorCatalog): Seq[ChunkRow] = {
+    import c.spark.implicits._
+    c.chunks.as[ChunkRow].collect().toSeq.sortBy(_.id)
   }
 
-  private def assertSameState(a: DurableCatalog, b: DurableCatalog): Unit = {
-    assert(a.inner.listLibraries() == b.inner.listLibraries())
-    val libs = a.inner.listLibraries().map(_.id)
+  private def assertSameState(a: VectorCatalog, b: VectorCatalog): Unit = {
+    assert(a.listLibraries() == b.listLibraries())
+    val libs = a.listLibraries().map(_.id)
     for (l <- libs)
-      assert(a.inner.listDocuments(l) == b.inner.listDocuments(l))
+      assert(a.listDocuments(l) == b.listDocuments(l))
     val (ca, cb) = (chunkRows(a), chunkRows(b))
     assert(ca.map(_.id) == cb.map(_.id))
     ca.zip(cb).foreach { case (x, y) =>
@@ -83,8 +83,8 @@ class DurabilitySpec extends SparkSpec {
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)
     // index type survived (lib_create carries it)
-    assert(rec.inner.indexState(lib.id).map(_.indexType.toString) == Some("Ivf"))
-    assert(rec.inner.indexState(lib2.id).map(_.indexType.toString) == Some("Exact"))
+    assert(rec.indexState(lib.id).map(_.indexType.toString) == Some("Ivf"))
+    assert(rec.indexState(lib2.id).map(_.indexType.toString) == Some("Exact"))
     // the logged names, "flat" under its canonical name
     val logged = rec.wal.records().filter(_.get("op").asText == "lib_create")
       .map(_.get("index_type").asText)
@@ -114,7 +114,7 @@ class DurabilitySpec extends SparkSpec {
     cat.deleteLibrary(lib.id).toOption.get
     val rec2 = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec2)
-    assert(rec2.inner.listLibraries().map(_.id) == Seq(keepLib.id).sorted)
+    assert(rec2.listLibraries().map(_.id) == Seq(keepLib.id).sorted)
     assert(chunkRows(rec2).forall(_.library_id == keepLib.id))
   }
 
@@ -172,7 +172,7 @@ class DurabilitySpec extends SparkSpec {
     val rec = DurableCatalog.recover(spark, root)
     rec.checkpoint()
     assert(snapshots == Seq(f"snapshot-${rec.wal.lastSeq}%020d"))
-    val ids = rec.inner.chunksByLibrary(lib.id).select("id").collect().map(_.getString(0)).toSet
+    val ids = rec.chunksByLibrary(lib.id).select("id").collect().map(_.getString(0)).toSet
     assert(ids == (before ++ after).map(_.id).toSet)
     assertSameState(rec, DurableCatalog.recover(spark, root))
   }
@@ -185,7 +185,7 @@ class DurabilitySpec extends SparkSpec {
     val acked = (0 until 200).map(i => cat.createChunk(doc.id, s"chunk $i").toOption.get)
     // a fold is a localCheckpoint: one job each; the replay itself runs
     // none (no snapshot to read, no existence checks)
-    var rec: DurableCatalog = null
+    var rec: VectorCatalog = null
     val jobs = jobsStarted { rec = DurableCatalog.recover(spark, root) }
     assert(jobs <= 1, s"replay of 200 creates ran $jobs fold jobs")
     assert(chunkRows(rec).map(_.id) == acked.map(_.id).sorted)
@@ -194,8 +194,8 @@ class DurabilitySpec extends SparkSpec {
 
   test("recover on an empty root yields an empty catalog") {
     val rec = DurableCatalog.recover(spark, freshRoot())
-    assert(rec.inner.listLibraries().isEmpty)
-    assert(rec.inner.chunks.count() == 0L)
+    assert(rec.listLibraries().isEmpty)
+    assert(rec.chunks.count() == 0L)
   }
 
   test("delete then re-create with the same id preserves replay order") {
@@ -253,7 +253,7 @@ class DurabilitySpec extends SparkSpec {
     cat.createChunk(doc.id, "delta epsilon").toOption.get
 
     val rec = DurableCatalog.recover(spark, root)
-    val svc = new graft.search.SearchService(rec.inner)
+    val svc = new graft.search.SearchService(rec)
     val res = svc.search(lib.id, graft.model.SearchQuery(
       queryText = Some("alpha beta gamma"), k = 1))
     assert(res.toOption.get.results.head.chunk.text == "alpha beta gamma")
@@ -376,14 +376,14 @@ class DurabilitySpec extends SparkSpec {
 
   private def comparable(r: ChunkRow) = (r.copy(embedding = None), r.embedding.map(_.toSeq))
 
-  private def logState(c: DurableCatalog): LogState = {
-    val libs = c.inner.listLibraries()
-    LogState(libs, libs.map(l => c.inner.listDocuments(l.id)), chunkRows(c).map(comparable))
+  private def logState(c: VectorCatalog): LogState = {
+    val libs = c.listLibraries()
+    LogState(libs, libs.map(l => c.listDocuments(l.id)), chunkRows(c).map(comparable))
   }
 
   /** A log of five records, a chunk delete among them, on a
     * 2-dimensional catalog, with the catalog state after each record. */
-  private def smallLog(root: String): (DurableCatalog, Seq[LogState]) = {
+  private def smallLog(root: String): (VectorCatalog, Seq[LogState]) = {
     val cat = DurableCatalog.recover(spark, root, embeddingDim = 2)
     val states = scala.collection.mutable.ArrayBuffer(logState(cat))
     def write[A](op: Either[graft.model.ApiError, A]): A = {
@@ -414,10 +414,10 @@ class DurabilitySpec extends SparkSpec {
       val rec = DurableCatalog.recover(spark, root, embeddingDim = 2)
       assert(rec.wal.records() == acked.take(k), s"records after a cut at byte $cut")
       assert(rec.wal.lastSeq == k - 1)
-      assert(rec.inner.listLibraries() == want.libs, s"libraries after a cut at byte $cut")
-      assert(want.libs.map(l => rec.inner.listDocuments(l.id)) == want.docs, s"documents after a cut at byte $cut")
+      assert(rec.listLibraries() == want.libs, s"libraries after a cut at byte $cut")
+      assert(want.libs.map(l => rec.listDocuments(l.id)) == want.docs, s"documents after a cut at byte $cut")
       want.chunks.foreach { case c @ (row, _) =>
-        assert(rec.inner.getChunk(row.id).map(comparable) == Right(c), s"chunk after a cut at byte $cut")
+        assert(rec.getChunk(row.id).map(comparable) == Right(c), s"chunk after a cut at byte $cut")
       }
       // the whole chunk table takes a Spark job: compare it once per prefix
       if (cut == 0 || ends.contains(cut)) assert(logState(rec) == want, s"state after a cut at byte $cut")
@@ -455,7 +455,7 @@ class DurabilitySpec extends SparkSpec {
 
     val restarted = DurableCatalog.recover(spark, root)
     assert(restarted.wal.lastSeq == 4)
-    assert(restarted.inner.getChunk(torn.id).isLeft)
+    assert(restarted.getChunk(torn.id).isLeft)
     val later = (0 until 3).map(i => restarted.createChunk(doc.id, s"later $i").toOption.get)
     assert(walFiles(root) == Seq(seg0, segment(root, 5)).map(_.getFileName.toString))
     assert(seqs(restarted) == (0L to 7L))
@@ -621,7 +621,7 @@ class DurabilitySpec extends SparkSpec {
     cat.createChunk(doc.id, "a valid chunk").toOption.get
     val before = cat.wal.records()
 
-    val nan = Array.fill(cat.inner.embeddingDim)(0.1f).updated(0, Float.NaN)
+    val nan = Array.fill(cat.embeddingDim)(0.1f).updated(0, Float.NaN)
     assert(cat.createChunk(doc.id, "nan", embedding = Some(nan), id = Some("nan")).isLeft)
     assert(cat.createChunk(doc.id, "short", embedding = Some(Array(1f, 2f)), id = Some("short")).isLeft)
     assert(cat.wal.records() == before, "a rejected create was logged")
@@ -629,5 +629,84 @@ class DurabilitySpec extends SparkSpec {
     val rec = DurableCatalog.recover(spark, root)
     assertSameState(cat, rec)
     assert(chunkRows(rec).map(_.text) == Seq("a valid chunk"))
+  }
+
+  test("a library's index type survives a checkpoint, and a snapshot without types still loads") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val ivf = cat.createLibrary("untrained", indexType = "ivf").toOption.get
+    val lsh = cat.createLibrary("hashed", indexType = "lsh").toOption.get
+    for (lib <- Seq(ivf, lsh)) {
+      val doc = cat.createDocument(lib.id, "d").toOption.get
+      (0 until 3).foreach(i => assert(cat.createChunk(doc.id, s"chunk $i of ${lib.name}").isRight))
+    }
+    val q = graft.model.SearchQuery(queryText = Some("chunk 1"), k = 2)
+    def hits(c: VectorCatalog) = new graft.search.SearchService(c).search(ivf.id, q).toOption.get.results.size
+    // fewer chunks than ivfNlist: the IVF tier is untrained and answers nothing
+    assert(hits(cat) == 0)
+    cat.checkpoint()
+    assert(walFiles(root).isEmpty)
+
+    val rec = DurableCatalog.recover(spark, root)
+    assert(rec.indexState(ivf.id).map(_.indexType) == Some(graft.catalog.IndexType.Ivf))
+    assert(rec.indexState(lsh.id).map(_.indexType) == Some(graft.catalog.IndexType.Lsh))
+    assert(hits(rec) == 0, "the recovered IVF library answered as exact")
+    assertSameState(cat, rec)
+
+    // a snapshot written before the type was kept: no index state, as then
+    val snapshot = Files.list(Paths.get(root)).iterator().asScala.map(_.getFileName.toString)
+      .find(_.startsWith("snapshot-")).get
+    val libs = Paths.get(root, snapshot, "libraries")
+    val untyped = Paths.get(root, "untyped-libraries")
+    spark.read.parquet(libs.toString).drop("index_type").write.parquet(untyped.toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(libs.toFile)
+    Files.move(untyped, libs)
+    val old = DurableCatalog.recover(spark, root)
+    assert(old.indexState(ivf.id).isEmpty && old.indexState(lsh.id).isEmpty)
+    assertSameState(cat, old)
+  }
+
+  test("a write through VectorDb.catalog on a durable facade is logged and recovers") {
+    val root = freshRoot()
+    val db = new graft.api.VectorDb(spark, durableRoot = Some(root))
+    val lib = db.createLibrary("direct", indexType = "exact").toOption.get
+    val doc = db.createDocument(lib.id, "d").toOption.get
+    val row = db.catalog.createChunk(doc.id, "written through the catalog").toOption.get
+    assert(db.catalog.wal.records().last.get("op").asText == "chunk_put")
+
+    val db2 = new graft.api.VectorDb(spark, durableRoot = Some(root))
+    assert(db2.getChunk(row.id).map(_.text) == Right("written through the catalog"))
+    assertSameState(db.catalog, db2.catalog)
+  }
+
+  test("each WAL op keeps its op string and its field names") {
+    val cat = DurableCatalog.recover(spark, freshRoot())
+    val lib = cat.createLibrary("format", Some("desc"), Map("k" -> "v"), "ivf").toOption.get
+    cat.updateLibrary(lib.id, name = Some("format2")).toOption.get
+    val doc = cat.createDocument(lib.id, "d", Some("desc"), Map("k" -> "v")).toOption.get
+    val chunk = cat.createChunk(doc.id, "text", Map("k" -> "v")).toOption.get
+    cat.deleteChunk(chunk.id).toOption.get
+    cat.deleteDocument(doc.id).toOption.get
+    cat.deleteLibrary(lib.id).toOption.get
+
+    def fields(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] = n.fieldNames().asScala.toSeq
+    val libFields = Seq("id", "name", "description")
+    val stamps = Seq("created_at", "updated_at")
+    val want = Seq(
+      "lib_create" -> (Seq("op") ++ libFields ++ Seq("index_type", "metadata", "is_indexed") ++ stamps :+ "seq"),
+      "lib_update" -> (Seq("op") ++ libFields ++ Seq("metadata", "is_indexed") ++ stamps :+ "seq"),
+      "doc_put" -> (Seq("op", "id", "library_id", "name", "description", "metadata") ++ stamps :+ "seq"),
+      "chunk_put" -> Seq("op", "chunks", "seq"),
+      "chunk_delete" -> Seq("op", "id", "seq"),
+      "doc_delete" -> Seq("op", "id", "seq"),
+      "lib_delete" -> Seq("op", "id", "seq"))
+    val records = cat.wal.records()
+    assert(records.map(_.get("op").asText) == want.map(_._1))
+    records.zip(want).foreach { case (r, (op, names)) => assert(fields(r) == names, op) }
+    assert(records.head.get("index_type").asText == "ivf")
+    val logged = records(3).get("chunks")
+    assert(logged.size == 1)
+    assert(fields(logged.get(0)) ==
+      Seq("id", "document_id", "library_id", "text", "embedding", "metadata") ++ stamps)
   }
 }

@@ -274,6 +274,24 @@ class HttpApiSpec extends SparkSpec {
     request("DELETE", s"/api/v1/libraries/$libId")
   }
 
+  test("malformed search: a wrongly typed k or query_text is 400 naming the field, not coerced") {
+    val libId = searchable("field-types")
+    for (k <- Seq("\"abc\"", "2.5", "null", "[2]", "1e400")) {
+      val (status, detail) = searchStatus(libId, s"""{"query_text":"stars","k":$k}""")
+      assert(status == 400 && detail.contains("k must be"), s"k=$k: $status $detail")
+    }
+    for (text <- Seq("5", "true", "[\"stars\"]")) {
+      val (status, detail) = searchStatus(libId, s"""{"query_text":$text}""")
+      assert(status == 400 && detail.contains("query_text"), s"query_text=$text: $status $detail")
+    }
+    // what the lax int accepts: an integral float, a numeric string
+    for (k <- Seq("1", "1.0", "\"1\"")) {
+      val r = request("POST", s"/api/v1/search/libraries/$libId", s"""{"query_text":"stars","k":$k}""")
+      assert(r.statusCode == 200 && json(r).get("total_results").asInt == 1, s"k=$k: ${r.body}")
+    }
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
   test("malformed search: an unparseable created_after / created_before is 400") {
     val libId = searchable("bad-date")
     assert(searchStatus(libId,

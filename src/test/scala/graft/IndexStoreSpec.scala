@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.EventStream
-
-/** Index persistence + streaming CDC and dedup. */
+/** Index persistence + streaming CDC. */
 class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -98,25 +96,6 @@ class IndexStoreSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup drops duplicate event_ids within the watermark") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    def ev(id: Long, minute: Int): StreamEvent =
-      StreamEvent(id, java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
-        1L, "click", Some(1.0))
-    val input = MemoryStream[StreamEvent]
-    val q = EventStream.dedupStream(input.toDF()).writeStream
-      .outputMode("append").format("memory").queryName("dedup_out").start()
-    try {
-      input.addData(ev(1, 0), ev(2, 1), ev(1, 2)) // id 1 duplicated
-      q.processAllAvailable()
-      input.addData(ev(2, 3), ev(3, 4))           // id 2 duplicated across batches
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT event_id FROM dedup_out").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
   test("GraftExtensions-injected SQL functions work (session built with spark.sql.extensions)") {
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 1.0F)) AS c," +
@@ -184,7 +163,3 @@ object IndexStoreSpec {
       metadata: Map[String, String], created_at: java.sql.Timestamp,
       updated_at: java.sql.Timestamp)
 }
-
-/** One events-shaped row for the streaming dedup test's memory stream. */
-final case class StreamEvent(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-    event_type: String, value: Option[Double])
