@@ -59,11 +59,12 @@ private[catalog] object Mutation {
  * (library_service.py:66-69).
  *
  * One write path: a public write builds its result (ids, timestamps,
- * embeddings), applies it through `applyMutation` — the function WAL
- * replay calls — and, on a catalog `DurableCatalog.recover` opened,
- * appends it to the write-ahead log and hsyncs it before returning. The
- * existence check, the apply and the append hold one lock, so the log's
- * order is the apply order and a rejected write logs nothing.
+ * embeddings), on a catalog `DurableCatalog.recover` opened appends it
+ * to the write-ahead log and hsyncs it, and applies it through
+ * `applyMutation` — the function WAL replay calls — before returning.
+ * On a durable catalog the existence check, the append and the apply
+ * hold one lock, so the log's order is the apply order; a rejected
+ * write, or one whose append fails, logs and applies nothing.
  *
  * `driverDerivation` off makes every index tier take its Spark form,
  * even for a resident library: the reference that the driver form is
@@ -107,10 +108,11 @@ final class VectorCatalog(val spark: SparkSession,
   // a WAL replay is running (`openLog`): mutations skip the threshold fold
   private var replay = false
 
-  // the write-ahead log, on a catalog `DurableCatalog.recover` opened;
-  // set, read and appended to under writeLock
+  // the write-ahead log, on a catalog `DurableCatalog.recover` opened:
+  // set once, before `recover` returns the catalog, and appended to
+  // under writeLock
   private val writeLock = new Object
-  private var durable: Option[CatalogWal] = None
+  @volatile private var durable: Option[CatalogWal] = None
 
   // ---- driver-resident read path (graft.search.LocalSearch): the
   // folded-base rows of each small library — none for a library created
@@ -463,17 +465,19 @@ final class VectorCatalog(val spark: SparkSession,
     c.id, c.document_id, c.library_id, c.text,
     c.embedding.orNull, c.metadata, c.created_at, c.updated_at)
 
-  /** Under writeLock: `result`, once built, applied and, on a durable
-    * catalog, logged and hsync'ed; a Left applies and logs nothing. */
-  private def commit[A](result: => Either[ApiError, A])(mutation: A => Mutation): Either[ApiError, A] =
-    writeLock.synchronized {
-      result.map { a =>
-        val m = mutation(a)
-        applyMutation(m)
-        durable.foreach(_.append(WalCodec.record(m)))
-        a
-      }
+  /** `result`, once built, logged and hsync'ed on a durable catalog and
+    * then applied; a Left, or an append that throws, applies and logs
+    * nothing. A durable write holds writeLock throughout; an in-memory
+    * one takes no lock beyond the state's own. */
+  private def commit[A](result: => Either[ApiError, A])(mutation: A => Mutation): Either[ApiError, A] = {
+    def run(): Either[ApiError, A] = result.map { a =>
+      val m = mutation(a)
+      durable.foreach(_.append(WalCodec.record(m)))
+      applyMutation(m)
+      a
     }
+    if (durable.isEmpty) run() else writeLock.synchronized(run())
+  }
 
   /** The one apply of each mutation, for a public write and for WAL
     * replay alike. It takes the result verbatim — no id or timestamp
@@ -652,10 +656,11 @@ final class VectorCatalog(val spark: SparkSession,
       .coalesce(1).write.mode("overwrite").parquet(s"$path/documents")
   }
 
-  /** Restore a saved catalog. A library the catalog holds no index state
-    * for gets its saved type's empty state, as at its creation; built
-    * indexes rebuild on demand (they are derived data) or load through
-    * `loadIndex`. */
+  /** Restore a saved catalog. A never-built library (`is_indexed`
+    * false) that the catalog holds no index state for gets its saved
+    * type's empty state, as at its creation. A built library gets no
+    * state and is searched as exact until its index is rebuilt (built
+    * indexes are derived data) or loaded through `loadIndex`. */
   def load(path: String): Unit = {
     stateLock.synchronized {
       base = spark.read.schema(Schemas.chunks).parquet(s"$path/chunks")
@@ -672,7 +677,7 @@ final class VectorCatalog(val spark: SparkSession,
         Option(r.getString(2)),
         Option(r.getAs[scala.collection.Map[String, String]](3)).map(_.toMap).getOrElse(Map.empty),
         r.getBoolean(4), r.getTimestamp(5), r.getTimestamp(6)))
-      Option(r.getString(7)).foreach { t =>
+      Option(r.getString(7)).filterNot(_ => r.getBoolean(4)).foreach { t =>
         val it = IndexType.parse(t).fold(e => throw new IllegalStateException(s"$path: ${e.message}"), identity)
         indexes.putIfAbsent(r.getString(0), IndexState.empty(it))
       }

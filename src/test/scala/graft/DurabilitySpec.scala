@@ -666,6 +666,44 @@ class DurabilitySpec extends SparkSpec {
     assertSameState(cat, old)
   }
 
+  test("a built IVF library still answers after checkpoint and recover") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("trained", indexType = "ivf").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunks(doc.id, (0 until graft.model.GraftConfig.ivfNlist).map(i => (s"chunk $i", Map.empty[String, String])))
+    assert(cat.indexLibrary(lib.id, "ivf").isRight)
+    val q = graft.model.SearchQuery(queryText = Some("chunk 7"), k = 5)
+    def hits(c: VectorCatalog) = new graft.search.SearchService(c).search(lib.id, q).toOption.get.results.size
+    assert(hits(cat) > 0)
+    cat.checkpoint()
+
+    val rec = DurableCatalog.recover(spark, root)
+    assert(rec.getLibrary(lib.id).map(_.is_indexed) == Right(true))
+    assert(hits(rec) == 5, "the recovered built library answered nothing")
+    assertSameState(cat, rec)
+  }
+
+  test("a stale writer's failed write is neither logged nor visible") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("stale", indexType = "exact").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    val a = DurableCatalog.recover(spark, root)
+    val b = DurableCatalog.recover(spark, root)
+    a.createChunk(doc.id, "first writer").toOption.get
+    val logged = a.wal.records()
+    intercept[IllegalStateException](b.createChunk(doc.id, "stale chunk", id = Some("stale")))
+    assert(b.getChunk("stale").isLeft, "the failed chunk create is visible")
+    intercept[IllegalStateException](b.createLibrary("stale lib", indexType = "exact", id = Some("stale-lib")))
+    assert(b.getLibrary("stale-lib").isLeft, "the failed library create is visible")
+    intercept[IllegalStateException](b.deleteDocument(doc.id))
+    assert(b.getDocument(doc.id).isRight, "the failed document delete is visible")
+    assert(b.wal.records() == logged, "a failed write was logged")
+    val rec = DurableCatalog.recover(spark, root)
+    assertSameState(a, rec)
+  }
+
   test("a write through VectorDb.catalog on a durable facade is logged and recovers") {
     val root = freshRoot()
     val db = new graft.api.VectorDb(spark, durableRoot = Some(root))
