@@ -1,13 +1,18 @@
 package graft.api
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
+import java.net.{InetSocketAddress, URLDecoder}
+import java.nio.ByteBuffer
+import java.nio.charset.CharacterCodingException
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.TextNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.catalog.IndexType
 import graft.model._
 
 /**
@@ -25,13 +30,20 @@ import graft.model._
  *   /api/v1/search      POST/libraries/{id} GET/libraries/{id}/simple (search.py)
  *   /health, /          (main.py:60-78)
  *
+ * One server context and one route table (`route`): a path matches
+ * whole segments only, so `/healthXYZ` or `/api/v1/libraries<id>` is a
+ * 404. Each route decodes its request — body fields with the strict
+ * types of the reference's pydantic v2 models (SURVEY.md §1.1), query
+ * parameters with the same rules — before it calls the facade, so bad
+ * input is a 400 whose `detail` names the field and starts no Spark
+ * job. The reference's framework would emit 422 there: the one
+ * deliberate status deviation (COVERAGE.md "Deliberate deviations").
+ *
  * Error shape is FastAPI's `{"detail": msg}`; deletes return the
  * reference's exact `{"message": "... deleted successfully"}` strings.
- * Parity notes: POST search maps a missing library to 400 (the
- * reference surfaces it as a ValueError, search_service.py:38-39 ->
- * search.py:18-19 — not 404); malformed/missing-field bodies return
- * 400 with a detail (the reference's framework would emit 422 — the
- * one deliberate deviation, kept simple since no framework is in play).
+ * Parity note: search maps a missing library to 400 (the reference
+ * surfaces it as a ValueError, search_service.py:38-39 ->
+ * search.py:18-19 — not 404).
  *
  * Built on the JDK's HttpServer: zero added dependencies, and the
  * engine underneath is the same Spark catalog — the server is a codec,
@@ -51,17 +63,7 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Unit = {
-    server.createContext("/api/v1/libraries", (ex: HttpExchange) => safely(ex)(libraries))
-    server.createContext("/api/v1/documents", (ex: HttpExchange) => safely(ex)(documents))
-    server.createContext("/api/v1/chunks", (ex: HttpExchange) => safely(ex)(chunks))
-    server.createContext("/api/v1/search", (ex: HttpExchange) => safely(ex)(search))
-    server.createContext("/health", (ex: HttpExchange) => safely(ex) { (_, _, _) =>
-      respond(200, obj(db.health().toSeq: _*))
-    })
-    server.createContext("/", (ex: HttpExchange) => safely(ex) { (_, path, _) =>
-      if (path.isEmpty) respond(200, obj(db.info().toSeq: _*))
-      else respond(404, detail("Not Found"))
-    })
+    server.createContext("/", (ex: HttpExchange) => serve(ex))
     server.start()
   }
 
@@ -74,214 +76,89 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
   private[graft] def awaitStopped(timeoutMs: Long): Boolean =
     executor.awaitTermination(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
 
-  // ---- route handlers: (method, path segments under the context, body)
+  /** The route table: (method, path segments) to a reply. A route reads
+    * each field of its request shape from `query` and `body` with its
+    * type, as arguments of its facade call, so a bad one is a 400 before
+    * the call. */
+  private def route(method: String, path: List[String], query: Query, body: => Body): Response = {
+    val (prefix, rest) = path.splitAt(2)
+    (method, prefix, rest) match {
+      case ("GET", Nil, _) => ok(obj(db.info().toSeq: _*))
+      case ("GET", List("health"), _) => ok(obj(db.health().toSeq: _*))
 
-  private def libraries(method: String, path: List[String], body: String): Response =
-    (method, path) match {
-      case ("POST", Nil) =>
-        val node = parse(body)
-        val name = requireText(node, "name")
-        db.createLibrary(name, optText(node, "description"),
-            metaOf(node), optText(node, "index_type").getOrElse("lsh"))
-          .fold(err, lib => respond(200, libraryJson(lib)))
-      case ("GET", Nil) =>
-        respond(200, arr(db.listLibraries().map(libraryJson)))
-      case ("GET", id :: Nil) =>
-        db.getLibrary(id).fold(err, lib => respond(200, libraryJson(lib)))
-      case ("PUT", id :: Nil) =>
-        val node = parse(body)
-        db.updateLibrary(id, optText(node, "name"), optText(node, "description"),
-            optMeta(node)).fold(err, lib => respond(200, libraryJson(lib)))
-      case ("DELETE", id :: Nil) =>
-        db.deleteLibrary(id).fold(err,
-          _ => respond(200, obj("message" -> "Library deleted successfully")))
-      // POST /{id}/index is intercepted in dispatch (needs query string)
-      case _ => respond(404, detail("Not Found"))
-    }
+      case ("POST", V1, List("libraries")) =>
+        reply(db.createLibrary(body.required("name"), body.string("description"),
+          body.strings("metadata").getOrElse(Map.empty), body.string("index_type").getOrElse("lsh")))(libraryJson)
+      case ("GET", V1, List("libraries")) => ok(arr(db.listLibraries().map(libraryJson)))
+      case ("GET", V1, List("libraries", id)) => reply(db.getLibrary(id))(libraryJson)
+      case ("PUT", V1, List("libraries", id)) =>
+        reply(db.updateLibrary(id, body.string("name"), body.string("description"), body.strings("metadata")))(libraryJson)
+      case ("DELETE", V1, List("libraries", id)) => deleted(db.deleteLibrary(id), "Library")
+      case ("POST", V1, List("libraries", id, "index")) =>
+        // the reference accepts lsh|ivf here (libraries.py); the additional
+        // types are additive, and the 400 lists them all (COVERAGE.md
+        // "Deliberate deviations")
+        val indexType = query.string("index_type").getOrElse("lsh")
+        if (IndexType.parse(indexType).isLeft)
+          Response(400, detail("Invalid index type. Must be one of: " + IndexType.names.mkString(", ")))
+        else reply(db.indexLibrary(id, indexType))(_ =>
+          obj("message" -> s"Library indexed successfully with $indexType index"))
 
-  private def librariesIndex(id: String, query: Map[String, String]): Response = {
-    val indexType = query.getOrElse("index_type", "lsh")
-    // reference accepts lsh|ivf here (libraries.py); the additional
-    // types are additive — reference clients' requests behave
-    // identically. DOCUMENTED DEVIATION (COVERAGE.md "Deliberate
-    // deviations"): inputs the reference rejected with 400 (e.g.
-    // "exact", "flat") are now valid index types here, and the 400
-    // message text lists the full whitelist — a client asserting the
-    // reference's exact rejection contract for those strings will see
-    // different behavior. Validation delegates to IndexType.parse (ONE
-    // whitelist), the message derives from IndexType.names.
-    if (graft.catalog.IndexType.parse(indexType).isLeft)
-      respond(400, detail("Invalid index type. Must be one of: " +
-        graft.catalog.IndexType.names.mkString(", ")))
-    else db.indexLibrary(id, indexType).fold(err,
-      _ => respond(200, obj("message" -> s"Library indexed successfully with $indexType index")))
-  }
+      case ("POST", V1, List("documents")) =>
+        reply(db.createDocument(query.required("library_id"), body.required("name"), body.string("description"),
+          body.strings("metadata").getOrElse(Map.empty)))(documentJson)
+      case ("GET", V1, List("documents", "library", id)) =>
+        reply(db.getLibrary(id).map(_ => db.documentsByLibrary(id)))(ds => arr(ds.map(documentJson)))
+      case ("GET", V1, List("documents", "library", id, "filter")) =>
+        reply(db.documentsByMetadata(id, query.filter("metadata_filter")))(ds => arr(ds.map(documentJson)))
+      case ("GET", V1, List("documents", id)) => reply(db.getDocument(id))(documentJson)
+      case ("PUT", V1, List("documents", id)) =>
+        reply(db.updateDocument(id, body.string("name"), body.string("description"), body.strings("metadata")))(documentJson)
+      case ("DELETE", V1, List("documents", id)) => deleted(db.deleteDocument(id), "Document")
 
-  private def documents(method: String, path: List[String], body: String): Response =
-    (method, path) match {
-      // POST ?library_id= is intercepted in dispatch (needs query string)
-      case ("GET", "library" :: libId :: Nil) =>
-        db.getLibrary(libId).fold(err,
-          _ => respond(200, arr(db.documentsByLibrary(libId).map(documentJson))))
-      case ("GET", id :: Nil) =>
-        db.getDocument(id).fold(err, d => respond(200, documentJson(d)))
-      case ("PUT", id :: Nil) =>
-        val node = parse(body)
-        db.updateDocument(id, optText(node, "name"), optText(node, "description"),
-            optMeta(node)).fold(err, d => respond(200, documentJson(d)))
-      case ("DELETE", id :: Nil) =>
-        db.deleteDocument(id).fold(err,
-          _ => respond(200, obj("message" -> "Document deleted successfully")))
-      case _ => respond(404, detail("Not Found"))
-    }
+      case ("POST", V1, List("chunks")) =>
+        reply(db.createChunk(query.required("document_id"), body.required("text"),
+          body.strings("metadata").getOrElse(Map.empty)))(chunkJson)
+      case ("GET", V1, List("chunks", "document", id)) =>
+        val p = page(query)
+        chunks(db.chunksByDocument(id, p.embeddings, p.limit, p.offset))
+      case ("GET", V1, List("chunks", "library", id)) =>
+        val p = page(query)
+        chunks(db.chunksByLibrary(id, p.embeddings, p.limit, p.offset))
+      case ("GET", V1, List("chunks", "library", id, "filter")) =>
+        val p = page(query)
+        chunks(db.chunksByMetadata(id, query.filter("metadata_filter"), p.embeddings, p.limit, p.offset))
+      case ("GET", V1, List("chunks", id)) => reply(db.getChunk(id))(chunkJson)
+      case ("PUT", V1, List("chunks", id)) =>
+        reply(db.updateChunk(id, body.string("text"), body.strings("metadata")))(chunkJson)
+      case ("DELETE", V1, List("chunks", id)) => deleted(db.deleteChunk(id), "Chunk")
 
-  private def chunks(method: String, path: List[String], body: String): Response =
-    (method, path) match {
-      // GET document/{id} and library/{id} listings are intercepted in
-      // dispatch (they take include_embeddings/limit/offset params)
-      case ("GET", id :: Nil) =>
-        db.getChunk(id).fold(err, c => respond(200, chunkJson(c)))
-      case ("PUT", id :: Nil) =>
-        val node = parse(body)
-        db.updateChunk(id, optText(node, "text"), optMeta(node))
-          .fold(err, c => respond(200, chunkJson(c)))
-      case ("DELETE", id :: Nil) =>
-        db.deleteChunk(id).fold(err,
-          _ => respond(200, obj("message" -> "Chunk deleted successfully")))
-      case _ => respond(404, detail("Not Found"))
-    }
+      case ("POST", V1, List("search", "libraries", id)) =>
+        val q = SearchQuery(body.string("query_text"), body.floats("query_embedding"), body.int("k", 5),
+          body.strings("metadata_filters").getOrElse(Map.empty))
+        searched(db.search(id, q), q)
+      case ("GET", V1, List("search", "libraries", id, "simple")) =>
+        val q = SearchQuery(Some(query.required("q")), k = query.int("k").getOrElse(5),
+          metadataFilters = query.filter("metadata_filter"))
+        searched(db.simpleSearch(id, q.queryText.get, q.k, q.metadataFilters), q)
 
-  private def search(method: String, path: List[String], body: String): Response =
-    (method, path) match {
-      case ("POST", "libraries" :: libId :: Nil) =>
-        val node = parse(body)
-        if (node != null && node.hasNonNull("metadata_filters") && !node.get("metadata_filters").isObject)
-          throw new BadRequest("metadata_filters must be an object")
-        val q = SearchQuery(
-          queryText = optString(node, "query_text"),
-          queryEmbedding = optFloats(node, "query_embedding"),
-          k = kOf(node),
-          metadataFilters = Option(node).map(n => metaAt(n, "metadata_filters")).getOrElse(Map.empty))
-        db.search(libId, q).fold(
-          // reference parity: search surfaces NotFound as ValueError -> 400
-          // (search_service.py:38-39), unlike the entity routes' 404s
-          e => respond(400, detail(e.message)),
-          resp => respond(200, JsonCodec.searchResponseJson(resp, Some(q))))
-      case _ => respond(404, detail("Not Found"))
-    }
-
-  private def searchSimple(libId: String, query: Map[String, String]): Response =
-    query.get("q") match {
-      case None => respond(400, detail("Missing required query parameter: q"))
-      case Some(q) =>
-        val k = query.get("k").flatMap(_.toIntOption).getOrElse(5)
-        db.simpleSearch(libId, q, k, query.get("metadata_filter")).fold(
-          {
-            case ApiError.Validation(m) => respond(400, detail(m))
-            case e => respond(400, detail(e.message)) // parity: ValueError -> 400
-          },
-          resp => respond(200, JsonCodec.searchResponseJson(resp,
-            Some(SearchQuery(queryText = Some(q), k = k)))))
-    }
-
-  private def documentsCreate(query: Map[String, String], body: String): Response =
-    query.get("library_id") match {
-      case None => respond(400, detail("Missing required query parameter: library_id"))
-      case Some(libId) =>
-        val node = parse(body)
-        val name = requireText(node, "name")
-        db.createDocument(libId, name, optText(node, "description"), metaOf(node))
-          .fold(err, d => respond(200, documentJson(d)))
-    }
-
-  private def chunksCreate(query: Map[String, String], body: String): Response =
-    query.get("document_id") match {
-      case None => respond(400, detail("Missing required query parameter: document_id"))
-      case Some(docId) =>
-        val node = parse(body)
-        val text = requireText(node, "text")
-        db.createChunk(docId, text, metaOf(node))
-          .fold(err, c => respond(200, chunkJson(c)))
-    }
-
-  private def documentsFilter(libId: String, query: Map[String, String]): Response =
-    query.get("metadata_filter") match {
-      case None => db.getLibrary(libId).fold(err,
-        _ => respond(200, arr(db.documentsByLibrary(libId).map(documentJson))))
-      case Some(json) =>
-        db.getLibrary(libId).fold(err, _ =>
-          db.documentsByMetadataJson(libId, json)
-            .fold(err, ds => respond(200, arr(ds.map(documentJson)))))
-    }
-
-  /** Scale-safe ADDITIVE listing params (absent = reference behavior:
-    * full rows with all embedding floats): include_embeddings=false
-    * elides the float arrays, limit/offset page in stable id order. */
-  private def pageParams(query: Map[String, String]): (Boolean, Option[Int], Int) = (
-    !query.get("include_embeddings").exists(v => v == "false" || v == "0"),
-    query.get("limit").flatMap(_.toIntOption).filter(_ >= 0),
-    query.get("offset").flatMap(_.toIntOption).filter(_ > 0).getOrElse(0))
-
-  private def chunksByDocument(docId: String, query: Map[String, String]): Response = {
-    val (inc, lim, off) = pageParams(query)
-    db.chunksByDocument(docId, inc, lim, off)
-      .fold(err, cs => respond(200, arr(cs.map(chunkJson))))
-  }
-
-  private def chunksByLibrary(libId: String, query: Map[String, String]): Response = {
-    val (inc, lim, off) = pageParams(query)
-    db.chunksByLibrary(libId, inc, lim, off)
-      .fold(err, cs => respond(200, arr(cs.map(chunkJson))))
-  }
-
-  private def chunksFilter(libId: String, query: Map[String, String]): Response = {
-    val (inc, lim, off) = pageParams(query)
-    query.get("metadata_filter") match {
-      case None => db.chunksByLibrary(libId, inc, lim, off)
-        .fold(err, cs => respond(200, arr(cs.map(chunkJson))))
-      case Some(json) => db.chunksByMetadataJson(libId, json, inc, lim, off)
-        .fold(err, cs => respond(200, arr(cs.map(chunkJson))))
+      case _ => Response(404, detail("Not Found"))
     }
   }
 
-  // ---- dispatch plumbing
-
-  private def safely(ex: HttpExchange)(
-      handler: (String, List[String], String) => Response): Unit = {
+  private def serve(ex: HttpExchange): Unit = {
     val startNanos = System.nanoTime()
-    val response: Response =
+    val response =
       try {
-        val ctxPath = ex.getHttpContext.getPath.stripSuffix("/")
-        val raw = ex.getRequestURI.getPath
-        val segs = raw.stripPrefix(ctxPath).split("/").filter(_.nonEmpty).toList
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val query = Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
-          .filter(_.contains("=")).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
-          }.toMap
-        // query-string routes bypass the per-context handler signature
-        (ex.getRequestMethod, ctxPath, segs) match {
-          case ("POST", "/api/v1/libraries", id :: "index" :: Nil) => librariesIndex(id, query)
-          case ("POST", "/api/v1/documents", Nil) => documentsCreate(query, body)
-          case ("POST", "/api/v1/chunks", Nil) => chunksCreate(query, body)
-          case ("GET", "/api/v1/documents", "library" :: id :: "filter" :: Nil) =>
-            documentsFilter(id, query)
-          case ("GET", "/api/v1/chunks", "document" :: id :: Nil) =>
-            chunksByDocument(id, query)
-          case ("GET", "/api/v1/chunks", "library" :: id :: Nil) =>
-            chunksByLibrary(id, query)
-          case ("GET", "/api/v1/chunks", "library" :: id :: "filter" :: Nil) =>
-            chunksFilter(id, query)
-          case ("GET", "/api/v1/search", "libraries" :: id :: "simple" :: Nil) =>
-            searchSimple(id, query)
-          case (m, _, _) => handler(m, segs, body)
-        }
+        val uri = ex.getRequestURI
+        val bytes = ex.getRequestBody.readAllBytes()
+        lazy val body = Body(bytes)
+        route(ex.getRequestMethod, uri.getPath.split("/").filter(_.nonEmpty).toList, Query(uri.getRawQuery), body)
       } catch {
-        case e: BadRequest => respond(400, detail(e.getMessage))
-        case e: Throwable => respond(500, detail(String.valueOf(e.getMessage)))
+        case e: BadRequest => Response(400, detail(e.getMessage))
+        case e: Throwable => Response(500, detail(String.valueOf(e.getMessage)))
       }
-    val bytes = response.body.getBytes(StandardCharsets.UTF_8)
+    val bytes = response.body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     // reference middleware stamps every response with the handler's
     // wall time in SECONDS (str(float), main.py:36-42)
@@ -291,15 +168,10 @@ final class HttpApi(db: VectorDb, port: Int = 0) {
     ex.getResponseBody.write(bytes)
     ex.close()
   }
-
-  private def err(e: ApiError): Response = e match {
-    case ApiError.NotFound(m) => respond(404, detail(m))
-    case ApiError.Validation(m) => respond(400, detail(m))
-  }
 }
 
 object HttpApi {
-  private val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** The JDK server writes the headers and the body of a reply as two
     * packets; without TCP_NODELAY the body waits out the peer's delayed
@@ -312,93 +184,142 @@ object HttpApi {
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
 
-  final case class Response(status: Int, body: String)
-  final class BadRequest(msg: String) extends RuntimeException(msg)
+  private final case class Response(status: Int, body: String)
+  private final class BadRequest(msg: String) extends RuntimeException(msg)
 
-  private def respond(status: Int, body: String) = Response(status, body)
+  private def bad(msg: String): Nothing = throw new BadRequest(msg)
 
-  // ---- body parsing (reference models.py shapes)
+  /** The API's path prefix, `/api/v1`. */
+  private val V1 = List("api", "v1")
 
-  private def parse(body: String): JsonNode =
-    if (body == null || body.trim.isEmpty) null
-    else
-      try mapper.readTree(body)
-      catch { case _: Exception => throw new BadRequest("Invalid JSON body") }
+  private def ok(body: String) = Response(200, body)
 
-  private def requireText(node: JsonNode, field: String): String = {
-    if (node == null || !node.hasNonNull(field))
-      throw new BadRequest(s"Field required: $field")
-    node.get(field).asText()
+  /** A facade result as a reply: NotFound is a 404, Validation a 400. */
+  private def reply[A](result: Either[ApiError, A])(json: A => String): Response = result match {
+    case Right(a) => ok(json(a))
+    case Left(ApiError.NotFound(m)) => Response(404, detail(m))
+    case Left(ApiError.Validation(m)) => Response(400, detail(m))
   }
 
-  private def optText(node: JsonNode, field: String): Option[String] =
-    Option(node).filter(_.hasNonNull(field)).map(_.get(field).asText())
+  private def deleted(result: Either[ApiError, Unit], entity: String): Response =
+    reply(result)(_ => obj("message" -> s"$entity deleted successfully"))
 
-  // The search body's fields are read as the reference's pydantic v2
-  // models read them in lax mode (SURVEY.md §1.1): a wrongly typed field
-  // is a 400 naming it, never a coerced value.
+  private def chunks(result: Either[ApiError, Seq[ChunkRow]]): Response =
+    reply(result)(cs => arr(cs.map(chunkJson)))
 
-  /** A string field; a number, bool, array or object is a 400. */
-  private def optString(node: JsonNode, field: String): Option[String] =
-    optText(node, field).map { text =>
-      if (!node.get(field).isTextual) throw new BadRequest(s"$field must be a string")
-      text
+  /** A search reply echoing the decoded query (models.py:130). Every
+    * error, NotFound included, is a 400: the reference surfaces them as
+    * a ValueError (search_service.py:38-39). */
+  private def searched(result: Either[ApiError, SearchResponse], q: SearchQuery): Response =
+    result.fold(e => Response(400, detail(e.message)), r => ok(JsonCodec.searchResponseJson(r, Some(q))))
+
+  // ---- request decoding. The rules are the reference's pydantic v2 types
+  // in lax mode: a string field must be a JSON string, an object field an
+  // object, `k` a lax int; an absent or null optional field is None.
+
+  /** A request body: one JSON object, UTF-8; a blank body reads as `{}`. */
+  private final class Body(node: JsonNode) {
+    private def field(f: String): Option[JsonNode] = Option(node.get(f)).filterNot(_.isNull)
+
+    def string(f: String): Option[String] =
+      field(f).map(v => if (v.isTextual) v.textValue else bad(s"$f must be a string"))
+
+    def required(f: String): String = string(f).getOrElse(bad(s"Field required: $f"))
+
+    /** An object, its values stringified by `JsonCodec.stringValues`. */
+    def strings(f: String): Option[Map[String, String]] =
+      field(f).map(v => if (v.isObject) JsonCodec.stringValues(v) else bad(s"$f must be an object"))
+
+    /** An array of numbers (Jackson's `floatValue` would read a string
+      * element as 0). */
+    def floats(f: String): Option[Array[Float]] = field(f).map { v =>
+      if (!v.isArray || !v.elements.asScala.forall(_.isNumber)) bad(s"$f must be an array of numbers")
+      Array.tabulate(v.size)(i => v.get(i).floatValue)
     }
 
-  /** `k`, 5 when absent: an integer, or a number, numeric string or bool
-    * that is one; "abc", 5.5, null or an array is a 400. */
-  private def kOf(node: JsonNode): Int =
-    if (node == null || !node.has("k")) 5
-    else {
-      val v = node.get("k")
-      val n =
-        if (v.isNumber || v.isTextual) scala.util.Try(BigDecimal(v.asText.trim)).toOption
-        else if (v.isBoolean) Some(BigDecimal(if (v.booleanValue) 1 else 0))
-        else None
-      n.filter(_.isWhole).map(_.max(Int.MinValue).min(Int.MaxValue).toInt)
-        .getOrElse(throw new BadRequest("k must be an integer"))
+    /** A lax int, `default` when absent; null is a 400, as for pydantic's
+      * non-optional `int`. */
+    def int(f: String, default: Int): Int =
+      Option(node.get(f)).fold(default)(v => laxInt(v).getOrElse(bad(s"$f must be an integer")))
+  }
+
+  private object Body {
+    def apply(bytes: Array[Byte]): Body = {
+      val text = utf8(bytes, "request body")
+      if (text.isBlank) new Body(mapper.createObjectNode())
+      else {
+        val node = Try(mapper.readTree(text)).getOrElse(bad("Invalid JSON body"))
+        if (node == null || !node.isObject) bad("Request body must be a JSON object")
+        new Body(node)
+      }
     }
+  }
 
-  /** metadata object; scalar values stringified the way the reference
-    * compares them (str() coercion — same rule as JsonCodec.parseFilter). */
-  private def metaAt(node: JsonNode, field: String): Map[String, String] =
-    if (node == null || !node.hasNonNull(field) || !node.get(field).isObject) Map.empty
-    else {
-      val m = node.get(field)
-      m.fieldNames().asScala.map { k =>
-        val v = m.get(k)
-        k -> (if (v.isTextual) v.asText else v.toString)
-      }.toMap
-    }
+  /** Query parameters, percent-decoded strictly; a bare name has the
+    * value "" and a repeated name keeps its last value. */
+  private final class Query(params: Map[String, String]) {
+    def string(p: String): Option[String] = params.get(p)
 
-  private def metaOf(node: JsonNode): Map[String, String] = metaAt(node, "metadata")
+    def required(p: String): String = params.getOrElse(p, bad(s"Missing required query parameter: $p"))
 
-  private def optMeta(node: JsonNode): Option[Map[String, String]] =
-    if (node != null && node.hasNonNull("metadata")) Some(metaOf(node)) else None
+    def int(p: String): Option[Int] =
+      params.get(p).map(v => laxInt(TextNode.valueOf(v)).getOrElse(bad(s"$p must be an integer")))
 
-  /** A JSON array of numbers; any other shape or element is a 400
-    * (Jackson's `floatValue` would read a string element as 0). */
-  private def optFloats(node: JsonNode, field: String): Option[Array[Float]] =
-    if (node == null || !node.hasNonNull(field)) None
-    else {
-      val a = node.get(field)
-      if (!a.isArray || (0 until a.size()).exists(i => !a.get(i).isNumber))
-        throw new BadRequest(s"$field must be an array of numbers")
-      Some((0 until a.size()).map(i => a.get(i).floatValue()).toArray)
-    }
+    /** A JSON object filter (search.py:34-40), empty when absent. */
+    def filter(p: String): Map[String, String] =
+      params.get(p).fold(Map.empty[String, String])(JsonCodec.parseFilter(_).fold(e => bad(e.message), identity))
+  }
+
+  private object Query {
+    def apply(raw: String): Query = new Query(Option(raw).toSeq.flatMap(_.split("&")).filter(_.nonEmpty).map { kv =>
+      val parts = kv.split("=", 2)
+      val name = unescape(parts(0), "query parameter name")
+      name -> unescape(parts.lift(1).getOrElse(""), s"query parameter $name")
+    }.toMap)
+  }
+
+  /** The chunk listings' ADDITIVE params (absent = reference behaviour:
+    * every row with all its floats): include_embeddings=false elides the
+    * float arrays, limit/offset page in stable id order. */
+  private final case class Page(embeddings: Boolean, limit: Option[Int], offset: Int)
+
+  private def page(query: Query): Page = {
+    def count(p: String) = query.int(p).map(n => if (n < 0) bad(s"$p must be a non-negative integer") else n)
+    Page(query.string("include_embeddings").forall {
+        case "true" | "1" => true
+        case "false" | "0" => false
+        case _ => bad("include_embeddings must be true or false")
+      }, count("limit"), count("offset").getOrElse(0))
+  }
+
+  /** A lax int: an integer, or a number, numeric string or bool that is
+    * one, clamped to the Int range; "abc", 5.5, null or an array is None. */
+  private def laxInt(v: JsonNode): Option[Int] = {
+    val n =
+      if (v.isNumber || v.isTextual) Try(BigDecimal(v.asText.trim)).toOption
+      else if (v.isBoolean) Some(BigDecimal(if (v.booleanValue) 1 else 0))
+      else None
+    n.filter(_.isWhole).map(_.max(Int.MinValue).min(Int.MaxValue).toInt)
+  }
+
+  /** `bytes` as UTF-8; a malformed sequence is a 400 naming `what`. */
+  private def utf8(bytes: Array[Byte], what: String): String =
+    try UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString
+    catch { case _: CharacterCodingException => bad(s"Invalid UTF-8 in $what") }
+
+  /** One percent-encoded query component (`+` is a space): the JDK
+    * server hands it over as ISO-8859-1 characters, one per byte. */
+  private def unescape(s: String, what: String): String =
+    utf8(Try(URLDecoder.decode(s, ISO_8859_1)).getOrElse(bad(s"Invalid percent-encoding in $what"))
+      .getBytes(ISO_8859_1), what)
 
   // ---- entity encoding (reference models.py shapes; the Scala engine
   // normalizes the hierarchy, so nested collections encode empty — the
   // reference's services populate them lazily per-route anyway)
 
-  private def obj(fields: (String, Any)*): String = {
+  private def obj(fields: (String, String)*): String = {
     val root = mapper.createObjectNode()
-    fields.foreach {
-      case (k, v: String) => root.put(k, v)
-      case (k, v: Long) => root.put(k, v)
-      case (k, v: Int) => root.put(k, v)
-      case (k, v) => root.put(k, String.valueOf(v))
-    }
+    fields.foreach { case (k, v) => root.put(k, v) }
     mapper.writeValueAsString(root)
   }
 
@@ -413,7 +334,7 @@ object HttpApi {
     n
   }
 
-  def libraryJson(l: LibraryRow): String = {
+  private def libraryJson(l: LibraryRow): String = {
     val n = mapper.createObjectNode()
     n.put("id", l.id)
     n.put("name", l.name)
@@ -426,7 +347,7 @@ object HttpApi {
     mapper.writeValueAsString(n)
   }
 
-  def documentJson(d: DocumentRow): String = {
+  private def documentJson(d: DocumentRow): String = {
     val n = mapper.createObjectNode()
     n.put("id", d.id)
     n.put("name", d.name)
@@ -439,7 +360,7 @@ object HttpApi {
     mapper.writeValueAsString(n)
   }
 
-  def chunkJson(c: ChunkRow): String = {
+  private def chunkJson(c: ChunkRow): String = {
     val n = mapper.createObjectNode()
     n.put("id", c.id)
     n.put("text", c.text)

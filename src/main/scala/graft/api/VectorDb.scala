@@ -63,10 +63,10 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
   /** GET /api/v1/documents/library/{library_id} (:72-80) */
   def documentsByLibrary(libraryId: String): Seq[DocumentRow] = catalog.listDocuments(libraryId)
   /** GET /api/v1/documents/library/{id}/filter?metadata_filter= (:82-103);
-    * metadata_filter arrives as JSON (V8) */
-  def documentsByMetadataJson(libraryId: String, metadataFilterJson: String) =
-    JsonCodec.parseFilter(metadataFilterJson)
-      .map(f => catalog.documentsByMetadata(libraryId, f))
+    * `HttpApi` decodes the filter's JSON (`JsonCodec.parseFilter`, V8) */
+  def documentsByMetadata(libraryId: String,
+      filters: Map[String, String]): Either[ApiError, Seq[DocumentRow]] =
+    catalog.getLibrary(libraryId).map(_ => catalog.documentsByMetadata(libraryId, filters))
 
   // -------- chunks (app/api/routes/chunks.py)
   /** POST /api/v1/chunks/?document_id= — embeds at create (:9-20) */
@@ -98,14 +98,11 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
     catalog.getLibrary(libraryId).map(_ =>
       collectChunks(catalog.chunksByLibrary(libraryId), includeEmbeddings, limit, offset))
   /** GET /api/v1/chunks/library/{id}/filter?metadata_filter= (:92-113) */
-  def chunksByMetadataJson(libraryId: String, metadataFilterJson: String,
+  def chunksByMetadata(libraryId: String, filters: Map[String, String],
       includeEmbeddings: Boolean = true, limit: Option[Int] = None,
       offset: Int = 0): Either[ApiError, Seq[ChunkRow]] =
-    for {
-      _ <- catalog.getLibrary(libraryId)
-      f <- JsonCodec.parseFilter(metadataFilterJson)
-    } yield collectChunks(catalog.chunksByMetadata(libraryId, f),
-      includeEmbeddings, limit, offset)
+    catalog.getLibrary(libraryId).map(_ =>
+      collectChunks(catalog.chunksByMetadata(libraryId, filters), includeEmbeddings, limit, offset))
 
   // -------- search (app/api/routes/search.py)
   /** POST /api/v1/search/libraries/{id} (:9-21) */
@@ -113,13 +110,8 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
     searchService.search(libraryId, query)
   /** GET /api/v1/search/libraries/{id}/simple?q=&k=&metadata_filter= (:24-54) */
   def simpleSearch(libraryId: String, q: String, k: Int = 5,
-      metadataFilterJson: Option[String] = None): Either[ApiError, SearchResponse] =
-    for {
-      filters <- metadataFilterJson.map(JsonCodec.parseFilter)
-        .getOrElse(Right(Map.empty[String, String]))
-      resp <- searchService.search(libraryId,
-        SearchQuery(queryText = Some(q), k = k, metadataFilters = filters))
-    } yield resp
+      metadataFilters: Map[String, String] = Map.empty): Either[ApiError, SearchResponse] =
+    searchService.search(libraryId, SearchQuery(queryText = Some(q), k = k, metadataFilters = metadataFilters))
 
   // -------- ops (app/main.py)
   /** GET /health (:60-67) */
@@ -147,7 +139,8 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
       else {
         val sorted = df.orderBy(col("id"))
         val off = if (offset > 0) sorted.offset(offset) else sorted
-        limit.fold(off)(off.limit)
+        // Spark refuses a limit + offset past Int.MaxValue
+        limit.fold(off)(l => off.limit(math.min(l, Int.MaxValue - math.max(offset, 0))))
       }
     val slim =
       if (includeEmbeddings) paged
@@ -163,24 +156,24 @@ final class VectorDb(spark: SparkSession, embedder: Embedder = Embedder.default,
  * dependency.
  */
 object JsonCodec {
-  import com.fasterxml.jackson.databind.ObjectMapper
+  import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 
-  private val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
-  /** Parse {"key": value} filter JSON; scalar values stringified the way
-    * the reference compares them (str() coercion, search_service.py:186). */
+  /** Parse {"key": value} filter JSON into `stringValues`; anything but
+    * a JSON object is a Validation error. */
   def parseFilter(json: String): Either[ApiError, Map[String, String]] =
-    try {
-      val node = mapper.readTree(json)
-      if (node == null || !node.isObject)
-        Left(ApiError.Validation("Invalid JSON in metadata_filter parameter"))
-      else Right(node.fieldNames().asScala.map { k =>
-        val v = node.get(k)
-        k -> (if (v.isTextual) v.asText else v.toString)
-      }.toMap)
-    } catch {
-      case _: Exception => Left(ApiError.Validation("Invalid JSON in metadata_filter parameter"))
-    }
+    scala.util.Try(mapper.readTree(json)).toOption.filter(n => n != null && n.isObject).map(stringValues)
+      .toRight(ApiError.Validation("Invalid JSON in metadata_filter parameter"))
+
+  /** A JSON object's fields, each value stringified the way the
+    * reference compares metadata (str() coercion,
+    * search_service.py:186): a string as itself, any other value as its
+    * JSON text. The one rule for metadata and filters alike. */
+  def stringValues(node: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    node.properties().asScala.map { e =>
+      e.getKey -> (if (e.getValue.isTextual) e.getValue.textValue else e.getValue.toString)
+    }.toMap
 
   private val isoFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")

@@ -27,13 +27,16 @@ import graft.model.{ChunkRow, DocumentRow, LibraryRow}
  * naming the snapshot that truncates the log).
  *
  * Semantics:
- *  - A mutation is applied in memory FIRST, then its RESULT (generated
- *    ids and timestamps included) is logged; the call returns only
- *    after the record is written and hsync'ed. So every *acknowledged*
- *    mutation survives a crash, and replay reproduces byte-identical
- *    rows — replaying requests instead of results would re-generate ids
- *    and break every cross-reference. The catalog does both itself, in
- *    its one write path (`VectorCatalog.commit`).
+ *  - A mutation's RESULT (generated ids and timestamps included) is
+ *    appended and hsync'ed FIRST, then applied in memory, and the call
+ *    returns after both. So every *acknowledged* mutation survives a
+ *    crash, a write whose append fails is not applied, and replay
+ *    reproduces byte-identical rows — replaying requests instead of
+ *    results would re-generate ids and break every cross-reference. The
+ *    catalog does both itself, in its one write path
+ *    (`VectorCatalog.commit`). An index build logs its library-row
+ *    change; its derived structures are not logged, so a replayed built
+ *    library is searched exact until it is rebuilt.
  *  - `VectorCatalog.checkpoint()` folds the catalog into a parquet
  *    snapshot (`VectorCatalog.save`), points the manifest at it, deletes
  *    the snapshot the manifest named before, rolls the active segment
@@ -411,7 +414,7 @@ private[catalog] object WalCodec {
   private val mapper = new ObjectMapper()
 
   def record(m: Mutation): ObjectNode = m match {
-    case LibraryPut(row, created) => libRecord(row, created)
+    case LibraryPut(row, tier, _) => libRecord(row, tier)
     case LibraryDelete(id) => deleteRecord("lib_delete", id)
     case DocumentPut(row) => docRecord(row)
     case DocumentDelete(id) => deleteRecord("doc_delete", id)
@@ -420,8 +423,8 @@ private[catalog] object WalCodec {
   }
 
   def mutation(n: JsonNode): Mutation = n.get("op").asText() match {
-    case "lib_create" => LibraryPut(libFrom(n), Option(n.get("index_type")).map(t => parseIndexType(t.asText())))
-    case "lib_update" => LibraryPut(libFrom(n), None)
+    case "lib_create" | "lib_update" =>
+      LibraryPut(libFrom(n), Option(n.get("index_type")).map(t => parseIndexType(t.asText())))
     case "lib_delete" => LibraryDelete(n.get("id").asText())
     case "doc_put" => DocumentPut(docFrom(n))
     case "doc_delete" => DocumentDelete(n.get("id").asText())
@@ -453,13 +456,15 @@ private[catalog] object WalCodec {
     n
   }
 
-  private def libRecord(row: LibraryRow, created: Option[IndexType]): ObjectNode = {
+  /** A create is the put of a never-built row with its tier; a build's
+    * put is a `lib_update` that carries its tier. */
+  private def libRecord(row: LibraryRow, tier: Option[IndexType]): ObjectNode = {
     val n = mapper.createObjectNode()
-    n.put("op", if (created.isDefined) "lib_create" else "lib_update")
+    n.put("op", if (tier.isDefined && !row.is_indexed) "lib_create" else "lib_update")
     n.put("id", row.id)
     n.put("name", row.name)
     row.description.foreach(n.put("description", _))
-    created.foreach(it => n.put("index_type", it.name))
+    tier.foreach(it => n.put("index_type", it.name))
     putMeta(n, row.metadata)
     n.put("is_indexed", row.is_indexed)
     n.put("created_at", row.created_at.getTime)

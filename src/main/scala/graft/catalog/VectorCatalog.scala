@@ -35,8 +35,11 @@ private[catalog] final case class ResidentSnapshot(rows: Array[ChunkRow],
   * what WAL replay applies again (`WalCodec` maps each to its record). */
 private[catalog] sealed trait Mutation
 private[catalog] object Mutation {
-  /** A library row put: a create carries its tier, an update None. */
-  final case class LibraryPut(row: LibraryRow, created: Option[IndexType]) extends Mutation
+  /** A library row put. A create and a build carry their tier, and a
+    * build the state it derived, which is derived data and is not
+    * logged; an update carries neither. */
+  final case class LibraryPut(row: LibraryRow, tier: Option[IndexType],
+      built: Option[IndexState] = None) extends Mutation
   final case class LibraryDelete(id: String) extends Mutation
   final case class DocumentPut(row: DocumentRow) extends Mutation
   final case class DocumentDelete(id: String) extends Mutation
@@ -394,18 +397,19 @@ final class VectorCatalog(val spark: SparkSession,
   /** Build/rebuild a library's index (libraries POST /{id}/index;
     * library_service.py:120-158 / M5-M7): a refresh from the tier's
     * initial state, as the reference's rebuild re-adds every chunk
-    * through its incremental add hook (indexes.py:437-452). */
+    * through its incremental add hook (indexes.py:437-452). The
+    * derivation runs outside the write path; the row change
+    * (`is_indexed`, `updated_at`, the tier) is then one logged write. A
+    * library deleted meanwhile gets nothing, and the derived state is
+    * released. */
   def indexLibrary(libraryId: String, indexType: String): Either[ApiError, IndexState] =
     for {
       _ <- getLibrary(libraryId)
       it <- IndexType.parse(indexType)
       built <- derive(libraryId, it.initial(embeddingDim))
-    } yield {
-      setIndex(libraryId, Some(built))
-      libraries.get(libraryId).foreach(l =>
-        libraries.put(libraryId, l.copy(is_indexed = true, updated_at = now())))
-      built
-    }
+      _ <- commit(getLibrary(libraryId).map(_.copy(is_indexed = true, updated_at = now())))(
+        LibraryPut(_, Some(it), Some(built))).left.map { e => it.release(built); e }
+    } yield built
 
   def indexState(libraryId: String): Option[IndexState] = indexes.get(libraryId)
 
@@ -488,9 +492,12 @@ final class VectorCatalog(val spark: SparkSession,
     * 182) — the buffer keys by id and the tombstone hides any base row
     * with the same id. O(1), no Spark job. */
   private def applyMutation(m: Mutation): Unit = m match {
-    case LibraryPut(row, created) =>
+    case LibraryPut(row, tier, built) =>
       libraries.put(row.id, row)
-      created.foreach(it => setIndex(row.id, Some(IndexState.empty(it))))
+      // a create gets its tier's empty state and a build its derived one;
+      // a replayed build has none, as `load` restores a built library:
+      // it is searched exact until it is rebuilt
+      tier.foreach(it => setIndex(row.id, if (row.is_indexed) built else Some(IndexState.empty(it))))
     case LibraryDelete(id) =>
       libraries.remove(id)
       setIndex(id, None)

@@ -33,7 +33,7 @@ class ApiSpec extends SparkSpec {
     assert(db.chunksByDocument("missing").isLeft)
 
     // filter endpoint with JSON boundary
-    val filtered = db.chunksByMetadataJson(lib.id, """{"topic": "python"}""").toOption.get
+    val filtered = db.chunksByMetadata(lib.id, JsonCodec.parseFilter("""{"topic": "python"}""").toOption.get).toOption.get
     assert(filtered.size == 1 && filtered.head.text.contains("python"))
 
     // index type switch (test_basic.py:225-268) + the additive hnsw tier
@@ -144,10 +144,8 @@ class ApiSpec extends SparkSpec {
   }
 
   test("bad filter JSON => 400-style validation error (search.py:34-40)") {
-    val db = new VectorDb(spark)
-    val lib = db.createLibrary("L").toOption.get
-    assert(db.simpleSearch(lib.id, "q", 5, Some("not json")).isLeft)
-    assert(db.chunksByMetadataJson(lib.id, "[1,2]").isLeft)
+    assert(JsonCodec.parseFilter("not json").isLeft)
+    assert(JsonCodec.parseFilter("[1,2]").isLeft)
     assert(JsonCodec.parseFilter("""{"a": 1, "b": "x", "c": true}""").toOption.get ==
       Map("a" -> "1", "b" -> "x", "c" -> "true")) // str() coercion
   }

@@ -684,6 +684,45 @@ class DurabilitySpec extends SparkSpec {
     assertSameState(cat, rec)
   }
 
+  test("a built IVF library still answers after a recovery from the WAL alone") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("trained", indexType = "ivf").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    cat.createChunks(doc.id, (0 until graft.model.GraftConfig.ivfNlist).map(i => (s"chunk $i", Map.empty[String, String])))
+    assert(cat.indexLibrary(lib.id, "ivf").isRight)
+    val q = graft.model.SearchQuery(queryText = Some("chunk 7"), k = 5)
+    def hits(c: VectorCatalog) = new graft.search.SearchService(c).search(lib.id, q).toOption.get.results.size
+    assert(hits(cat) == 5)
+
+    val rec = DurableCatalog.recover(spark, root)
+    assert(hits(rec) == 5, "the recovered built library answered nothing")
+    assert(rec.getLibrary(lib.id).map(_.is_indexed) == Right(true))
+    assert(rec.indexState(lib.id).isEmpty, "a replayed build restored derived state")
+    assertSameState(cat, rec)
+    // the build is one lib_update record carrying its tier
+    val build = cat.wal.records().last
+    assert(build.get("op").asText == "lib_update" && build.get("index_type").asText == "ivf")
+    assert(build.get("is_indexed").asBoolean)
+  }
+
+  test("an index type switch is logged, and recovers as a built library searched exact") {
+    val root = freshRoot()
+    val cat = DurableCatalog.recover(spark, root)
+    val lib = cat.createLibrary("switched", indexType = "lsh").toOption.get
+    val doc = cat.createDocument(lib.id, "d").toOption.get
+    (0 until 4).foreach(i => cat.createChunk(doc.id, s"chunk $i"))
+    assert(cat.indexLibrary(lib.id, "hnsw").isRight)
+    assert(cat.indexState(lib.id).map(_.indexType) == Some(graft.catalog.IndexType.Hnsw))
+    assert(cat.wal.records().last.get("index_type").asText == "hnsw")
+    val rec = DurableCatalog.recover(spark, root)
+    assert(rec.getLibrary(lib.id) == cat.getLibrary(lib.id))
+    assert(rec.indexState(lib.id).isEmpty)
+    assertSameState(cat, rec)
+    val q = graft.model.SearchQuery(queryText = Some("chunk 2"), k = 4)
+    assert(new graft.search.SearchService(rec).search(lib.id, q).toOption.get.results.size == 4)
+  }
+
   test("a stale writer's failed write is neither logged nor visible") {
     val root = freshRoot()
     val cat = DurableCatalog.recover(spark, root)

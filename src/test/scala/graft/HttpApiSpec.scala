@@ -304,6 +304,64 @@ class HttpApiSpec extends SparkSpec {
     request("DELETE", s"/api/v1/libraries/$libId")
   }
 
+  test("a PUT with a non-object metadata is 400 on every entity, and the stored metadata stays") {
+    val libId = json(request("POST", "/api/v1/libraries", """{"name":"kept","metadata":{"team":"a"}}"""))
+      .get("id").asText
+    val docId = json(request("POST", s"/api/v1/documents?library_id=$libId",
+      """{"name":"d","metadata":{"team":"a"}}""")).get("id").asText
+    val chunkId = json(request("POST", s"/api/v1/chunks?document_id=$docId",
+      """{"text":"t","metadata":{"team":"a"}}""")).get("id").asText
+    for (path <- Seq(s"libraries/$libId", s"documents/$docId", s"chunks/$chunkId"); meta <- Seq("\"x\"", "[1,2]", "5")) {
+      val r = request("PUT", s"/api/v1/$path", s"""{"metadata":$meta}""")
+      assert(r.statusCode == 400 && json(r).get("detail").asText == "metadata must be an object", s"$path $meta: ${r.body}")
+      val stored = json(request("GET", s"/api/v1/$path")).get("metadata")
+      assert(stored.size == 1 && stored.get("team").asText == "a", s"$path: $stored")
+    }
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("a create with a wrongly typed field is 400 naming it, and creates nothing") {
+    val count = json(request("GET", "/api/v1/libraries")).size
+    for ((body, field) <- Seq("""{"name":5}""" -> "name", """{"name":"x","metadata":[1,2]}""" -> "metadata",
+        """{"name":"x","description":true}""" -> "description", """[{"name":"x"}]""" -> "body")) {
+      val r = request("POST", "/api/v1/libraries", body)
+      assert(r.statusCode == 400 && json(r).get("detail").asText.contains(field), s"$body: ${r.body}")
+    }
+    assert(json(request("GET", "/api/v1/libraries")).size == count)
+  }
+
+  test("paths match whole segments: a library id glued to its collection, or /healthXYZ, is 404") {
+    val libId = json(request("POST", "/api/v1/libraries", """{"name":"glued"}""")).get("id").asText
+    assert(request("GET", s"/api/v1/libraries/$libId").statusCode == 200)
+    for (path <- Seq(s"/api/v1/libraries$libId", "/healthXYZ", "/api/v1/librariesX", "/api/v2/libraries", "/x")) {
+      val r = request("GET", path)
+      assert(r.statusCode == 404 && json(r).get("detail").asText == "Not Found", s"$path: ${r.statusCode} ${r.body}")
+    }
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
+  test("a malformed query parameter is 400 naming it, not a default") {
+    val libId = searchable("params")
+    val docId = json(request("GET", s"/api/v1/documents/library/$libId")).get(0).get("id").asText
+    val cases = Seq(
+      s"/api/v1/search/libraries/$libId/simple?q=stars&k=abc" -> "k must be an integer",
+      s"/api/v1/search/libraries/$libId/simple?q=stars&k=2.5" -> "k must be an integer",
+      s"/api/v1/search/libraries/$libId/simple?q=stars&metadata_filter=%5B1%5D" -> "metadata_filter",
+      s"/api/v1/search/libraries/$libId/simple?q=%FF" -> "query parameter q",
+      s"/api/v1/chunks/library/$libId?limit=abc" -> "limit must be",
+      s"/api/v1/chunks/library/$libId?limit=-1" -> "limit must be",
+      s"/api/v1/chunks/document/$docId?offset=abc" -> "offset must be",
+      s"/api/v1/chunks/library/$libId/filter?include_embeddings=maybe" -> "include_embeddings")
+    for ((path, named) <- cases) {
+      val r = request("GET", path)
+      assert(r.statusCode == 400 && json(r).get("detail").asText.contains(named), s"$path: ${r.statusCode} ${r.body}")
+    }
+    // the lax int still reads a numeric string, and the echo carries the filter
+    val ok = json(request("GET", s"/api/v1/search/libraries/$libId/simple?q=stars&k=1.0&metadata_filter=%7B%7D"))
+    assert(ok.get("query").get("k").asInt == 1 && ok.get("total_results").asInt == 1)
+    request("DELETE", s"/api/v1/libraries/$libId")
+  }
+
   test("stop() shuts the request pool down, so the JVM can exit") {
     val own = new HttpApi(new VectorDb(spark))
     own.start()
